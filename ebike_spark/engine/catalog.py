@@ -237,13 +237,21 @@ class Catalog:
         rows = self.spark.sql(f"SHOW TBLPROPERTIES {bq(qualified)}").collect()
         return {r["key"]: r["value"] for r in rows}
 
-    def primary_key(self, qualified: str) -> list[str]:
-        pk = self.properties(qualified).get(PROP_PK, "")
+    # The getters below take an optional ``props`` — the table's
+    # properties() already read by the caller — so one statement reads
+    # SHOW TBLPROPERTIES once, however many of them it needs.
+    def _props(self, qualified: str, props: dict[str, str] | None) -> dict[str, str]:
+        return self.properties(qualified) if props is None else props
+
+    def primary_key(self, qualified: str, props: dict[str, str] | None = None) -> list[str]:
+        pk = self._props(qualified, props).get(PROP_PK, "")
         return [c for c in pk.split(",") if c]
 
-    def unique_keys(self, qualified: str) -> list[tuple[str, list[str]]]:
+    def unique_keys(
+        self, qualified: str, props: dict[str, str] | None = None
+    ) -> list[tuple[str, list[str]]]:
         out = []
-        for k, v in self.properties(qualified).items():
+        for k, v in self._props(qualified, props).items():
             if k.startswith(PROP_UNIQUE_PREFIX):
                 out.append((k[len(PROP_UNIQUE_PREFIX):], [c for c in v.split(",") if c]))
         return sorted(out)
@@ -255,22 +263,26 @@ class Catalog:
                 out.append((k[len(PROP_CLUSTER_PREFIX):], [c for c in v.split(",") if c]))
         return sorted(out)
 
-    def not_null_cols(self, qualified: str) -> list[str]:
-        nn = self.properties(qualified).get(PROP_NOT_NULL, "")
+    def not_null_cols(self, qualified: str, props: dict[str, str] | None = None) -> list[str]:
+        nn = self._props(qualified, props).get(PROP_NOT_NULL, "")
         return [c for c in nn.split(",") if c]
 
-    def has_rowid(self, qualified: str) -> bool:
-        return self.properties(qualified).get(PROP_ROWID) == "1"
+    def has_rowid(self, qualified: str, props: dict[str, str] | None = None) -> bool:
+        return self._props(qualified, props).get(PROP_ROWID) == "1"
 
-    def auto_increment_col(self, qualified: str) -> str | None:
-        return self.properties(qualified).get(PROP_AUTO_INCREMENT) or None
+    def auto_increment_col(
+        self, qualified: str, props: dict[str, str] | None = None
+    ) -> str | None:
+        return self._props(qualified, props).get(PROP_AUTO_INCREMENT) or None
 
-    def column_types(self, qualified: str) -> list[tuple[str, str]]:
+    def column_types(
+        self, qualified: str, props: dict[str, str] | None = None
+    ) -> list[tuple[str, str]]:
         """[(name, spark_type_simple)] in table order — the USER-VISIBLE
         columns: the hidden rowid never appears in metadata surfaces or
         positional DML."""
         fields = [(f.name, f.dataType.simpleString()) for f in self.spark.table(qualified).schema.fields]
-        if self.has_rowid(qualified):
+        if self.has_rowid(qualified, props):
             fields = [f for f in fields if f[0] != ROWID]
         return fields
 

@@ -6,24 +6,35 @@ with UPDATE/DELETE internally rewritten to a SELECT that projects the
 affected rowids (update.rs:55-287, delete.rs:38-165). The Spark-native
 equivalent keeps the *rewrite* idea but makes it set-oriented:
 
-- INSERT VALUES: literal rows are evaluated by Spark (arbitrary
-  constant expressions, like the reference's physical-expr fold,
-  insert.rs:113-164), constraint-checked, then appended.
+- INSERT VALUES: the rows are evaluated by Spark in one of two forms
+  (_values_df). A batch of plain literals (numbers, quoted strings,
+  NULL, TRUE, FALSE — a mysqldump extended INSERT) is ONE inline
+  table: Catalyst folds its casts into a LocalRelation, so collecting
+  it runs no job and writing it is one file at any row count. Any
+  other batch (constant expressions, like the reference's
+  physical-expr fold, insert.rs:113-164; earlier-column references;
+  RAND()) is one SELECT per row, UNION ALL-ed. A plain INSERT
+  collects the statement-sized batch once, checks NOT NULL and
+  in-batch duplicates on the driver, probes stored keys with one
+  pushed-down IN filter per key, then appends.
 - UPDATE: one pass computing when(cond, new, old) per assigned column,
   written out via a staging table then INSERT OVERWRITE (write-new-
   then-swap). No per-row point writes — the same plan shape works on a
   1000-executor cluster.
 - DELETE: filter(NOT cond) + overwrite.
 
-Constraint enforcement (PRIMARY/UNIQUE) is an anti-join against the
-existing table plus an intra-batch duplicate check — this *fixes* the
+Constraint enforcement for data-sized input (LOAD DATA, INSERT …
+SELECT) is a join against the existing table plus an intra-batch
+duplicate check, all Spark jobs — either way this *fixes* the
 reference's bug of not maintaining index entries on update/delete
 (SURVEY §3.3). NULL-into-NOT-NULL raises MySQL error 1048.
 """
 
 from __future__ import annotations
 
+import re
 import uuid
+from decimal import Decimal
 from functools import reduce
 from operator import and_, or_
 
@@ -215,19 +226,131 @@ def guarded_cast_col(raw_expr, spark_type: str, col: str):
     ).otherwise(cast)
 
 
+# A VALUES cell the inline-table form takes: exactly one plain literal
+# token — a number, a quoted string (backslash or doubled-quote
+# escapes, as Spark's lexer reads them), NULL, TRUE or FALSE.
+_LITERAL_RE = re.compile(
+    r"NULL|TRUE|FALSE"
+    r"|-?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+    r"|'(?:[^'\\]|\\.|'')*'"
+    r'|"(?:[^"\\]|\\.|"")*"',
+    re.I | re.S,
+)
+
+
+def _literal_type(cell: str) -> tuple[str, int, int] | None:
+    """Spark's parse type of a plain literal VALUES cell as (kind,
+    integer digits, scale); kind is null, boolean, string, double
+    (exponent form) or exact (INT/BIGINT/DECIMAL). None for any other
+    cell, and for exact literals beyond DECIMAL(38)."""
+    if not _LITERAL_RE.fullmatch(cell):
+        return None
+    head = cell[0].upper()
+    if head in "'\"":
+        return ("string", 0, 0)
+    if head == "N":
+        return ("null", 0, 0)
+    if head in "TF":
+        return ("boolean", 0, 0)
+    if "e" in cell or "E" in cell:
+        return ("double", 0, 0)
+    if "." not in cell:  # INT, BIGINT, else DECIMAL(n,0) — Spark widens INT/BIGINT as (10,0)/(20,0)
+        v = int(cell)
+        digits = 10 if -(2**31) <= v < 2**31 else 20 if -(2**63) <= v < 2**63 else len(str(abs(v)))
+        return ("exact", digits, 0) if digits <= 38 else None
+    _, digs, exp = Decimal(cell).as_tuple()
+    scale = max(-exp, 0)
+    int_digits = max(len(digs) - scale, 0)
+    return ("exact", int_digits, scale) if int_digits + scale <= 38 else None
+
+
+def _inline_ok(rows: list[list[str]], target: list[str], types: dict[str, str]) -> bool:
+    """True when every cell is a plain literal AND Spark's per-column
+    type widening over the inline table cannot change a stored value.
+    A column keeps one literal type (NULLs aside), or mixes only exact
+    numerics whose widened DECIMAL holds every value exactly and lands
+    in a numeric column (a STRING column would store 5 as '5.0').
+    Anything else — an exact integer beyond 2^53 beside a double
+    literal, strings beside numbers, DECIMAL widening past 38 digits —
+    takes the per-row form, where each cell keeps its own type."""
+    for i, name in enumerate(target):
+        seen = set()
+        for row in rows:
+            t = _literal_type(row[i])
+            if t is None:
+                return False
+            if t[0] != "null":
+                seen.add(t)
+        if len(seen) <= 1:
+            continue
+        numeric = types[name] in ("bigint", "double") or types[name].startswith("decimal")
+        if (
+            {k for k, _, _ in seen} != {"exact"}
+            or not numeric
+            or max(d for _, d, _ in seen) + max(s for _, _, s in seen) > 38
+        ):
+            return False
+    return True
+
+
+def _cast_sql(raw_ref: str, name: str, typ: str) -> str:
+    """The declared-type cast of one VALUES value, aliased to its
+    column (integer targets take the MySQL rounding cast)."""
+    cast = (
+        rounding_bigint_cast_sql(raw_ref)
+        if typ.upper() == "BIGINT"
+        else f"CAST({raw_ref} AS {typ})"
+    )
+    return f"{cast} AS `{name}`"
+
+
 def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]]) -> DataFrame:
-    """Evaluate VALUES rows as constant expressions via a literal
-    SELECT; every declared-type cast is strict (guarded_cast_sql)."""
+    """Evaluate VALUES rows to the table's declared types; every cast
+    is strict (strict_case_sql: 1366 on a value that does not convert).
+    Two forms, one plan shape each:
+
+    - all cells plain literals (_inline_ok): ONE inline table,
+      ``SELECT <strict> FROM (SELECT <casts> FROM VALUES (…),(…))``.
+      Catalyst resolves it to a LocalRelation and folds both
+      projections into it while optimising, so collecting it runs no
+      Spark job, a bad cast raises right there, and writing it is one
+      partition — one file — at any batch size.
+    - otherwise one ``SELECT`` per row, ``UNION ALL``-ed: cells may be
+      constant expressions (arbitrary, like the reference's
+      physical-expr fold, insert.rs:113-164), reference earlier
+      columns (``VALUES (1, a + 1)``) or draw RAND(). Plan size grows
+      with the row count; only hand-written batches need this form."""
     names = [n for n, _ in col_types]
     types = dict(col_types)
     target = ins.columns or names
     unknown = [c for c in target if c not in types]
     if unknown:
         raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
+    if any(len(row) != len(target) for row in ins.rows):
+        raise EbikeError(1136, "Column count doesn't match value count")
+    if _inline_ok(ins.rows, target, types):
+        # positional aliases: the i-th VALUES column is `__r_i`
+        raw = {name: f"`__r_{target.index(name)}`" for name in target}
+        inner = list(raw.values()) + [
+            _cast_sql(raw[name], name, types[name])
+            if name in raw
+            else f"CAST(NULL AS {types[name]}) AS `{name}`"
+            for name in names
+        ]
+        outer = [
+            strict_case_sql(raw[name], f"`{name}`", types[name], name) + f" AS `{name}`"
+            if name in raw
+            else f"`{name}`"
+            for name in names
+        ]
+        values = ", ".join(f"({', '.join(row)})" for row in ins.rows)
+        aliases = ", ".join(f"`__r_{i}`" for i in range(len(target)))
+        return spark.sql(
+            f"SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)} "
+            f"FROM VALUES {values} AS __v({aliases}))"
+        )
     selects = []
     for row in ins.rows:
-        if len(row) != len(target):
-            raise EbikeError(1136, "Column count doesn't match value count")
         # Non-target columns bind FIRST in the inner list: a VALUES
         # expression may reference one (MySQL resolves it to the
         # column default — NULL here) via lateral alias REGARDLESS of
@@ -243,7 +366,6 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
         outer = []
         for name in names:
             if name in target:
-                raw = row[target.index(name)]
                 # Bind the expression ONCE per row (subquery aliases):
                 # the strict guard references columns, so a
                 # non-deterministic value (RAND()) is checked and
@@ -254,15 +376,8 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
                 # (`VALUES (1, a + 1)`) keep resolving — Spark lateral
                 # column aliases see it, exactly like the pre-subquery
                 # single-SELECT form did.
-                inner.append(f"({raw}) AS `__r_{name}`")
-                inner.append(
-                    (
-                        rounding_bigint_cast_sql(f"`__r_{name}`")
-                        if types[name].upper() == "BIGINT"
-                        else f"CAST(`__r_{name}` AS {types[name]})"
-                    )
-                    + f" AS `{name}`"
-                )
+                inner.append(f"({row[target.index(name)]}) AS `__r_{name}`")
+                inner.append(_cast_sql(f"`__r_{name}`", name, types[name]))
                 outer.append(
                     strict_case_sql(
                         f"`__r_{name}`", f"`{name}`", types[name], name
@@ -277,43 +392,137 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
     return spark.sql(" UNION ALL ".join(selects))
 
 
-def _check_constraints(
-    spark: SparkSession, catalog: Catalog, qualified: str, new_rows: DataFrame
+def _key_value(v):
+    """A key component as Spark's grouping compares it: NaN equals
+    NaN (Python's float NaN does not equal itself)."""
+    return ("NaN",) if isinstance(v, float) and v != v else v
+
+
+def _in_sql(col: str, typ: str, values: set) -> str | None:
+    """``col IN (…)`` as SQL text over collected key values — one
+    py4j call for any batch size, where Column.isin pays a round trip
+    per value. Values go back through CAST of their text to the column
+    type, exact for the integer, string, decimal, date and boolean
+    types. None for the others — TIMESTAMP is collected as local
+    wall-clock time, and a floating IN would not equate -0.0 with 0.0
+    as the join does — and the caller then semi-joins alone."""
+    if typ in ("timestamp", "double", "float"):
+        return None
+
+    def lit(v) -> str:
+        if isinstance(v, int) and not isinstance(v, bool):
+            return str(v)
+        text = "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return text if typ == "string" else f"CAST({text} AS {typ})"
+
+    return f"`{col}` IN ({', '.join(lit(v) for v in values)})"
+
+
+def _stored_clash(existing: DataFrame, new_rows: DataFrame, cols: list[str], tuples: list):
+    """A stored row whose key ``cols`` equals one of the batch key
+    ``tuples`` (no NULLs), or None — one job: IN filters the parquet
+    scan pushes down, plus a semi-join on the batch when the filters
+    alone are not exact (a multi-column key, or a column type _in_sql
+    leaves out)."""
+    types = {f.name: f.dataType.simpleString() for f in existing.schema.fields}
+    filters = [_in_sql(c, types[c], {t[i] for t in tuples}) for i, c in enumerate(cols)]
+    clash = existing.select(*cols)
+    if any(filters):
+        clash = clash.where(" AND ".join(f"({f})" for f in filters if f))
+    if len(cols) > 1 or not all(filters):
+        clash = clash.join(new_rows.select(*cols), on=cols, how="left_semi")
+    # no limit(1): an incremental limit scans partition by partition,
+    # one job each, when nothing matches — the common case. The stored
+    # key is unique, so at most one row per batch tuple comes back.
+    found = clash.collect()
+    return found[0] if found else None
+
+
+def _check_not_null(
+    catalog: Catalog,
+    qualified: str,
+    new_rows: DataFrame,
+    props: dict[str, str],
+    rows: list | None = None,
 ) -> None:
-    nn = catalog.not_null_cols(qualified)
-    for col in nn:
-        if new_rows.where(F.col(col).isNull()).limit(1).count() > 0:
+    """1048 on the first NOT NULL column holding a NULL — over the
+    collected ``rows`` when given, else one Spark job per column."""
+    for col in catalog.not_null_cols(qualified, props):
+        if (
+            any(r[col] is None for r in rows)
+            if rows is not None
+            else new_rows.where(F.col(col).isNull()).limit(1).count() > 0
+        ):
             raise EbikeError(1048, f"Column '{col}' cannot be null")
-    keys = []
-    pk = catalog.primary_key(qualified)
-    if pk:
-        keys.append(("PRIMARY", pk))
-    keys.extend(catalog.unique_keys(qualified))
+
+
+def _check_constraints(
+    spark: SparkSession,
+    catalog: Catalog,
+    qualified: str,
+    new_rows: DataFrame,
+    props: dict[str, str],
+    rows: list | None = None,
+) -> None:
+    """NOT NULL (1048), then per PRIMARY/UNIQUE key: duplicates inside
+    the batch, then clashes with stored rows (1062). UNIQUE keys take
+    MySQL's NULL exemption (any number of NULLs in a unique index).
+
+    ``rows`` is the batch already collected on the driver (an INSERT …
+    VALUES statement): NOT NULL and the in-batch duplicates are then
+    checked in Python, and each key probes the stored rows with one
+    job (_stored_clash). Without it (LOAD DATA, INSERT …
+    SELECT: data-sized input) every check is a Spark job over
+    ``new_rows``."""
+    _check_not_null(catalog, qualified, new_rows, props, rows)
+    keys = declared_keys(catalog, qualified, props)
     if not keys:
         return
     existing = spark.table(qualified)
     for key_name, cols in keys:
-        # intra-batch duplicates. MySQL allows any number of NULLs in a
-        # UNIQUE index (NULL != NULL for uniqueness), so rows with a
-        # NULL key column are exempt from non-PK duplicate checks —
-        # matching the semi-join below, where NULLs never equi-match.
-        cand = new_rows
-        if key_name != "PRIMARY":
-            cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-        dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
-        if dup:
-            val = "-".join(str(dup[0][c]) for c in cols)
-            raise duplicate_entry(val, key_name)
-        # conflicts with stored rows: semi-join on the key columns
-        clash = (
-            new_rows.select(*cols)
-            .join(existing.select(*cols), on=cols, how="inner")
-            .limit(1)
-            .collect()
-        )
-        if clash:
-            val = "-".join(str(clash[0][c]) for c in cols)
-            raise duplicate_entry(val, key_name)
+        if rows is not None:
+            tuples = [tuple(r[c] for c in cols) for r in rows]
+            if key_name != "PRIMARY":
+                tuples = [t for t in tuples if None not in t]
+            seen = set()
+            for t in tuples:
+                k = tuple(_key_value(v) for v in t)
+                if k in seen:
+                    raise duplicate_entry("-".join(str(v) for v in t), key_name)
+                seen.add(k)
+            # NULL components never equi-match a stored row
+            probe = [t for t in tuples if None not in t]
+            clash = _stored_clash(existing, new_rows, cols, probe) if probe else None
+        else:
+            # intra-batch duplicates, then a semi-join on the key columns
+            cand = new_rows
+            if key_name != "PRIMARY":
+                cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
+            dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
+            if dup:
+                raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
+            found = (
+                new_rows.select(*cols)
+                .join(existing.select(*cols), on=cols, how="inner")
+                .limit(1)
+                .collect()
+            )
+            clash = found[0] if found else None
+        if clash is not None:
+            raise duplicate_entry("-".join(str(clash[c]) for c in cols), key_name)
+
+
+def _append(
+    spark: SparkSession, qualified: str, df: DataFrame, has_rowid: bool
+) -> None:
+    """Append ``df`` (the table's user columns) to the table. Row
+    identity materializes here (reference: uuid per row,
+    meta_def.rs:385-398) — stable for the row's lifetime; the frame is
+    aligned to the PHYSICAL column order, because insertInto is
+    positional and ALTER ADD COLUMN places later columns after rowid."""
+    if has_rowid:
+        df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
+    df.write.insertInto(qualified, overwrite=False)
 
 
 def _mint_auto_increment(
@@ -373,33 +582,38 @@ def insert(
 ) -> int:
     qualified = catalog.qualify(ins.table, current_db)
     catalog.require_table(qualified)
-    df = _values_df(spark, ins, catalog.column_types(qualified))
-    ai = catalog.auto_increment_col(qualified)
+    props = catalog.properties(qualified)
+    col_types = catalog.column_types(qualified, props)
+    df = _values_df(spark, ins, col_types)
+    ai = catalog.auto_increment_col(qualified, props)
     if ai is not None:
-        df, first_id = _mint_auto_increment(
-            spark, qualified, df, ai, dict(catalog.column_types(qualified))[ai]
-        )
+        df, first_id = _mint_auto_increment(spark, qualified, df, ai, dict(col_types)[ai])
         if first_id is not None and session is not None:
             # MySQL LAST_INSERT_ID(): first minted id of the batch
             session["last_insert_id"] = first_id
     if ins.replace:
-        return _replace(spark, catalog, qualified, df, ins)
+        return _replace(spark, catalog, qualified, df, ins, props)
     if ins.on_dup_update is not None:
-        return _upsert(spark, catalog, qualified, df, ins)
+        return _upsert(spark, catalog, qualified, df, ins, props)
     if ins.ignore:
-        return _insert_ignore(spark, catalog, qualified, df)
-    _check_constraints(spark, catalog, qualified, df)
-    if catalog.has_rowid(qualified):
-        # row identity materializes at INSERT (reference: uuid per row,
-        # meta_def.rs:385-398) — stable for the row's lifetime. Align to
-        # the PHYSICAL column order: insertInto is positional and ALTER
-        # ADD COLUMN places later columns after rowid.
-        df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
-    df.write.insertInto(qualified, overwrite=False)
-    return len(ins.rows)
+        return _insert_ignore(spark, catalog, qualified, df, props)
+    # The batch is statement-sized: collect it once (the strict guard
+    # raises 1366 here; an inline-table batch runs no job for it),
+    # check it on the driver, then write it as one file.
+    rows = df.collect()
+    _check_constraints(spark, catalog, qualified, df, props, rows=rows)
+    _append(spark, qualified, df.coalesce(1), catalog.has_rowid(qualified, props))
+    return len(rows)
 
 
-def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: Insert) -> int:
+def _upsert(
+    spark: SparkSession,
+    catalog: Catalog,
+    qualified: str,
+    new_df,
+    ins: Insert,
+    props: dict[str, str],
+) -> int:
     """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert — the reference
     1105s it; this is the anti-join + union + rewrite emulation of
     MERGE, the idiomatic parquet upsert without a Delta dependency).
@@ -414,19 +628,12 @@ def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: 
     set-oriented implementation rejects them as 1105 rather than pick
     an arbitrary order.
     """
-    import re as _re
-
-    pk = catalog.primary_key(qualified)
-    keys = ([("PRIMARY", pk)] if pk else []) + list(catalog.unique_keys(qualified))
-    has_rowid = catalog.has_rowid(qualified)
+    keys = declared_keys(catalog, qualified, props)
+    has_rowid = catalog.has_rowid(qualified, props)
     if not keys:
         # MySQL: with no unique index the ON DUPLICATE clause never fires
-        _check_constraints(spark, catalog, qualified, new_df)
-        if has_rowid:
-            new_df = new_df.withColumn(ROWID, F.expr("uuid()")).select(
-                *spark.table(qualified).columns
-            )
-        new_df.write.insertInto(qualified, overwrite=False)
+        _check_constraints(spark, catalog, qualified, new_df, props)
+        _append(spark, qualified, new_df, has_rowid)
         return len(ins.rows)
     # intra-batch duplicates on any key are ambiguous upserts → 1062,
     # like plain inserts (non-PK keys exempt NULLs: MySQL allows
@@ -461,7 +668,7 @@ def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: 
 
     joined = existing.join(batch, any_key, "left")
     matched = F.col("__new_mark").isNotNull()
-    types = dict(catalog.column_types(qualified))
+    types = dict(catalog.column_types(qualified, props))
     assigned = dict(ins.on_dup_update or [])
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
@@ -471,8 +678,8 @@ def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: 
     for name in existing.columns:
         if name in assigned:
             # VALUES(col) → the incoming row's value for col
-            expr_sql = _re.sub(
-                r"\bVALUES\s*\(\s*`?(\w+)`?\s*\)", r"__new_\1", assigned[name], flags=_re.I
+            expr_sql = re.sub(
+                r"\bVALUES\s*\(\s*`?(\w+)`?\s*\)", r"__new_\1", assigned[name], flags=re.I
             )
             upd = guarded_cast_col(F.expr(expr_sql), types[name], name)
             out_cols.append(F.when(matched, upd).otherwise(F.col(name)).alias(name))
@@ -512,7 +719,13 @@ def _upsert(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: 
     return n_new + 2 * n_changed
 
 
-def _insert_ignore(spark: SparkSession, catalog: Catalog, qualified: str, new_df) -> int:
+def _insert_ignore(
+    spark: SparkSession,
+    catalog: Catalog,
+    qualified: str,
+    new_df,
+    props: dict[str, str],
+) -> int:
     """INSERT IGNORE (MySQL duplicate-skip): rows whose PRIMARY/UNIQUE
     key collides with a stored row OR an earlier row of the same batch
     are silently skipped (first row wins within the batch — MySQL
@@ -551,12 +764,8 @@ def _insert_ignore(spark: SparkSession, catalog: Catalog, qualified: str, new_df
     shuffle-distributive) computation exists for it unless NC = P.
     REPLACE escapes this because last-wins per index is
     order-reducible per key (a row_number window), not graph-greedy."""
-    for col in catalog.not_null_cols(qualified):
-        if new_df.where(F.col(col).isNull()).limit(1).count() > 0:
-            raise EbikeError(1048, f"Column '{col}' cannot be null")
-    pk = catalog.primary_key(qualified)
-    keys = ([("PRIMARY", pk)] if pk else []) + list(catalog.unique_keys(qualified))
-    has_rowid = catalog.has_rowid(qualified)
+    _check_not_null(catalog, qualified, new_df, props)
+    keys = declared_keys(catalog, qualified, props)
     existing = spark.table(qualified)
     if len(keys) == 1:
         # Single unique index: stored-conflict status depends only on
@@ -637,15 +846,18 @@ def _insert_ignore(spark: SparkSession, catalog: Catalog, qualified: str, new_df
         surviving = new_df
         n = surviving.count()
     if n:
-        if has_rowid:
-            surviving = surviving.withColumn(ROWID, F.expr("uuid()")).select(
-                *existing.columns
-            )
-        surviving.write.insertInto(qualified, overwrite=False)
+        _append(spark, qualified, surviving, catalog.has_rowid(qualified, props))
     return n
 
 
-def _replace(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins: Insert) -> int:
+def _replace(
+    spark: SparkSession,
+    catalog: Catalog,
+    qualified: str,
+    new_df,
+    ins: Insert,
+    props: dict[str, str],
+) -> int:
     """REPLACE INTO (MySQL delete-then-insert upsert — the reference
     1105s it, like ON DUPLICATE; same set-oriented MERGE emulation as
     :func:`_upsert`).
@@ -671,22 +883,15 @@ def _replace(spark: SparkSession, catalog: Catalog, qualified: str, new_df, ins:
     never re-enters `live`, so with no later collider X survives.)
     Each non-survivor is evicted exactly once, so the intra-batch
     delete count is n_batch − n_survivors."""
-    pk = catalog.primary_key(qualified)
-    keys = ([("PRIMARY", pk)] if pk else []) + list(catalog.unique_keys(qualified))
-    has_rowid = catalog.has_rowid(qualified)
+    keys = declared_keys(catalog, qualified, props)
+    has_rowid = catalog.has_rowid(qualified, props)
     if not keys:
-        _check_constraints(spark, catalog, qualified, new_df)
-        if has_rowid:
-            new_df = new_df.withColumn(ROWID, F.expr("uuid()")).select(
-                *spark.table(qualified).columns
-            )
-        new_df.write.insertInto(qualified, overwrite=False)
+        _check_constraints(spark, catalog, qualified, new_df, props)
+        _append(spark, qualified, new_df, has_rowid)
         return len(ins.rows)
     # NOT NULL still applies to the incoming batch (key conflicts with
     # stored rows are the point of REPLACE, so no clash check)
-    for col in catalog.not_null_cols(qualified):
-        if new_df.where(F.col(col).isNull()).limit(1).count() > 0:
-            raise EbikeError(1048, f"Column '{col}' cannot be null")
+    _check_not_null(catalog, qualified, new_df, props)
 
     # Intra-batch collisions, resolved distributively: survivor = the
     # LAST batch row per non-null key tuple, simultaneously for every
@@ -838,14 +1043,16 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
     return affected
 
 
-def declared_keys(catalog: Catalog, qualified: str) -> list[tuple[str, list[str]]]:
+def declared_keys(
+    catalog: Catalog, qualified: str, props: dict[str, str] | None = None
+) -> list[tuple[str, list[str]]]:
     """The table's PRIMARY + UNIQUE key list in check order — the one
     definition every duplicate probe shares."""
     keys: list[tuple[str, list[str]]] = []
-    pk = catalog.primary_key(qualified)
+    pk = catalog.primary_key(qualified, props)
     if pk:
         keys.append(("PRIMARY", pk))
-    keys.extend(catalog.unique_keys(qualified))
+    keys.extend(catalog.unique_keys(qualified, props))
     return keys
 
 
@@ -931,13 +1138,11 @@ def _delete_limited(
 def _order_cols(order_by: str) -> list:
     """Parse a raw ORDER BY list into sort Columns (ASC/DESC suffixes
     aren't expression syntax, so they're peeled off here)."""
-    import re as _re
-
     from ebike_spark.engine.parser import split_top_level
 
     cols = []
     for e in split_top_level(order_by):
-        m = _re.match(r"([\s\S]+?)\s+(ASC|DESC)\s*$", e.strip(), _re.I)
+        m = re.match(r"([\s\S]+?)\s+(ASC|DESC)\s*$", e.strip(), re.I)
         if m:
             c = F.expr(m.group(1))
             cols.append(c.desc() if m.group(2).upper() == "DESC" else c.asc())
@@ -989,13 +1194,11 @@ def load_data(
     regular files load — per-entry symlinks inside a directory could
     escape the fence)."""
     import os as _os
-    import re as _re
-
-    m = _re.match(
+    m = re.match(
         r"LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s+'([^']+)'\s*"
         r"(REPLACE|IGNORE)?\s*INTO\s+TABLE\s+([\w.`\"]+)([\s\S]*)$",
         sql,
-        _re.I,
+        re.I,
     )
     if not m:
         raise EbikeError(1064, "malformed LOAD DATA INFILE")
@@ -1028,17 +1231,18 @@ def load_data(
         raise EbikeError(29, f"File '{path}' not found")
 
     sep = "\t"  # MySQL default field terminator
-    fm = _re.search(r"FIELDS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'", rest, _re.I)
+    fm = re.search(r"FIELDS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'", rest, re.I)
     if fm:
         sep = fm.group(1).encode().decode("unicode_escape")
     skip_header = False
-    im = _re.search(r"IGNORE\s+(\d+)\s+LINES", rest, _re.I)
+    im = re.search(r"IGNORE\s+(\d+)\s+LINES", rest, re.I)
     if im:
         if int(im.group(1)) != 1:
             raise EbikeError(1105, "only IGNORE 1 LINES is supported")
         skip_header = True
-    cl = _re.search(r"\(([^()]*)\)\s*$", rest.strip())
-    col_types = catalog.column_types(qualified)
+    cl = re.search(r"\(([^()]*)\)\s*$", rest.strip())
+    props = catalog.properties(qualified)
+    col_types = catalog.column_types(qualified, props)
     names = [n for n, _ in col_types]
     types = dict(col_types)
     target = (
@@ -1089,7 +1293,7 @@ def load_data(
         return guarded_cast_col(raw_col, types[name], name)
 
     df = raw.select(*[_field(name).alias(name) for name in names])
-    ai = catalog.auto_increment_col(qualified)
+    ai = catalog.auto_increment_col(qualified, props)
     if ai is not None:
         df, first_id = _mint_auto_increment(spark, qualified, df, ai, types[ai])
         if first_id is not None and session is not None:
@@ -1099,11 +1303,9 @@ def load_data(
         class _Shim:  # _replace reads only len(ins.rows)
             rows = range(n_rows)
 
-        return _replace(spark, catalog, qualified, df, _Shim())
+        return _replace(spark, catalog, qualified, df, _Shim(), props)
     if mode == "IGNORE":
-        return _insert_ignore(spark, catalog, qualified, df)
-    _check_constraints(spark, catalog, qualified, df)
-    if catalog.has_rowid(qualified):
-        df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
-    df.write.insertInto(qualified, overwrite=False)
+        return _insert_ignore(spark, catalog, qualified, df, props)
+    _check_constraints(spark, catalog, qualified, df, props)
+    _append(spark, qualified, df, catalog.has_rowid(qualified, props))
     return n_rows

@@ -143,7 +143,8 @@ class DmlExecMixin:
         src = self._drop_hidden_rowid(
             self.spark.sql(self._fix_select(select_sql, datetime_fns=False))
         )
-        cols = self.catalog.column_types(qualified)
+        props = self.catalog.properties(qualified)
+        cols = self.catalog.column_types(qualified, props)
         types = dict(cols)
         listed = (
             [unquote_ident(c) for c in split_top_level(col_list)]
@@ -169,7 +170,7 @@ class DmlExecMixin:
                 for n, t in cols
             ]
         )
-        ai = self.catalog.auto_increment_col(qualified)
+        ai = self.catalog.auto_increment_col(qualified, props)
         if ai is not None:
             df, first_id = _dml._mint_auto_increment(
                 self.spark, qualified, df, ai, types[ai]
@@ -195,26 +196,22 @@ class DmlExecMixin:
                 rows = _LazyRows()
                 on_dup_update = on_dup
 
-            n = _dml._upsert(self.spark, self.catalog, qualified, df, _UShim())
+            n = _dml._upsert(self.spark, self.catalog, qualified, df, _UShim(), props)
             return EngineResult("count", affected=n)
         if replace:
 
             class _Shim:  # _replace reads only len(ins.rows)
                 rows = _LazyRows()
 
-            n = _dml._replace(self.spark, self.catalog, qualified, df, _Shim())
+            n = _dml._replace(self.spark, self.catalog, qualified, df, _Shim(), props)
             return EngineResult("count", affected=n)
         if ignore:
-            n = _dml._insert_ignore(self.spark, self.catalog, qualified, df)
+            n = _dml._insert_ignore(self.spark, self.catalog, qualified, df, props)
             return EngineResult("count", affected=n)
-        _dml._check_constraints(self.spark, self.catalog, qualified, df)
+        _dml._check_constraints(self.spark, self.catalog, qualified, df, props)
         # affected-rows counts the pre-rowid frame (column-pruned pass)
         n_src = df.count()
-        if self.catalog.has_rowid(qualified):
-            df = df.withColumn(_dml.ROWID, F.expr("uuid()")).select(
-                *self.spark.table(qualified).columns
-            )
-        df.write.insertInto(qualified, overwrite=False)
+        _dml._append(self.spark, qualified, df, self.catalog.has_rowid(qualified, props))
         return EngineResult("count", affected=n_src)
 
     # FROM-clause keywords that can precede an alias token without

@@ -325,7 +325,7 @@ def substitute_vars(
             out.append(sql[i:j])
             i = j
             continue
-        m = re.match(r"@@(?:(global|session)\.)?([A-Za-z_][A-Za-z0-9_]*)", sql[i:], re.I)
+        m = _SYS_VAR_RE.match(sql, i) if ch == "@" else None
         if m:
             scope = (m.group(1) or "session").lower()
             name = m.group(2).lower()
@@ -333,16 +333,20 @@ def substitute_vars(
                 out.append(sql_literal(global_vars.get(name, sys_vars.get(name))))
             else:
                 out.append(sql_literal(sys_vars.get(name)))
-            i += m.end()
+            i = m.end()
             continue
-        m = re.match(r"@([A-Za-z_][A-Za-z0-9_]*)", sql[i:])
+        m = _USER_VAR_RE.match(sql, i) if ch == "@" else None
         if m:
             out.append(sql_literal(user_vars.get(m.group(1).lower())))
-            i += m.end()
+            i = m.end()
             continue
         out.append(ch)
         i += 1
     return "".join(out)
+
+
+_SYS_VAR_RE = re.compile(r"@@(?:(global|session)\.)?([A-Za-z_][A-Za-z0-9_]*)", re.I)
+_USER_VAR_RE = re.compile(r"@([A-Za-z_][A-Za-z0-9_]*)")
 
 
 def unquote_ident(ident: str) -> str:

@@ -24,10 +24,54 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
+    """Cores for ``local[N]``: SPARK_GRAFT_CPUS when it holds a positive
+    number, else the CPUs this process may run on (what ``nproc``
+    reports)."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "") or os.cpu_count() or 8)
+        n = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
     except ValueError:
-        return os.cpu_count() or 8
+        n = 0
+    if n > 0:
+        return n
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+# The default driver heap: ~60% of the host's memory, capped at the
+# 24g this engine was tuned with — the rest is left to the Python
+# side, the page cache and the JVM's off-heap. Sized from the host, not
+# a constant: a pinned heap larger than the host refuses to start the
+# JVM at all.
+_MAX_HEAP_MB = 24 * 1024
+_MIN_HEAP_MB = 512
+_HEAP_SHARE = 0.6
+
+
+def heap_for_host(mem_total_mb: int | None) -> str:
+    """Default heap for a host with ``mem_total_mb`` MiB of memory, as a
+    JVM size string; the 24g cap when the host size is unknown."""
+    if not mem_total_mb:
+        return f"{_MAX_HEAP_MB}m"
+    mb = int(mem_total_mb * _HEAP_SHARE)
+    return f"{max(_MIN_HEAP_MB, min(_MAX_HEAP_MB, mb))}m"
+
+
+def _mem_total_mb(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's MemTotal in MiB (Linux /proc/meminfo, else sysconf);
+    None when neither answers."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024  # reported in kB
+    except (OSError, ValueError, IndexError):
+        pass
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return None
 
 
 # One source of truth for the driver heap so -Xmx (spark.driver.memory,
@@ -58,7 +102,13 @@ def _normalize_heap(mem: str) -> str:
     return m
 
 
-_DRIVER_MEM = _normalize_heap(os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+def _driver_mem() -> str:
+    """SPARK_GRAFT_DRIVER_MEM when set, else the host-sized default."""
+    return _normalize_heap(
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or heap_for_host(_mem_total_mb())
+    )
+
+
 _PIN_HEAP = os.environ.get("SPARK_GRAFT_PIN_HEAP", "1") != "0"
 
 
@@ -73,6 +123,7 @@ def _append_java_options(builder_conf_value: str | None, extra: str) -> str:
 def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkSession.Builder:
     """Apply this engine's configuration to any SparkSession builder."""
     n = cpus or _cpus()
+    mem = _driver_mem()
     # read any options the caller already set so the JVM-flag configs
     # below APPEND rather than clobber (Builder keeps them in _options;
     # fall back to empty when the attribute moves)
@@ -95,7 +146,7 @@ def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkS
         # must stay inside whole-stage codegen; the 100-field default
         # silently drops them to interpreted mode (~3× slower).
         .config("spark.sql.codegen.maxFields", "400")
-        .config("spark.driver.memory", _DRIVER_MEM)
+        .config("spark.driver.memory", mem)
         # Pin and pre-touch the heap (Xms = Xmx, AlwaysPreTouch): on
         # this microVM host (kernel 6.18.5-fc), pages the JVM gives
         # back to the guest kernel are reported free to the hypervisor,
@@ -113,13 +164,13 @@ def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkS
         # sizing -Xms to spark.executor.memory in executor options at
         # deploy time (AlwaysPreTouch alone is set below). The one-time
         # local cost is ~10 s of startup before any timing begins;
-        # SPARK_GRAFT_PIN_HEAP=0 opts out (e.g. hosts without 24 GB to
-        # commit eagerly — the lazy -Xmx-only heap worked there).
+        # SPARK_GRAFT_PIN_HEAP=0 opts out (the heap is then committed
+        # lazily, as -Xmx alone does).
         .config(
             "spark.driver.extraJavaOptions",
             _append_java_options(
                 prior.get("spark.driver.extraJavaOptions"),
-                (f"-Xms{_DRIVER_MEM} " if _PIN_HEAP else "")
+                (f"-Xms{mem} " if _PIN_HEAP else "")
                 + "-XX:+AlwaysPreTouch",
             ),
         )

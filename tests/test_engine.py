@@ -9,6 +9,7 @@ test, dropped afterwards."""
 from __future__ import annotations
 
 import uuid
+from collections import Counter
 
 import pytest
 
@@ -2658,3 +2659,68 @@ def test_load_data_rounds_and_ignores_like_insert(eng, tmp_path):
     assert rows[7][0] == 1234567890123456789
     assert rows[7][1] == 1.7976931348623157e308
     assert rows[8] == (9, 0.0)
+
+
+def _table_state(spark, qualified: str) -> tuple[int, int, int]:
+    """(row count, order-free checksum, parquet file count) of a table —
+    hidden rowids included, so a rewrite that reminted them shows."""
+    rows = spark.table(qualified).collect()
+    checksum = hash(frozenset(Counter(tuple(r) for r in rows).items()))
+    files = [f for f in spark.table(qualified).inputFiles() if f.endswith(".parquet")]
+    return len(rows), checksum, len(files)
+
+
+@pytest.mark.parametrize("form", ["inline", "per_row"])
+@pytest.mark.parametrize(
+    "last_row, code",
+    [
+        ("(9, 'n9', 'not a number')", 1366),  # bad cast
+        ("(9, NULL, 9)", 1048),  # NULL into NOT NULL
+        ("(1, 'n1', 1)", 1062),  # duplicates a stored row
+        ("(4, 'n4', 4)", 1062),  # duplicates an earlier row of the batch
+    ],
+)
+def test_failed_values_batch_leaves_table_unchanged(eng, spark, form, last_row, code):
+    """A VALUES batch whose LAST row fails writes nothing: row count,
+    checksum and parquet file count are as before the statement. Both
+    VALUES forms: all-literal (one inline table) and per-row (a cell
+    is an expression)."""
+    eng.execute(
+        "CREATE TABLE at (id INT NOT NULL, name CHAR NOT NULL, v INT, PRIMARY KEY (id))"
+    )
+    eng.execute("INSERT INTO at VALUES (1, 'a', 10), (2, 'b', 20)")
+    qualified = f"{eng.current_db}.at"
+    before = _table_state(spark, qualified)
+    first = "(3, 'n3', 1 + 2)" if form == "per_row" else "(3, 'n3', 3)"
+    batch = ", ".join([first] + [f"({i}, 'n{i}', {i})" for i in range(4, 8)] + [last_row])
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(f"INSERT INTO at VALUES {batch}")
+    assert ei.value.code == code
+    assert _table_state(spark, qualified) == before
+    # the statement that does succeed writes one file
+    eng.execute(f"INSERT INTO at VALUES {batch.rsplit(', (', 1)[0]}")
+    count, _, files = _table_state(spark, qualified)
+    assert (count, files) == (before[0] + 5, before[2] + 1)
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "INSERT INTO pc VALUES (3, 'c'), (4, 'd')",
+        "INSERT IGNORE INTO pc VALUES (1, 'x'), (5, 'e')",
+        "REPLACE INTO pc VALUES (2, 'y')",
+        "INSERT INTO pc VALUES (1, 'z') ON DUPLICATE KEY UPDATE v = 'w'",
+    ],
+)
+def test_insert_reads_table_properties_once(eng, monkeypatch, sql):
+    """One INSERT statement reads SHOW TBLPROPERTIES once, however
+    many constraint getters its checks consult."""
+    eng.execute("CREATE TABLE pc (id INT NOT NULL, v CHAR, PRIMARY KEY (id), UNIQUE KEY uv (v))")
+    eng.execute("INSERT INTO pc VALUES (1, 'a'), (2, 'b')")
+    calls = []
+    orig = type(eng.catalog).properties
+    monkeypatch.setattr(
+        type(eng.catalog), "properties", lambda self, q: calls.append(q) or orig(self, q)
+    )
+    eng.execute(sql)
+    assert len(calls) == 1

@@ -135,3 +135,40 @@ def test_insert_select_constraint_parity_at_volume(eng, spark):
     n = eng.execute("SELECT COUNT(*) AS c FROM od").rows()[0]["c"]
     want = spark.sql("SELECT COUNT(*) AS c FROM ord_src").collect()[0]["c"]
     assert n == want
+
+
+@pytest.mark.parametrize("n", [1_500, 5_000])
+def test_mysqldump_extended_insert(eng, spark, n):
+    """A mysqldump-shaped extended INSERT (one statement, n literal
+    rows: escaped quotes, DECIMAL text, NULLs) commits exactly its rows
+    and adds at most one parquet file. The per-row UNION ALL form
+    failed from ~1,000-2,000 rows (FAILED_TO_PARSE_TOO_COMPLEX, then a
+    JVM StackOverflowError)."""
+    from decimal import Decimal
+
+    eng.execute(
+        "CREATE TABLE `dump` (`id` int NOT NULL, `name` varchar(32), "
+        "`price` decimal(10,2), `note` text, PRIMARY KEY (`id`))"
+    )
+    eng.execute("INSERT INTO `dump` VALUES (0,'seed',0.00,NULL)")
+    qualified = f"{eng.current_db}.dump"
+    files_before = len(spark.table(qualified).inputFiles())
+    values = ",".join(
+        f"({i},'it\\'s #{i}',{i % 1000}.{i % 100:02d},"
+        + ("NULL" if i % 7 == 0 else f"'line\\n{i}'")
+        + ")"
+        for i in range(1, n + 1)
+    )
+    r = eng.execute(f"INSERT INTO `dump` VALUES {values}")
+    assert r.affected == n
+    got = eng.execute(
+        "SELECT COUNT(*) AS c, SUM(id) AS s, SUM(price) AS p, COUNT(note) AS nn "
+        "FROM `dump` WHERE id > 0"
+    ).rows()[0]
+    assert got["c"] == n
+    assert got["s"] == n * (n + 1) // 2
+    assert got["p"] == sum(Decimal(f"{i % 1000}.{i % 100:02d}") for i in range(1, n + 1))
+    assert got["nn"] == n - n // 7
+    row = eng.execute("SELECT name, note FROM `dump` WHERE id = 8").rows()[0]
+    assert (row["name"], row["note"]) == ("it's #8", "line\n8")
+    assert len(spark.table(qualified).inputFiles()) - files_before <= 1

@@ -11,7 +11,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, event, given, settings
 from hypothesis import strategies as st
 
 from ebike_spark.engine.parser import split_top_level, strip_comments, substitute_vars
@@ -773,3 +773,137 @@ def test_zorder_interleave_matches_python_and_duckdb(spark, pairs):
             f"SELECT {_z_terms(str(u), str(t), 'duck')}"
         ).fetchone()[0]
         assert dz == w, (u, t)
+
+
+# ------------------------------------------- INSERT … VALUES: two forms
+
+# Literal cell families. Each column of a batch draws from one family
+# (plus NULLs), so most batches take the inline-table form while
+# exact-numeric families still mix types inside a column and exercise
+# Spark's per-column widening; the `any` family mixes everything and
+# takes the per-row form.
+_ints = st.one_of(
+    st.integers(-1000, 1000),  # incl. negatives
+    st.integers(2**53 - 3, 2**53 + 3),  # exact integers beyond 2^53
+    st.integers(-(2**63) - 5, 2**63 + 5),  # incl. beyond BIGINT
+).map(str)
+_fractions = st.sampled_from(["2.5", "-2.5", "0.5", "-0.5", "1.49", "0.001"])  # into BIGINT: rounds
+_decimals = st.decimals(-(10**8), 10**8, places=3, allow_nan=False, allow_infinity=False).map(str)
+_exact = st.one_of(_ints, _fractions, _decimals)
+_doubles = st.floats(allow_nan=False, allow_infinity=False).map(lambda x: f"{x:e}")  # exponent form
+_quoted_numerics = st.sampled_from(["'12'", "'2.5'", "'-3.5'", "'1e3'", "' 7 '"])
+_overflow = st.sampled_from(["'99999999999999999999'", "'-9223372036854775809'", "'1e400'"])
+_strings = st.one_of(
+    st.sampled_from(["'it\\'s'", "'a''b'", "'\\\\'", "''"]),  # escaped quotes, backslash
+    st.from_regex(r"[a-z]{1,8}", fullmatch=True).map(lambda x: f"'{x}'"),
+)
+_any = st.one_of(_exact, _doubles, _quoted_numerics, _overflow, _strings)
+_VALUES_FAMILIES = [  # per column (id, n, d, f, s)
+    [st.sampled_from([str(i) for i in range(1, 41)] + ["2.5", "'5'"] + ["NULL"] * 3)],
+    [_ints, _fractions, _exact, _doubles, _quoted_numerics, _overflow],
+    [_decimals, _exact, _ints, _quoted_numerics],
+    [_doubles, _exact, _decimals],
+    [_strings, _quoted_numerics, _ints],
+]
+_VALUES_DDL = (
+    "(id INT NOT NULL, n INT, d DECIMAL(12,3), f FLOAT, s CHAR, "
+    "PRIMARY KEY (id), UNIQUE KEY us (s))"
+)
+
+
+@st.composite
+def _values_batch(draw):
+    """Rows of literal cells for columns (id, n, d, f, s)."""
+    n_rows = draw(st.integers(1, 6))
+    mixed = draw(st.sampled_from([None, None, None, 1, 2, 3, 4]))  # one column draws from _any
+    columns = []
+    for i, families in enumerate(_VALUES_FAMILIES):
+        family = _any if i == mixed else draw(st.sampled_from(families))
+        cell = family if i == 0 else st.one_of(family, family, family, st.just("NULL"))
+        columns.append(draw(st.lists(cell, min_size=n_rows, max_size=n_rows)))
+    return [list(row) for row in zip(*columns)]
+
+
+def _insert_outcome(eng, table: str, sql: str):
+    """('ok', affected, stored rows) or ('err', MySQL code)."""
+    from ebike_spark.engine.errors import EbikeError
+
+    try:
+        affected = eng.execute(sql.replace("{t}", table, 1)).affected
+    except EbikeError as e:
+        return ("err", e.code)
+    rows = eng.execute(f"SELECT id, n, d, f, s FROM {table}").rows()
+    return ("ok", affected, sorted((tuple(r) for r in rows), key=repr))
+
+
+@settings(SLOW, max_examples=20)
+@given(_values_batch(), st.sampled_from(["ok"] * 6 + ["short_row", "unknown_col"]))
+def test_inline_and_per_row_values_agree(spark, cells, shape):
+    """The inline-table form and the per-row form of one literal VALUES
+    batch store identical rows, or raise the same MySQL code (1366 bad
+    cast, 1048 NULL into NOT NULL, 1062 duplicate, 1136 column count,
+    1054 unknown column) — against a table holding one stored row."""
+    import uuid as _uuid
+    from unittest import mock
+
+    from ebike_spark.engine import Engine, dml
+
+    cols = "id, n, d, f, s"
+    if shape == "short_row":
+        cells[-1].pop()
+    elif shape == "unknown_col":
+        cols = "id, n, d, f, zz"
+    sql = f"INSERT INTO {{t}} ({cols}) VALUES " + ", ".join(f"({', '.join(r)})" for r in cells)
+
+    eng = Engine(spark)
+    db = f"pv_{_uuid.uuid4().hex[:8]}"
+    eng.execute(f"CREATE DATABASE {db}")
+    try:
+        eng.execute(f"USE {db}")
+        for t in ("inline_t", "per_row_t"):
+            eng.execute(f"CREATE TABLE {t} {_VALUES_DDL}")
+            eng.execute(f"INSERT INTO {t} VALUES (1, 1, 1.5, 1e0, 'stored')")
+        if shape == "ok":
+            types = dict(eng.catalog.column_types(f"{db}.inline_t"))
+            event(f"inline form: {dml._inline_ok(cells, list(types), types)}")
+        inline = _insert_outcome(eng, "inline_t", sql)
+        with mock.patch.object(dml, "_inline_ok", return_value=False):
+            per_row = _insert_outcome(eng, "per_row_t", sql)
+        event(f"outcome: {inline[0]} {inline[1] if inline[0] == 'err' else ''}")
+        assert inline == per_row, sql
+    finally:
+        eng.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+def test_values_widening_that_would_change_a_value_takes_per_row_form(spark):
+    """An inline table widens each column to one type: an exact integer
+    beyond 2^53 beside a double literal would widen to DOUBLE and store
+    2^53 + 2; beside 0.5 in a DECIMAL(38,0)-wide column it would round
+    0.5 away; a STRING column would store 5 as '5.0'. Such batches must
+    take the per-row form, and store every value exactly."""
+    import uuid as _uuid
+
+    from ebike_spark.engine import Engine, dml
+
+    types = {"n": "bigint", "s": "string", "d": "decimal(38,1)"}
+    assert not dml._inline_ok([["9007199254740993"], ["1e3"]], ["n"], types)
+    assert not dml._inline_ok([["12345678901234567890123456789012345678"], ["0.5"]], ["d"], types)
+    assert not dml._inline_ok([["5"], ["2.5"]], ["s"], types)
+    assert not dml._inline_ok([["5"], ["'x'"]], ["n"], types)
+    assert not dml._inline_ok([["1 + 1"]], ["n"], types)
+    # one literal type per column, or exact numerics widened exactly
+    # into a numeric column: the inline form
+    assert dml._inline_ok([["9007199254740993"], ["2.5"], ["NULL"]], ["n"], types)
+    assert dml._inline_ok([["'it\\'s'"], ["'a''b'"], ["NULL"]], ["s"], types)
+
+    eng = Engine(spark)
+    db = f"pw_{_uuid.uuid4().hex[:8]}"
+    eng.execute(f"CREATE DATABASE {db}")
+    try:
+        eng.execute(f"USE {db}")
+        eng.execute("CREATE TABLE w (n INT, s CHAR)")
+        eng.execute("INSERT INTO w VALUES (9007199254740993, 5), (1e3, 2.5), (-2.5, NULL)")
+        got = sorted((r["n"], r["s"]) for r in eng.execute("SELECT n, s FROM w").rows())
+        assert got == [(-3, None), (1000, "2.5"), (9007199254740993, "5")]
+    finally:
+        eng.execute(f"DROP DATABASE IF EXISTS {db}")
