@@ -29,6 +29,7 @@ import re
 
 from pyspark.sql import SparkSession
 
+from ebike_spark.engine import commit
 from ebike_spark.engine.errors import EbikeError, table_not_exists, unknown_database
 from ebike_spark.engine.parser import CreateTable
 
@@ -202,11 +203,18 @@ class Catalog:
             f"CREATE TABLE {ine}{bq(qualified)} ({', '.join(cols)}) USING parquet"
             f" TBLPROPERTIES ({', '.join(props)})"
         )
+        commit.bump(self.spark, qualified)
 
     def drop_table(self, qualified: str, if_exists: bool) -> None:
+        """DROP TABLE: Spark deletes the live version; its version root
+        goes too, so nothing of the table stays in the warehouse."""
         if not if_exists:
             self.require_table(qualified)
-        self.spark.sql(f"DROP TABLE IF EXISTS {bq(qualified)}")
+        with commit.writing(self.spark, qualified):
+            loc = commit.location(self.spark, qualified)
+            self.spark.sql(f"DROP TABLE IF EXISTS {bq(qualified)}")
+            commit.remove_root(loc)
+            commit.bump(self.spark, qualified)
 
     def create_table_like(self, src_qualified: str, dst_qualified: str) -> None:
         """CREATE TABLE dst LIKE src — structure only, as MySQL: columns
@@ -230,6 +238,7 @@ class Catalog:
             f"CREATE TABLE {bq(dst_qualified)} ({cols}) USING parquet"
             f" TBLPROPERTIES ({props_ddl})"
         )
+        commit.bump(self.spark, dst_qualified)
 
     # ------------------------------------------------------------ metadata
 
@@ -309,20 +318,6 @@ class Catalog:
         body = ",\n".join(lines)
         return f"CREATE TABLE `{tname}` (\n{body}\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4"
 
-    def alter_add_column(
-        self,
-        qualified: str,
-        col: str,
-        sql_type: str,
-        precision: int | None = None,
-        scale: int | None = None,
-    ) -> None:
-        spark_t = resolve_sql_type(sql_type, precision, scale)
-        self.require_table(qualified)
-        self.spark.sql(
-            f"ALTER TABLE {bq(qualified)} ADD COLUMNS (`{col}` {spark_t})"
-        )
-
     def refresh_system_schemas(self, sys_vars: dict[str, object] | None = None) -> None:
         """Materialize the reference's other system schemas
         (/root/reference/src/meta/initial.rs:1113,1161,1401):
@@ -381,7 +376,7 @@ class Catalog:
             if db == "information_schema":
                 continue
             for t in spark.catalog.listTables(db):
-                if t.tableType == "TEMPORARY" or re.match(r"__ebike_stage", t.name):
+                if t.tableType == "TEMPORARY":
                     continue
                 qualified = f"{db}.{t.name}"
                 ttype = "VIEW" if t.tableType == "VIEW" else "BASE TABLE"

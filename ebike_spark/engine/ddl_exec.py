@@ -12,8 +12,17 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ebike_spark.engine import dml
-from ebike_spark.engine.catalog import bq
+from ebike_spark.engine import commit, dml
+from ebike_spark.engine.catalog import (
+    PROP_AUTO_INCREMENT,
+    PROP_NOT_NULL,
+    PROP_PK,
+    PROP_ROWID,
+    PROP_UNIQUE_PREFIX,
+    ROWID,
+    bq,
+    resolve_sql_type,
+)
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import parse_create_table, unquote_ident
 from ebike_spark.engine.session_state import (
@@ -94,13 +103,14 @@ class DdlExecMixin:
             src = self._drop_hidden_rowid(src)
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
+        commit.bump(self.spark, q)
         _bump_sys_schema_epoch()
         return EngineResult("count", affected=self.spark.table(q).count())
 
     # A materialized view is a managed parquet table whose defining
     # SELECT is stored (base64, to dodge DDL string escaping) in table
-    # properties; REFRESH re-runs it through the same staged-swap path
-    # DML uses. The OLAP-engine face of the hierarchical-rollup pattern
+    # properties; REFRESH re-runs it and commits the result the way DML
+    # does (engine/commit.py). The OLAP-engine face of the hierarchical-rollup pattern
     # (plans/timeseries.py): materialize once, re-serve cheaply,
     # recompute on demand. Beyond the reference (1105s there).
     _PROP_MATVIEW = "ebike.matview.sql"
@@ -138,20 +148,12 @@ class DdlExecMixin:
     _PROP_CLUSTER = "ebike.cluster."
 
     def _create_index(self, sql: str) -> EngineResult:
-        """CREATE INDEX — the Spark-first reinterpretation of a
-        secondary index: a columnar engine has no B-tree to build, so
-        the index becomes PHYSICAL RANGE CLUSTERING on the key columns.
-        The table is rewritten repartitionByRange + sortWithinPartitions
-        on the index columns, which makes parquet row-group min/max
-        statistics (zone maps) selective for predicates on those
-        columns — the scan skips row groups the way the reference's
-        sled index-range seek skips keys
-        (/root/reference/src/core/execution.rs index-seek path; the
-        reference's own CREATE INDEX statement falls through to 1105).
-        The index is recorded in table properties; SHOW INDEX lists it
-        with Index_type CLUSTERED. One clustering order per table can
-        be physically dominant — creating a second index re-clusters
-        (documented; MySQL's secondary B-trees have no such coupling)."""
+        """CREATE [UNIQUE] INDEX name ON t (cols) — the ALTER TABLE …
+        ADD INDEX / ADD UNIQUE clause (_alter_clause). CREATE UNIQUE
+        INDEX is a retroactive UNIQUE constraint; a plain index is the
+        Spark-first reinterpretation of a secondary index: PHYSICAL
+        RANGE CLUSTERING on the key columns (the reference's own CREATE
+        INDEX statement falls through to 1105)."""
         m = re.match(
             r"CREATE\s+(UNIQUE\s+)?INDEX\s+([\w`\"]+)\s+ON\s+([\w.`\"]+)\s*\(([^)]+)\)\s*$",
             sql,
@@ -159,158 +161,16 @@ class DdlExecMixin:
         )
         if not m:
             raise parse_error("near CREATE INDEX")
-        from ebike_spark.engine.parser import split_top_level
-
-        if m.group(1):
-            # CREATE UNIQUE INDEX = retroactive UNIQUE constraint: the
-            # existing data is checked for duplicates, then the key is
-            # recorded and enforced by every subsequent INSERT/upsert
-            name = unquote_ident(m.group(2))
-            q = self.catalog.qualify(unquote_ident(m.group(3)), self.current_db)
-            cols = [unquote_ident(c) for c in split_top_level(m.group(4))]
-            return self._add_unique(q, name, cols)
-        name = unquote_ident(m.group(2))
-        if not re.fullmatch(r"\w+", name):
-            raise parse_error(f"bad index name '{name}'")
-        q = self.catalog.qualify(unquote_ident(m.group(3)), self.current_db)
-        self.catalog.require_table(q)
-        cols = [unquote_ident(c) for c in split_top_level(m.group(4))]
-        known = {c for c, _ in self.catalog.column_types(q)}
-        for c in cols:
-            if c not in known:
-                raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
-        if any(n == name for n, _ in self.catalog.cluster_indexes(q)):
-            raise EbikeError(1061, f"Duplicate key name '{name}'")
-        t = self.spark.table(q)
-        from ebike_spark.engine import dml
-
-        dml._rewrite(
-            self.spark, q, t.repartitionByRange(*cols).sortWithinPartitions(*cols)
+        kind = "UNIQUE" if m.group(1) else "INDEX"
+        return self._alter_table(
+            f"ALTER TABLE {m.group(3)} ADD {kind} {m.group(2)} ({m.group(4)})"
         )
-        self.spark.sql(
-            f"ALTER TABLE {bq(q)} SET TBLPROPERTIES "
-            f"('{self._PROP_CLUSTER}{name}' = '{','.join(cols)}')"
-        )
-        return EngineResult("count", affected=0)
 
     def _drop_index(self, sql: str) -> EngineResult:
         m = re.match(r"DROP\s+INDEX\s+([\w`\"]+)\s+ON\s+([\w.`\"]+)\s*$", sql, re.I)
         if not m:
             raise parse_error("near DROP INDEX")
-        return self._drop_index_named(
-            self.catalog.qualify(unquote_ident(m.group(2)), self.current_db),
-            unquote_ident(m.group(1)),
-        )
-
-    def _drop_index_named(self, q: str, name: str) -> EngineResult:
-        from ebike_spark.engine.catalog import PROP_UNIQUE_PREFIX
-
-        self.catalog.require_table(q)
-        if any(n == name for n, _ in self.catalog.cluster_indexes(q)):
-            # metadata-only: the physical clustering stays (harmless —
-            # it is just a row order) but stops being advertised or
-            # maintained
-            self.spark.sql(
-                f"ALTER TABLE {bq(q)} UNSET TBLPROPERTIES ('{self._PROP_CLUSTER}{name}')"
-            )
-            _bump_sys_schema_epoch()
-            return EngineResult("count", affected=0)
-        if any(n == name for n, _ in self.catalog.unique_keys(q)):
-            # dropping a UNIQUE index stops its constraint enforcement
-            self.spark.sql(
-                f"ALTER TABLE {bq(q)} UNSET TBLPROPERTIES ('{PROP_UNIQUE_PREFIX}{name}')"
-            )
-            _bump_sys_schema_epoch()
-            return EngineResult("count", affected=0)
-        raise EbikeError(1091, f"Can't DROP '{name}'; check that column/key exists")
-
-    def _add_unique(self, q: str, name: str, cols: list[str]) -> EngineResult:
-        """Retroactive UNIQUE key: reject if the existing data already
-        violates it (one bounded LIMIT-1 duplicate probe — rows with a
-        NULL in any key column are exempt, MySQL semantics), then record
-        the key; the INSERT/upsert paths enforce it from then on."""
-        from ebike_spark.engine.catalog import PROP_UNIQUE_PREFIX
-
-        self.catalog.require_table(q)
-        if not re.fullmatch(r"\w+", name):
-            raise parse_error(f"bad index name '{name}'")
-        known = {c for c, _ in self.catalog.column_types(q)}
-        for c in cols:
-            if c not in known:
-                raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
-        taken = {n for n, _ in self.catalog.unique_keys(q)}
-        taken.update(n for n, _ in self.catalog.cluster_indexes(q))
-        if name in taken:
-            raise EbikeError(1061, f"Duplicate key name '{name}'")
-        t = self.spark.table(q)
-        non_null = t
-        for c in cols:
-            non_null = non_null.where(F.col(c).isNotNull())
-        dup = (
-            non_null.groupBy(*[F.col(c) for c in cols])
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            vals = "-".join(str(dup[0][c]) for c in cols)
-            raise EbikeError(1062, f"Duplicate entry '{vals}' for key '{name}'")
-        self.spark.sql(
-            f"ALTER TABLE {bq(q)} SET TBLPROPERTIES "
-            f"('{PROP_UNIQUE_PREFIX}{name}' = '{','.join(cols)}')"
-        )
-        _bump_sys_schema_epoch()
-        return EngineResult("count", affected=0)
-
-    def _add_primary_key(self, q: str, cols: list[str]) -> EngineResult:
-        """Retroactive PRIMARY KEY: existing NULLs are 1138, existing
-        duplicates 1062; the key columns join the NOT NULL set."""
-        from ebike_spark.engine.catalog import PROP_NOT_NULL, PROP_PK
-
-        self.catalog.require_table(q)
-        if self.catalog.primary_key(q):
-            raise EbikeError(1068, "Multiple primary key defined")
-        known = {c for c, _ in self.catalog.column_types(q)}
-        for c in cols:
-            if c not in known:
-                raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
-        t = self.spark.table(q)
-        import functools as _ft
-        import operator as _op
-
-        any_null = _ft.reduce(_op.or_, [F.col(c).isNull() for c in cols])
-        if t.where(any_null).limit(1).collect():
-            raise EbikeError(1138, "Invalid use of NULL value in key column")
-        dup = (
-            t.groupBy(*[F.col(c) for c in cols])
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            vals = "-".join(str(dup[0][c]) for c in cols)
-            raise EbikeError(1062, f"Duplicate entry '{vals}' for key 'PRIMARY'")
-        nn = self.catalog.not_null_cols(q)
-        nn.extend(c for c in cols if c not in nn)
-        self.spark.sql(
-            f"ALTER TABLE {bq(q)} SET TBLPROPERTIES "
-            f"('{PROP_PK}' = '{','.join(cols)}', '{PROP_NOT_NULL}' = '{','.join(nn)}')"
-        )
-        _bump_sys_schema_epoch()
-        return EngineResult("count", affected=0)
-
-    def _drop_primary_key(self, q: str) -> EngineResult:
-        from ebike_spark.engine.catalog import PROP_PK
-
-        self.catalog.require_table(q)
-        if not self.catalog.primary_key(q):
-            raise EbikeError(1091, "Can't DROP 'PRIMARY'; check that column/key exists")
-        # MySQL keeps the NOT NULL attribute on former PK columns
-        self.spark.sql(f"ALTER TABLE {bq(q)} UNSET TBLPROPERTIES ('{PROP_PK}')")
-        _bump_sys_schema_epoch()
-        return EngineResult("count", affected=0)
+        return self._alter_table(f"ALTER TABLE {m.group(2)} DROP INDEX {m.group(1)}")
 
     def _matview_sql(self, q: str) -> str:
         import base64
@@ -326,6 +186,10 @@ class DdlExecMixin:
             raise parse_error("near REFRESH MATERIALIZED VIEW")
         q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
         self.catalog.require_table(q)
+        with commit.writing(self.spark, q):
+            return self._refresh_matview_locked(q)
+
+    def _refresh_matview_locked(self, q: str) -> EngineResult:
         stored = self._matview_sql(q)
         self.spark.catalog.setCurrentDatabase(self.current_db)
         src = self.spark.sql(self._fix_select(stored))
@@ -334,7 +198,7 @@ class DdlExecMixin:
             f.dataType for f in cur.schema.fields
         ]:
             raise unsupported("REFRESH with a changed result schema")
-        dml._rewrite(self.spark, q, src)
+        commit.commit(self.spark, [commit.Image(q, src.toDF(*cur.columns))])
         return EngineResult("count", affected=self.spark.table(q).count())
 
     def _drop_matview(self, sql: str) -> EngineResult:
@@ -364,7 +228,9 @@ class DdlExecMixin:
             raise parse_error("near TRUNCATE")
         q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
         self.catalog.require_table(q)
-        self.spark.sql(f"TRUNCATE TABLE {bq(q)}")
+        with commit.writing(self.spark, q):
+            self.spark.sql(f"TRUNCATE TABLE {bq(q)}")
+            commit.bump(self.spark, q)
         return EngineResult("count", affected=0)
 
     def _maintain_table(self, kw: str, sql: str) -> EngineResult:
@@ -377,9 +243,10 @@ class DdlExecMixin:
           introduced by external writers). Reports MySQL's row shape.
         - ANALYZE TABLE → ANALYZE TABLE COMPUTE STATISTICS (row counts /
           sizes into the catalog — what feeds join-strategy choices).
-        - OPTIMIZE TABLE → compact the table's data files: one staged
-          rewrite through the DML swap path (the io_compact_small_files
-          maintenance shape applied to an engine table).
+        - OPTIMIZE TABLE → compact the table's data files into the
+          table's next version (one commit, engine/commit.py — the
+          io_compact_small_files maintenance shape applied to an
+          engine table).
 
         All three accept a comma list and return one (Table, Op,
         Msg_type, Msg_text) row per table, MySQL-style."""
@@ -399,9 +266,8 @@ class DdlExecMixin:
                 continue
             if kw == "OPTIMIZE":
                 t = self.spark.table(q)
-                dml._rewrite(
-                    self.spark, q, t.coalesce(max(1, t.rdd.getNumPartitions() // 8))
-                )
+                compacted = t.coalesce(max(1, t.rdd.getNumPartitions() // 8))
+                commit.commit(self.spark, [commit.Image(q, compacted)])
                 rows.append((disp, "optimize", "status", "OK"))
                 continue
             # CHECK TABLE: re-validate declared constraints at rest
@@ -460,8 +326,16 @@ class DdlExecMixin:
             gone.discard(dst)
             made.add(dst)
             pairs.append((src, dst))
-        for src, dst in pairs:
-            self.spark.sql(f"ALTER TABLE {bq(src)} RENAME TO {bq(dst)}")
+        with commit.writing(self.spark, *[t for pair in pairs for t in pair]):
+            for src, dst in pairs:
+                # the catalog moves the live directory to dst's root (a
+                # stale directory there would swallow it) and leaves
+                # src's version root behind
+                old = commit.location(self.spark, src)
+                self.catalog._ensure_fresh_location(dst)
+                self.spark.sql(f"ALTER TABLE {bq(src)} RENAME TO {bq(dst)}")
+                commit.remove_root(old)
+                commit.bump(self.spark, src, dst)
         _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
@@ -475,44 +349,29 @@ class DdlExecMixin:
         return EngineResult("count", affected=0)
 
     def _alter_table(self, sql: str) -> EngineResult:
-        """ALTER TABLE dispatch. MySQL allows a comma-separated clause
-        list in one statement (``ADD COLUMN a INT, DROP COLUMN b, ADD
-        KEY k (a)``) applied atomically; the reference's dispatcher
-        handles only single-clause ALTERs (execution.rs:894-1279), so
-        the multi-clause path is beyond-reference dialect surface."""
+        """ALTER TABLE with one clause or a comma-separated list, atomic
+        like MySQL 8.0 (the reference's dispatcher handles only
+        single-clause ALTERs, execution.rs:894-1279). The clauses fold
+        over the table's pending rows and ``ebike.*`` properties
+        (_Altered) and nothing lands until all of them passed, then
+        once: as catalog DDL when no clause changes the rows (ADD
+        COLUMN, keys), else as one commit of the table's next version
+        with its new schema and properties (engine/commit.py). A
+        RENAME [TO|AS] clause applies last (MySQL processes the rename
+        with the rebuild; other clauses name the old table)."""
         from ebike_spark.engine.parser import split_top_level
 
         m = re.match(r"ALTER\s+TABLE\s+([\w.`\"]+)\s+([\s\S]+?)\s*$", sql, re.I)
-        if m:
-            rest = m.group(2)
-            if rest.rstrip().endswith(","):
-                # a trailing comma is a dangling empty clause, not a
-                # licence to ignore it (recurring review-bug shape)
-                raise parse_error("near ',' (empty ALTER TABLE clause)")
-            clauses = split_top_level(rest)
-            if len(clauses) > 1:
-                return self._alter_table_multi(m.group(1), clauses)
-        return self._alter_table_single(sql)
-
-    def _alter_table_multi(self, tbl_tok: str, clauses: list[str]) -> EngineResult:
-        """Comma-separated ALTER TABLE, atomic like MySQL 8.0: every
-        clause is applied to a staged copy of the table (data + ebike.*
-        properties), and only a fully-successful run swaps the stage
-        into place — a failing clause leaves the original untouched.
-        A RENAME [TO|AS] clause is applied last (MySQL processes the
-        rename with the rebuild; other clauses name the old table).
-
-        The copy cost is acceptable at engine-table scale: any ALTER
-        list containing a column clause rewrites the data anyway, and
-        the engine's managed tables are the OLTP-ish surface, not the
-        100 TB analytics parquet."""
-        import uuid as _uuid
-
-        q = self.catalog.qualify(unquote_ident(tbl_tok), self.current_db)
-        self.catalog.require_table(q)
+        if not m:
+            raise parse_error("near ALTER TABLE")
+        tbl_tok, rest = m.group(1), m.group(2)
+        if rest.rstrip().endswith(","):
+            # a trailing comma is a dangling empty clause, not a
+            # licence to ignore it (recurring review-bug shape)
+            raise parse_error("near ',' (empty ALTER TABLE clause)")
         rename_to: str | None = None
         body: list[str] = []
-        for cl in clauses:
+        for cl in split_top_level(rest):
             if not cl:
                 raise parse_error("near ',' (empty ALTER TABLE clause)")
             rm = re.match(r"RENAME\s+(?:TO\s+|AS\s+)?([\w.`\"]+)\s*$", cl, re.I)
@@ -520,271 +379,272 @@ class DdlExecMixin:
                 if rename_to is not None:
                     raise parse_error("multiple RENAME clauses in one ALTER TABLE")
                 rename_to = rm.group(1)
-                continue
-            if not re.match(r"(?:ADD|DROP|MODIFY|CHANGE)\b", cl, re.I):
-                # reject garbage clauses before paying for the stage copy
-                raise parse_error(f"near '{cl.split()[0]}'")
-            body.append(cl)
-        if rename_to is not None:
-            # pre-check the rename target so a late 1050/unsupported
-            # can't strand an already-applied clause list
-            dst = self.catalog.qualify(unquote_ident(rename_to), self.current_db)
-            src_db, _, _ = q.rpartition(".")
-            dst_db, _, _ = dst.rpartition(".")
-            if dst_db != src_db:
-                raise unsupported("cross-database RENAME TABLE")
-            if self.catalog.table_exists(dst):
-                raise EbikeError(1050, f"Table '{dst}' already exists")
-        db, _, _ = q.rpartition(".")
-        # "__ebike_stage" prefix: the SHOW/information_schema filters hide
-        # internal staging tables by that literal prefix, so a crash leak
-        # stays invisible to users (review finding: a distinct prefix
-        # bypassed all three filters)
-        stage = f"{db}.__ebike_stage_alter_{_uuid.uuid4().hex[:12]}"
-        self.spark.table(q).write.saveAsTable(stage)
-        props = {
-            k: v for k, v in self.catalog.properties(q).items() if k.startswith("ebike.")
-        }
-        try:
-            # phase 1 — build the altered copy; the original is untouched,
-            # so rollback here is simply dropping the stage
-            if props:
-                props_ddl = ", ".join(f"'{k}' = '{v}'" for k, v in props.items())
-                self.spark.sql(f"ALTER TABLE {bq(stage)} SET TBLPROPERTIES ({props_ddl})")
-            for cl in body:
-                self._alter_table_single(f"ALTER TABLE {stage} {cl}")
-        except Exception:
-            self.spark.sql(f"DROP TABLE IF EXISTS {bq(stage)}")
-            _bump_sys_schema_epoch()
-            raise
-        # phase 2 — swap (same crash window as _recreate_table's,
-        # documented). Once the original is dropped the stage is the ONLY
-        # copy of the data: a failed RENAME must PRESERVE it, never drop
-        # it (review finding: the old single rollback handler deleted the
-        # survivor on a transient rename failure — total data loss).
-        try:
-            self.spark.sql(f"DROP TABLE {bq(q)}")
-            try:
-                self.spark.sql(f"ALTER TABLE {bq(stage)} RENAME TO {bq(q)}")
-            except Exception as exc:
-                raise EbikeError(
-                    1105,
-                    f"ALTER TABLE swap failed after dropping '{q}'; the fully-"
-                    f"altered data is preserved in '{stage}' — rename it back "
-                    f"manually ({exc})",
-                ) from exc
-        finally:
+            else:
+                body.append(cl)
+        q = self.catalog.qualify(unquote_ident(tbl_tok), self.current_db)
+        if body:
+            self.catalog.require_table(q)
+            if rename_to is not None:
+                # pre-check the rename target so a late 1050/unsupported
+                # can't strand an already-applied clause list
+                dst = self.catalog.qualify(unquote_ident(rename_to), self.current_db)
+                if dst.rpartition(".")[0] != q.rpartition(".")[0]:
+                    raise unsupported("cross-database RENAME TABLE")
+                if self.catalog.table_exists(dst):
+                    raise EbikeError(1050, f"Table '{dst}' already exists")
+            with commit.writing(self.spark, q):
+                props = {
+                    k: v
+                    for k, v in self.catalog.properties(q).items()
+                    if k.startswith("ebike.")
+                }
+                st = _Altered(self.spark.table(q), props)
+                for cl in body:
+                    self._alter_clause(st, cl)
+                self._land(q, st)
             _bump_sys_schema_epoch()
         if rename_to is not None:
             return self._rename_tables(f"RENAME TABLE {tbl_tok} TO {rename_to}")
         return EngineResult("count", affected=0)
 
-    def _alter_table_single(self, sql: str) -> EngineResult:
+    def _land(self, q: str, st: "_Altered") -> None:
+        if st.rewrite:
+            commit.commit(
+                self.spark, [commit.Image(q, st.df, schema=st.df.schema, props=st.props)]
+            )
+            return
+        if st.added:
+            cols = ", ".join(f"`{c}` {t}" for c, t in st.added)
+            self.spark.sql(f"ALTER TABLE {bq(q)} ADD COLUMNS ({cols})")
+            commit.bump(self.spark, q)
+        commit.set_properties(self.spark, q, st.props)
+
+    def _alter_clause(self, st: "_Altered", cl: str) -> None:
+        """Apply one ALTER TABLE clause to the pending state. Display
+        widths (INT(11), FLOAT(10,2)) are accepted and ignored, as in
+        parse_create_table's column grammar (ADVICE r5)."""
+        from ebike_spark.engine.parser import split_top_level
+
+        def cols_of(text: str) -> list[str]:
+            return [unquote_ident(c) for c in split_top_level(text)]
+
+        def num(g: str | None) -> int | None:
+            return int(g) if g else None
+
+        width = r"(?:\s*\(\s*(\d+)(?:\s*,\s*(\d+))?\s*\))?"
+        m = re.match(rf"ADD\s+(?:COLUMN\s+)?([\w`\"]+)\s+(\w+){width}\s*$", cl, re.I)
+        if m:
+            return self._add_column(
+                st, unquote_ident(m.group(1)), m.group(2).upper(), num(m.group(3)), num(m.group(4))
+            )
+        m = re.match(r"DROP\s+(?:COLUMN\s+)?([\w`\"]+)\s*$", cl, re.I)
+        if m:
+            return self._drop_column(st, unquote_ident(m.group(1)))
+        m = re.match(r"ADD\s+PRIMARY\s+KEY\s*\(([^)]+)\)\s*$", cl, re.I)
+        if m:
+            return self._add_primary_key(st, cols_of(m.group(1)))
         m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+ADD\s+(?:COLUMN\s+)?([\w`\"]+)\s+(\w+)"
-            r"(?:\s*\(\s*(\d+)(?:\s*,\s*(\d+))?\s*\))?\s*$",
-            sql,
+            r"ADD\s+UNIQUE\s*(?:\b(?:INDEX|KEY)\b\s*)?(?:([\w`\"]+)\s*)?\(([^)]+)\)\s*$",
+            cl,
             re.I,
         )
         if m:
-            q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
-            self.catalog.alter_add_column(
-                q,
-                unquote_ident(m.group(2)),
-                m.group(3).upper(),
-                precision=int(m.group(4)) if m.group(4) else None,
-                scale=int(m.group(5)) if m.group(5) else None,
-            )
-            _bump_sys_schema_epoch()
-            return EngineResult("count", affected=0)
-        m = re.match(r"ALTER\s+TABLE\s+([\w.`\"]+)\s+DROP\s+(?:COLUMN\s+)?([\w`\"]+)\s*$", sql, re.I)
-        if m:
-            return self._drop_column(
-                self.catalog.qualify(unquote_ident(m.group(1)), self.current_db),
-                unquote_ident(m.group(2)),
-            )
-        m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+RENAME\s+(?:TO\s+|AS\s+)?([\w.`\"]+)\s*$", sql, re.I
-        )
-        if m:
-            # MySQL's second rename spelling — same path as RENAME TABLE
-            return self._rename_tables(f"RENAME TABLE {m.group(1)} TO {m.group(2)}")
-        m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+ADD\s+PRIMARY\s+KEY\s*\(([^)]+)\)\s*$", sql, re.I
-        )
-        if m:
-            from ebike_spark.engine.parser import split_top_level
-
-            q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
-            return self._add_primary_key(
-                q, [unquote_ident(c) for c in split_top_level(m.group(2))]
-            )
-        m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+ADD\s+UNIQUE\s*(?:\b(?:INDEX|KEY)\b\s*)?"
-            r"(?:([\w`\"]+)\s*)?\(([^)]+)\)\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            from ebike_spark.engine.parser import split_top_level
-
-            q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
-            cols = [unquote_ident(c) for c in split_top_level(m.group(3))]
-            name = unquote_ident(m.group(2)) if m.group(2) else None
+            cols = cols_of(m.group(2))
+            name = unquote_ident(m.group(1)) if m.group(1) else None
             if name is None:
                 # MySQL auto-names an anonymous key after its first
                 # column, deduping with _2, _3, ... on collision
-                taken = {n for n, _ in self.catalog.unique_keys(q)}
-                taken.update(n for n, _ in self.catalog.cluster_indexes(q))
+                taken = {n for n, _ in st.keys(PROP_UNIQUE_PREFIX)}
+                taken.update(n for n, _ in st.keys(self._PROP_CLUSTER))
                 name, k = cols[0], 2
                 while name in taken:
                     name, k = f"{cols[0]}_{k}", k + 1
-            return self._add_unique(q, name, cols)
+            return self._add_unique(st, name, cols)
+        m = re.match(r"ADD\s+(?:INDEX|KEY)\s+([\w`\"]+)\s*\(([^)]+)\)\s*$", cl, re.I)
+        if m:
+            return self._add_index(st, unquote_ident(m.group(1)), cols_of(m.group(2)))
+        m = re.match(r"DROP\s+PRIMARY\s+KEY\s*$", cl, re.I)
+        if m:
+            if PROP_PK not in st.props:
+                raise EbikeError(1091, "Can't DROP 'PRIMARY'; check that column/key exists")
+            # MySQL keeps the NOT NULL attribute on former PK columns
+            del st.props[PROP_PK]
+            return None
+        m = re.match(r"DROP\s+(?:INDEX|KEY)\s+([\w`\"]+)\s*$", cl, re.I)
+        if m:
+            name = unquote_ident(m.group(1))
+            # a clustering index is metadata-only to drop: the physical
+            # order stays (harmless — it is just a row order) but stops
+            # being advertised or maintained; a UNIQUE index stops its
+            # constraint enforcement
+            for prefix in (self._PROP_CLUSTER, PROP_UNIQUE_PREFIX):
+                if st.props.pop(prefix + name, None) is not None:
+                    return None
+            raise EbikeError(1091, f"Can't DROP '{name}'; check that column/key exists")
         m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+ADD\s+(?:INDEX|KEY)\s+([\w`\"]+)\s*\(([^)]+)\)\s*$",
-            sql,
-            re.I,
+            rf"MODIFY\s+(?:COLUMN\s+)?([\w`\"]+)\s+(\w+){width}(\s+NOT\s+NULL)?\s*$", cl, re.I
         )
         if m:
-            # same path as CREATE INDEX (physical range clustering)
-            return self._create_index(
-                f"CREATE INDEX {m.group(2)} ON {m.group(1)} ({m.group(3)})"
-            )
-        m = re.match(r"ALTER\s+TABLE\s+([\w.`\"]+)\s+DROP\s+PRIMARY\s+KEY\s*$", sql, re.I)
-        if m:
-            return self._drop_primary_key(
-                self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
-            )
-        m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+DROP\s+(?:INDEX|KEY)\s+([\w`\"]+)\s*$", sql, re.I
-        )
-        if m:
-            return self._drop_index_named(
-                self.catalog.qualify(unquote_ident(m.group(1)), self.current_db),
-                unquote_ident(m.group(2)),
-            )
-        # display widths (INT(11), FLOAT(10,2)) accepted-and-ignored,
-        # matching parse_create_table's column grammar (ADVICE r5)
-        m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+MODIFY\s+(?:COLUMN\s+)?([\w`\"]+)\s+(\w+)"
-            r"(?:\s*\(\s*(\d+)(?:\s*,\s*(\d+))?\s*\))?"
-            r"(\s+NOT\s+NULL)?\s*$",
-            sql,
-            re.I,
-        )
-        if m:
-            q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
-            col = unquote_ident(m.group(2))
+            col = unquote_ident(m.group(1))
             return self._modify_column(
-                q, col, col, m.group(3).upper(), bool(m.group(6)),
-                precision=int(m.group(4)) if m.group(4) else None,
-                scale=int(m.group(5)) if m.group(5) else None,
+                st, col, col, m.group(2).upper(), bool(m.group(5)), num(m.group(3)), num(m.group(4))
             )
         m = re.match(
-            r"ALTER\s+TABLE\s+([\w.`\"]+)\s+CHANGE\s+(?:COLUMN\s+)?([\w`\"]+)\s+([\w`\"]+)"
-            r"\s+(\w+)(?:\s*\(\s*(\d+)(?:\s*,\s*(\d+))?\s*\))?(\s+NOT\s+NULL)?\s*$",
-            sql,
+            rf"CHANGE\s+(?:COLUMN\s+)?([\w`\"]+)\s+([\w`\"]+)\s+(\w+){width}(\s+NOT\s+NULL)?\s*$",
+            cl,
             re.I,
         )
         if m:
-            q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
             return self._modify_column(
-                q,
+                st,
+                unquote_ident(m.group(1)),
                 unquote_ident(m.group(2)),
-                unquote_ident(m.group(3)),
-                m.group(4).upper(),
-                bool(m.group(7)),
-                precision=int(m.group(5)) if m.group(5) else None,
-                scale=int(m.group(6)) if m.group(6) else None,
+                m.group(3).upper(),
+                bool(m.group(6)),
+                num(m.group(4)),
+                num(m.group(5)),
             )
         raise parse_error(
             "near ALTER TABLE (only ADD/DROP/MODIFY/CHANGE COLUMN, "
             "ADD/DROP INDEX|UNIQUE|PRIMARY KEY, RENAME)"
         )
 
-    def _drop_column(self, qualified: str, col: str) -> EngineResult:
-        """Parquet v1 tables can't ALTER DROP COLUMN in place → recreate
-        (schema-evolved rewrite, the ALTER path the reference implements
-        as meta-table surgery, /root/reference/src/execute_impl/drop_column.rs:37-131)."""
-        self.catalog.require_table(qualified)
-        t = self.spark.table(qualified)
-        if col not in t.columns or (col == "rowid" and self.catalog.has_rowid(qualified)):
+    def _add_column(
+        self, st: "_Altered", col: str, sql_type: str, precision: int | None, scale: int | None
+    ) -> None:
+        spark_t = resolve_sql_type(sql_type, precision, scale)
+        if col.lower() in (c.lower() for c in st.df.columns):
+            raise EbikeError(1060, f"Duplicate column name '{col}'")
+        st.df = st.df.withColumn(col, F.lit(None).cast(spark_t))
+        st.added.append((col, spark_t))
+
+    def _drop_column(self, st: "_Altered", col: str) -> None:
+        """Parquet v1 tables can't ALTER DROP COLUMN in place → the next
+        version holds the rows without it (the ALTER path the reference
+        implements as meta-table surgery,
+        /root/reference/src/execute_impl/drop_column.rs:37-131)."""
+        if col not in st.df.columns or (col == ROWID and st.props.get(PROP_ROWID) == "1"):
             # the hidden rowid is not a user column — not droppable
             raise EbikeError(1091, f"Can't DROP '{col}'; check that column/key exists")
-        kept = t.drop(col)
-        keep_props = {
-            k: ",".join(c for c in v.split(",") if c != col)
-            for k, v in self.catalog.properties(qualified).items()
-            if k.startswith("ebike.")
-        }
+        st.df = st.df.drop(col)
+        st.rewrite = True
+        props = {k: ",".join(c for c in v.split(",") if c != col) for k, v in st.props.items()}
         # a UNIQUE/cluster key whose LAST column was dropped disappears
         # with it (MySQL drops the index; an empty key list would crash
         # the next keyed INSERT's conjunction builder)
-        keep_props = {
+        st.props = {
             k: v
-            for k, v in keep_props.items()
-            if v or not k.startswith(("ebike.unique.", "ebike.cluster."))
+            for k, v in props.items()
+            if v or not k.startswith((PROP_UNIQUE_PREFIX, self._PROP_CLUSTER))
         }
-        self._recreate_table(qualified, kept, keep_props)
-        return EngineResult("count", affected=0)
 
-    def _recreate_table(self, qualified: str, df: DataFrame, ebike_props: dict[str, str]) -> None:
-        """Stage-swap recreate for schema evolution parquet v1 can't do
-        in place (type/order change, column drop): write the new shape
-        to a stage table, drop, recreate with the given ebike.*
-        properties, reload, drop the stage. Shared by DROP/MODIFY/
-        CHANGE COLUMN."""
-        db, _, _ = qualified.rpartition(".")
-        import uuid as _uuid
+    def _user_columns(self, st: "_Altered") -> set[str]:
+        return {
+            c for c in st.df.columns if c != ROWID or st.props.get(PROP_ROWID) != "1"
+        }
 
-        stage = f"{db}.__ebike_stage_{_uuid.uuid4().hex[:12]}"
-        df.write.saveAsTable(stage)
-        try:
-            self.spark.sql(f"DROP TABLE {qualified}")
-            cols_ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-            props_ddl = ", ".join(f"'{k}' = '{v}'" for k, v in ebike_props.items()) or "'ebike.not_null' = ''"
-            self.spark.sql(
-                f"CREATE TABLE {qualified} ({cols_ddl}) USING parquet TBLPROPERTIES ({props_ddl})"
-            )
-            self.spark.table(stage).write.insertInto(qualified, overwrite=True)
-        finally:
-            self.spark.sql(f"DROP TABLE IF EXISTS {stage}")
-        _bump_sys_schema_epoch()
+    def _add_primary_key(self, st: "_Altered", cols: list[str]) -> None:
+        """Retroactive PRIMARY KEY: existing NULLs are 1138, existing
+        duplicates 1062; the key columns join the NOT NULL set."""
+        import functools as _ft
+        import operator as _op
+
+        if st.props.get(PROP_PK):
+            raise EbikeError(1068, "Multiple primary key defined")
+        self._require_key_columns(st, cols)
+        any_null = _ft.reduce(_op.or_, [F.col(c).isNull() for c in cols])
+        if st.df.where(any_null).limit(1).collect():
+            raise EbikeError(1138, "Invalid use of NULL value in key column")
+        self._reject_duplicates(st.df, cols, "PRIMARY")
+        nn = [c for c in st.props.get(PROP_NOT_NULL, "").split(",") if c]
+        nn.extend(c for c in cols if c not in nn)
+        st.props[PROP_PK] = ",".join(cols)
+        st.props[PROP_NOT_NULL] = ",".join(nn)
+
+    def _add_unique(self, st: "_Altered", name: str, cols: list[str]) -> None:
+        """Retroactive UNIQUE key: reject if the existing data already
+        violates it (one bounded LIMIT-1 duplicate probe — rows with a
+        NULL in any key column are exempt, MySQL semantics), then record
+        the key; the INSERT/upsert paths enforce it from then on."""
+        if not re.fullmatch(r"\w+", name):
+            raise parse_error(f"bad index name '{name}'")
+        self._require_key_columns(st, cols)
+        taken = {n for n, _ in st.keys(PROP_UNIQUE_PREFIX)}
+        taken.update(n for n, _ in st.keys(self._PROP_CLUSTER))
+        if name in taken:
+            raise EbikeError(1061, f"Duplicate key name '{name}'")
+        non_null = st.df
+        for c in cols:
+            non_null = non_null.where(F.col(c).isNotNull())
+        self._reject_duplicates(non_null, cols, name)
+        st.props[f"{PROP_UNIQUE_PREFIX}{name}"] = ",".join(cols)
+
+    def _add_index(self, st: "_Altered", name: str, cols: list[str]) -> None:
+        """A secondary index as PHYSICAL RANGE CLUSTERING: the rows are
+        rewritten repartitionByRange + sortWithinPartitions on the key
+        columns, which makes parquet row-group min/max statistics (zone
+        maps) selective for predicates on them — the scan skips row
+        groups the way the reference's sled index-range seek skips keys
+        (/root/reference/src/core/execution.rs index-seek path). SHOW
+        INDEX lists it with Index_type CLUSTERED. One clustering order
+        per table can be physically dominant — a second index
+        re-clusters (documented; MySQL's secondary B-trees have no such
+        coupling)."""
+        if not re.fullmatch(r"\w+", name):
+            raise parse_error(f"bad index name '{name}'")
+        self._require_key_columns(st, cols)
+        if any(n == name for n, _ in st.keys(self._PROP_CLUSTER)):
+            raise EbikeError(1061, f"Duplicate key name '{name}'")
+        st.df = st.df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+        st.rewrite = True
+        st.props[f"{self._PROP_CLUSTER}{name}"] = ",".join(cols)
+
+    def _require_key_columns(self, st: "_Altered", cols: list[str]) -> None:
+        known = self._user_columns(st)
+        for c in cols:
+            if c not in known:
+                raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
+
+    @staticmethod
+    def _reject_duplicates(df: DataFrame, cols: list[str], key: str) -> None:
+        dup = (
+            df.groupBy(*[F.col(c) for c in cols])
+            .count()
+            .where(F.col("count") > 1)
+            .limit(1)
+            .collect()
+        )
+        if dup:
+            vals = "-".join(str(dup[0][c]) for c in cols)
+            raise EbikeError(1062, f"Duplicate entry '{vals}' for key '{key}'")
 
     def _modify_column(
         self,
-        qualified: str,
+        st: "_Altered",
         old: str,
         new: str,
         sql_type: str,
         not_null: bool,
         precision: int | None = None,
         scale: int | None = None,
-    ) -> EngineResult:
+    ) -> None:
         """ALTER TABLE MODIFY/CHANGE COLUMN: retype (strict-mode cast —
         a non-NULL value that doesn't convert is 1366, as MySQL strict),
-        optionally rename, via the stage-swap recreate. Key/cluster/
-        auto-increment markers follow the rename. Divergence from
-        MySQL's full-redefinition semantics, documented: attributes not
+        optionally rename; parquet v1 can't retype in place, so the next
+        version holds the converted rows. Key/cluster/auto-increment
+        markers follow the rename. Divergence from MySQL's
+        full-redefinition semantics, documented: attributes not
         restated in the clause (AUTO_INCREMENT, key membership) are
         PRESERVED rather than dropped; nullability follows the clause
         (absent NOT NULL → nullable, except PK columns, which stay NOT
         NULL as in MySQL)."""
-        from ebike_spark.engine.catalog import (
-            PROP_AUTO_INCREMENT,
-            PROP_NOT_NULL,
-            resolve_sql_type,
-        )
-
-        self.catalog.require_table(qualified)
         spark_t = resolve_sql_type(sql_type, precision, scale)
-        t = self.spark.table(qualified)
-        hidden_rowid = self.catalog.has_rowid(qualified)
-        if old not in t.columns or (old == "rowid" and hidden_rowid):
+        t = st.df
+        if old not in self._user_columns(st):
             raise EbikeError(1054, f"Unknown column '{old}' in 'field list'")
         if new != old and new in t.columns:
             raise EbikeError(1060, f"Duplicate column name '{new}'")
-        if self.catalog.auto_increment_col(qualified) == old and spark_t != "BIGINT":
+        if st.props.get(PROP_AUTO_INCREMENT) == old and spark_t != "BIGINT":
             raise EbikeError(1063, f"Incorrect column specifier for column '{old}'")
         src = F.col(old)
         if spark_t == "BIGINT":
@@ -810,28 +670,39 @@ class DdlExecMixin:
             )
         if not_null and t.where(src.isNull()).count():
             raise EbikeError(1138, f"Invalid use of NULL value for column '{old}'")
-        new_df = t.select(
-            *[cast.alias(new) if c == old else F.col(c) for c in t.columns]
-        )
-        pk_cols = self.catalog.primary_key(qualified)
+        st.df = t.select(*[cast.alias(new) if c == old else F.col(c) for c in t.columns])
+        st.rewrite = True
+        pk_cols = [c for c in st.props.get(PROP_PK, "").split(",") if c]
 
         def ren(v: str) -> str:
             return ",".join(new if c == old else c for c in v.split(","))
 
-        props = {
-            k: ren(v)
-            for k, v in self.catalog.properties(qualified).items()
-            if k.startswith("ebike.")
-        }
-        nn = [c for c in props.get(PROP_NOT_NULL, "").split(",") if c]
+        st.props = {k: ren(v) for k, v in st.props.items()}
+        nn = [c for c in st.props.get(PROP_NOT_NULL, "").split(",") if c]
         if not_null:
             if new not in nn:
                 nn.append(new)
         elif old not in pk_cols:
             nn = [c for c in nn if c != new]
-        props[PROP_NOT_NULL] = ",".join(nn)
-        self._recreate_table(qualified, new_df, props)
-        return EngineResult("count", affected=0)
+        st.props[PROP_NOT_NULL] = ",".join(nn)
 
-    # ------------------------------------------------------------ DML
+
+class _Altered:
+    """An ALTER TABLE's pending result: the table's rows and ``ebike.*``
+    properties after the clauses applied so far; ``rewrite`` is set
+    once a clause changes the rows, ``added`` lists ADD COLUMNs for a
+    metadata-only landing."""
+
+    def __init__(self, df: DataFrame, props: dict[str, str]):
+        self.df = df
+        self.props = props
+        self.rewrite = False
+        self.added: list[tuple[str, str]] = []
+
+    def keys(self, prefix: str) -> list[tuple[str, list[str]]]:
+        return [
+            (k[len(prefix):], [c for c in v.split(",") if c])
+            for k, v in self.props.items()
+            if k.startswith(prefix)
+        ]
 

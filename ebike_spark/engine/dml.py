@@ -18,10 +18,13 @@ equivalent keeps the *rewrite* idea but makes it set-oriented:
   in-batch duplicates on the driver, probes stored keys with one
   pushed-down IN filter per key, then appends.
 - UPDATE: one pass computing when(cond, new, old) per assigned column,
-  written out via a staging table then INSERT OVERWRITE (write-new-
-  then-swap). No per-row point writes — the same plan shape works on a
-  1000-executor cluster.
-- DELETE: filter(NOT cond) + overwrite.
+  written once as the table's next version and committed by re-pointing
+  the table at it (engine/commit.py). No per-row point writes — the
+  same plan shape works on a 1000-executor cluster.
+- DELETE: one probe job counts the matching rows per data file. Files
+  in which every row matches are dropped, untouched files carry over
+  into the next version as hard links, and only files that match in
+  part are rewritten, filtered.
 
 Constraint enforcement for data-sized input (LOAD DATA, INSERT …
 SELECT) is a join against the existing table plus an intra-batch
@@ -33,7 +36,6 @@ reference's bug of not maintaining index entries on update/delete
 from __future__ import annotations
 
 import re
-import uuid
 from decimal import Decimal
 from functools import reduce
 from operator import and_, or_
@@ -41,6 +43,7 @@ from operator import and_, or_
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ebike_spark.engine import commit
 from ebike_spark.engine.catalog import ROWID, Catalog
 from ebike_spark.engine.errors import EbikeError, duplicate_entry
 from ebike_spark.engine.parser import Delete, Insert, Update
@@ -523,6 +526,7 @@ def _append(
     if has_rowid:
         df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
     df.write.insertInto(qualified, overwrite=False)
+    commit.bump(spark, qualified)
 
 
 def _mint_auto_increment(
@@ -582,6 +586,17 @@ def insert(
 ) -> int:
     qualified = catalog.qualify(ins.table, current_db)
     catalog.require_table(qualified)
+    with commit.writing(spark, qualified):
+        return _insert(spark, catalog, qualified, ins, session)
+
+
+def _insert(
+    spark: SparkSession,
+    catalog: Catalog,
+    qualified: str,
+    ins: Insert,
+    session: dict | None,
+) -> int:
     props = catalog.properties(qualified)
     col_types = catalog.column_types(qualified, props)
     df = _values_df(spark, ins, col_types)
@@ -704,7 +719,7 @@ def _upsert(
     n_new = to_insert.count()
     final = updated.unionByName(to_insert)
     # post-image integrity: an assignment that writes a key column can
-    # collide rows that didn't collide before — validate before the swap
+    # collide rows that didn't collide before — validate before the commit
     # (same guard as update(); the reference corrupts its indexes here)
     for key_name, cols in keys:
         if not set(cols) & set(assigned):
@@ -715,7 +730,7 @@ def _upsert(
         dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
         if dup:
             raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
-    _rewrite(spark, qualified, final)
+    _rewrite(spark, commit.Image(qualified, final))
     return n_new + 2 * n_changed
 
 
@@ -939,50 +954,30 @@ def _replace(
         to_insert = to_insert.withColumn(ROWID, F.expr("uuid()")).select(
             *existing.columns
         )
-    _rewrite(spark, qualified, survivors.unionByName(to_insert))
+    _rewrite(spark, commit.Image(qualified, survivors.unionByName(to_insert)))
     # MySQL affected-rows: 1 per batch row inserted (including ones a
     # later batch row then replaced) + 1 per deleted row (stored or
     # earlier-batch)
     return len(ins.rows) + n_deleted + intra_deleted
 
 
-def _stage(spark: SparkSession, qualified: str, new_df: DataFrame) -> str:
-    """Materialize a rewritten post-image to a staging table in the
-    target's database; returns the stage name. Split out of _rewrite so
-    multi-table statements can stage EVERY target before swapping any
-    (two-phase: all pre-image reads complete before the first commit)."""
-    db, _, _ = qualified.rpartition(".")
-    stage = f"{db}.__ebike_stage_{uuid.uuid4().hex[:12]}"
-    new_df.write.saveAsTable(stage)
-    return stage
-
-
-def _swap(spark: SparkSession, qualified: str, stage: str) -> None:
-    """INSERT OVERWRITE the target from its stage (the commit half of
-    the stage-swap protocol; shared so multi-table statements and
-    _rewrite can never drift apart)."""
-    spark.table(stage).write.insertInto(qualified, overwrite=True)
-
-
-def _drop_stage(spark: SparkSession, stage: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {stage}")
-
-
-def _rewrite(spark: SparkSession, qualified: str, new_df: DataFrame) -> None:
-    """Write-new-then-swap: materialize the rewritten table to a staging
-    table, then INSERT OVERWRITE the target from it (can't overwrite a
-    table while scanning it). Staging lives in the same metastore so a
-    crash leaves either the old data or a complete new copy."""
-    stage = _stage(spark, qualified, new_df)
-    try:
-        _swap(spark, qualified, stage)
-    finally:
-        _drop_stage(spark, stage)
+def _rewrite(spark: SparkSession, *images: commit.Image) -> None:
+    """Commit DML post-images through the one commit primitive
+    (engine/commit.py): each is written once into its table's next
+    version directory, then every table is re-pointed at its own. A
+    failure before the re-point completes leaves every table and its
+    catalog entry as they were."""
+    commit.commit(spark, images)
 
 
 def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) -> int:
     qualified = catalog.qualify(upd.table, current_db)
     catalog.require_table(qualified)
+    with commit.writing(spark, qualified):
+        return _update(spark, catalog, upd, qualified)
+
+
+def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) -> int:
     t = spark.table(qualified)
     cond = F.expr(upd.where) if upd.where else F.lit(True)
     if upd.limit is not None:
@@ -1028,7 +1023,7 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
         return 0
     cols = []
     # project the TABLE's columns only (the LIMIT path joined a helper
-    # __upd_rid column onto t that must not reach the staged rewrite)
+    # __upd_rid column onto t that must not reach the post-image)
     for name in spark.table(qualified).columns:
         if name in assigned:
             new_val = guarded_cast_col(
@@ -1039,7 +1034,7 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
             cols.append(F.col(name))
     new_df = t.select(*cols)
     recheck_keys_after_update(spark, catalog, qualified, new_df, set(assigned))
-    _rewrite(spark, qualified, new_df)
+    _rewrite(spark, commit.Image(qualified, new_df))
     return affected
 
 
@@ -1076,7 +1071,7 @@ def recheck_keys_after_update(
 ) -> None:
     """Re-check key constraints when an assignment touches a key column —
     the reference silently corrupts its indexes here (SURVEY §3.3);
-    we validate the post-image before swapping it in. Shared by the
+    we validate the post-image before committing it. Shared by the
     single-table and multi-table (JOIN) UPDATE paths."""
     keys = [
         (name, kcols)
@@ -1092,19 +1087,39 @@ def recheck_keys_after_update(
 def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str) -> int:
     qualified = catalog.qualify(dele.table, current_db)
     catalog.require_table(qualified)
-    t = spark.table(qualified)
-    cond = F.expr(dele.where) if dele.where else F.lit(True)
-    # MySQL deletes only rows where the predicate is TRUE; a NULL
-    # predicate (e.g. `x > 5` with x NULL) keeps the row. Plain
-    # `~cond` would silently delete NULL rows (NOT NULL → NULL → drop).
-    cond_true = F.coalesce(cond, F.lit(False))
-    if dele.limit is not None:
-        return _delete_limited(spark, catalog, qualified, t, cond_true, dele)
-    affected = t.where(cond_true).count()
-    if affected == 0:
+    with commit.writing(spark, qualified):
+        t = spark.table(qualified)
+        cond = F.expr(dele.where) if dele.where else F.lit(True)
+        # MySQL deletes only rows where the predicate is TRUE; a NULL
+        # predicate (e.g. `x > 5` with x NULL) keeps the row. Plain
+        # `~cond` would silently delete NULL rows (NOT NULL → NULL → drop).
+        cond_true = F.coalesce(cond, F.lit(False))
+        if dele.limit is not None:
+            return _delete_limited(spark, catalog, qualified, t, cond_true, dele)
+        return _delete_files(spark, qualified, t, cond_true)
+
+
+def _delete_files(spark: SparkSession, qualified: str, t: DataFrame, cond_true) -> int:
+    """DELETE without LIMIT, file by file. One probe job counts the
+    matching rows per data file. A file in which every row matches (its
+    row total is in the parquet footer) is dropped; an untouched file
+    carries over into the next version as a hard link; only files that
+    match in part are rewritten, filtered. Deleting exactly the rows of
+    whole files therefore writes no rows at all."""
+    import pyarrow.parquet as pq
+
+    path = F.col("_metadata.file_path")
+    hits = dict(t.where(cond_true).groupBy(path).count().collect())
+    if not hits:
         return 0
-    _rewrite(spark, qualified, t.where(~cond_true))
-    return affected
+    matched = {commit.local_path(f) for f in hits}
+    partial = [
+        f for f, n in hits.items() if n < pq.read_metadata(commit.local_path(f)).num_rows
+    ]
+    links = tuple(f for f in commit.data_files(t) if f not in matched)
+    rest = t.where(path.isin(partial)).where(~cond_true) if partial else None
+    _rewrite(spark, commit.Image(qualified, rest, links))
+    return sum(hits.values())
 
 
 def _delete_limited(
@@ -1128,10 +1143,10 @@ def _delete_limited(
     affected = doomed.count()
     if affected == 0:
         return 0
-    # the using-join hoists rowid to the front; restore physical order
-    # (the staged rewrite's insertInto is positional)
+    # the using-join hoists rowid to the front; restore the table's
+    # column order
     survivors = t.join(doomed, ROWID, "left_anti").select(*t.columns)
-    _rewrite(spark, qualified, survivors)
+    _rewrite(spark, commit.Image(qualified, survivors))
     return affected
 
 
@@ -1240,72 +1255,73 @@ def load_data(
         if int(im.group(1)) != 1:
             raise EbikeError(1105, "only IGNORE 1 LINES is supported")
         skip_header = True
-    cl = re.search(r"\(([^()]*)\)\s*$", rest.strip())
-    props = catalog.properties(qualified)
-    col_types = catalog.column_types(qualified, props)
-    names = [n for n, _ in col_types]
-    types = dict(col_types)
-    target = (
-        [unquote_ident(c.strip()) for c in cl.group(1).split(",")] if cl else names
-    )
-    unknown = [c for c in target if c not in types]
-    if unknown:
-        raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
-    dupes = [c for c in target if target.count(c) > 1]
-    if dupes:
-        # MySQL 1110: column specified twice (target.index() would
-        # silently map every duplicate to the first CSV field)
-        raise EbikeError(1110, f"Column '{dupes[0]}' specified twice")
+    with commit.writing(spark, qualified):
+        cl = re.search(r"\(([^()]*)\)\s*$", rest.strip())
+        props = catalog.properties(qualified)
+        col_types = catalog.column_types(qualified, props)
+        names = [n for n, _ in col_types]
+        types = dict(col_types)
+        target = (
+            [unquote_ident(c.strip()) for c in cl.group(1).split(",")] if cl else names
+        )
+        unknown = [c for c in target if c not in types]
+        if unknown:
+            raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
+        dupes = [c for c in target if target.count(c) > 1]
+        if dupes:
+            # MySQL 1110: column specified twice (target.index() would
+            # silently map every duplicate to the first CSV field)
+            raise EbikeError(1110, f"Column '{dupes[0]}' specified twice")
 
-    raw = (
-        spark.read.option("header", skip_header)
-        .option("sep", sep)
-        .schema(" ".join(f"`_c{i}` string," for i in range(len(target))).rstrip(","))
-        .csv(path)
-    )
-    n_rows = raw.count()
-    # Casts match the INSERT paths: strict + MySQL integer rounding
-    # (guarded_cast_col) — a bad field is 1366 naming the column, and
-    # '2.7' into INT stores 3 exactly as INSERT VALUES does. Under the
-    # IGNORE keyword MySQL downgrades conversion errors to warnings
-    # and stores the CLOSEST value; this engine matches that for the
-    # numeric family (_mysql_coerce_numeric: leading-prefix parse,
-    # junk → 0, overflow clamps). Only temporal/decimal failures
-    # store NULL (documented divergence: no zero-date in Spark; NULL
-    # is the sentinel, caught by NOT NULL enforcement where the
-    # column forbids it).
-    def _field(name: str):
-        if name not in target:
-            return F.lit(None).cast(types[name])
-        raw_col = F.col(f"_c{target.index(name)}")
+        raw = (
+            spark.read.option("header", skip_header)
+            .option("sep", sep)
+            .schema(" ".join(f"`_c{i}` string," for i in range(len(target))).rstrip(","))
+            .csv(path)
+        )
+        n_rows = raw.count()
+        # Casts match the INSERT paths: strict + MySQL integer rounding
+        # (guarded_cast_col) — a bad field is 1366 naming the column, and
+        # '2.7' into INT stores 3 exactly as INSERT VALUES does. Under the
+        # IGNORE keyword MySQL downgrades conversion errors to warnings
+        # and stores the CLOSEST value; this engine matches that for the
+        # numeric family (_mysql_coerce_numeric: leading-prefix parse,
+        # junk → 0, overflow clamps). Only temporal/decimal failures
+        # store NULL (documented divergence: no zero-date in Spark; NULL
+        # is the sentinel, caught by NOT NULL enforcement where the
+        # column forbids it).
+        def _field(name: str):
+            if name not in target:
+                return F.lit(None).cast(types[name])
+            raw_col = F.col(f"_c{target.index(name)}")
+            if mode == "IGNORE":
+                # IGNORE downgrades conversion ERRORS to best-effort
+                # storage, MySQL's legacy closest-value coercion: the
+                # numeric family takes the leading numeric prefix
+                # ('12abc' → 12, 'junk' → 0) and clamps overflow to the
+                # type range; rounding still applies ('2.7' → 3 under
+                # IGNORE too). Temporal/decimal failures store NULL
+                # (documented divergence — no zero-date in Spark).
+                t = types[name].upper()
+                if t in ("BIGINT", "DOUBLE"):
+                    return _mysql_coerce_numeric(raw_col, t)
+                return raw_col.cast(types[name])
+            return guarded_cast_col(raw_col, types[name], name)
+
+        df = raw.select(*[_field(name).alias(name) for name in names])
+        ai = catalog.auto_increment_col(qualified, props)
+        if ai is not None:
+            df, first_id = _mint_auto_increment(spark, qualified, df, ai, types[ai])
+            if first_id is not None and session is not None:
+                session["last_insert_id"] = first_id
+
+        if mode == "REPLACE":
+            class _Shim:  # _replace reads only len(ins.rows)
+                rows = range(n_rows)
+
+            return _replace(spark, catalog, qualified, df, _Shim(), props)
         if mode == "IGNORE":
-            # IGNORE downgrades conversion ERRORS to best-effort
-            # storage, MySQL's legacy closest-value coercion: the
-            # numeric family takes the leading numeric prefix
-            # ('12abc' → 12, 'junk' → 0) and clamps overflow to the
-            # type range; rounding still applies ('2.7' → 3 under
-            # IGNORE too). Temporal/decimal failures store NULL
-            # (documented divergence — no zero-date in Spark).
-            t = types[name].upper()
-            if t in ("BIGINT", "DOUBLE"):
-                return _mysql_coerce_numeric(raw_col, t)
-            return raw_col.cast(types[name])
-        return guarded_cast_col(raw_col, types[name], name)
-
-    df = raw.select(*[_field(name).alias(name) for name in names])
-    ai = catalog.auto_increment_col(qualified, props)
-    if ai is not None:
-        df, first_id = _mint_auto_increment(spark, qualified, df, ai, types[ai])
-        if first_id is not None and session is not None:
-            session["last_insert_id"] = first_id
-
-    if mode == "REPLACE":
-        class _Shim:  # _replace reads only len(ins.rows)
-            rows = range(n_rows)
-
-        return _replace(spark, catalog, qualified, df, _Shim(), props)
-    if mode == "IGNORE":
-        return _insert_ignore(spark, catalog, qualified, df, props)
-    _check_constraints(spark, catalog, qualified, df, props)
-    _append(spark, qualified, df, catalog.has_rowid(qualified, props))
-    return n_rows
+            return _insert_ignore(spark, catalog, qualified, df, props)
+        _check_constraints(spark, catalog, qualified, df, props)
+        _append(spark, qualified, df, catalog.has_rowid(qualified, props))
+        return n_rows

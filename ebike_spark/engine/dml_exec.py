@@ -10,7 +10,7 @@ import re
 
 import pyspark.sql.functions as F
 
-from ebike_spark.engine import dml
+from ebike_spark.engine import commit, dml
 from ebike_spark.engine.catalog import bq
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import (
@@ -70,18 +70,24 @@ class DmlExecMixin:
             self.spark.catalog.setCurrentDatabase(self.current_db)
             q = self.catalog.qualify(unquote_ident(m.group(3)), self.current_db)
             if self.catalog.table_exists(q):
-                return self._insert_from_select(
-                    q,
-                    col_list=m.group(4),
-                    select_sql=m.group(5),
-                    ignore=bool(m.group(1)),
-                    replace=bool(m.group(2)),
-                )
+                with commit.writing(self.spark, q):
+                    return self._insert_from_select(
+                        q,
+                        col_list=m.group(4),
+                        select_sql=m.group(5),
+                        ignore=bool(m.group(1)),
+                        replace=bool(m.group(2)),
+                    )
         if not re.search(r"\bVALUES\b", fixed, re.I):
             # remaining non-VALUES forms (e.g. INSERT INTO ... TABLE
-            # src) pass through to Spark untouched
+            # src) pass through to Spark untouched, as a write of the
+            # target: under its writer lock, bumping its version
             self.spark.catalog.setCurrentDatabase(self.current_db)
-            self.spark.sql(fixed)
+            m = re.match(r"\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`\"]+)", fixed, re.I)
+            target = [self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)] if m else []
+            with commit.writing(self.spark, *target):
+                self.spark.sql(fixed)
+                commit.bump(self.spark, *target)
             return EngineResult("count", affected=-1)
         try:
             ins = parse_insert(fixed)
@@ -315,9 +321,8 @@ class DmlExecMixin:
 
         Set-oriented plan: ONE join computes (rowid, new values) for
         every matched row of every assigned table against the shared
-        PRE-image; the frame is snapshotted via localCheckpoint so
-        rewriting the first target cannot leak its post-image into the
-        second target's values — MySQL processes rows one at a time and later
+        PRE-image, snapshotted once. Every assignment sees that
+        pre-image — MySQL processes rows one at a time and later
         rows CAN observe earlier in-statement writes, an
         order-dependent behavior with no deterministic set-oriented
         equivalent; this engine pins snapshot semantics (every
@@ -329,14 +334,9 @@ class DmlExecMixin:
         assigned through TWO aliases merges into one post-image
         (last assignment in statement order wins per column where
         both aliases match — see the grouping comment below); each
-        post-image lands via the same staged rewrite, changed-row
-        accounting, and key re-check as the single-table path. No
-        driver-side row loop at any join size."""
-        from functools import reduce
-        from operator import or_ as _or
-
-        from pyspark.sql import Window
-
+        post-image takes the same changed-row accounting and key
+        re-check as the single-table path, and all of them land in one
+        commit. No driver-side row loop at any join size."""
         from ebike_spark.engine.parser import split_top_level
 
         assigns: list[tuple[str | None, str, str]] = []  # (alias, col, rhs)
@@ -407,6 +407,18 @@ class DmlExecMixin:
             targets.append(
                 {"tgt": tgt, "qualified": qualified, "types": types, "items": items}
             )
+        with commit.writing(self.spark, *[t["qualified"] for t in targets]):
+            return self._update_targets(frm, where, targets)
+
+    def _update_targets(self, frm: str, where: str | None, targets: list[dict]) -> EngineResult:
+        """The commit half of _update_join, under every target's
+        writer lock: one post-image per physical table, all committed
+        together."""
+        from functools import reduce
+        from operator import or_ as _or
+
+        from pyspark.sql import Window
+
         self.spark.catalog.setCurrentDatabase(self.current_db)
         rid_exprs = ", ".join(
             f"{bq(t['tgt'])}.`{dml.ROWID}` AS __rid{k}"
@@ -423,18 +435,17 @@ class DmlExecMixin:
         )
         src = self.spark.sql(self._fix_select(sel, datetime_fns=False))
         if len(targets) > 1:
-            # snapshot the pre-image join BEFORE any table rewrites.
-            # localCheckpoint (eager), not persist(): rewriting the
-            # first target refreshes its table, and Spark invalidates
-            # every CACHED plan that reads a refreshed table — a
-            # persisted frame would silently recompute the second
-            # target's values from the first target's POST-image.
-            # Checkpointing cuts the lineage entirely, so the snapshot
-            # cannot be recomputed from anything. Bounded by matched
-            # rows x assigned columns, spread across executor storage.
+            # snapshot the pre-image join once: every target's
+            # post-image write would otherwise recompute it, and a
+            # joined table that is not a target holds no writer lock,
+            # so it may change between two of those writes.
+            # localCheckpoint (eager) cuts the lineage entirely, so the
+            # snapshot cannot be recomputed from anything. Bounded by
+            # matched rows x assigned columns, spread across executor
+            # storage.
             src = src.localCheckpoint(eager=True)
         total = 0
-        # Aliases of the SAME physical table merge into ONE staged
+        # Aliases of the SAME physical table merge into ONE
         # post-image: MySQL permits `UPDATE t a JOIN t b ... SET
         # a.x=..., b.y=...` but its row-level outcome is processing-
         # order-dependent; this engine pins a deterministic rule —
@@ -515,26 +526,11 @@ class DmlExecMixin:
                 self.spark, self.catalog, qualified, new_df, set(new_vals)
             )
             staged.append((qualified, new_df))
-        # All key re-checks passed against pre-images. Two-phase land:
-        # STAGE every post-image first (the data-sized writes — every
-        # pre-image read completes before anything commits), then swap
-        # each target from its durable stage. Residual window: a crash
-        # BETWEEN swaps leaves earlier targets committed — the
-        # cross-table analogue of the documented single-table
-        # stage-swap window (a parquet engine has no multi-table
-        # transaction to close it); the stages being durable tables
-        # means no snapshot recompute is ever needed to finish a swap.
-        staged_tables: list[tuple[str, str]] = []
-        try:
-            for qualified, new_df in staged:
-                staged_tables.append(
-                    (qualified, dml._stage(self.spark, qualified, new_df))
-                )
-            for qualified, stage in staged_tables:
-                dml._swap(self.spark, qualified, stage)
-        finally:
-            for _, stage in staged_tables:
-                dml._drop_stage(self.spark, stage)
+        # All key re-checks passed against pre-images. One commit lands
+        # every post-image: all are written before any table is
+        # re-pointed, and a failed commit leaves every target as it was.
+        if staged:
+            dml._rewrite(self.spark, *[commit.Image(q, df) for q, df in staged])
         return EngineResult("count", affected=total)
 
     def _delete(self, sql: str) -> EngineResult:
@@ -583,22 +579,20 @@ class DmlExecMixin:
             raise unsupported(
                 "multi-table DELETE on a table without the hidden rowid"
             )
-        self.spark.catalog.setCurrentDatabase(self.current_db)
-        sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
-            f" WHERE {where}" if where else ""
-        )
-        doomed = self.spark.sql(
-            self._fix_select(sel, datetime_fns=False)
-        ).distinct()
-        affected = doomed.count()
-        if affected == 0:
-            return EngineResult("count", affected=0)
-        t = self.spark.table(qualified)
-        dml._rewrite(
-            self.spark,
-            qualified,
-            t.join(doomed, t[dml.ROWID] == doomed["__del_rid"], "left_anti"),
-        )
+        with commit.writing(self.spark, qualified):
+            self.spark.catalog.setCurrentDatabase(self.current_db)
+            sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
+                f" WHERE {where}" if where else ""
+            )
+            doomed = self.spark.sql(
+                self._fix_select(sel, datetime_fns=False)
+            ).distinct()
+            affected = doomed.count()
+            if affected == 0:
+                return EngineResult("count", affected=0)
+            t = self.spark.table(qualified)
+            survivors = t.join(doomed, t[dml.ROWID] == doomed["__del_rid"], "left_anti")
+            dml._rewrite(self.spark, commit.Image(qualified, survivors))
         return EngineResult("count", affected=affected)
 
     # ------------------------------------------------------------ UDFs

@@ -17,7 +17,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ebike_spark.engine import dml, show
+from ebike_spark.engine import commit, dml, show
 from ebike_spark.engine.catalog import Catalog
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import (
@@ -91,6 +91,9 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         with _SYS_SCHEMA_LOCK:
             _ENGINE_SERIAL[0] += 1
             self._serial = _ENGINE_SERIAL[0]
+        # version directories no table points at (a failed retire, a
+        # crash mid-commit) go before this connection's first statement
+        commit.sweep(spark)
 
     def reset_session(self) -> None:
         """COM_RESET_CONNECTION surface (mysql_reset_connection):
@@ -114,6 +117,15 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
     # ------------------------------------------------------------ dispatch
 
     def execute(self, sql: str) -> EngineResult:
+        # the statement runs as one commit.statement (an old table
+        # version it may read outlives it) on a session that has
+        # dropped its cached file listing of every table another
+        # connection changed since this one's last statement
+        with commit.statement():
+            commit.sync(self.spark)
+            return self._execute_translated(sql)
+
+    def _execute_translated(self, sql: str) -> EngineResult:
         try:
             return self._execute(sql)
         except EbikeError:

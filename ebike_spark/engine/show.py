@@ -30,7 +30,7 @@ def show_tables(spark: SparkSession, db: str) -> DataFrame:
     names = sorted(
         t.name
         for t in spark.catalog.listTables(db)
-        if t.tableType != "TEMPORARY" and not t.name.startswith("__ebike_stage")
+        if t.tableType != "TEMPORARY"
     )
     return spark.createDataFrame([(n,) for n in names], f"`Tables_in_{db}` string")
 
@@ -93,7 +93,7 @@ def show_collation(spark: SparkSession) -> DataFrame:
 def show_table_status(spark: SparkSession, catalog: Catalog, db: str) -> DataFrame:
     rows = []
     for t in spark.catalog.listTables(db):
-        if t.tableType == "TEMPORARY" or t.name.startswith("__ebike_stage"):
+        if t.tableType == "TEMPORARY":
             continue
         n = spark.table(f"{db}.{t.name}").count()
         rows.append((t.name, "parquet", n, "utf8mb4_0900_ai_ci"))

@@ -78,7 +78,7 @@ import time as _time
 
 from pyspark.sql import SparkSession
 
-from ebike_spark.engine import Engine, EngineResult
+from ebike_spark.engine import Engine, EngineResult, commit
 from ebike_spark.engine.errors import EbikeError
 
 # ---------------------------------------------------------------- consts
@@ -553,14 +553,19 @@ class _Conn:
         # statement (MySQL parity)
         with self.stats["lock"]:
             self.stats["questions"] += len(stmts) if batched else 1
+        # each statement stays running (commit.statement) until its
+        # resultset is sent: the rows stream lazily from the table
+        # version the statement read
         if not batched:
             # single statement (a bare trailing ';' is fine — the
             # engine strips it); or capability not negotiated
-            self.send_result(self.engine.execute(sql))
+            with commit.statement():
+                self.send_result(self.engine.execute(sql))
             return
         for k, stmt in enumerate(stmts):
-            result = self.engine.execute(stmt)
-            self.send_result(result, more=k < len(stmts) - 1)
+            with commit.statement():
+                result = self.engine.execute(stmt)
+                self.send_result(result, more=k < len(stmts) - 1)
 
     def _reset_wire_session(self) -> None:
         """Connection-level session reset shared by COM_RESET_CONNECTION
@@ -842,8 +847,9 @@ class _Conn:
                     params = self._decode_binary_params(
                         body, n_params, self._stmt_types, stmt_id, ld
                     )
-                    result = self.engine.execute_prepared(stmt_id, params)
-                    self.send_result(result, binary=True)
+                    with commit.statement():
+                        result = self.engine.execute_prepared(stmt_id, params)
+                        self.send_result(result, binary=True)
                 elif cmd == COM_STMT_SEND_LONG_DATA:
                     # stmt_id 4, param_id 2, data rest — appends a
                     # chunk to the parameter; NO response packet is

@@ -1,0 +1,255 @@
+"""The commit primitive (engine/commit.py): a failure injected at each
+commit step, the start-up sweep of orphan versions, and DDL on a table
+whose data lives in a version directory."""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from ebike_spark.engine import EbikeError, Engine, commit
+
+
+@pytest.fixture()
+def eng(spark):
+    e = Engine(spark)
+    db = f"c_{uuid.uuid4().hex[:10]}"
+    e.execute(f"CREATE DATABASE {db}")
+    e.execute(f"USE {db}")
+    yield e
+    e.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+def _state(spark, qualified: str) -> tuple:
+    """(columns, row count, order-free checksum) of a table, hidden
+    rowids included — the frame_hash shape of perfbench/workloads.py."""
+    df = spark.table(qualified)
+    h = F.xxhash64(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
+    n, s = df.select(h.alias("h")).agg(
+        F.count(F.lit(1)), F.sum(F.col("h").cast("decimal(38,0)"))
+    ).first()
+    return tuple(df.columns), int(n), int(s or 0)
+
+
+def _leftovers(spark, qualified: str) -> list[str]:
+    """Files under the table's root that are not in its live version."""
+    live = commit.location(spark, qualified)
+    out = []
+    for d, _, files in os.walk(commit.root_of(live)):
+        if d != live:  # a root that is still live holds only files itself
+            out.extend(os.path.join(d, f) for f in files)
+    return out
+
+
+# statement, tables it changes
+CASES = {
+    "update": ("UPDATE t SET v = v + 100 WHERE id = 1", ["t"]),
+    "delete_whole_file": ("DELETE FROM t WHERE id >= 5", ["t"]),
+    "delete_partial_file": ("DELETE FROM t WHERE id = 1", ["t"]),
+    "multi_table_update": ("UPDATE t JOIN u ON t.id = u.id SET t.v = u.w, u.w = t.v", ["t", "u"]),
+    "drop_column": ("ALTER TABLE t DROP COLUMN w", ["t"]),
+}
+
+
+def _setup(eng) -> None:
+    eng.execute("CREATE TABLE t (id INT NOT NULL, v INT, w CHAR, PRIMARY KEY (id))")
+    # two statements, two data files: ids 1-4 and ids 5-6
+    eng.execute("INSERT INTO t VALUES (1, 10, 'a'), (2, 20, 'b'), (3, 30, 'c'), (4, 40, 'd')")
+    eng.execute("INSERT INTO t VALUES (5, 50, 'e'), (6, 60, 'f')")
+    eng.execute("CREATE TABLE u (id INT NOT NULL, w INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO u VALUES (1, 7), (2, 8)")
+
+
+@pytest.mark.parametrize("step", ["write", "repoint", "refresh"])
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_failed_commit_step_keeps_the_pre_image(eng, spark, case, step):
+    """A failure at any step up to the refresh fails the statement and
+    leaves every table it targets as it was: columns, row count and
+    checksum, live location, and no new version left behind. The
+    ``write`` case is the step that replaced the stage-and-INSERT
+    OVERWRITE protocol, whose failure could leave the table empty."""
+    _setup(eng)
+    sql, tables = CASES[case]
+    names = [f"{eng.current_db}.{t}" for t in tables]
+    before = {q: (_state(spark, q), commit.location(spark, q)) for q in names}
+    commit.fail_once(step)
+    with pytest.raises(commit.InjectedFault, match=f"commit step '{step}'"):
+        eng.execute(sql)
+    for q in names:
+        assert (_state(spark, q), commit.location(spark, q)) == before[q]
+        assert _leftovers(spark, q) == []
+    # the table takes the statement once the fault is gone
+    eng.execute(sql)
+    assert all(_state(spark, q) != before[q][0] for q in names)
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_failed_retire_commits_and_the_sweep_removes_the_orphan(eng, spark, case):
+    _setup(eng)
+    sql, tables = CASES[case]
+    names = [f"{eng.current_db}.{t}" for t in tables]
+    before = {q: _state(spark, q) for q in names}
+    commit.fail_once("retire")
+    eng.execute(sql)
+    after = {q: _state(spark, q) for q in names}
+    assert all(after[q] != before[q] for q in names)
+    assert any(_leftovers(spark, q) for q in names)
+    Engine(spark)  # start-up sweep
+    for q in names:
+        assert _leftovers(spark, q) == []
+        assert _state(spark, q) == after[q]
+
+
+def test_delete_of_whole_files_writes_no_rows(eng, spark, monkeypatch):
+    """The rows of one INSERT's file are dropped with the file: the
+    other file carries over as a hard link, and nothing is written."""
+    _setup(eng)
+    q = f"{eng.current_db}.t"
+    files = commit.data_files(spark.table(q))
+    writes = []
+    monkeypatch.setattr(
+        commit, "_write", lambda img, new, _orig=commit._write: writes.append(img.df) or _orig(img, new)
+    )
+    assert eng.execute("DELETE FROM t WHERE id >= 5").affected == 2
+    assert writes == [None]
+    kept = commit.data_files(spark.table(q))
+    assert len(kept) == 1 and os.path.basename(kept[0]) in {os.path.basename(f) for f in files}
+    assert sorted(r["id"] for r in eng.execute("SELECT id FROM t").rows()) == [1, 2, 3, 4]
+    # a partial match rewrites only its own file, filtered
+    assert eng.execute("DELETE FROM t WHERE id = 1").affected == 1
+    assert writes[-1] is not None
+    assert sorted(r["id"] for r in eng.execute("SELECT id FROM t").rows()) == [2, 3, 4]
+    assert eng.execute("DELETE FROM t WHERE id = 99").affected == 0
+
+
+def _props(eng, q: str) -> dict:
+    return {k: v for k, v in eng.catalog.properties(q).items() if k.startswith("ebike.")}
+
+
+def test_ddl_after_a_versioned_commit(eng, spark):
+    """RENAME, TRUNCATE, DROP, CREATE TABLE LIKE and SHOW CREATE TABLE on
+    a table whose data lives in a version directory: rows and ebike.*
+    properties survive, and DROP leaves no directory of the table."""
+    db = eng.current_db
+    eng.execute("CREATE TABLE t (id INT NOT NULL, v INT, UNIQUE KEY uv (v), PRIMARY KEY (id))")
+    eng.execute("INSERT INTO t VALUES (1, 10), (2, 20)")
+    eng.execute("UPDATE t SET v = v + 1 WHERE id = 1")
+    props = _props(eng, f"{db}.t")
+    assert commit.location(spark, f"{db}.t").endswith(os.sep + "_v1")
+    create = eng.execute("SHOW CREATE TABLE t").rows()[0]["Create Table"]
+    assert "PRIMARY KEY (`id`)" in create and "UNIQUE KEY `uv` (`v`)" in create
+
+    eng.execute("RENAME TABLE t TO r")
+    db_dir = commit.root_of(commit.location(spark, f"{db}.r")).rsplit(os.sep, 1)[0]
+    assert not os.path.exists(os.path.join(db_dir, "t"))
+    assert sorted((x["id"], x["v"]) for x in eng.execute("SELECT * FROM r").rows()) == [(1, 11), (2, 20)]
+    assert _props(eng, f"{db}.r") == props
+    eng.execute("UPDATE r SET v = v + 1 WHERE id = 2")  # the renamed table commits again
+    assert sorted((x["id"], x["v"]) for x in eng.execute("SELECT * FROM r").rows()) == [(1, 11), (2, 21)]
+
+    eng.execute("CREATE TABLE c LIKE r")
+    assert _props(eng, f"{db}.c") == props
+    assert eng.execute("SELECT COUNT(*) AS n FROM c").rows()[0]["n"] == 0
+
+    eng.execute("TRUNCATE TABLE r")
+    assert eng.execute("SELECT COUNT(*) AS n FROM r").rows()[0]["n"] == 0
+    assert _props(eng, f"{db}.r") == props
+    eng.execute("INSERT INTO r VALUES (3, 30)")
+    assert [x["id"] for x in eng.execute("SELECT id FROM r").rows()] == [3]
+
+    eng.execute("DROP TABLE r")
+    assert not os.path.exists(os.path.join(db_dir, "r"))
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("SELECT * FROM r")
+    assert ei.value.code == 1146
+
+
+def test_concurrent_writers_and_readers(eng, spark):
+    """More writer threads than cores, each on its own session, add to
+    one row while readers scan the table: no increment is lost and no
+    reader loses the files of the version it started on."""
+    import sys
+    import threading
+
+    eng.execute("CREATE TABLE s (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO s VALUES (1, 0), (2, 0)")
+    errors: list = []
+
+    def write() -> None:
+        e = Engine(spark.newSession(), default_db=eng.current_db)
+        try:
+            for _ in range(2):
+                e.execute("UPDATE s SET v = v + 1 WHERE id = 1")
+        except Exception as ex:  # reported by the assertion below
+            errors.append(ex)
+
+    def read() -> None:
+        e = Engine(spark.newSession(), default_db=eng.current_db)
+        try:
+            for _ in range(6):
+                with commit.statement():  # as the server holds it across the send
+                    assert len(e.execute("SELECT * FROM s").rows()) == 2
+        except Exception as ex:
+            errors.append(ex)
+
+    threads = [threading.Thread(target=write) for _ in range(6)]
+    threads += [threading.Thread(target=read) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert eng.execute("SELECT v FROM s WHERE id = 1").rows()[0]["v"] == 12
+
+
+def test_old_version_outlives_a_reader_that_started_before_the_commit(eng, spark):
+    """A statement planned on the old version (its file listing taken)
+    still reads it after another connection commits; the old version is
+    deleted when that statement ends."""
+    import threading
+
+    eng.execute("CREATE TABLE o (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO o VALUES (1, 0), (2, 0)")
+    q = f"{eng.current_db}.o"
+    reader = Engine(spark.newSession(), default_db=eng.current_db)
+    planned, committed, out = threading.Event(), threading.Event(), []
+
+    def read() -> None:
+        with commit.statement():  # as the server holds it across the send
+            df = reader.execute("SELECT * FROM o").df  # lists the live files
+            planned.set()
+            committed.wait(60)
+            out.append(len(df.collect()))
+
+    th = threading.Thread(target=read)
+    th.start()
+    assert planned.wait(60)
+    eng.execute("UPDATE o SET v = 1 WHERE id = 1")
+    assert _leftovers(spark, q) != []  # held for the reader
+    committed.set()
+    th.join(60)
+    assert not th.is_alive() and out == [2]
+    assert _leftovers(spark, q) == []
+
+
+def test_passthrough_insert_is_seen_by_another_connection(eng, spark):
+    """``INSERT INTO t TABLE s`` runs through Spark untouched, yet it
+    bumps t's version like every engine write: another connection's
+    next read lists the new file."""
+    eng.execute("CREATE TABLE t (id INT, v INT)")
+    eng.execute("CREATE TABLE s (id INT, v INT)")
+    eng.execute("INSERT INTO t VALUES (1, 10)")
+    eng.execute("INSERT INTO s VALUES (2, 20)")
+    other = Engine(spark.newSession(), default_db=eng.current_db)
+    assert [r["id"] for r in other.execute("SELECT id FROM t").rows()] == [1]
+    eng.execute("INSERT INTO t TABLE s")
+    assert sorted(r["id"] for r in other.execute("SELECT id FROM t").rows()) == [1, 2]

@@ -8,12 +8,13 @@ test, dropped afterwards."""
 
 from __future__ import annotations
 
+import os
 import uuid
 from collections import Counter
 
 import pytest
 
-from ebike_spark.engine import EbikeError, Engine
+from ebike_spark.engine import EbikeError, Engine, commit
 
 
 @pytest.fixture()
@@ -1461,17 +1462,11 @@ def test_alter_multi_clause_is_atomic(eng):
         eng.execute("ALTER TABLE mb ADD COLUMN a INT, DROP COLUMN nope")
     assert ei.value.code == 1091
     assert [r["Field"] for r in eng.execute("SHOW COLUMNS FROM mb").rows()] == ["id", "v"]
-    # no stage table leaked by the rolled-back attempts — checked at the
-    # Spark catalog level because the __ebike_stage prefix is hidden from
-    # SHOW TABLES by design (a leak would be invisible there)
-    leftovers = [
-        t.name
-        for t in eng.spark.catalog.listTables(eng.current_db)
-        if t.name.startswith("__ebike_stage_alter_")
-    ]
-    assert leftovers == []
-    # and the hidden prefix never reaches user-visible SHOW output
-    assert not any("__ebike_" in str(r) for r in eng.execute("SHOW TABLES").rows())
+    # nothing of the rolled-back attempts is left: no other table, and
+    # no version directory beside the table's data
+    assert [r["Tables_in_" + eng.current_db] for r in eng.execute("SHOW TABLES").rows()] == ["mb"]
+    root = commit.location(eng.spark, f"{eng.current_db}.mb")
+    assert not [n for n in os.listdir(root) if n.startswith("_v")]
 
 
 def test_alter_multi_clause_rename_applies_last(eng):

@@ -1167,3 +1167,64 @@ def test_refresh_and_shutdown(spark):
         assert refused, "listener kept accepting after COM_SHUTDOWN"
     finally:
         s.stop()
+
+
+@pytest.mark.parametrize(
+    "stmt, expect",
+    [
+        ("INSERT INTO t VALUES (3, 30)", [["1", "10"], ["2", "20"], ["3", "30"]]),
+        ("UPDATE t SET v = v + 1 WHERE id = 1", [["1", "11"], ["2", "20"]]),
+        ("DELETE FROM t WHERE id = 2", [["1", "10"]]),
+        ("ALTER TABLE t ADD COLUMN z INT", [["1", "10", None], ["2", "20", None]]),
+    ],
+    ids=["insert", "update", "delete", "add_column"],
+)
+def test_other_connection_reads_a_committed_change(server, stmt, expect):
+    """Each connection runs on its own Spark session, which caches a
+    table's file listing once it has read it. After connection A
+    changes the table, B's next SELECT sees A's rows — not an error
+    about A's replaced files, nor the stale listing."""
+    a, b = MiniClient(server), MiniClient(server)
+    db = f"wp_{uuid.uuid4().hex[:8]}"
+    a.query(f"CREATE DATABASE {db}")
+    a.init_db(db)
+    b.init_db(db)
+    a.query("CREATE TABLE t (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    a.query("INSERT INTO t VALUES (1, 10), (2, 20)")
+    assert b.query("SELECT * FROM t ORDER BY id")[2] == [["1", "10"], ["2", "20"]]
+    assert a.query(stmt)[0] == "ok"
+    assert b.query("SELECT * FROM t ORDER BY id")[2] == expect
+    a.query(f"DROP DATABASE {db}")
+    a.close()
+    b.close()
+
+
+def test_concurrent_updates_lose_no_update(server):
+    """Two connections each add 1 to the same row ten times at once:
+    the per-table writer lock serialises the read-modify-commit, so
+    all twenty increments land."""
+    import threading as _threading
+
+    setup = MiniClient(server)
+    db = f"wp_{uuid.uuid4().hex[:8]}"
+    setup.query(f"CREATE DATABASE {db}")
+    setup.init_db(db)
+    setup.query("CREATE TABLE t (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    setup.query("INSERT INTO t VALUES (1, 0), (2, 0)")
+    results: list = []
+
+    def bump() -> None:
+        c = MiniClient(server, database=db)
+        for _ in range(10):
+            results.append(c.query("UPDATE t SET v = v + 1 WHERE id = 1"))
+        c.close()
+
+    threads = [_threading.Thread(target=bump) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert results == [("ok", 1)] * 20
+    assert setup.query("SELECT id, v FROM t ORDER BY id")[2] == [["1", "20"], ["2", "0"]]
+    setup.query(f"DROP DATABASE {db}")
+    setup.close()
