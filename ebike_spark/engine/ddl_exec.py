@@ -271,14 +271,11 @@ class DdlExecMixin:
                 rows.append((disp, "optimize", "status", "OK"))
                 continue
             # CHECK TABLE: re-validate declared constraints at rest
-            # through the SAME probe the UPDATE post-image re-check
-            # uses (dml.duplicate_key_probe — one 'duplicate' semantics)
+            # through the same NOT NULL and duplicate probes the DML
+            # checks use
             t = self.spark.table(q)
-            msgs = []
-            for col in self.catalog.not_null_cols(q):
-                if t.where(F.col(col).isNull()).limit(1).count() > 0:
-                    msgs.append(f"column '{col}' contains NULL")
-            for key_name, _dup in dml.duplicate_key_probe(
+            msgs = [f"column '{col}' contains NULL" for col in dml.null_columns(self.catalog, q, t)]
+            for key_name, _ in dml.duplicate_key_probe(
                 t, dml.declared_keys(self.catalog, q)
             ):
                 msgs.append(f"duplicate entries in key '{key_name}'")
@@ -555,7 +552,7 @@ class DdlExecMixin:
         any_null = _ft.reduce(_op.or_, [F.col(c).isNull() for c in cols])
         if st.df.where(any_null).limit(1).collect():
             raise EbikeError(1138, "Invalid use of NULL value in key column")
-        self._reject_duplicates(st.df, cols, "PRIMARY")
+        dml.raise_on_duplicate(st.df, [("PRIMARY", cols)])
         nn = [c for c in st.props.get(PROP_NOT_NULL, "").split(",") if c]
         nn.extend(c for c in cols if c not in nn)
         st.props[PROP_PK] = ",".join(cols)
@@ -573,10 +570,7 @@ class DdlExecMixin:
         taken.update(n for n, _ in st.keys(self._PROP_CLUSTER))
         if name in taken:
             raise EbikeError(1061, f"Duplicate key name '{name}'")
-        non_null = st.df
-        for c in cols:
-            non_null = non_null.where(F.col(c).isNotNull())
-        self._reject_duplicates(non_null, cols, name)
+        dml.raise_on_duplicate(st.df, [(name, cols)])
         st.props[f"{PROP_UNIQUE_PREFIX}{name}"] = ",".join(cols)
 
     def _add_index(self, st: "_Altered", name: str, cols: list[str]) -> None:
@@ -604,19 +598,6 @@ class DdlExecMixin:
         for c in cols:
             if c not in known:
                 raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
-
-    @staticmethod
-    def _reject_duplicates(df: DataFrame, cols: list[str], key: str) -> None:
-        dup = (
-            df.groupBy(*[F.col(c) for c in cols])
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            vals = "-".join(str(dup[0][c]) for c in cols)
-            raise EbikeError(1062, f"Duplicate entry '{vals}' for key '{key}'")
 
     def _modify_column(
         self,

@@ -1,40 +1,37 @@
 """DML on managed parquet tables.
 
-The reference implements INSERT/UPDATE/DELETE as row-at-a-time KV
-mutations (/root/reference/src/execute_impl/{insert,update,delete}.rs),
-with UPDATE/DELETE internally rewritten to a SELECT that projects the
-affected rowids (update.rs:55-287, delete.rs:38-165). The Spark-native
-equivalent keeps the *rewrite* idea but makes it set-oriented:
+Every INSERT ends in one landing function, :func:`land`, whatever its
+row source. Each source first resolves its target column list with
+:func:`target_columns` (1054 for an unknown column, 1110 for a
+repeated one) and types its rows to the table's declared columns:
 
-- INSERT VALUES: the rows are evaluated by Spark in one of two forms
-  (_values_df). A batch of plain literals (numbers, quoted strings,
-  NULL, TRUE, FALSE — a mysqldump extended INSERT) is ONE inline
-  table: Catalyst folds its casts into a LocalRelation, so collecting
-  it runs no job and writing it is one file at any row count. Any
-  other batch (constant expressions, like the reference's
-  physical-expr fold, insert.rs:113-164; earlier-column references;
-  RAND()) is one SELECT per row, UNION ALL-ed. A plain INSERT
-  collects the statement-sized batch once, checks NOT NULL and
-  in-batch duplicates on the driver, probes stored keys with one
-  pushed-down IN filter per key, then appends.
-- UPDATE: one pass computing when(cond, new, old) per assigned column,
-  written once as the table's next version and committed by re-pointing
-  the table at it (engine/commit.py). No per-row point writes — the
-  same plan shape works on a 1000-executor cluster.
-- DELETE: one probe job counts the matching rows per data file. Files
-  in which every row matches are dropped, untouched files carry over
-  into the next version as hard links, and only files that match in
-  part are rewritten, filtered.
+- INSERT … VALUES: :func:`_values_df` evaluates the rows in SQL text,
+  as one inline table when every cell is a plain literal (a mysqldump
+  extended INSERT: Catalyst folds it into a LocalRelation, so
+  collecting it runs no job), else as one SELECT per row, UNION ALL-ed
+  (expressions, earlier-column references, RAND()).
+- INSERT … SELECT and LOAD DATA: :func:`typed_frame` casts the source
+  frame's columns positionally with the strict Column-API cast.
 
-Constraint enforcement for data-sized input (LOAD DATA, INSERT …
-SELECT) is a join against the existing table plus an intra-batch
-duplicate check, all Spark jobs — either way this *fixes* the
-reference's bug of not maintaining index entries on update/delete
-(SURVEY §3.3). NULL-into-NOT-NULL raises MySQL error 1048.
+:func:`land` then mints AUTO_INCREMENT, runs the REPLACE / IGNORE /
+ON DUPLICATE KEY UPDATE / plain dispatch with its constraint checks,
+appends, and returns (affected rows, first minted id). A VALUES batch
+is statement-sized: a plain insert collects it once, checks it on the
+driver and writes one file. Any other source is checked by Spark jobs
+only. :func:`duplicate_key_probe` is the one in-frame duplicate check;
+UPDATE, ALTER and CHECK TABLE share it. NULL into a NOT NULL column is
+MySQL error 1048.
+
+UPDATE computes when(cond, new, old) per assigned column in one pass.
+DELETE counts the matching rows per data file in one probe job: files
+in which every row matches are dropped, untouched files carry over as
+hard links, and only partly matching files are rewritten. Both commit
+through engine/commit.py.
 """
 
 from __future__ import annotations
 
+import os
 import re
 from decimal import Decimal
 from functools import reduce
@@ -45,8 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ebike_spark.engine import commit
 from ebike_spark.engine.catalog import ROWID, Catalog
-from ebike_spark.engine.errors import EbikeError, duplicate_entry
-from ebike_spark.engine.parser import Delete, Insert, Update
+from ebike_spark.engine.errors import EbikeError, duplicate_entry, unsupported
+from ebike_spark.engine.parser import Delete, Insert, Update, split_top_level, unquote_ident
 
 # INSERT IGNORE into a table with MULTIPLE unique indexes replays
 # MySQL's order-dependent first-wins interleave on the driver (see
@@ -136,9 +133,9 @@ def _mysql_coerce_numeric(raw_col, target: str):
     dbl_max = F.lit(1.7976931348623157e308)
     if target == "BIGINT":
         exact = _rounding_bigint_cast_col(raw_col)
-        # DECIMAL-exact prefix handling FIRST (r10 property finding:
-        # '10000000000000001.xyz' must keep all 17 digits, and
-        # '12.9abc' must round to 13 — MySQL's insert coercion parses
+        # DECIMAL-exact prefix handling FIRST ('10000000000000001.xyz'
+        # must keep all 17 digits, and '12.9abc' must round to 13 —
+        # MySQL's insert coercion parses
         # the decimal prefix exactly and rounds HALF_UP on the
         # fractional part, never through a double). The non-ANSI
         # string→bigint cast truncation-parses the integer part of
@@ -307,6 +304,51 @@ def _cast_sql(raw_ref: str, name: str, typ: str) -> str:
     return f"{cast} AS `{name}`"
 
 
+def target_columns(listed: list[str] | None, col_types: list[tuple[str, str]]) -> list[str]:
+    """An INSERT's target column list: ``listed``, or every column in
+    declared order. 1054 for a column the table lacks, 1110 for a
+    column listed twice."""
+    names = [n for n, _ in col_types]
+    target = listed or names
+    unknown = [c for c in target if c not in names]
+    if unknown:
+        raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
+    twice = [c for c in target if target.count(c) > 1]
+    if twice:
+        raise EbikeError(1110, f"Column '{twice[0]}' specified twice")
+    return target
+
+
+def typed_frame(
+    src: DataFrame, target: list[str], col_types: list[tuple[str, str]], coerce: bool = False
+) -> DataFrame:
+    """A data-sized row source (INSERT … SELECT, LOAD DATA) typed to the
+    table's columns: the i-th source column feeds the i-th ``target``
+    column through the strict cast (guarded_cast_col: 1366 on a value
+    that does not convert, MySQL integer rounding), and every other
+    column is a typed NULL. ``coerce`` is LOAD DATA IGNORE, where MySQL
+    stores the closest value instead of failing: the numeric family
+    takes _mysql_coerce_numeric, and other types a plain cast, NULL on
+    failure (Spark has no zero-date)."""
+    if len(src.columns) != len(target):
+        raise EbikeError(1136, "Column count doesn't match value count")
+    pos = {c: i for i, c in enumerate(target)}
+
+    def cast(name: str, typ: str):
+        if name not in pos:
+            return F.lit(None).cast(typ)
+        raw = F.col(f"_c{pos[name]}")
+        if not coerce:
+            return guarded_cast_col(raw, typ, name)
+        if typ.upper() in ("BIGINT", "DOUBLE"):
+            return _mysql_coerce_numeric(raw, typ.upper())
+        return raw.cast(typ)
+
+    # positional names: a SELECT may repeat a column name
+    src = src.toDF(*[f"_c{i}" for i in range(len(target))])
+    return src.select(*[cast(n, t).alias(n) for n, t in col_types])
+
+
 def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]]) -> DataFrame:
     """Evaluate VALUES rows to the table's declared types; every cast
     is strict (strict_case_sql: 1366 on a value that does not convert).
@@ -319,16 +361,12 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
       Spark job, a bad cast raises right there, and writing it is one
       partition — one file — at any batch size.
     - otherwise one ``SELECT`` per row, ``UNION ALL``-ed: cells may be
-      constant expressions (arbitrary, like the reference's
-      physical-expr fold, insert.rs:113-164), reference earlier
-      columns (``VALUES (1, a + 1)``) or draw RAND(). Plan size grows
-      with the row count; only hand-written batches need this form."""
+      constant expressions, reference earlier columns (``VALUES (1,
+      a + 1)``) or draw RAND(). Plan size grows with the row count;
+      only hand-written batches need this form."""
     names = [n for n, _ in col_types]
     types = dict(col_types)
-    target = ins.columns or names
-    unknown = [c for c in target if c not in types]
-    if unknown:
-        raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
+    target = target_columns(ins.columns, col_types)
     if any(len(row) != len(target) for row in ins.rows):
         raise EbikeError(1136, "Column count doesn't match value count")
     if _inline_ok(ins.rows, target, types):
@@ -441,6 +479,25 @@ def _stored_clash(existing: DataFrame, new_rows: DataFrame, cols: list[str], tup
     return found[0] if found else None
 
 
+def null_columns(
+    catalog: Catalog,
+    qualified: str,
+    df: DataFrame,
+    props: dict[str, str] | None = None,
+    rows: list | None = None,
+):
+    """Yield each NOT NULL column that holds a NULL — over the collected
+    ``rows`` when given, else one Spark job per column. Shared by the
+    INSERT checks and CHECK TABLE."""
+    for col in catalog.not_null_cols(qualified, props):
+        if (
+            any(r[col] is None for r in rows)
+            if rows is not None
+            else df.where(F.col(col).isNull()).limit(1).count() > 0
+        ):
+            yield col
+
+
 def _check_not_null(
     catalog: Catalog,
     qualified: str,
@@ -448,15 +505,9 @@ def _check_not_null(
     props: dict[str, str],
     rows: list | None = None,
 ) -> None:
-    """1048 on the first NOT NULL column holding a NULL — over the
-    collected ``rows`` when given, else one Spark job per column."""
-    for col in catalog.not_null_cols(qualified, props):
-        if (
-            any(r[col] is None for r in rows)
-            if rows is not None
-            else new_rows.where(F.col(col).isNull()).limit(1).count() > 0
-        ):
-            raise EbikeError(1048, f"Column '{col}' cannot be null")
+    """1048 on the first NOT NULL column holding a NULL."""
+    for col in null_columns(catalog, qualified, new_rows, props, rows):
+        raise EbikeError(1048, f"Column '{col}' cannot be null")
 
 
 def _check_constraints(
@@ -474,9 +525,8 @@ def _check_constraints(
     ``rows`` is the batch already collected on the driver (an INSERT …
     VALUES statement): NOT NULL and the in-batch duplicates are then
     checked in Python, and each key probes the stored rows with one
-    job (_stored_clash). Without it (LOAD DATA, INSERT …
-    SELECT: data-sized input) every check is a Spark job over
-    ``new_rows``."""
+    job (_stored_clash). Without it (LOAD DATA, INSERT … SELECT:
+    data-sized input) every check is a Spark job over ``new_rows``."""
     _check_not_null(catalog, qualified, new_rows, props, rows)
     keys = declared_keys(catalog, qualified, props)
     if not keys:
@@ -497,13 +547,7 @@ def _check_constraints(
             probe = [t for t in tuples if None not in t]
             clash = _stored_clash(existing, new_rows, cols, probe) if probe else None
         else:
-            # intra-batch duplicates, then a semi-join on the key columns
-            cand = new_rows
-            if key_name != "PRIMARY":
-                cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-            dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
-            if dup:
-                raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
+            raise_on_duplicate(new_rows, [(key_name, cols)])
             found = (
                 new_rows.select(*cols)
                 .join(existing.select(*cols), on=cols, how="inner")
@@ -519,10 +563,10 @@ def _append(
     spark: SparkSession, qualified: str, df: DataFrame, has_rowid: bool
 ) -> None:
     """Append ``df`` (the table's user columns) to the table. Row
-    identity materializes here (reference: uuid per row,
-    meta_def.rs:385-398) — stable for the row's lifetime; the frame is
-    aligned to the PHYSICAL column order, because insertInto is
-    positional and ALTER ADD COLUMN places later columns after rowid."""
+    identity materializes here (one uuid per row, stable for the row's
+    lifetime); the frame is aligned to the PHYSICAL column order,
+    because insertInto is positional and ALTER ADD COLUMN places later
+    columns after rowid."""
     if has_rowid:
         df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
     df.write.insertInto(qualified, overwrite=False)
@@ -530,37 +574,34 @@ def _append(
 
 
 def _mint_auto_increment(
-    spark: SparkSession, qualified: str, df: DataFrame, ai: str, ai_type: str
+    spark: SparkSession, qualified: str, df: DataFrame, ai: str
 ) -> tuple[DataFrame, int | None]:
     """Assign AUTO_INCREMENT values to rows whose ``ai`` evaluated NULL
     (MySQL mints on NULL or omitted). MySQL bumps the counter ROW BY
-    ROW in VALUES order — an explicit id only lifts the counter for
+    ROW in batch order — an explicit id only lifts the counter for
     LATER rows, so VALUES (NULL),(100),(NULL) on an empty table mints
     1, keeps 100, mints 101. Closed form over the batch: with N_i the
     running NULL count through row i, a NULL row mints
     ``N_i + max(stored, max over earlier explicit rows j of
     (e_j - N_j))`` — the window below computes exactly that, no
     per-row driver loop. Returns (df, first_minted_id | None) —
-    LAST_INSERT_ID is the FIRST minted id of the batch. The window is
-    statement-sized (a VALUES batch), not data-sized — the stored side
-    contributes one MAX aggregate, which Spark computes with map-side
-    partials at any table size."""
+    LAST_INSERT_ID is the FIRST minted id of the batch. The stored
+    side contributes one MAX aggregate, which Spark computes with
+    map-side partials at any table size."""
     n_null = df.where(F.col(ai).isNull()).count()
     if n_null == 0:
         # fully-explicit batch: skip the stored MAX probe (a full-table
         # aggregate — wasted work on the DML path)
         return df, None
     stored = spark.table(qualified).agg(F.max(F.col(ai).cast("long"))).collect()[0][0] or 0
-    from pyspark.sql import Window as _W
-
-    run = _W.orderBy("__vidx").rowsBetween(_W.unboundedPreceding, 0)
-    prev = _W.orderBy("__vidx").rowsBetween(_W.unboundedPreceding, -1)
+    run = Window.orderBy("__vidx").rowsBetween(Window.unboundedPreceding, 0)
+    prev = Window.orderBy("__vidx").rowsBetween(Window.unboundedPreceding, -1)
     n_cum = F.sum(F.when(F.col(ai).isNull(), 1).otherwise(0)).over(run)
     explicit_key = F.when(F.col(ai).isNotNull(), F.col(ai).cast("long") - n_cum)
     counter_base = F.greatest(
         F.lit(stored), F.coalesce(F.max(explicit_key).over(prev), F.lit(stored))
     )
-    minted = (n_cum + counter_base).cast(ai_type)
+    minted = (n_cum + counter_base).cast(df.schema[ai].dataType)
     tagged = df.withColumn("__vidx", F.monotonically_increasing_id())
     first_id = (
         tagged.withColumn("__mint", minted)
@@ -577,48 +618,75 @@ def _mint_auto_increment(
     return out, int(first_id)
 
 
-def insert(
-    spark: SparkSession,
-    catalog: Catalog,
-    ins: Insert,
-    current_db: str,
-    session: dict | None = None,
-) -> int:
-    qualified = catalog.qualify(ins.table, current_db)
-    catalog.require_table(qualified)
-    with commit.writing(spark, qualified):
-        return _insert(spark, catalog, qualified, ins, session)
-
-
-def _insert(
+def land(
     spark: SparkSession,
     catalog: Catalog,
     qualified: str,
-    ins: Insert,
-    session: dict | None,
-) -> int:
-    props = catalog.properties(qualified)
-    col_types = catalog.column_types(qualified, props)
-    df = _values_df(spark, ins, col_types)
+    df: DataFrame,
+    props: dict[str, str],
+    mode: str = "",
+    on_dup: list[tuple[str, str]] | None = None,
+    n_rows: int | None = None,
+) -> tuple[int, int | None]:
+    """Land an INSERT's rows — the one tail of every row source.
+
+    ``df`` holds the table's user columns, already typed. ``mode`` is
+    REPLACE, IGNORE or "" (plain, or ON DUPLICATE KEY UPDATE with its
+    ``on_dup`` assignments). ``n_rows`` is the row count of a
+    statement-sized batch (INSERT … VALUES): a plain insert then
+    collects it once, checks it on the driver and writes one file. None
+    marks a data-sized source, checked by Spark jobs and counted
+    lazily. With no PRIMARY/UNIQUE key every mode is a plain insert, as
+    in MySQL. Returns (affected rows, first minted AUTO_INCREMENT id or
+    None)."""
     ai = catalog.auto_increment_col(qualified, props)
+    first_id = None
     if ai is not None:
-        df, first_id = _mint_auto_increment(spark, qualified, df, ai, dict(col_types)[ai])
-        if first_id is not None and session is not None:
-            # MySQL LAST_INSERT_ID(): first minted id of the batch
-            session["last_insert_id"] = first_id
-    if ins.replace:
-        return _replace(spark, catalog, qualified, df, ins, props)
-    if ins.on_dup_update is not None:
-        return _upsert(spark, catalog, qualified, df, ins, props)
-    if ins.ignore:
-        return _insert_ignore(spark, catalog, qualified, df, props)
-    # The batch is statement-sized: collect it once (the strict guard
-    # raises 1366 here; an inline-table batch runs no job for it),
-    # check it on the driver, then write it as one file.
-    rows = df.collect()
-    _check_constraints(spark, catalog, qualified, df, props, rows=rows)
-    _append(spark, qualified, df.coalesce(1), catalog.has_rowid(qualified, props))
-    return len(rows)
+        df, first_id = _mint_auto_increment(spark, qualified, df, ai)
+    keys = declared_keys(catalog, qualified, props)
+    has_rowid = catalog.has_rowid(qualified, props)
+    if keys and mode == "REPLACE":
+        n = _replace(spark, catalog, qualified, df, n_rows, props)
+    elif keys and on_dup is not None:
+        n = _upsert(spark, catalog, qualified, df, on_dup, props)
+    elif keys and mode == "IGNORE":
+        n = _insert_ignore(spark, catalog, qualified, df, props)
+    elif n_rows is not None:
+        # the strict guard raises 1366 in this collect; an inline-table
+        # batch runs no job for it
+        rows = df.collect()
+        _check_constraints(spark, catalog, qualified, df, props, rows=rows)
+        _append(spark, qualified, df.coalesce(1), has_rowid)
+        n = len(rows)
+    else:
+        _check_constraints(spark, catalog, qualified, df, props)
+        n = df.count()
+        _append(spark, qualified, df, has_rowid)
+    return n, first_id
+
+
+def insert(
+    spark: SparkSession, catalog: Catalog, ins: Insert, current_db: str
+) -> tuple[int, int | None]:
+    """INSERT … VALUES: the rows evaluated by _values_df, then landed."""
+    qualified = catalog.qualify(ins.table, current_db)
+    catalog.require_table(qualified)
+    with commit.writing(spark, qualified):
+        props = catalog.properties(qualified)
+        df = _values_df(spark, ins, catalog.column_types(qualified, props))
+        mode = "REPLACE" if ins.replace else "IGNORE" if ins.ignore else ""
+        return land(spark, catalog, qualified, df, props, mode, ins.on_dup_update, len(ins.rows))
+
+
+def _any_key(keys: list[tuple[str, list[str]]], prefix: str = "__new_"):
+    """The any-key match of one side's rows against the other's: an OR
+    over the declared keys of each key's column equalities, ``c`` on
+    one side against ``<prefix>c`` on the other. NULL never
+    equi-matches — MySQL's unique-index semantics."""
+    return reduce(
+        or_,
+        [reduce(and_, [F.col(c) == F.col(f"{prefix}{c}") for c in cols]) for _, cols in keys],
+    )
 
 
 def _upsert(
@@ -626,12 +694,14 @@ def _upsert(
     catalog: Catalog,
     qualified: str,
     new_df,
-    ins: Insert,
+    assignments: list[tuple[str, str]],
     props: dict[str, str],
 ) -> int:
-    """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert — the reference
-    1105s it; this is the anti-join + union + rewrite emulation of
-    MERGE, the idiomatic parquet upsert without a Delta dependency).
+    """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert) as the
+    anti-join + union + rewrite emulation of MERGE, the idiomatic
+    parquet upsert without a Delta dependency. The table has at least
+    one PRIMARY/UNIQUE key (land routes a keyless table to a plain
+    insert: the clause never fires).
 
     Conflict pairing follows MySQL: a row conflicts if it matches an
     existing row on the PRIMARY KEY *or any UNIQUE index*. Assignments
@@ -644,33 +714,15 @@ def _upsert(
     an arbitrary order.
     """
     keys = declared_keys(catalog, qualified, props)
-    has_rowid = catalog.has_rowid(qualified, props)
-    if not keys:
-        # MySQL: with no unique index the ON DUPLICATE clause never fires
-        _check_constraints(spark, catalog, qualified, new_df, props)
-        _append(spark, qualified, new_df, has_rowid)
-        return len(ins.rows)
     # intra-batch duplicates on any key are ambiguous upserts → 1062,
-    # like plain inserts (non-PK keys exempt NULLs: MySQL allows
-    # repeated NULLs in a UNIQUE index)
-    for key_name, cols in keys:
-        cand = new_df
-        if key_name != "PRIMARY":
-            cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-        dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
+    # like plain inserts
+    raise_on_duplicate(new_df, keys)
 
     existing = spark.table(qualified)
     batch = new_df.select(
         F.lit(1).alias("__new_mark"), *[F.col(c).alias(f"__new_{c}") for c in new_df.columns]
     )
-    # match on ANY key: OR over per-key AND equi-conditions (NULL keys
-    # never equi-match, which is exactly the unique-index semantics)
-    any_key = reduce(
-        or_,
-        [reduce(and_, [F.col(c) == F.col(f"__new_{c}") for c in cols]) for _, cols in keys],
-    )
+    any_key = _any_key(keys)
     pairs = existing.join(batch, any_key, "inner").count()
     matched_new = batch.join(existing, any_key, "left_semi").count()
     matched_old = existing.join(batch, any_key, "left_semi").count()
@@ -684,7 +736,7 @@ def _upsert(
     joined = existing.join(batch, any_key, "left")
     matched = F.col("__new_mark").isNotNull()
     types = dict(catalog.column_types(qualified, props))
-    assigned = dict(ins.on_dup_update or [])
+    assigned = dict(assignments)
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
@@ -712,24 +764,15 @@ def _upsert(
     to_insert = batch.join(existing, any_key, "left_anti").select(
         *[F.col(f"__new_{c}").alias(c) for c in new_df.columns]
     )
-    if has_rowid:
+    if catalog.has_rowid(qualified, props):
         # updated rows KEEP their rowid (out_cols passes it through
         # unassigned); only genuinely new rows mint one
         to_insert = to_insert.withColumn(ROWID, F.expr("uuid()"))
     n_new = to_insert.count()
     final = updated.unionByName(to_insert)
-    # post-image integrity: an assignment that writes a key column can
-    # collide rows that didn't collide before — validate before the commit
-    # (same guard as update(); the reference corrupts its indexes here)
-    for key_name, cols in keys:
-        if not set(cols) & set(assigned):
-            continue
-        cand = final
-        if key_name != "PRIMARY":
-            cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-        dup = cand.groupBy(*cols).count().where(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise duplicate_entry("-".join(str(dup[0][c]) for c in cols), key_name)
+    # an assignment that writes a key column can collide rows that did
+    # not collide before: validate the post-image before the commit
+    recheck_keys_after_update(catalog, qualified, final, set(assigned), props)
     _rewrite(spark, commit.Image(qualified, final))
     return n_new + 2 * n_changed
 
@@ -741,7 +784,8 @@ def _insert_ignore(
     new_df,
     props: dict[str, str],
 ) -> int:
-    """INSERT IGNORE (MySQL duplicate-skip): rows whose PRIMARY/UNIQUE
+    """INSERT IGNORE (MySQL duplicate-skip) into a table with at least
+    one PRIMARY/UNIQUE key: rows whose PRIMARY/UNIQUE
     key collides with a stored row OR an earlier row of the same batch
     are silently skipped (first row wins within the batch — MySQL
     processes VALUES in order and the later duplicate is the one
@@ -801,10 +845,9 @@ def _insert_ignore(
             .drop("__rn", "__vidx")
         )
         stored = existing.select(*[F.col(c).alias(f"__e_{c}") for c in cols])
-        key_match = reduce(and_, [F.col(c) == F.col(f"__e_{c}") for c in cols])
-        surviving = firsts.join(stored, key_match, "left_anti")
+        surviving = firsts.join(stored, _any_key(keys, "__e_"), "left_anti")
         n = surviving.count()
-    elif keys:
+    else:
         if new_df.limit(_IGNORE_REPLAY_CAP + 1).count() > _IGNORE_REPLAY_CAP:
             raise EbikeError(
                 1105,
@@ -827,16 +870,9 @@ def _insert_ignore(
         batch = tagged.select(
             "__vidx", *[F.col(c).alias(f"__new_{c}") for c in key_cols]
         )
-        any_key = reduce(
-            or_,
-            [
-                reduce(and_, [F.col(f"__new_{c}") == F.col(c) for c in cols])
-                for _, cols in keys
-            ],
-        )
         stored_clash = {
             r["__vidx"]
-            for r in batch.join(existing, any_key, "left_semi")
+            for r in batch.join(existing, _any_key(keys), "left_semi")
             .select("__vidx")
             .collect()
         }
@@ -857,9 +893,6 @@ def _insert_ignore(
                 live[vidx] = row
         surviving = tagged.where(F.col("__vidx").isin(sorted(live))).drop("__vidx")
         n = len(live)
-    else:
-        surviving = new_df
-        n = surviving.count()
     if n:
         _append(spark, qualified, surviving, catalog.has_rowid(qualified, props))
     return n
@@ -870,18 +903,18 @@ def _replace(
     catalog: Catalog,
     qualified: str,
     new_df,
-    ins: Insert,
+    n_rows: int | None,
     props: dict[str, str],
 ) -> int:
-    """REPLACE INTO (MySQL delete-then-insert upsert — the reference
-    1105s it, like ON DUPLICATE; same set-oriented MERGE emulation as
-    :func:`_upsert`).
+    """REPLACE INTO (MySQL delete-then-insert upsert; the same
+    set-oriented MERGE emulation as :func:`_upsert`) into a table with
+    at least one PRIMARY/UNIQUE key. ``n_rows`` is the batch's row
+    count, or None to count it here.
 
     Semantics: every existing row that conflicts with an incoming row
     on the PRIMARY KEY *or any UNIQUE index* is deleted, then the whole
     batch is inserted. Affected-rows follows MySQL: 1 per inserted row
-    plus 1 per deleted row. With no unique index at all, REPLACE
-    degrades to plain INSERT (MySQL-identical). MySQL applies the batch
+    plus 1 per deleted row. MySQL applies the batch
     row-by-row, so intra-batch key collisions resolve in statement
     order — a later row REPLACEs an earlier batch row exactly as it
     replaces a stored one.
@@ -899,11 +932,6 @@ def _replace(
     Each non-survivor is evicted exactly once, so the intra-batch
     delete count is n_batch − n_survivors."""
     keys = declared_keys(catalog, qualified, props)
-    has_rowid = catalog.has_rowid(qualified, props)
-    if not keys:
-        _check_constraints(spark, catalog, qualified, new_df, props)
-        _append(spark, qualified, new_df, has_rowid)
-        return len(ins.rows)
     # NOT NULL still applies to the incoming batch (key conflicts with
     # stored rows are the point of REPLACE, so no clash check)
     _check_not_null(catalog, qualified, new_df, props)
@@ -931,22 +959,18 @@ def _replace(
     # row still deleted its stored conflicts while it was live (MySQL
     # processes it before the later row replaces it) — a stored row
     # never "comes back". Only the survivors are inserted.
+    n_batch = new_df.count() if n_rows is None else n_rows
     full_batch = tagged.drop("__vidx")
     new_df = ranked.where(keep).drop("__vidx", *rn_cols)
-    intra_deleted = len(ins.rows) - new_df.count()
+    intra_deleted = n_batch - new_df.count()
 
     existing = spark.table(qualified)
     batch = full_batch.select(*[F.col(c).alias(f"__new_{c}") for c in full_batch.columns])
-    # conflict on ANY key: NULL key values never equi-match — exactly
-    # the unique-index semantics (NULLs don't conflict)
-    any_key = reduce(
-        or_,
-        [reduce(and_, [F.col(c) == F.col(f"__new_{c}") for c in cols]) for _, cols in keys],
-    )
+    any_key = _any_key(keys)
     n_deleted = existing.join(batch, any_key, "left_semi").count()
     survivors = existing.join(batch, any_key, "left_anti")
     to_insert = new_df
-    if has_rowid:
+    if catalog.has_rowid(qualified, props):
         # REPLACE is delete + insert: the replacement row is a NEW row
         # and mints a fresh rowid (unlike ON DUPLICATE, which updates
         # in place and keeps it) — MySQL-faithful, same as its handler
@@ -958,7 +982,7 @@ def _replace(
     # MySQL affected-rows: 1 per batch row inserted (including ones a
     # later batch row then replaced) + 1 per deleted row (stored or
     # earlier-batch)
-    return len(ins.rows) + n_deleted + intra_deleted
+    return n_batch + n_deleted + intra_deleted
 
 
 def _rewrite(spark: SparkSession, *images: commit.Image) -> None:
@@ -984,8 +1008,6 @@ def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) 
         # UPDATE ... [ORDER BY ...] LIMIT n: bound the MATCHED set by a
         # distributed top-k of rowids (same shape as _delete_limited),
         # then proceed with membership as the effective condition.
-        from ebike_spark.engine.errors import unsupported
-
         if not catalog.has_rowid(qualified):
             raise unsupported("UPDATE ... LIMIT on a table without the hidden rowid")
         order = _order_cols(upd.order_by) if upd.order_by else [F.col(ROWID)]
@@ -1033,7 +1055,7 @@ def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) 
         else:
             cols.append(F.col(name))
     new_df = t.select(*cols)
-    recheck_keys_after_update(spark, catalog, qualified, new_df, set(assigned))
+    recheck_keys_after_update(catalog, qualified, new_df, set(assigned))
     _rewrite(spark, commit.Image(qualified, new_df))
     return affected
 
@@ -1052,36 +1074,40 @@ def declared_keys(
 
 
 def duplicate_key_probe(df, keys):
-    """Yield (key_name, duplicated_row) for each key with at least one
-    duplicated tuple in ``df``. Non-PRIMARY keys get MySQL's NULL
-    exemption (any number of NULLs in a unique index). ONE definition
-    of 'duplicate' shared by the UPDATE post-image re-check and
-    CHECK TABLE — so a semantics fix lands in both."""
+    """Yield (key_name, duplicated value as MySQL prints it) for each
+    key with at least one duplicated tuple in ``df``, one LIMIT 1
+    aggregate job per key. Non-PRIMARY keys get MySQL's NULL exemption
+    (any number of NULLs in a unique index). The one definition of an
+    in-frame duplicate: data-sized INSERT checks, ON DUPLICATE KEY
+    UPDATE, the UPDATE post-image re-check, ALTER ADD PRIMARY KEY /
+    ADD UNIQUE and CHECK TABLE all use it."""
     for key_name, kcols in keys:
         cand = df
         if key_name != "PRIMARY":
             cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in kcols]))
         dup = cand.groupBy(*kcols).count().where(F.col("count") > 1).limit(1).collect()
         if dup:
-            yield key_name, dup[0]
+            yield key_name, "-".join(str(dup[0][c]) for c in kcols)
+
+
+def raise_on_duplicate(df, keys) -> None:
+    """1062 for the first of ``keys`` that ``df`` holds twice."""
+    for key_name, value in duplicate_key_probe(df, keys):
+        raise duplicate_entry(value, key_name)
 
 
 def recheck_keys_after_update(
-    spark: SparkSession, catalog: Catalog, qualified: str, new_df, assigned: set[str]
+    catalog: Catalog,
+    qualified: str,
+    new_df,
+    assigned: set[str],
+    props: dict[str, str] | None = None,
 ) -> None:
-    """Re-check key constraints when an assignment touches a key column —
-    the reference silently corrupts its indexes here (SURVEY §3.3);
-    we validate the post-image before committing it. Shared by the
-    single-table and multi-table (JOIN) UPDATE paths."""
-    keys = [
-        (name, kcols)
-        for name, kcols in declared_keys(catalog, qualified)
-        if set(kcols) & assigned
-    ]
-    for key_name, dup in duplicate_key_probe(new_df, keys):
-        kcols = dict(keys)[key_name]
-        val = "-".join(str(dup[c]) for c in kcols)
-        raise duplicate_entry(val, key_name)
+    """Re-check the keys an assignment touches on the post-image before
+    it is committed: UPDATE, the multi-table UPDATE and ON DUPLICATE
+    KEY UPDATE can collide rows that did not collide before."""
+    keys = declared_keys(catalog, qualified, props)
+    raise_on_duplicate(new_df, [(name, kcols) for name, kcols in keys if set(kcols) & assigned])
 
 
 def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str) -> int:
@@ -1131,8 +1157,6 @@ def _delete_limited(
     sort), then remove them by anti-join. Without ORDER BY, MySQL
     deletes an arbitrary n rows; here the rowid orders them so repeat
     runs are deterministic."""
-    from ebike_spark.engine.errors import unsupported
-
     if not catalog.has_rowid(qualified):
         # a user-declared `rowid` column displaced the hidden one; no
         # stable row identity to bound the delete with
@@ -1153,8 +1177,6 @@ def _delete_limited(
 def _order_cols(order_by: str) -> list:
     """Parse a raw ORDER BY list into sort Columns (ASC/DESC suffixes
     aren't expression syntax, so they're peeled off here)."""
-    from ebike_spark.engine.parser import split_top_level
-
     cols = []
     for e in split_top_level(order_by):
         m = re.match(r"([\s\S]+?)\s+(ASC|DESC)\s*$", e.strip(), re.I)
@@ -1171,23 +1193,16 @@ def load_data(
     catalog: Catalog,
     sql: str,
     current_db: str,
-    session: dict | None = None,
-) -> int:
-    """LOAD DATA [LOCAL] INFILE — MySQL's bulk CSV loader (the
-    reference's dispatcher 1105s it; beyond-reference dialect surface,
-    same category as REPLACE/INSERT IGNORE). Supported subset:
-    ``FIELDS TERMINATED BY 'x'`` (MySQL default tab), ``IGNORE 1
-    LINES`` (the header-skip everyone actually uses — per-file exact
+    secure_file_priv: str = "",
+) -> tuple[int, int | None]:
+    """LOAD DATA [LOCAL] INFILE — MySQL's bulk CSV loader. Supported
+    subset: ``FIELDS TERMINATED BY 'x'`` (MySQL default tab), ``IGNORE
+    1 LINES`` (the header-skip everyone actually uses — per-file exact
     via the csv header option; other counts raise 1105), an optional
     target column list, and the REPLACE / IGNORE duplicate-handling
-    keywords routed to the same code paths as REPLACE INTO / INSERT
-    IGNORE. Values cast through the table's declared types with the
-    SAME strict+rounding guard as INSERT VALUES (bad field → 1366
-    naming the column; '2.7' into INT stores 3); under the IGNORE
-    keyword the numeric family takes MySQL's legacy closest-value
-    coercion ('12abc' → 12, 'junk' → 0, overflow clamps to the type
-    range — see _mysql_coerce_numeric); temporal/decimal failures
-    land NULL (documented divergence — Spark has no zero-date).
+    keywords. The file is typed by typed_frame (strict casts, or MySQL's
+    closest-value coercion under IGNORE) and landed like any INSERT;
+    returns land's (affected rows, first minted id).
 
     Path safety: reads are gated by the ``secure_file_priv`` system
     variable exactly like MySQL's --secure-file-priv option — when it
@@ -1196,19 +1211,16 @@ def load_data(
     string (this engine's default, a real MySQL configuration) any
     server-readable path loads. Like MySQL, the variable is READ-ONLY
     at runtime (SET → 1238) and fixed at Engine/server construction —
-    otherwise any wire client could lift the fence. Documented divergence: the LOCAL
-    keyword is accepted but still reads the SERVER filesystem (there
-    is no client channel in-process), and the same secure_file_priv
-    gate applies to it.
+    otherwise any wire client could lift the fence. Documented
+    divergence: the LOCAL keyword is accepted but still reads the
+    SERVER filesystem (there is no client channel in-process), and the
+    same secure_file_priv gate applies to it.
 
     Scale shape: the file streams through Spark's distributed csv
     reader straight into the constraint checks — no driver-side row
-    loop (REPLACE resolves intra-file conflicts via distributed
-    row_number windows, see _replace); in unrestricted mode a DIRECTORY
-    of files parallelizes for free (under a secure_file_priv fence only
-    regular files load — per-entry symlinks inside a directory could
-    escape the fence)."""
-    import os as _os
+    loop; in unrestricted mode a DIRECTORY of files parallelizes for
+    free (under a secure_file_priv fence only regular files load —
+    per-entry symlinks inside a directory could escape the fence)."""
     m = re.match(
         r"LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s+'([^']+)'\s*"
         r"(REPLACE|IGNORE)?\s*INTO\s+TABLE\s+([\w.`\"]+)([\s\S]*)$",
@@ -1218,14 +1230,11 @@ def load_data(
     if not m:
         raise EbikeError(1064, "malformed LOAD DATA INFILE")
     path, mode, tbl_tok, rest = m.group(1), (m.group(2) or "").upper(), m.group(3), m.group(4)
-    from ebike_spark.engine.parser import unquote_ident
-
     qualified = catalog.qualify(unquote_ident(tbl_tok), current_db)
     catalog.require_table(qualified)
-    priv_dir = str((session or {}).get("secure_file_priv", "") or "")
-    if priv_dir:
-        allowed = _os.path.realpath(priv_dir)
-        real = _os.path.realpath(path)
+    if secure_file_priv:
+        allowed = os.path.realpath(secure_file_priv)
+        real = os.path.realpath(path)
         # MySQL-faithful under the fence: the path must be a REGULAR
         # FILE inside the directory after symlink resolution. A
         # directory is rejected here even if it sits inside the fence —
@@ -1233,8 +1242,8 @@ def load_data(
         # follows them per-file (the directory-of-files convenience is
         # an unrestricted-mode extension only).
         if not (
-            (real == allowed or real.startswith(allowed.rstrip(_os.sep) + _os.sep))
-            and _os.path.isfile(real)
+            (real == allowed or real.startswith(allowed.rstrip(os.sep) + os.sep))
+            and os.path.isfile(real)
         ):
             raise EbikeError(
                 1290,
@@ -1242,7 +1251,7 @@ def load_data(
                 "--secure-file-priv option so it cannot execute this "
                 "statement",
             )
-    if not _os.path.exists(path):
+    if not os.path.exists(path):
         raise EbikeError(29, f"File '{path}' not found")
 
     sep = "\t"  # MySQL default field terminator
@@ -1259,69 +1268,14 @@ def load_data(
         cl = re.search(r"\(([^()]*)\)\s*$", rest.strip())
         props = catalog.properties(qualified)
         col_types = catalog.column_types(qualified, props)
-        names = [n for n, _ in col_types]
-        types = dict(col_types)
-        target = (
-            [unquote_ident(c.strip()) for c in cl.group(1).split(",")] if cl else names
+        target = target_columns(
+            [unquote_ident(c.strip()) for c in cl.group(1).split(",")] if cl else None, col_types
         )
-        unknown = [c for c in target if c not in types]
-        if unknown:
-            raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
-        dupes = [c for c in target if target.count(c) > 1]
-        if dupes:
-            # MySQL 1110: column specified twice (target.index() would
-            # silently map every duplicate to the first CSV field)
-            raise EbikeError(1110, f"Column '{dupes[0]}' specified twice")
-
         raw = (
             spark.read.option("header", skip_header)
             .option("sep", sep)
-            .schema(" ".join(f"`_c{i}` string," for i in range(len(target))).rstrip(","))
+            .schema(", ".join(f"`_c{i}` string" for i in range(len(target))))
             .csv(path)
         )
-        n_rows = raw.count()
-        # Casts match the INSERT paths: strict + MySQL integer rounding
-        # (guarded_cast_col) — a bad field is 1366 naming the column, and
-        # '2.7' into INT stores 3 exactly as INSERT VALUES does. Under the
-        # IGNORE keyword MySQL downgrades conversion errors to warnings
-        # and stores the CLOSEST value; this engine matches that for the
-        # numeric family (_mysql_coerce_numeric: leading-prefix parse,
-        # junk → 0, overflow clamps). Only temporal/decimal failures
-        # store NULL (documented divergence: no zero-date in Spark; NULL
-        # is the sentinel, caught by NOT NULL enforcement where the
-        # column forbids it).
-        def _field(name: str):
-            if name not in target:
-                return F.lit(None).cast(types[name])
-            raw_col = F.col(f"_c{target.index(name)}")
-            if mode == "IGNORE":
-                # IGNORE downgrades conversion ERRORS to best-effort
-                # storage, MySQL's legacy closest-value coercion: the
-                # numeric family takes the leading numeric prefix
-                # ('12abc' → 12, 'junk' → 0) and clamps overflow to the
-                # type range; rounding still applies ('2.7' → 3 under
-                # IGNORE too). Temporal/decimal failures store NULL
-                # (documented divergence — no zero-date in Spark).
-                t = types[name].upper()
-                if t in ("BIGINT", "DOUBLE"):
-                    return _mysql_coerce_numeric(raw_col, t)
-                return raw_col.cast(types[name])
-            return guarded_cast_col(raw_col, types[name], name)
-
-        df = raw.select(*[_field(name).alias(name) for name in names])
-        ai = catalog.auto_increment_col(qualified, props)
-        if ai is not None:
-            df, first_id = _mint_auto_increment(spark, qualified, df, ai, types[ai])
-            if first_id is not None and session is not None:
-                session["last_insert_id"] = first_id
-
-        if mode == "REPLACE":
-            class _Shim:  # _replace reads only len(ins.rows)
-                rows = range(n_rows)
-
-            return _replace(spark, catalog, qualified, df, _Shim(), props)
-        if mode == "IGNORE":
-            return _insert_ignore(spark, catalog, qualified, df, props)
-        _check_constraints(spark, catalog, qualified, df, props)
-        _append(spark, qualified, df, catalog.has_rowid(qualified, props))
-        return n_rows
+        df = typed_frame(raw, target, col_types, coerce=mode == "IGNORE")
+        return land(spark, catalog, qualified, df, props, mode)

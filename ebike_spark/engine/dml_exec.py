@@ -1,8 +1,14 @@
-"""DML statement execution — the Engine's INSERT/UPDATE/DELETE
-dispatch (statement parsing, alias resolution, multi-table forms),
-split out of engine.py in r10 (VERDICT-r9 task 7; mechanical move, no
-behavior change). Mixin over Engine; the set-based rewrite machinery
-itself lives in engine/dml.py as before."""
+"""The Engine's INSERT, UPDATE and DELETE statements (a mixin over
+Engine): each is parsed here and run by engine/dml.py.
+
+Every INSERT row source ends in ``dml.land``: VALUES (and its ``SET a =
+1`` spelling) through ``dml.insert``, INSERT … SELECT through
+``dml.typed_frame``, and LOAD DATA (dispatched by Engine) through
+``dml.load_data``; ``_landed`` turns land's result into the statement's
+affected rows and LAST_INSERT_ID(). Other non-VALUES INSERT forms
+(``INSERT INTO t TABLE s``) pass through to Spark as a write of the
+target. The multi-table UPDATE and DELETE resolve their aliases here
+and commit through ``dml._rewrite``."""
 
 from __future__ import annotations
 
@@ -14,9 +20,12 @@ from ebike_spark.engine import commit, dml
 from ebike_spark.engine.catalog import bq
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import (
+    find_top_level_keywords,
     parse_delete,
     parse_insert,
     parse_update,
+    split_tail_clauses,
+    split_top_level,
     substitute_vars,
     unquote_ident,
 )
@@ -36,8 +45,6 @@ class DmlExecMixin:
             re.I,
         )
         if m:
-            from ebike_spark.engine.parser import split_top_level
-
             cols, vals = [], []
             for a in split_top_level(m.group(3)):
                 am = re.match(r"\s*([\w`\"]+)\s*=\s*([\s\S]+)$", a)
@@ -49,17 +56,10 @@ class DmlExecMixin:
                 f"{m.group(1)} INTO {m.group(2)} ({', '.join(cols)}) "
                 f"VALUES ({', '.join(vals)}){m.group(4) or ''}"
             )
-        # INSERT [IGNORE] INTO ... SELECT / REPLACE INTO ... SELECT:
-        # build the casted source frame and route it through the SAME
-        # set-oriented constraint / duplicate handling as the VALUES
-        # path (beyond-reference — the reference only implements
-        # VALUES, insert.rs:48-224 — and a round-7 upgrade over the
-        # earlier raw passthrough, which enforced no PK/UNIQUE/NOT NULL
-        # on SELECT sources). All checks are joins/aggregates, so they
-        # scale to any source volume. Detected STRUCTURALLY (SELECT
-        # right after the table/column list) — a bare \bVALUES\b probe
-        # would misroute `... SELECT ... ON DUPLICATE KEY UPDATE
-        # v = VALUES(v)` into the VALUES-clause parser.
+        # INSERT [IGNORE] INTO ... SELECT / REPLACE INTO ... SELECT,
+        # detected STRUCTURALLY (SELECT right after the table/column
+        # list) — a bare \bVALUES\b probe would misroute `... SELECT ...
+        # ON DUPLICATE KEY UPDATE v = VALUES(v)` into the VALUES parser.
         m = re.match(
             r"\s*(?:INSERT(\s+IGNORE)?|(REPLACE))\s+INTO\s+([\w.`\"]+)\s*"
             r"(?:\(([^)]*)\)\s*)?(SELECT\b[\s\S]*)$",
@@ -71,13 +71,8 @@ class DmlExecMixin:
             q = self.catalog.qualify(unquote_ident(m.group(3)), self.current_db)
             if self.catalog.table_exists(q):
                 with commit.writing(self.spark, q):
-                    return self._insert_from_select(
-                        q,
-                        col_list=m.group(4),
-                        select_sql=m.group(5),
-                        ignore=bool(m.group(1)),
-                        replace=bool(m.group(2)),
-                    )
+                    mode = "IGNORE" if m.group(1) else "REPLACE" if m.group(2) else ""
+                    return self._insert_from_select(q, m.group(4), m.group(5), mode)
         if not re.search(r"\bVALUES\b", fixed, re.I):
             # remaining non-VALUES forms (e.g. INSERT INTO ... TABLE
             # src) pass through to Spark untouched, as a write of the
@@ -93,38 +88,30 @@ class DmlExecMixin:
             ins = parse_insert(fixed)
         except ValueError as e:
             raise parse_error(str(e)) from e
-        state: dict = {}
-        n = dml.insert(self.spark, self.catalog, ins, self.current_db, session=state)
-        if "last_insert_id" in state:
-            self.last_insert_id = state["last_insert_id"]
-        return EngineResult("count", affected=n)
+        return self._landed(*dml.insert(self.spark, self.catalog, ins, self.current_db))
+
+    def _landed(self, affected: int, first_id: int | None) -> EngineResult:
+        """An INSERT's result from dml.land: the first minted
+        AUTO_INCREMENT id, if any, becomes LAST_INSERT_ID()."""
+        if first_id is not None:
+            self.last_insert_id = first_id
+        return EngineResult("count", affected=affected)
 
     def _insert_from_select(
         self,
         qualified: str,
         col_list: str | None,
         select_sql: str,
-        ignore: bool,
-        replace: bool,
+        mode: str,
     ) -> EngineResult:
-        """INSERT [IGNORE] / REPLACE ... SELECT: cast the source frame
-        to the target's declared types (listed or all columns
-        positionally, unlisted columns NULL), mint AUTO_INCREMENT and
-        hidden rowids, and hand off to the same dml helpers the VALUES
-        path uses — so PK/UNIQUE/NOT NULL, duplicate accounting, and
-        REPLACE/IGNORE semantics are identical whatever the row
-        source. Every check is a join/aggregate (no driver-side row
-        loop), so a 10⁸-row SELECT source costs the same plan shape as
-        a 3-row one."""
-        import pyspark.sql.functions as F
-
-        from ebike_spark.engine import dml as _dml
-        from ebike_spark.engine.parser import split_tail_clauses, split_top_level
-
-        # INSERT ... SELECT ... ON DUPLICATE KEY UPDATE: the upsert
-        # clause rides after the SELECT; split it off top-level
-        # (quote/paren-aware — an ON inside the SELECT's joins never
-        # matches the full four-word phrase)
+        """INSERT [IGNORE] / REPLACE ... SELECT [... ON DUPLICATE KEY
+        UPDATE]: the source frame typed by dml.typed_frame and landed by
+        dml.land, so keys, NOT NULL, AUTO_INCREMENT and the duplicate
+        modes behave as for VALUES. Every check is a Spark job, so a
+        10⁸-row source has the same plan shape as a 3-row one."""
+        # the upsert clause rides after the SELECT; split it off
+        # top-level (quote/paren-aware — an ON inside the SELECT's
+        # joins never matches the full four-word phrase)
         try:
             select_sql, tail_clauses = split_tail_clauses(
                 select_sql, ("ON DUPLICATE KEY UPDATE",)
@@ -133,7 +120,7 @@ class DmlExecMixin:
             raise parse_error(str(e)) from e
         on_dup: list[tuple[str, str]] | None = None
         if "ON DUPLICATE KEY UPDATE" in tail_clauses:
-            if ignore or replace:
+            if mode:
                 raise parse_error(
                     "ON DUPLICATE KEY UPDATE cannot combine with IGNORE/REPLACE"
                 )
@@ -150,75 +137,10 @@ class DmlExecMixin:
             self.spark.sql(self._fix_select(select_sql, datetime_fns=False))
         )
         props = self.catalog.properties(qualified)
-        cols = self.catalog.column_types(qualified, props)
-        types = dict(cols)
-        listed = (
-            [unquote_ident(c) for c in split_top_level(col_list)]
-            if col_list
-            else [n for n, _ in cols]
-        )
-        unknown = [c for c in listed if c not in types]
-        if unknown:
-            raise EbikeError(1054, f"Unknown column '{unknown[0]}' in 'field list'")
-        if len(src.columns) != len(listed):
-            raise EbikeError(1136, "Column count doesn't match value count")
-        pos = {c: i for i, c in enumerate(listed)}
-        # source columns go through the same strict+rounding cast as
-        # the VALUES path (1366 on unconvertible values, MySQL integer
-        # rounding); unlisted target columns are typed NULLs
-        df = src.select(
-            *[
-                (
-                    _dml.guarded_cast_col(src[src.columns[pos[n]]], t, n)
-                    if n in pos
-                    else F.lit(None).cast(t)
-                ).alias(n)
-                for n, t in cols
-            ]
-        )
-        ai = self.catalog.auto_increment_col(qualified, props)
-        if ai is not None:
-            df, first_id = _dml._mint_auto_increment(
-                self.spark, qualified, df, ai, types[ai]
-            )
-            if first_id is not None:
-                self.last_insert_id = first_id
-        class _LazyRows:
-            """len() = source row count, computed only if a dml helper
-            actually reads it — _upsert consults len(rows) solely on
-            its no-unique-key fallback, so the common keyed upsert
-            never pays an extra pass over the SELECT source."""
-
-            _n: int | None = None
-
-            def __len__(self) -> int:
-                if self._n is None:
-                    self._n = df.count()
-                return self._n
-
-        if on_dup is not None:
-
-            class _UShim:  # _upsert reads on_dup_update + len(rows)
-                rows = _LazyRows()
-                on_dup_update = on_dup
-
-            n = _dml._upsert(self.spark, self.catalog, qualified, df, _UShim(), props)
-            return EngineResult("count", affected=n)
-        if replace:
-
-            class _Shim:  # _replace reads only len(ins.rows)
-                rows = _LazyRows()
-
-            n = _dml._replace(self.spark, self.catalog, qualified, df, _Shim(), props)
-            return EngineResult("count", affected=n)
-        if ignore:
-            n = _dml._insert_ignore(self.spark, self.catalog, qualified, df, props)
-            return EngineResult("count", affected=n)
-        _dml._check_constraints(self.spark, self.catalog, qualified, df, props)
-        # affected-rows counts the pre-rowid frame (column-pruned pass)
-        n_src = df.count()
-        _dml._append(self.spark, qualified, df, self.catalog.has_rowid(qualified, props))
-        return EngineResult("count", affected=n_src)
+        col_types = self.catalog.column_types(qualified, props)
+        listed = [unquote_ident(c) for c in split_top_level(col_list)] if col_list else None
+        df = dml.typed_frame(src, dml.target_columns(listed, col_types), col_types)
+        return self._landed(*dml.land(self.spark, self.catalog, qualified, df, props, mode, on_dup))
 
     # FROM-clause keywords that can precede an alias token without
     # being the aliased table (multi-table DML alias resolution)
@@ -233,11 +155,6 @@ class DmlExecMixin:
         top-level JOIN keywords (quote/paren-aware); each segment's
         leading token is the table, the next word its alias unless it
         is a clause keyword."""
-        from ebike_spark.engine.parser import (
-            find_top_level_keywords,
-            split_top_level,
-        )
-
         spans = find_top_level_keywords(frm, ("JOIN",))
         segs, prev = [], 0
         for _, s0, s1 in spans:
@@ -279,12 +196,6 @@ class DmlExecMixin:
         # Multi-table form detection must be quote/paren-aware: a SET /
         # JOIN / WHERE inside a string literal or subquery must not
         # split the statement (find_top_level_keywords skips both).
-        from ebike_spark.engine.parser import (
-            find_top_level_keywords,
-            split_tail_clauses,
-            split_top_level,
-        )
-
         body_m = re.match(r"\s*UPDATE\s+([\s\S]+?)\s*;?\s*$", fixed, re.I)
         if body_m:
             body = body_m.group(1)
@@ -337,8 +248,6 @@ class DmlExecMixin:
         post-image takes the same changed-row accounting and key
         re-check as the single-table path, and all of them land in one
         commit. No driver-side row loop at any join size."""
-        from ebike_spark.engine.parser import split_top_level
-
         assigns: list[tuple[str | None, str, str]] = []  # (alias, col, rhs)
         for a in split_top_level(set_clause):
             am = re.match(
@@ -522,9 +431,7 @@ class DmlExecMixin:
                 for name in tb.columns
             ]
             new_df = joined.select(*out_cols)
-            dml.recheck_keys_after_update(
-                self.spark, self.catalog, qualified, new_df, set(new_vals)
-            )
+            dml.recheck_keys_after_update(self.catalog, qualified, new_df, set(new_vals))
             staged.append((qualified, new_df))
         # All key re-checks passed against pre-images. One commit lands
         # every post-image: all are written before any table is
@@ -546,8 +453,6 @@ class DmlExecMixin:
         if m:
             # the WHERE tail splits quote/paren-aware (a literal
             # containing ' WHERE ' in the ON clause must not split)
-            from ebike_spark.engine.parser import split_tail_clauses
-
             try:
                 frm, clauses = split_tail_clauses(m.group(2), ("WHERE",))
             except ValueError as e:

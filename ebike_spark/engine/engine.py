@@ -233,16 +233,9 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         ):
             return self._maintain_table(kw, sql)
         if kw == "LOAD" and kw2 == "DATA":
-            # LOAD DATA [LOCAL] INFILE — bulk CSV load (reference 1105s it)
-            from ebike_spark.engine import dml as _dml
-
-            state: dict = {
-                "secure_file_priv": self.sys_vars.get("secure_file_priv", "")
-            }
-            n = _dml.load_data(self.spark, self.catalog, sql, self.current_db, state)
-            if "last_insert_id" in state:
-                self.last_insert_id = state["last_insert_id"]
-            return EngineResult("count", affected=n)
+            # LOAD DATA [LOCAL] INFILE — bulk CSV load
+            fence = self.sys_vars.get("secure_file_priv", "")
+            return self._landed(*dml.load_data(self.spark, self.catalog, sql, self.current_db, fence))
         if kw == "RENAME" and kw2 == "TABLE":
             return self._rename_tables(sql)
         if kw == "COMMIT":

@@ -2719,3 +2719,82 @@ def test_insert_reads_table_properties_once(eng, monkeypatch, sql):
     )
     eng.execute(sql)
     assert len(calls) == 1
+
+
+def _insert_via(eng, tmp_path, source, table, cols, rows, verb="INSERT", on_dup=""):
+    """One INSERT of ``rows`` into ``table (cols)`` through a row source:
+    ``values`` (INSERT … VALUES), ``select`` (INSERT … SELECT from a
+    stored table, in row order) or ``load`` (LOAD DATA from a CSV file).
+    ``verb`` is INSERT, INSERT IGNORE or REPLACE; ``on_dup`` an optional
+    ON DUPLICATE KEY UPDATE clause."""
+    target = f"{table} ({', '.join(cols)})"
+    if source == "values":
+        lits = ", ".join("(" + ", ".join(map(repr, r)) + ")" for r in rows)
+        return eng.execute(f"{verb} INTO {target} VALUES {lits} {on_dup}")
+    if source == "select":
+        names = ", ".join(f"c{i}" for i in range(len(cols)))
+        lits = ", ".join("(" + ", ".join(map(repr, (i, *r))) + ")" for i, r in enumerate(rows))
+        eng.execute(f"CREATE TABLE {table}_src AS SELECT * FROM VALUES {lits} AS v(seq, {names})")
+        return eng.execute(f"{verb} INTO {target} SELECT {names} FROM {table}_src ORDER BY seq {on_dup}")
+    assert not on_dup
+    f = tmp_path / f"{table}.csv"
+    f.write_text("".join(",".join(map(str, r)) + "\n" for r in rows))
+    mode = {"INSERT": "", "INSERT IGNORE": "IGNORE", "REPLACE": "REPLACE"}[verb]
+    return eng.execute(
+        f"LOAD DATA INFILE '{f}' {mode} INTO TABLE {table} FIELDS TERMINATED BY ',' ({', '.join(cols)})"
+    )
+
+
+@pytest.mark.parametrize("source", ["values", "select", "load"])
+def test_column_listed_twice_is_1110_for_every_source(eng, tmp_path, source):
+    """A target list naming a column twice is MySQL's 1110 whatever the
+    row source — never a silent pick of the first or the last value."""
+    eng.execute("CREATE TABLE tw (a INT, b INT)")
+    with pytest.raises(EbikeError) as ei:
+        _insert_via(eng, tmp_path, source, "tw", ["a", "a"], [(1, 2)])
+    assert ei.value.code == 1110
+    assert eng.execute("SELECT COUNT(*) AS c FROM tw").rows()[0]["c"] == 0
+
+
+# an in-batch duplicate (code 20) and a clash with the stored row (code 10)
+_AGREE_BATCH = [(20, "a"), (10, "b"), (20, "c")]
+_ALL_SOURCES = ("values", "select", "load")
+_UPSERT = "ON DUPLICATE KEY UPDATE tag = VALUES(tag)"
+
+
+@pytest.mark.parametrize(
+    "verb, on_dup, batch, sources, expected",
+    [
+        ("INSERT", "", _AGREE_BATCH, _ALL_SOURCES, (1062, [(1, 10, "old")], 1)),
+        ("INSERT IGNORE", "", _AGREE_BATCH, _ALL_SOURCES, (1, [(1, 10, "old"), (2, 20, "a")], 2)),
+        # 3 inserted + the stored row and the earlier (20, 'a') replaced
+        ("REPLACE", "", _AGREE_BATCH, _ALL_SOURCES, (5, [(3, 10, "b"), (4, 20, "c")], 2)),
+        # an in-batch duplicate makes the upsert order-dependent: 1062
+        ("INSERT", _UPSERT, _AGREE_BATCH, _ALL_SOURCES[:2], (1062, [(1, 10, "old")], 1)),
+        # (20, 'a') inserted, the stored row updated: 1 + 2
+        ("INSERT", _UPSERT, _AGREE_BATCH[:2], _ALL_SOURCES[:2], (3, [(1, 10, "b"), (2, 20, "a")], 2)),
+    ],
+    ids=["plain", "ignore", "replace", "upsert_in_batch_duplicate", "upsert"],
+)
+def test_insert_sources_agree(eng, tmp_path, verb, on_dup, batch, sources, expected):
+    """One batch loaded through VALUES, INSERT … SELECT and LOAD DATA into
+    a table with a PRIMARY KEY, a UNIQUE key and an AUTO_INCREMENT
+    column gives the same affected count (or error code), the same rows
+    and the same LAST_INSERT_ID() for every source. A failed statement
+    leaves both the table and LAST_INSERT_ID() as they were."""
+    outcomes = {}
+    for source in sources:
+        t = f"ag_{source}"
+        eng.execute(
+            f"CREATE TABLE {t} (id INT AUTO_INCREMENT, code INT NOT NULL, tag CHAR, "
+            "PRIMARY KEY (id), UNIQUE KEY uc (code))"
+        )
+        eng.execute(f"INSERT INTO {t} (code, tag) VALUES (10, 'old')")
+        try:
+            result = _insert_via(eng, tmp_path, source, t, ["code", "tag"], batch, verb, on_dup).affected
+        except EbikeError as e:
+            result = e.code
+        rows = sorted(tuple(r) for r in eng.execute(f"SELECT id, code, tag FROM {t}").rows())
+        last_id = eng.execute("SELECT LAST_INSERT_ID() AS v").rows()[0]["v"]
+        outcomes[source] = (result, rows, last_id)
+    assert outcomes == {s: expected for s in sources}
