@@ -26,12 +26,15 @@ rather than first so VALUES inserts stay positional.
 from __future__ import annotations
 
 import re
+import uuid
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit
 from ebike_spark.engine.errors import EbikeError, table_not_exists, unknown_database
-from ebike_spark.engine.parser import CreateTable
+from ebike_spark.engine.parser import CreateTable, sql_literal
 
 # meta_util.rs:548-562 — the storable types; DDL with anything else errors.
 # Declared MySQL type → Spark storage type. The reference's own
@@ -91,6 +94,56 @@ PROP_CLUSTER_PREFIX = "ebike.cluster."
 PROP_ROWID = "ebike.rowid"
 PROP_AUTO_INCREMENT = "ebike.auto_increment"
 ROWID = "rowid"
+
+# The system tables a query can read, with their columns; each is
+# built per statement from the catalog (Catalog.system_table).
+SYSTEM_TABLES = {
+    "information_schema.schemata": "catalog_name string, schema_name string, "
+    "default_character_set_name string, default_collation_name string",
+    "information_schema.tables": "table_catalog string, table_schema string, "
+    "table_name string, table_type string, engine string",
+    "information_schema.columns": "table_catalog string, table_schema string, "
+    "table_name string, column_name string, ordinal_position bigint, "
+    "is_nullable string, data_type string, column_key string",
+    "information_schema.table_constraints": "constraint_catalog string, "
+    "constraint_schema string, constraint_name string, table_schema string, "
+    "table_name string, constraint_type string",
+    "information_schema.key_column_usage": "constraint_catalog string, "
+    "constraint_schema string, constraint_name string, table_catalog string, "
+    "table_schema string, table_name string, column_name string, ordinal_position bigint",
+    "information_schema.statistics": "table_catalog string, table_schema string, "
+    "table_name string, non_unique bigint, index_schema string, index_name string, "
+    "seq_in_index bigint, column_name string",
+    "information_schema.views": "table_catalog string, table_schema string, "
+    "table_name string, view_definition string, check_option string, "
+    "is_updatable string, definer string",
+    "information_schema.check_constraints": "constraint_catalog string, "
+    "constraint_schema string, constraint_name string, check_clause string",
+    "information_schema.referential_constraints": "constraint_catalog string, "
+    "constraint_schema string, constraint_name string, unique_constraint_name string, "
+    "table_name string, referenced_table_name string",
+    "mysql.users": "host string, user string, plugin string, super_priv string",
+    "performance_schema.global_variables": "variable_name string, variable_value string",
+}
+
+# A string literal (kept as it is), a system-table reference, or a
+# backtick-quoted identifier (kept as it is).
+_SYS_REF = re.compile(
+    r"'(?:[^'\\]|\\.)*'"
+    r'|"(?:[^"\\]|\\.)*"'
+    r"|(?<![\w$.])(`?)(information_schema|mysql|performance_schema)\1\s*\.\s*(`?)(\w+)\3(?![\w$])"
+    r"|`[^`]*`",
+    re.I | re.S,
+)
+# what follows a table reference: a column qualifier's dot, an alias
+# or a keyword
+_FOLLOW = re.compile(r"\s*(\.|`|\w+)")
+# words that may follow a table reference without being its alias
+_NOT_ALIAS = frozenset(
+    "WHERE GROUP ORDER HAVING LIMIT OFFSET WINDOW UNION EXCEPT INTERSECT "
+    "MINUS JOIN INNER LEFT RIGHT FULL CROSS NATURAL LATERAL ANTI SEMI ON "
+    "USING SORT CLUSTER DISTRIBUTE TABLESAMPLE PIVOT UNPIVOT".split()
+)
 
 
 def bq(qualified: str) -> str:
@@ -318,165 +371,148 @@ class Catalog:
         body = ",\n".join(lines)
         return f"CREATE TABLE `{tname}` (\n{body}\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4"
 
-    def refresh_system_schemas(self, sys_vars: dict[str, object] | None = None) -> None:
-        """Materialize the reference's other system schemas
-        (/root/reference/src/meta/initial.rs:1113,1161,1401):
-        mysql.users and performance_schema.global_variables."""
-        spark = self.spark
-        spark.sql("CREATE DATABASE IF NOT EXISTS mysql")
-        spark.sql("CREATE DATABASE IF NOT EXISTS performance_schema")
-        for t in ("mysql.users", "performance_schema.global_variables"):
-            self._ensure_fresh_location(t)
-        spark.createDataFrame(
-            [("%", "root", "mysql_native_password", "Y")],
-            "host string, user string, plugin string, super_priv string",
-        ).write.mode("overwrite").saveAsTable("mysql.users")
-        gv = sorted((k, str(v)) for k, v in (sys_vars or {}).items()) or [("", "")]
-        spark.createDataFrame(
-            gv, "variable_name string, variable_value string"
-        ).write.mode("overwrite").saveAsTable("performance_schema.global_variables")
 
-    INFO_SCHEMA_TABLES = (
-        "schemata", "tables", "columns", "table_constraints",
-        "key_column_usage", "statistics", "views",
-        "check_constraints", "referential_constraints",
-    )
+    # ------------------------------------------------------------ listing
 
-    def refresh_information_schema(self, only: set[str] | None = None) -> None:
-        """Materialize information_schema.* as real tables (the
-        reference persists these as sled rows,
-        /root/reference/src/meta/initial.rs:682-1111; here they're tiny
-        overwrite-on-demand parquet tables rebuilt lazily after DDL).
+    def databases(self) -> list[str]:
+        """Every database, sorted."""
+        return sorted(r[0] for r in self.spark.sql("SHOW DATABASES").collect())
 
-        ``only`` limits the rebuild to the named tables (the engine
-        passes the set a SELECT actually references) — each overwrite
-        is a Spark write job plus a metastore round-trip, so rebuilding
-        all nine for a query that reads one was the dominant cost of
-        the engine test family. Unknown names are ignored; None means
-        everything."""
-        spark = self.spark
-        want = set(self.INFO_SCHEMA_TABLES) if only is None else (
-            set(only) & set(self.INFO_SCHEMA_TABLES)
-        )
-        if not want:
-            return
-        spark.sql("CREATE DATABASE IF NOT EXISTS information_schema")
-        key_tables = {"columns", "table_constraints", "key_column_usage", "statistics"}
-        walk_tables = key_tables | {"tables", "views"}
-        dbs = [d.name for d in spark.catalog.listDatabases()]
-        schemata = [(  # information_schema.rs:11-35 column shape
-            "def", d, "utf8mb4", "utf8mb4_0900_ai_ci") for d in dbs]
-        tables_rows = []
-        columns_rows = []
-        constraint_rows = []
-        kcu_rows = []
-        stat_rows = []
-        views_rows = []
-        for db in dbs if want & walk_tables else []:
-            if db == "information_schema":
-                continue
-            for t in spark.catalog.listTables(db):
-                if t.tableType == "TEMPORARY":
-                    continue
-                qualified = f"{db}.{t.name}"
-                ttype = "VIEW" if t.tableType == "VIEW" else "BASE TABLE"
-                tables_rows.append(("def", db, t.name, ttype, "parquet" if ttype == "BASE TABLE" else ""))
-                if ttype == "VIEW":
-                    # views carry their definition (MySQL
-                    # information_schema.views shape) but no stored
-                    # columns/constraints here; SHOW CREATE is a
-                    # metastore round-trip per view, so only when asked
-                    if "views" not in want:
-                        continue
-                    try:
-                        ddl = spark.sql(f"SHOW CREATE TABLE {bq(qualified)}").collect()[0][0]
-                        m = re.search(r"\bAS\s+(.*)\Z", ddl, re.S | re.I)
-                        definition = (m.group(1).strip() if m else "")
-                    except Exception:
-                        definition = ""
-                    views_rows.append(("def", db, t.name, definition, "NONE", "YES", "root@%"))
-                    continue
-                if not (want & key_tables):
-                    continue
-                try:
-                    nn = set(self.not_null_cols(qualified))
-                    pk = self.primary_key(qualified)
-                    uniques = self.unique_keys(qualified)
-                except Exception:
-                    nn, pk, uniques = set(), [], []
-                if "columns" in want:
-                    for pos, (cname, ctyp) in enumerate(self.column_types(qualified), start=1):
-                        columns_rows.append(
-                            (
-                                "def", db, t.name, cname, pos,
-                                "NO" if cname in nn else "YES",
-                                SQL_TYPE_NAME.get(ctyp, ctyp),
-                                "PRI" if cname in pk else "",
-                            )
-                        )
-                # table_constraints / key_column_usage / statistics —
-                # the reference persists these per declared PRIMARY/
-                # UNIQUE key (information_schema.rs:36-158)
-                all_keys = ([("PRIMARY", pk, "PRIMARY KEY")] if pk else []) + [
-                    (uname, ucols, "UNIQUE") for uname, ucols in uniques
-                ]
-                for kname, kcols, ktype in all_keys:
-                    constraint_rows.append(("def", db, kname, db, t.name, ktype))
-                    for seq, c in enumerate(kcols, start=1):
-                        kcu_rows.append(("def", db, kname, "def", db, t.name, c, seq))
-                        stat_rows.append(("def", db, t.name, 0, db, kname, seq, c))
-        payloads = {
-            "views": (
-                views_rows or [("def", "", "", "", "", "", "")],
-                "table_catalog string, table_schema string, table_name string, "
-                "view_definition string, check_option string, is_updatable string, definer string",
-            ),
-            "schemata": (
-                schemata,
-                "catalog_name string, schema_name string, default_character_set_name string, default_collation_name string",
-            ),
-            "tables": (
-                tables_rows or [("def", "", "", "", "")],
-                "table_catalog string, table_schema string, table_name string, table_type string, engine string",
-            ),
-            "columns": (
-                columns_rows or [("def", "", "", "", 0, "", "", "")],
-                "table_catalog string, table_schema string, table_name string, column_name string, "
-                "ordinal_position long, is_nullable string, data_type string, column_key string",
-            ),
-            "table_constraints": (
-                constraint_rows or [("def", "", "", "", "", "")],
-                "constraint_catalog string, constraint_schema string, constraint_name string, "
-                "table_schema string, table_name string, constraint_type string",
-            ),
-            "key_column_usage": (
-                kcu_rows or [("def", "", "", "def", "", "", "", 0)],
-                "constraint_catalog string, constraint_schema string, constraint_name string, "
-                "table_catalog string, table_schema string, table_name string, "
-                "column_name string, ordinal_position long",
-            ),
-            "statistics": (
-                stat_rows or [("def", "", "", 0, "", "", 0, "")],
-                "table_catalog string, table_schema string, table_name string, non_unique long, "
-                "index_schema string, index_name string, seq_in_index long, column_name string",
-            ),
-            # check_constraints / referential_constraints exist but are
-            # always empty — the reference consumes only PRIMARY/UNIQUE
+    def tables(self, db: str, views: bool = False) -> list[str]:
+        """The tables and views of ``db`` (with ``views``, only its
+        views), sorted; temporary views are left out."""
+        kind = "VIEWS" if views else "TABLES"
+        rows = self.spark.sql(f"SHOW {kind} IN `{db}`").collect()
+        return sorted(r[1] for r in rows if not r[2])
+
+    # ------------------------------------------------------------ system tables
+
+    @contextmanager
+    def system_tables(self, sql: str, sys_vars: dict[str, object]):
+        """Yield ``sql`` with every system table it names replaced by a
+        temp view of that table's rows as the catalog stands now
+        (system_table; ``sys_vars`` are the reader's variables). A
+        reference the text gives no alias is aliased by the table's
+        own name, and a column qualified by the full table name is
+        qualified by that alias. String literals are left alone. The
+        views are dropped on exit; their random names cannot meet a
+        user's table."""
+        token = uuid.uuid4().hex
+        bound: dict[str, str] = {}
+
+        def bind(m: re.Match) -> str:
+            if not m.group(2):
+                return m.group(0)  # a string literal or a quoted identifier
+            table = m.group(4).lower()
+            name = f"{m.group(2).lower()}.{table}"
+            if name not in SYSTEM_TABLES:
+                return m.group(0)
+            follow = _FOLLOW.match(sql, m.end())
+            if follow and follow.group(1) == ".":
+                return f"`{table}`"
+            view = bound.setdefault(name, f"__ebike_sys_{token}_{len(bound)}")
+            if follow and (follow.group(1) == "`" or follow.group(1).upper() not in _NOT_ALIAS):
+                return view
+            return f"{view} AS `{table}`"
+
+        text = _SYS_REF.sub(bind, sql)
+        try:
+            for name, view in bound.items():
+                self.system_table(name, sys_vars).createOrReplaceTempView(view)
+            yield text
+        finally:
+            for view in bound.values():
+                self.spark.catalog.dropTempView(view)
+
+    def system_table(self, name: str, sys_vars: dict[str, object]) -> DataFrame:
+        """System table ``name`` (``schema.table``, lower case) built
+        from the catalog as it stands now, as a local relation. The
+        reference stores these as rows of its metadata store
+        (/root/reference/src/meta/initial.rs:682-1111,1113,1161,1401);
+        here the catalog and the ``ebike.*`` properties are that store,
+        so nothing is written."""
+        table = name.partition(".")[2]
+        if name == "mysql.users":
+            rows = [("%", "root", "mysql_native_password", "Y")]
+        elif name == "performance_schema.global_variables":
+            rows = sorted((k, str(v)) for k, v in sys_vars.items())
+        elif table == "schemata":
+            rows = [("def", db, "utf8mb4", "utf8mb4_0900_ai_ci") for db in self.databases()]
+        elif table in ("check_constraints", "referential_constraints"):
+            # always empty: the reference consumes only PRIMARY/UNIQUE
             # (/root/reference/src/store/reader/reader_util.rs:331-376)
-            "check_constraints": (
-                [],
-                "constraint_catalog string, constraint_schema string, constraint_name string, check_clause string",
-            ),
-            "referential_constraints": (
-                [],
-                "constraint_catalog string, constraint_schema string, constraint_name string, unique_constraint_name string, table_name string, referenced_table_name string",
-            ),
-        }
-        for t in self.INFO_SCHEMA_TABLES:
-            if t not in want:
-                continue
-            rows_t, schema_t = payloads[t]
-            self._ensure_fresh_location(f"information_schema.{t}")
-            spark.createDataFrame(rows_t, schema_t).write.mode("overwrite").saveAsTable(
-                f"information_schema.{t}"
-            )
+            rows = []
+        else:
+            rows = [row for db in self.databases() for row in self._schema_rows(table, db)]
+        return _local_relation(self.spark, rows, SYSTEM_TABLES[name])
+
+    def _schema_rows(self, table: str, db: str) -> list[tuple]:
+        """information_schema ``table``'s rows for the tables and views
+        of ``db``. A table dropped since the listing is skipped."""
+        if table == "views":
+            return [row for v in self.tables(db, views=True) for row in self._view_rows(db, v)]
+        views = set(self.tables(db, views=True))
+        if table == "tables":
+            return [
+                ("def", db, t, "VIEW", "") if t in views else ("def", db, t, "BASE TABLE", "parquet")
+                for t in self.tables(db)
+            ]
+        rows = []
+        for t in self.tables(db):
+            if t not in views:
+                try:
+                    rows += self._key_rows(table, db, t)
+                except AnalysisException:
+                    continue
+        return rows
+
+    def _view_rows(self, db: str, view: str) -> list[tuple]:
+        try:
+            ddl = self.spark.sql(f"SHOW CREATE TABLE {bq(f'{db}.{view}')}").collect()[0][0]
+        except AnalysisException:
+            return []
+        m = re.search(r"\bAS\s+(.*)\Z", ddl, re.S | re.I)
+        return [("def", db, view, m.group(1).strip() if m else "", "NONE", "YES", "root@%")]
+
+    def _key_rows(self, table: str, db: str, t: str) -> list[tuple]:
+        """Rows of ``columns`` or of the declared PRIMARY/UNIQUE keys'
+        ``table_constraints``, ``key_column_usage`` and ``statistics``
+        (information_schema.rs:36-158) for base table ``db.t``."""
+        q = f"{db}.{t}"
+        props = self.properties(q)
+        pk = self.primary_key(q, props)
+        if table == "columns":
+            nn = set(self.not_null_cols(q, props))
+            return [
+                ("def", db, t, c, pos, "NO" if c in nn else "YES",
+                 SQL_TYPE_NAME.get(typ, typ), "PRI" if c in pk else "")
+                for pos, (c, typ) in enumerate(self.column_types(q, props), start=1)
+            ]
+        keys = ([("PRIMARY", pk, "PRIMARY KEY")] if pk else []) + [
+            (u, cols, "UNIQUE") for u, cols in self.unique_keys(q, props)
+        ]
+        if table == "table_constraints":
+            return [("def", db, k, db, t, kind) for k, _, kind in keys]
+        if table == "key_column_usage":
+            return [
+                ("def", db, k, "def", db, t, c, seq)
+                for k, cols, _ in keys for seq, c in enumerate(cols, start=1)
+            ]
+        return [
+            ("def", db, t, 0, db, k, seq, c)
+            for k, cols, _ in keys for seq, c in enumerate(cols, start=1)
+        ]
+
+
+def _local_relation(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` as an inline VALUES table typed by ``schema`` (``name
+    type, …``): Catalyst folds it to a LocalRelation, so reading it
+    runs no Spark job. No rows gives a typed empty relation."""
+    cols = [c.split() for c in schema.split(", ")]
+    select = ", ".join(f"CAST(_{i} AS {typ}) AS {name}" for i, (name, typ) in enumerate(cols))
+    values = ", ".join(
+        "(" + ", ".join(map(sql_literal, row)) + ")" for row in rows or [(None,) * len(cols)]
+    )
+    aliases = ", ".join(f"_{i}" for i in range(len(cols)))
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT {select} FROM VALUES {values} AS v({aliases}){where}")

@@ -1,9 +1,7 @@
 """DDL statement execution — the Engine's CREATE/DROP/ALTER/index/
-matview/TRUNCATE/RENAME/maintenance surface, split out of engine.py in
-r10 (VERDICT-r9 task 7; mechanical move, no behavior change). Mixin:
-every method runs as part of Engine (self.catalog, self.spark,
-self._select, ...). Reference parity notes live on each method
-(execute_impl/create_table.rs etc. citations unchanged)."""
+matview/TRUNCATE/RENAME/maintenance surface. Mixin: every method runs
+as part of Engine (self.catalog, self.spark, self._select, ...).
+Reference parity notes live on each method."""
 
 from __future__ import annotations
 
@@ -25,10 +23,7 @@ from ebike_spark.engine.catalog import (
 )
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import parse_create_table, unquote_ident
-from ebike_spark.engine.session_state import (
-    EngineResult,
-    _bump_sys_schema_epoch,
-)
+from ebike_spark.engine.session_state import EngineResult
 
 
 class DdlExecMixin:
@@ -37,7 +32,6 @@ class DdlExecMixin:
         if not m:
             raise parse_error("near CREATE DATABASE")
         self.catalog.create_database(unquote_ident(m.group(2)), bool(m.group(1)))
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=1)
 
     def _drop_db(self, sql: str) -> EngineResult:
@@ -45,7 +39,6 @@ class DdlExecMixin:
         if not m:
             raise parse_error("near DROP DATABASE")
         self.catalog.drop_database(unquote_ident(m.group(2)), bool(m.group(1)))
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
     def _create_table(self, sql: str) -> EngineResult:
@@ -74,14 +67,12 @@ class DdlExecMixin:
                     return EngineResult("count", affected=0)
                 raise EbikeError(1050, f"Table '{m.group(2)}' already exists")
             self.catalog.create_table_like(src, dst)
-            _bump_sys_schema_epoch()
             return EngineResult("count", affected=0)
         try:
             ct = parse_create_table(sql)
         except ValueError as e:
             raise parse_error(str(e)) from e
         self.catalog.create_table(ct, self.current_db)
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
     def _ctas(self, if_not_exists: bool, table: str, select_sql: str) -> EngineResult:
@@ -96,7 +87,7 @@ class DdlExecMixin:
                 return EngineResult("count", affected=0)
             raise EbikeError(1050, f"Table '{table}' already exists")
         self.spark.catalog.setCurrentDatabase(self.current_db)
-        src = self.spark.sql(self._fix_select(select_sql))
+        src = self._fix_select(select_sql)
         # same invariant as the SELECT path: the hidden rowid must not
         # become a visible user column of the new table
         if "rowid" in src.columns and not self._mentions_rowid(select_sql):
@@ -104,7 +95,6 @@ class DdlExecMixin:
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
         commit.bump(self.spark, q)
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=self.spark.table(q).count())
 
     # A materialized view is a managed parquet table whose defining
@@ -192,7 +182,7 @@ class DdlExecMixin:
     def _refresh_matview_locked(self, q: str) -> EngineResult:
         stored = self._matview_sql(q)
         self.spark.catalog.setCurrentDatabase(self.current_db)
-        src = self.spark.sql(self._fix_select(stored))
+        src = self._fix_select(stored)
         cur = self.spark.table(q)
         if [f.dataType for f in src.schema.fields] != [
             f.dataType for f in cur.schema.fields
@@ -216,7 +206,6 @@ class DdlExecMixin:
         if self.catalog.table_exists(q):
             self._matview_sql(q)  # 1347 if it's a plain table
             self.catalog.drop_table(q, True)
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
     def _truncate(self, sql: str) -> EngineResult:
@@ -333,7 +322,6 @@ class DdlExecMixin:
                 self.spark.sql(f"ALTER TABLE {bq(src)} RENAME TO {bq(dst)}")
                 commit.remove_root(old)
                 commit.bump(self.spark, src, dst)
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
     def _drop_table(self, sql: str) -> EngineResult:
@@ -342,7 +330,6 @@ class DdlExecMixin:
             raise parse_error("near DROP TABLE")
         q = self.catalog.qualify(unquote_ident(m.group(2)), self.current_db)
         self.catalog.drop_table(q, bool(m.group(1)))
-        _bump_sys_schema_epoch()
         return EngineResult("count", affected=0)
 
     def _alter_table(self, sql: str) -> EngineResult:
@@ -399,7 +386,6 @@ class DdlExecMixin:
                 for cl in body:
                     self._alter_clause(st, cl)
                 self._land(q, st)
-            _bump_sys_schema_epoch()
         if rename_to is not None:
             return self._rename_tables(f"RENAME TABLE {tbl_tok} TO {rename_to}")
         return EngineResult("count", affected=0)

@@ -52,6 +52,8 @@ from ebike_spark.engine.parser import Delete, Insert, Update, split_top_level, u
 # orders of magnitude below it; only a multi-index bulk LOAD DATA
 # IGNORE can hit it.
 _IGNORE_REPLAY_CAP = 100_000
+# marks the rows whose AUTO_INCREMENT id land minted, for INSERT IGNORE
+_MINTED = "__minted"
 
 
 # Marker embedded in raise_error messages by the strict-cast guards
@@ -637,20 +639,26 @@ def land(
     collects it once, checks it on the driver and writes one file. None
     marks a data-sized source, checked by Spark jobs and counted
     lazily. With no PRIMARY/UNIQUE key every mode is a plain insert, as
-    in MySQL. Returns (affected rows, first minted AUTO_INCREMENT id or
-    None)."""
+    in MySQL. Returns (affected rows, first minted AUTO_INCREMENT id of
+    a row that landed, or None)."""
     ai = catalog.auto_increment_col(qualified, props)
+    keys = declared_keys(catalog, qualified, props)
+    ignore = bool(keys) and mode == "IGNORE"
     first_id = None
     if ai is not None:
+        if ignore:
+            df = df.withColumn(_MINTED, F.col(ai).isNull())
         df, first_id = _mint_auto_increment(spark, qualified, df, ai)
-    keys = declared_keys(catalog, qualified, props)
     has_rowid = catalog.has_rowid(qualified, props)
     if keys and mode == "REPLACE":
         n = _replace(spark, catalog, qualified, df, n_rows, props)
     elif keys and on_dup is not None:
         n = _upsert(spark, catalog, qualified, df, on_dup, props)
-    elif keys and mode == "IGNORE":
-        n = _insert_ignore(spark, catalog, qualified, df, props)
+    elif ignore:
+        # LAST_INSERT_ID() is the first id of a row IGNORE kept
+        n, first_id = _insert_ignore(
+            spark, catalog, qualified, df, props, ai if first_id is not None else None
+        )
     elif n_rows is not None:
         # the strict guard raises 1366 in this collect; an inline-table
         # batch runs no job for it
@@ -783,7 +791,8 @@ def _insert_ignore(
     qualified: str,
     new_df,
     props: dict[str, str],
-) -> int:
+    ai: str | None = None,
+) -> tuple[int, int | None]:
     """INSERT IGNORE (MySQL duplicate-skip) into a table with at least
     one PRIMARY/UNIQUE key: rows whose PRIMARY/UNIQUE
     key collides with a stored row OR an earlier row of the same batch
@@ -822,7 +831,11 @@ def _insert_ignore(
     and LFMIS is P-complete (Cook 1985) — no NC/parallel (hence no
     shuffle-distributive) computation exists for it unless NC = P.
     REPLACE escapes this because last-wins per index is
-    order-reducible per key (a row_number window), not graph-greedy."""
+    order-reducible per key (a row_number window), not graph-greedy.
+
+    Returns (rows inserted, smallest ``ai`` value among the inserted
+    rows marked ``_MINTED`` — the first id minted for a kept row — or
+    None without ``ai``)."""
     _check_not_null(catalog, qualified, new_df, props)
     keys = declared_keys(catalog, qualified, props)
     existing = spark.table(qualified)
@@ -893,9 +906,14 @@ def _insert_ignore(
                 live[vidx] = row
         surviving = tagged.where(F.col("__vidx").isin(sorted(live))).drop("__vidx")
         n = len(live)
+    first_id = None
+    if n and ai is not None:
+        # before the append: the single-index survivors anti-join the
+        # stored rows
+        first_id = surviving.where(F.col(_MINTED)).agg(F.min(ai)).first()[0]
     if n:
-        _append(spark, qualified, surviving, catalog.has_rowid(qualified, props))
-    return n
+        _append(spark, qualified, surviving.drop(_MINTED), catalog.has_rowid(qualified, props))
+    return n, first_id
 
 
 def _replace(

@@ -133,9 +133,7 @@ class DmlExecMixin:
 
         # hidden rowids of SOURCE tables never travel (SELECT * from a
         # rowid table must behave as if the column didn't exist)
-        src = self._drop_hidden_rowid(
-            self.spark.sql(self._fix_select(select_sql, datetime_fns=False))
-        )
+        src = self._drop_hidden_rowid(self._fix_select(select_sql, datetime_fns=False))
         props = self.catalog.properties(qualified)
         col_types = self.catalog.column_types(qualified, props)
         listed = [unquote_ident(c) for c in split_top_level(col_list)] if col_list else None
@@ -342,7 +340,7 @@ class DmlExecMixin:
             f"SELECT {rid_exprs}, {val_exprs} FROM {frm}"
             + (f" WHERE {where}" if where else "")
         )
-        src = self.spark.sql(self._fix_select(sel, datetime_fns=False))
+        src = self._fix_select(sel, datetime_fns=False)
         if len(targets) > 1:
             # snapshot the pre-image join once: every target's
             # post-image write would otherwise recompute it, and a
@@ -489,9 +487,7 @@ class DmlExecMixin:
             sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
                 f" WHERE {where}" if where else ""
             )
-            doomed = self.spark.sql(
-                self._fix_select(sel, datetime_fns=False)
-            ).distinct()
+            doomed = self._fix_select(sel, datetime_fns=False).distinct()
             affected = doomed.count()
             if affected == 0:
                 return EngineResult("count", affected=0)

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit, dml, show
 from ebike_spark.engine.catalog import Catalog
-from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
+from ebike_spark.engine.errors import EbikeError, parse_error, unknown_database, unsupported
 from ebike_spark.engine.parser import (
     map_unquoted,
     rewrite_group_concat,
@@ -27,27 +27,16 @@ from ebike_spark.engine.parser import (
     substitute_vars,
     unquote_ident,
 )
-
-# Shared session/global state + result types moved to session_state.py
-# (r10 split); re-exported here so existing imports keep working.
 from ebike_spark.engine.ddl_exec import DdlExecMixin
 from ebike_spark.engine.dml_exec import DmlExecMixin
 from ebike_spark.engine.prepared import PreparedMixin
-from ebike_spark.engine.session_state import (  # noqa: F401
+from ebike_spark.engine.session_state import (
     DEFAULT_SYS_VARS,
     GLOBAL_VARS,
     READ_ONLY_SYS_VARS,
-    _SYS_PIN_CAP,
-    _SYS_SCHEMA_EPOCH,
-    _SYS_SCHEMA_LOCK,
-    _SYS_VARS_BUILDER,
-    _SYS_VARS_TABLE,
-    _ENGINE_SERIAL,
     EngineResult,
     _Prepared,
-    _bump_sys_schema_epoch,
 )
-
 
 
 class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
@@ -74,23 +63,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         self.last_insert_id = 0
         self._stmts: dict[int, _Prepared] = {}
         self._next_stmt_id = 1
-        # system tables this Engine has rebuilt at the CURRENT epoch
-        # (see _select); -1 forces the first system-schema read to
-        # rebuild whatever it references. _local_sys_dirty covers
-        # SESSION-scoped SETs: they change only this engine's rebuild
-        # of the variables views, so they invalidate THIS cache without
-        # bumping the shared epoch. Documented caveat: the variables
-        # views are shared PHYSICAL tables rebuilt with the READING
-        # engine's session vars — two connections interleaving reads
-        # see last-rebuilder-wins content for session-scoped rows,
-        # inherent to one shared table (global/DDL-driven content is
-        # epoch-correct).
-        self._seen_sys_epoch = -1
-        self._local_sys_dirty = False
-        self._fresh_sys_tables: set[str] = set()
-        with _SYS_SCHEMA_LOCK:
-            _ENGINE_SERIAL[0] += 1
-            self._serial = _ENGINE_SERIAL[0]
         # version directories no table points at (a failed retire, a
         # crash mid-commit) go before this connection's first statement
         commit.sweep(spark)
@@ -111,8 +83,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         self.user_vars = {}
         self.last_insert_id = 0
         self._stmts = {}
-        # the variables views must rebuild with the reset session vars
-        self._local_sys_dirty = True
 
     # ------------------------------------------------------------ dispatch
 
@@ -205,7 +175,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             # execution.rs:894-1279); Spark-native passthrough
             self.spark.catalog.setCurrentDatabase(self.current_db)
             self.spark.sql(sql)
-            _bump_sys_schema_epoch()
             return EngineResult("count", affected=0)
         if kw == "DROP" and kw2 == "TABLE":
             return self._drop_table(sql)
@@ -304,8 +273,13 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
 
         return map_unquoted(sql, fix)
 
-    def _fix_select(self, sql: str, datetime_fns: bool = True) -> str:
-        """``datetime_fns=False`` is for callers whose text already went
+    def _fix_select(self, sql: str, datetime_fns: bool = True) -> DataFrame:
+        """A MySQL SELECT text rewritten to Spark SQL and analysed by
+        Spark, with each system table it names (information_schema,
+        mysql, performance_schema) bound to its rows as the catalog
+        and this session's variables stand now (Catalog.system_tables).
+
+        ``datetime_fns=False`` is for callers whose text already went
         through _fix_dml_scalars: the %-format rewrite is NOT idempotent
         (a second pass re-reads the emitted java pattern as MySQL
         %-format — 'yyyy-MM' would re-quote, 'dd%' would raise a
@@ -373,7 +347,8 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
                 )
             return seg
 
-        return map_unquoted(sql, fix)
+        with self.catalog.system_tables(map_unquoted(sql, fix), self.sys_vars) as text:
+            return self.spark.sql(text)
 
     @staticmethod
     def _mentions_rowid(sql: str) -> bool:
@@ -444,82 +419,9 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         return df.toDF(*tmp).select(*kept).toDF(*names)
 
     def _select(self, sql: str) -> EngineResult:
-        # Targeted system-schema refresh: rebuild ONLY the system tables
-        # this SELECT references (each rebuild is a Spark write job +
-        # metastore round-trips — rebuilding all nine info-schema tables
-        # plus mysql/performance_schema for a query that reads one was
-        # the dominant cost of the engine test family). Freshness is
-        # tracked per table at a PROCESS-GLOBAL epoch: any DDL (on any
-        # Engine/connection — the tables are shared) bumps the epoch,
-        # invalidating every Engine's set on its next system-schema read.
-        refs = {
-            f"{s.lower()}.{t.lower()}"
-            for s, t in re.findall(
-                r"\b(information_schema|performance_schema|mysql)`?\s*\.\s*`?(\w+)",
-                sql,
-                re.I,
-            )
-        }
-        if refs:
-            with _SYS_SCHEMA_LOCK:
-                if (
-                    self._seen_sys_epoch != _SYS_SCHEMA_EPOCH[0]
-                    or self._local_sys_dirty
-                ):
-                    self._fresh_sys_tables = set()
-                    self._seen_sys_epoch = _SYS_SCHEMA_EPOCH[0]
-                    self._local_sys_dirty = False
-                if (
-                    _SYS_VARS_TABLE in refs
-                    and _SYS_VARS_BUILDER[0] != self._serial
-                ):
-                    # another engine rebuilt the variables view last —
-                    # its content embeds THAT session's vars; rebuild
-                    # with ours regardless of epoch freshness
-                    self._fresh_sys_tables.discard(_SYS_VARS_TABLE)
-                need = refs - self._fresh_sys_tables
-                info_need = {
-                    st.split(".", 1)[1]
-                    for st in need
-                    if st.startswith("information_schema.")
-                }
-                if info_need:
-                    self.catalog.refresh_information_schema(only=info_need)
-                if any(
-                    st.startswith(("mysql.", "performance_schema.")) for st in need
-                ):
-                    self.catalog.refresh_system_schemas(self.sys_vars)
-                    need |= {"mysql.users", _SYS_VARS_TABLE}
-                    _SYS_VARS_BUILDER[0] = self._serial
-                self._fresh_sys_tables |= need
-                # Materialize the resultset BEFORE releasing the lock:
-                # a lazily-scanned shared system table can otherwise be
-                # INSERT-OVERWRITten by a concurrent connection's
-                # rebuild mid-scan — the reader would see the OTHER
-                # session's vars or hit file-missing errors on the
-                # swapped-out parquet. System-schema resultsets are
-                # metadata-sized, so pinning rows to a local relation
-                # is cheap — but the query may JOIN a system table to
-                # an arbitrarily large USER table, so the pin is
-                # size-bounded: beyond the cap the lazy frame is kept
-                # (the server then streams it) and only the documented
-                # concurrent-rebuild residual remains for that rare
-                # hybrid shape. The cap also bounds how long this
-                # Spark job holds the schema lock.
-                res = self._run_select(sql)
-                if res.df is not None:
-                    rows = res.df.limit(_SYS_PIN_CAP + 1).collect()
-                    if len(rows) <= _SYS_PIN_CAP:
-                        res.df = self.spark.createDataFrame(
-                            rows, res.df.schema
-                        )
-                return res
-        return self._run_select(sql)
-
-    def _run_select(self, sql: str) -> EngineResult:
         self.spark.catalog.setCurrentDatabase(self.current_db)
         try:
-            df = self.spark.sql(self._fix_select(sql))
+            df = self._fix_select(sql)
             # `SELECT *` (or any projection that picked up the hidden
             # rowid without naming it) hides row identity; dropping it
             # here lets Catalyst prune the column out of the scan. A
@@ -543,8 +445,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
     def _use(self, db: str) -> EngineResult:
         name = unquote_ident(db.rstrip(";"))
         if not self.catalog.database_exists(name):
-            from ebike_spark.engine.errors import unknown_database
-
             raise unknown_database(name)
         self.current_db = name
         self.spark.catalog.setCurrentDatabase(name)
@@ -584,19 +484,10 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
                 self.user_vars[name] = value
             elif scope == "global":
                 # MySQL: SET GLOBAL affects NEW sessions (and @@GLOBAL.x
-                # reads), not this session's @@x. Globals feed every
-                # session's view of the variables tables — bump the
-                # SHARED epoch.
+                # reads), not this session's @@x
                 GLOBAL_VARS[name] = value
-                _bump_sys_schema_epoch()  # global_variables view
             else:  # SESSION / bare @@var / bare var
-                # Session vars feed only THIS engine's rebuild of the
-                # variables view — mark the engine locally dirty
-                # instead of invalidating every connection's cache
-                # (a per-connection `SET autocommit` must not trigger
-                # O(connections x tables) rebuild storms).
                 self.sys_vars[name] = value
-                self._local_sys_dirty = True
         return EngineResult("ok")
 
     def _eval_scalar(self, raw: str):
@@ -627,11 +518,11 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             return EngineResult("rows", df=df)
 
         if up.startswith("DATABASES") or up.startswith("SCHEMAS"):
-            return rows(show.show_databases(spark))
+            return rows(show.show_databases(spark, self.catalog))
         m = re.match(r"(?:FULL\s+)?TABLES(?:\s+(?:FROM|IN)\s+([\w`\"]+))?\s*$", body, re.I)
         if m:
             db = unquote_ident(m.group(1)) if m.group(1) else self.current_db
-            return rows(show.show_tables(spark, db))
+            return rows(show.show_tables(spark, self.catalog, db))
         m = re.match(r"(?:FULL\s+)?(?:COLUMNS|FIELDS)\s+(?:FROM|IN)\s+([\w.`\"]+)(?:\s+(?:FROM|IN)\s+([\w`\"]+))?\s*$", body, re.I)
         if m:
             t = unquote_ident(m.group(1))
@@ -645,8 +536,8 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         m = re.match(r"CREATE\s+(?:DATABASE|SCHEMA)\s+([\w`\"]+)\s*$", body, re.I)
         if m:
             db = unquote_ident(m.group(1))
-            if db.lower() not in {d.name.lower() for d in spark.catalog.listDatabases()}:
-                raise EbikeError(1049, f"Unknown database '{db}'")
+            if not self.catalog.database_exists(db):
+                raise unknown_database(db)
             ddl = (
                 f"CREATE DATABASE `{db}` /*!40100 DEFAULT CHARACTER SET "
                 "utf8mb4 COLLATE utf8mb4_0900_ai_ci */"

@@ -1,7 +1,6 @@
 """Prepared-statement surface — the Engine side of the binary
 protocol (prepare / execute_prepared / placeholder splice / prepare-
-time result metadata), split out of engine.py in r10 (VERDICT-r9 task
-7; mechanical move, no behavior change)."""
+time result metadata)."""
 
 from __future__ import annotations
 

@@ -1,12 +1,10 @@
-"""Shared engine session/global state (split out of engine.py in r10
-— VERDICT-r9 task 7): system-variable defaults, the process-global
-SET GLOBAL overlay, the system-schema freshness epoch + lock, and the
-result/prepared-statement dataclasses. One module so the Engine and
-its DDL/DML/prepared mixins share state without an import cycle."""
+"""Shared engine session/global state: system-variable defaults, the
+process-global SET GLOBAL overlay, and the result/prepared-statement
+dataclasses. One module so the Engine and its DDL/DML/prepared mixins
+share state without an import cycle."""
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -48,44 +46,6 @@ READ_ONLY_SYS_VARS = frozenset({"secure_file_priv", "version", "version_comment"
 # /root/reference/src/core/global_context.rs). SESSION scope lives on
 # each Engine's sys_vars.
 GLOBAL_VARS: dict[str, object] = {}
-
-# Process-global freshness epoch for the SHARED system-schema physical
-# tables (information_schema / mysql / performance_schema). They are
-# one set of parquet tables per process, but Engines are
-# one-per-connection under the wire server — so a DDL on connection A
-# must invalidate connection B's targeted-refresh cache, or B serves
-# stale information_schema indefinitely. Any mutation bumps the epoch;
-# each Engine rebuilds its referenced tables when its seen epoch lags.
-# The lock also serializes the rebuilds themselves: two connections
-# racing overwrite-rebuilds of the same system table would otherwise
-# collide in the metastore.
-_SYS_SCHEMA_LOCK = threading.RLock()
-_SYS_SCHEMA_EPOCH = [0]
-# performance_schema.global_variables is rebuilt from the BUILDING
-# engine's session vars — shared physical table, per-session content.
-# Track who built it last so a DIFFERENT engine's read always rebuilds
-# with its own vars (without this, connection B could serve A's
-# session values while fresh at the same epoch).
-_SYS_VARS_TABLE = "performance_schema.global_variables"
-_SYS_VARS_BUILDER = [0]  # serial of the Engine that last rebuilt it
-_ENGINE_SERIAL = [0]  # monotone: id() could be reused after a GC
-# Concurrency note: system-schema SELECTs are eagerly materialized to
-# a local relation while still holding the lock (_select), so a reader
-# can neither observe another session's vars nor hit file-missing
-# errors from an interleaved INSERT OVERWRITE rebuild of the shared
-# physical table — the lazy-scan-after-release race is closed.
-
-
-# Row cap for pinning system-schema SELECT results to a local
-# relation inside the lock (see _select): every pure metadata query is
-# far below it; a hybrid join against a big user table stays lazy.
-_SYS_PIN_CAP = 100_000
-
-
-def _bump_sys_schema_epoch() -> None:
-    with _SYS_SCHEMA_LOCK:
-        _SYS_SCHEMA_EPOCH[0] += 1
-
 
 
 @dataclass

@@ -21,18 +21,12 @@ def _like_to_regex(pat: str) -> str:
     return "^" + re.escape(pat).replace("%", ".*").replace("_", ".") + "$"
 
 
-def show_databases(spark: SparkSession) -> DataFrame:
-    dbs = sorted(d.name for d in spark.catalog.listDatabases())
-    return spark.createDataFrame([(d,) for d in dbs], "Database string")
+def show_databases(spark: SparkSession, catalog: Catalog) -> DataFrame:
+    return spark.createDataFrame([(d,) for d in catalog.databases()], "Database string")
 
 
-def show_tables(spark: SparkSession, db: str) -> DataFrame:
-    names = sorted(
-        t.name
-        for t in spark.catalog.listTables(db)
-        if t.tableType != "TEMPORARY"
-    )
-    return spark.createDataFrame([(n,) for n in names], f"`Tables_in_{db}` string")
+def show_tables(spark: SparkSession, catalog: Catalog, db: str) -> DataFrame:
+    return spark.createDataFrame([(n,) for n in catalog.tables(db)], f"`Tables_in_{db}` string")
 
 
 def show_columns(spark: SparkSession, catalog: Catalog, qualified: str) -> DataFrame:
@@ -92,11 +86,9 @@ def show_collation(spark: SparkSession) -> DataFrame:
 
 def show_table_status(spark: SparkSession, catalog: Catalog, db: str) -> DataFrame:
     rows = []
-    for t in spark.catalog.listTables(db):
-        if t.tableType == "TEMPORARY":
-            continue
-        n = spark.table(f"{db}.{t.name}").count()
-        rows.append((t.name, "parquet", n, "utf8mb4_0900_ai_ci"))
+    for t in catalog.tables(db):
+        n = spark.table(f"{db}.{t}").count()
+        rows.append((t, "parquet", n, "utf8mb4_0900_ai_ci"))
     return spark.createDataFrame(
         rows or [("", "", 0, "")],
         "Name string, Engine string, Rows long, Collation string",

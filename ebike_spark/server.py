@@ -706,10 +706,10 @@ class _Conn:
                     # 1-byte sub-command bitmask. Every flushable
                     # surface here is already either absent (no query
                     # log, no grant tables, no host cache) or
-                    # invalidated per statement (information_schema
-                    # frames are epoch-refreshed on DDL), so the flush
-                    # is complete by construction — the OK is the
-                    # contract.
+                    # built per statement (information_schema is
+                    # read from the catalog by each query), so the
+                    # flush is complete by construction — the OK is
+                    # the contract.
                     if len(body) < 1:
                         self.send_err(
                             1835, "Malformed communication packet", "HY000"

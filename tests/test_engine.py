@@ -323,11 +323,10 @@ def test_information_schema_view_type(eng):
 
 
 def test_information_schema_cross_engine_invalidation(eng):
-    """The targeted-refresh freshness cache is PROCESS-GLOBAL: DDL on
-    one Engine (connection) invalidates every other Engine's cache —
-    the system-schema tables are shared physical tables, and under the
-    one-Engine-per-connection wire server a per-Engine flag would let
-    a second connection serve stale information_schema forever."""
+    """DDL through one Engine (connection) shows in the next
+    information_schema read of any other Engine: every read builds the
+    table from the shared catalog, so no connection can serve a stale
+    copy."""
     other = Engine(eng.spark.newSession())
     q = (
         "SELECT table_name FROM information_schema.tables "
@@ -427,6 +426,128 @@ def test_execute_script(eng):
     assert results[-1].rows()[0]["c"] == 2
     # the ';' inside the string literal didn't split the statement
     assert eng.execute("SELECT b FROM s WHERE a = 1").rows()[0]["b"] == "x;y"
+
+
+def test_system_tables_are_current_in_ctas_and_insert_select(eng):
+    """CTAS and INSERT … SELECT read the system tables as the catalog
+    stands at the statement, however warm an earlier read left them:
+    the table created and the column added after that read are there."""
+    db = eng.current_db
+    eng.execute("CREATE TABLE a (x INT)")
+    eng.execute("SELECT table_name FROM information_schema.tables").rows()
+    eng.execute("CREATE TABLE b (x INT)")
+    eng.execute(
+        "CREATE TABLE snap AS SELECT table_name FROM information_schema.tables "
+        f"WHERE table_schema = '{db}'"
+    )
+    assert sorted(r[0] for r in eng.execute("SELECT * FROM snap").rows()) == ["a", "b"]
+    eng.execute("CREATE TABLE names (n CHAR)")
+    eng.execute("SELECT column_name FROM information_schema.columns").rows()
+    eng.execute("ALTER TABLE b ADD COLUMN y INT")
+    eng.execute(
+        "INSERT INTO names SELECT column_name FROM information_schema.columns "
+        f"WHERE table_schema = '{db}' AND table_name = 'b'"
+    )
+    assert sorted(r[0] for r in eng.execute("SELECT n FROM names").rows()) == ["x", "y"]
+
+
+def test_system_reads_create_no_database(eng):
+    """Reading the system tables creates nothing in the catalog: SHOW
+    DATABASES lists none of the system schemas afterwards and USE of
+    one is 1049, as before any read."""
+    eng.execute("SELECT * FROM information_schema.tables").rows()
+    eng.execute("SELECT * FROM mysql.users").rows()
+    eng.execute("SELECT * FROM performance_schema.global_variables").rows()
+    names = {r[0] for r in eng.execute("SHOW DATABASES").rows()}
+    assert not names & {"information_schema", "mysql", "performance_schema"}
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("USE information_schema")
+    assert ei.value.code == 1049
+
+
+def test_system_read_sees_table_created_outside_engine(eng):
+    """A table created by plain Spark SQL, with no engine DDL, is in the
+    next information_schema read."""
+    q = (
+        "SELECT table_name FROM information_schema.tables "
+        f"WHERE table_schema = '{eng.current_db}'"
+    )
+    eng.execute("CREATE TABLE inside (a INT)")
+    assert [r[0] for r in eng.execute(q).rows()] == ["inside"]
+    eng.spark.sql(f"CREATE TABLE {eng.current_db}.outside (a INT) USING parquet")
+    assert sorted(r[0] for r in eng.execute(q).rows()) == ["inside", "outside"]
+
+
+def test_system_table_reference_forms(eng):
+    """A system-table reference resolves backtick-quoted and in any
+    case, with or without an alias, qualified by the table's name and
+    joined with a user table; the same text inside a string literal is
+    left alone."""
+    eng.execute("CREATE TABLE kv (k CHAR)")
+    eng.execute("INSERT INTO kv VALUES ('kv'), ('zz')")
+    rows = eng.execute(
+        "SELECT tables.table_name, information_schema.tables.table_type, "
+        "'information_schema.tables' AS lit FROM `Information_Schema`.`TABLES` "
+        f"WHERE table_schema = '{eng.current_db}'"
+    ).rows()
+    assert [tuple(r) for r in rows] == [("kv", "BASE TABLE", "information_schema.tables")]
+    rows = eng.execute(
+        "SELECT kv.k, c.column_name FROM kv JOIN information_schema.COLUMNS AS c "
+        f"ON c.table_name = kv.k WHERE c.table_schema = '{eng.current_db}'"
+    ).rows()
+    assert [tuple(r) for r in rows] == [("kv", "k")]
+
+
+def test_system_walk_skips_a_dropped_table(eng, monkeypatch):
+    """A table that goes between the walk's listing and its property
+    read is left out of the system table, not an error."""
+    from ebike_spark.engine.catalog import Catalog
+
+    eng.execute("CREATE TABLE kept (a INT NOT NULL, PRIMARY KEY (a))")
+    listed = Catalog.tables
+    monkeypatch.setattr(
+        Catalog, "tables", lambda self, db, views=False: listed(self, db, views) + ([] if views else ["gone"])
+    )
+    for table in ("columns", "statistics"):
+        rows = eng.execute(
+            f"SELECT table_name FROM information_schema.{table} "
+            f"WHERE table_schema = '{eng.current_db}'"
+        ).rows()
+        assert [r[0] for r in rows] == ["kept"]
+
+
+def test_system_reads_under_concurrent_ddl(eng):
+    """Two connections, each on its own session, read the system tables
+    while the other creates and drops tables: every read succeeds and
+    shows the reader's own session variables."""
+    import threading
+
+    db = eng.current_db
+    errors = []
+
+    def connection(name: str) -> None:
+        e = Engine(eng.spark.newSession())
+        try:
+            e.execute(f"USE {db}")
+            e.execute(f"SET @@who_am_i = '{name}'")
+            for i in range(20):
+                gv = e.execute(
+                    "SELECT variable_value FROM performance_schema.global_variables "
+                    "WHERE variable_name = 'who_am_i'"
+                ).rows()
+                assert [r[0] for r in gv] == [name]
+                e.execute(f"SELECT table_name FROM information_schema.tables WHERE table_schema = '{db}'").rows()
+                e.execute(f"CREATE TABLE {name}_{i} (a INT)")
+                e.execute(f"DROP TABLE {name}_{i}")
+        except Exception as ex:  # surfaced by the main thread
+            errors.append((name, ex))
+
+    threads = [threading.Thread(target=connection, args=(n,)) for n in ("conn_a", "conn_b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
 
 
 def test_unknown_column_error(eng):
@@ -2318,10 +2439,10 @@ def test_strict_cast_rejects_bad_values(eng):
 
 
 def test_variables_view_is_per_reader_across_engines(eng):
-    """The shared performance_schema.global_variables table embeds the
-    BUILDING engine's session vars; a different engine's read must
-    rebuild with its own vars even when the epoch says fresh —
-    otherwise connection B serves connection A's session values."""
+    """performance_schema.global_variables holds the READING engine's
+    session variables: each read builds it from that engine's own
+    variables, so connection B never sees connection A's session
+    values."""
     other = Engine(eng.spark.newSession())
     other.execute(f"USE {eng.current_db}")
     q = (
@@ -2767,6 +2888,10 @@ _UPSERT = "ON DUPLICATE KEY UPDATE tag = VALUES(tag)"
     [
         ("INSERT", "", _AGREE_BATCH, _ALL_SOURCES, (1062, [(1, 10, "old")], 1)),
         ("INSERT IGNORE", "", _AGREE_BATCH, _ALL_SOURCES, (1, [(1, 10, "old"), (2, 20, "a")], 2)),
+        # id 2 went to the skipped (10, 'b'): LAST_INSERT_ID() is the kept row's 3
+        ("INSERT IGNORE", "", [(10, "b"), (30, "c")], _ALL_SOURCES, (1, [(1, 10, "old"), (3, 30, "c")], 3)),
+        # every row skipped: LAST_INSERT_ID() keeps the earlier insert's 1
+        ("INSERT IGNORE", "", [(10, "b")], _ALL_SOURCES, (0, [(1, 10, "old")], 1)),
         # 3 inserted + the stored row and the earlier (20, 'a') replaced
         ("REPLACE", "", _AGREE_BATCH, _ALL_SOURCES, (5, [(3, 10, "b"), (4, 20, "c")], 2)),
         # an in-batch duplicate makes the upsert order-dependent: 1062
@@ -2774,7 +2899,7 @@ _UPSERT = "ON DUPLICATE KEY UPDATE tag = VALUES(tag)"
         # (20, 'a') inserted, the stored row updated: 1 + 2
         ("INSERT", _UPSERT, _AGREE_BATCH[:2], _ALL_SOURCES[:2], (3, [(1, 10, "b"), (2, 20, "a")], 2)),
     ],
-    ids=["plain", "ignore", "replace", "upsert_in_batch_duplicate", "upsert"],
+    ids=["plain", "ignore", "ignore_skips_first_minted", "ignore_skips_all", "replace", "upsert_in_batch_duplicate", "upsert"],
 )
 def test_insert_sources_agree(eng, tmp_path, verb, on_dup, batch, sources, expected):
     """One batch loaded through VALUES, INSERT … SELECT and LOAD DATA into
