@@ -17,8 +17,8 @@ Hidden rowid: the reference prepends a UUID ``rowid`` to every table
 when explicitly projected (/root/reference/src/core/core_util.rs:451-461).
 Here it is a real LAST column (STRING, uuid() materialized at INSERT,
 marked by the ``ebike.rowid`` table property) that every metadata
-surface (SHOW/DESCRIBE/information_schema/column_types) hides and the
-SELECT path drops from results unless the query text mentions it —
+surface (SHOW/DESCRIBE/information_schema/column_types) hides and every query
+(Engine._query) drops from results unless the query text names it —
 column pruning then means the hidden column is never even read. Last
 rather than first so VALUES inserts stay positional.
 """
@@ -33,7 +33,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit
-from ebike_spark.engine.errors import EbikeError, table_not_exists, unknown_database
+from ebike_spark.engine.errors import EbikeError, access_denied, table_not_exists, unknown_database
 from ebike_spark.engine.parser import CreateTable, sql_literal
 
 # meta_util.rs:548-562 — the storable types; DDL with anything else errors.
@@ -135,6 +135,8 @@ _SYS_REF = re.compile(
     r"|`[^`]*`",
     re.I | re.S,
 )
+# what precedes a table reference that a statement writes
+_WRITE_TARGET = re.compile(r"\b(?:INTO|UPDATE|DELETE(?:\s+FROM)?|OVERWRITE(?:\s+TABLE)?)\s*$", re.I)
 # what follows a table reference: a column qualifier's dot, an alias
 # or a keyword
 _FOLLOW = re.compile(r"\s*(\.|`|\w+)")
@@ -156,6 +158,8 @@ def bq(qualified: str) -> str:
 class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
+        # temp view → system table, for the statement being run
+        self.system_views: dict[str, str] = {}
 
     # ------------------------------------------------------------ helpers
 
@@ -172,6 +176,12 @@ class Catalog:
         return self.spark.catalog.tableExists(qualified)
 
     def require_table(self, qualified: str) -> None:
+        """1146 unless ``qualified`` names a table; a system table bound
+        in this statement (system_tables) is one, but only for reading:
+        1044."""
+        name = self.system_views.get(qualified.rpartition(".")[2])
+        if name:
+            raise access_denied(name.partition(".")[0])
         if not self.table_exists(qualified):
             raise table_not_exists(qualified)
 
@@ -388,41 +398,49 @@ class Catalog:
     # ------------------------------------------------------------ system tables
 
     @contextmanager
-    def system_tables(self, sql: str, sys_vars: dict[str, object]):
-        """Yield ``sql`` with every system table it names replaced by a
-        temp view of that table's rows as the catalog stands now
-        (system_table; ``sys_vars`` are the reader's variables). A
-        reference the text gives no alias is aliased by the table's
-        own name, and a column qualified by the full table name is
-        qualified by that alias. String literals are left alone. The
+    def system_tables(self, sys_vars: dict[str, object]):
+        """One statement's scope of system tables. Yields ``bind(sql)``,
+        which returns ``sql`` with every system table it names replaced
+        by a temp view of that table's rows as the catalog stands when
+        it is first named (system_table; ``sys_vars`` are the reader's
+        variables). A reference the text gives no alias is aliased by
+        the table's own name, and a column qualified by the full table
+        name is qualified by that alias. String literals are left
+        alone. A system table in a write target's place is 1044. The
         views are dropped on exit; their random names cannot meet a
         user's table."""
         token = uuid.uuid4().hex
-        bound: dict[str, str] = {}
+        bound = self.system_views = {}
 
-        def bind(m: re.Match) -> str:
-            if not m.group(2):
-                return m.group(0)  # a string literal or a quoted identifier
-            table = m.group(4).lower()
-            name = f"{m.group(2).lower()}.{table}"
-            if name not in SYSTEM_TABLES:
-                return m.group(0)
-            follow = _FOLLOW.match(sql, m.end())
-            if follow and follow.group(1) == ".":
-                return f"`{table}`"
-            view = bound.setdefault(name, f"__ebike_sys_{token}_{len(bound)}")
-            if follow and (follow.group(1) == "`" or follow.group(1).upper() not in _NOT_ALIAS):
-                return view
-            return f"{view} AS `{table}`"
+        def bind(sql: str) -> str:
+            def ref(m: re.Match) -> str:
+                if not m.group(2):
+                    return m.group(0)  # a string literal or a quoted identifier
+                schema, table = m.group(2).lower(), m.group(4).lower()
+                name = f"{schema}.{table}"
+                if name not in SYSTEM_TABLES:
+                    return m.group(0)
+                if _WRITE_TARGET.search(sql, max(0, m.start() - 20), m.start()):
+                    raise access_denied(schema)
+                follow = _FOLLOW.match(sql, m.end())
+                if follow and follow.group(1) == ".":
+                    return f"`{table}`"
+                view = f"__ebike_sys_{token}_{schema}_{table}"
+                if view not in bound:
+                    self.system_table(name, sys_vars).createOrReplaceTempView(view)
+                    bound[view] = name
+                if follow and (follow.group(1) == "`" or follow.group(1).upper() not in _NOT_ALIAS):
+                    return view
+                return f"{view} AS `{table}`"
 
-        text = _SYS_REF.sub(bind, sql)
+            return _SYS_REF.sub(ref, sql)
+
         try:
-            for name, view in bound.items():
-                self.system_table(name, sys_vars).createOrReplaceTempView(view)
-            yield text
+            yield bind
         finally:
-            for view in bound.values():
+            for view in bound:
                 self.spark.catalog.dropTempView(view)
+            self.system_views = {}
 
     def system_table(self, name: str, sys_vars: dict[str, object]) -> DataFrame:
         """System table ``name`` (``schema.table``, lower case) built

@@ -22,7 +22,7 @@ from ebike_spark.engine.catalog import (
     resolve_sql_type,
 )
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
-from ebike_spark.engine.parser import parse_create_table, unquote_ident
+from ebike_spark.engine.parser import map_unquoted, parse_create_table, unquote_ident
 from ebike_spark.engine.session_state import EngineResult
 
 
@@ -87,11 +87,7 @@ class DdlExecMixin:
                 return EngineResult("count", affected=0)
             raise EbikeError(1050, f"Table '{table}' already exists")
         self.spark.catalog.setCurrentDatabase(self.current_db)
-        src = self._fix_select(select_sql)
-        # same invariant as the SELECT path: the hidden rowid must not
-        # become a visible user column of the new table
-        if "rowid" in src.columns and not self._mentions_rowid(select_sql):
-            src = self._drop_hidden_rowid(src)
+        src = self._query(self._translate(select_sql))
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
         commit.bump(self.spark, q)
@@ -134,6 +130,24 @@ class DdlExecMixin:
             self.spark.sql(f"DROP TABLE IF EXISTS {bq(q)}")
             raise
         return res
+
+    def _create_view(self, sql: str) -> EngineResult:
+        """CREATE [OR REPLACE] VIEW (beyond the reference, whose
+        dispatcher 1105s it): the statement, translated, runs in Spark,
+        so the view stores Spark SQL. A view is read after this
+        statement ends, so its SELECT can name neither a variable
+        (MySQL 1351) nor a system table, which is bound only for the
+        statement."""
+        unquoted: list[str] = []
+        map_unquoted(sql, lambda seg: unquoted.append(seg) or seg)
+        if "@" in "".join(unquoted):
+            raise EbikeError(1351, "View's SELECT contains a variable or parameter")
+        text = self._translate(sql)
+        if self.catalog.system_views:
+            raise EbikeError(1105, "Views over system tables are not supported")
+        self.spark.catalog.setCurrentDatabase(self.current_db)
+        self.spark.sql(text)
+        return EngineResult("count", affected=0)
 
     _PROP_CLUSTER = "ebike.cluster."
 
@@ -182,7 +196,7 @@ class DdlExecMixin:
     def _refresh_matview_locked(self, q: str) -> EngineResult:
         stored = self._matview_sql(q)
         self.spark.catalog.setCurrentDatabase(self.current_db)
-        src = self._fix_select(stored)
+        src = self._query(self._translate(stored))
         cur = self.spark.table(q)
         if [f.dataType for f in src.schema.fields] != [
             f.dataType for f in cur.schema.fields

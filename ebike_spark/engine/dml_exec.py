@@ -26,17 +26,14 @@ from ebike_spark.engine.parser import (
     parse_update,
     split_tail_clauses,
     split_top_level,
-    substitute_vars,
     unquote_ident,
 )
-from ebike_spark.engine.session_state import GLOBAL_VARS, EngineResult
+from ebike_spark.engine.session_state import EngineResult
 
 
 class DmlExecMixin:
     def _insert(self, sql: str) -> EngineResult:
-        fixed = self._fix_dml_scalars(
-            substitute_vars(sql, self.sys_vars, self.user_vars, GLOBAL_VARS)
-        )
+        fixed = self._translate(sql)
         # MySQL `INSERT INTO t SET a = 1, b = 'x'` → column-list VALUES
         m = re.match(
             r"\s*(INSERT(?:\s+IGNORE)?|REPLACE)\s+INTO\s+([\w.`\"]+)\s+SET\s+([\s\S]+?)"
@@ -131,9 +128,7 @@ class DmlExecMixin:
                     raise parse_error(f"near ON DUPLICATE KEY UPDATE: {a!r}")
                 on_dup.append((unquote_ident(am.group(1)), am.group(2).strip()))
 
-        # hidden rowids of SOURCE tables never travel (SELECT * from a
-        # rowid table must behave as if the column didn't exist)
-        src = self._drop_hidden_rowid(self._fix_select(select_sql, datetime_fns=False))
+        src = self._query(select_sql)
         props = self.catalog.properties(qualified)
         col_types = self.catalog.column_types(qualified, props)
         listed = [unquote_ident(c) for c in split_top_level(col_list)] if col_list else None
@@ -188,9 +183,7 @@ class DmlExecMixin:
         return tgt
 
     def _update(self, sql: str) -> EngineResult:
-        fixed = self._fix_dml_scalars(
-            substitute_vars(sql, self.sys_vars, self.user_vars, GLOBAL_VARS)
-        )
+        fixed = self._translate(sql)
         # Multi-table form detection must be quote/paren-aware: a SET /
         # JOIN / WHERE inside a string literal or subquery must not
         # split the statement (find_top_level_keywords skips both).
@@ -340,7 +333,7 @@ class DmlExecMixin:
             f"SELECT {rid_exprs}, {val_exprs} FROM {frm}"
             + (f" WHERE {where}" if where else "")
         )
-        src = self._fix_select(sel, datetime_fns=False)
+        src = self._query(sel)
         if len(targets) > 1:
             # snapshot the pre-image join once: every target's
             # post-image write would otherwise recompute it, and a
@@ -439,9 +432,7 @@ class DmlExecMixin:
         return EngineResult("count", affected=total)
 
     def _delete(self, sql: str) -> EngineResult:
-        fixed = self._fix_dml_scalars(
-            substitute_vars(sql, self.sys_vars, self.user_vars, GLOBAL_VARS)
-        )
+        fixed = self._translate(sql)
         m = re.match(
             r"\s*DELETE\s+(?:FROM\s+)?([\w`\"]+)(?:\.\*)?\s+(?:FROM|USING)\s+"
             r"([\s\S]+?)\s*;?\s*$",
@@ -487,7 +478,7 @@ class DmlExecMixin:
             sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
                 f" WHERE {where}" if where else ""
             )
-            doomed = self._fix_select(sel, datetime_fns=False).distinct()
+            doomed = self._query(sel).distinct()
             affected = doomed.count()
             if affected == 0:
                 return EngineResult("count", affected=0)

@@ -15,14 +15,17 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit, dml, show
 from ebike_spark.engine.catalog import Catalog
-from ebike_spark.engine.errors import EbikeError, parse_error, unknown_database, unsupported
+from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unsupported
 from ebike_spark.engine.parser import (
     map_unquoted,
+    rewrite_field_fn,
     rewrite_group_concat,
+    rewrite_mysql_datetime_fns,
     strip_comments,
     substitute_vars,
     unquote_ident,
@@ -37,6 +40,38 @@ from ebike_spark.engine.session_state import (
     EngineResult,
     _Prepared,
 )
+
+# MySQL's database(), LAST_INSERT_ID() and `FROM dual` (the reference
+# injects a 1-row dual MemTable, core_util.rs:463-479)
+_SCALAR_FNS = re.compile(
+    r"\b(?:(database)|(LAST_INSERT_ID))\s*\(\s*\)|\bFROM\s+dual\b", re.I
+)
+_LIMIT_PAIR = re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", re.I)
+_ROWID = re.compile(r"rowid\b", re.I)
+
+
+def _mysql_error(e: Exception, db: str) -> EbikeError | None:
+    """The MySQL error for a failure Spark raised, or None to let it
+    through. An analysis error maps by its error condition. A runtime
+    error carrying the strict-cast guards' marker (dml.guarded_cast_*)
+    is 1366, keyed off the exception class: an analysis error's plan
+    dump can contain the guard expressions and so the marker text."""
+    cond = e.getCondition() if isinstance(e, PySparkException) else None
+    if cond == "TABLE_OR_VIEW_NOT_FOUND":
+        return table_not_exists(e.getMessageParameters()["relationName"].replace("`", ""))
+    if cond == "UNRESOLVED_ROUTINE":
+        name = e.getMessageParameters()["routineName"].replace("`", "")
+        return EbikeError(1305, f"FUNCTION {name if '.' in name else f'{db}.{name}'} does not exist")
+    if isinstance(e, AnalysisException):
+        return None
+    m = re.search(re.escape(dml.BADCAST_MARK) + r"(.*?)" + re.escape(dml.BADCAST_END), str(e), re.S)
+    if m is None:
+        return None
+    return EbikeError(
+        1366,
+        f"Incorrect value for column '{m.group(1)}' "
+        "(out of range or not convertible to the declared type)",
+    )
 
 
 class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
@@ -90,48 +125,19 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         # the statement runs as one commit.statement (an old table
         # version it may read outlives it) on a session that has
         # dropped its cached file listing of every table another
-        # connection changed since this one's last statement
-        with commit.statement():
+        # connection changed since this one's last statement; the
+        # system tables its text names are bound until it ends
+        with commit.statement(), self.catalog.system_tables(self.sys_vars) as self._bind_system:
             commit.sync(self.spark)
-            return self._execute_translated(sql)
-
-    def _execute_translated(self, sql: str) -> EngineResult:
-        try:
-            return self._execute(sql)
-        except EbikeError:
-            raise
-        except Exception as e:
-            # strict-cast guards (dml.guarded_cast_*) raise inside the
-            # JVM with a marker message — translate to MySQL 1366.
-            # Keyed off the exception CLASS, not a message prefix: an
-            # AnalysisException's plan dump also CONTAINS the marker
-            # text (the guard expressions), and matching it would
-            # mistranslate an unresolved-column error into a false
-            # 1366 naming the wrong column — but only analysis-family
-            # errors embed plan dumps, so excluding them (rather than
-            # requiring the [USER_RAISED_EXCEPTION] prefix, which not
-            # every PySpark version's runtime message carries) keeps
-            # the translation robust across versions.
-            from pyspark.errors import AnalysisException
-
-            if isinstance(e, AnalysisException):
+            try:
+                return self._execute(sql)
+            except EbikeError:
                 raise
-            msg = str(e)
-            rm = re.search(
-                re.escape(dml.BADCAST_MARK)
-                + r"(.*?)"
-                + re.escape(dml.BADCAST_END),
-                msg,
-                re.S,
-            )
-            if rm:
-                col = rm.group(1)
-                raise EbikeError(
-                    1366,
-                    f"Incorrect value for column '{col}' "
-                    "(out of range or not convertible to the declared type)",
-                ) from e
-            raise
+            except Exception as e:
+                mysql = _mysql_error(e, self.current_db)
+                if mysql is None:
+                    raise
+                raise mysql from e
 
     def _execute(self, sql: str) -> EngineResult:
         sql = strip_comments(sql).strip().rstrip(";").strip()
@@ -170,7 +176,9 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             return self._create_index(sql)
         if kw == "DROP" and kw2 == "INDEX":
             return self._drop_index(sql)
-        if (kw, kw2) in (("CREATE", "VIEW"), ("CREATE", "OR"), ("DROP", "VIEW")):
+        if (kw, kw2) in (("CREATE", "VIEW"), ("CREATE", "OR")):
+            return self._create_view(sql)
+        if (kw, kw2) == ("DROP", "VIEW"):
             # views — beyond the reference (its dispatcher 1105s them,
             # execution.rs:894-1279); Spark-native passthrough
             self.spark.catalog.setCurrentDatabase(self.current_db)
@@ -244,111 +252,52 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
                 results.append(self.execute(stmt))
         return results
 
-    # ------------------------------------------------------------ SELECT
+    # ------------------------------------------------------------ dialect
 
-    def _fix_dml_scalars(self, sql: str) -> str:
-        """Rewrite session-scalar MySQL functions usable anywhere a value
-        expression is (the canonical idiom is ``INSERT INTO child VALUES
-        (LAST_INSERT_ID(), ...)``), quote-aware so literals pass through.
-        MySQL %-format datetime functions rewrite here too — they appear
-        in DML value expressions as readily as in SELECTs."""
-        from ebike_spark.engine.parser import (
-            map_unquoted,
-            rewrite_mysql_datetime_fns,
-        )
-
-        if re.search(r"\b(?:DATE_FORMAT|STR_TO_DATE)\s*\(", sql, re.I):
-            try:
-                sql = rewrite_mysql_datetime_fns(sql)
-            except ValueError as e:
-                raise parse_error(str(e)) from e
-
-        def fix(seg: str, first: bool, last: bool) -> str:
-            return re.sub(
-                r"\bLAST_INSERT_ID\s*\(\s*\)",
-                str(getattr(self, "last_insert_id", 0)),
-                seg,
-                flags=re.I,
-            )
-
-        return map_unquoted(sql, fix)
-
-    def _fix_select(self, sql: str, datetime_fns: bool = True) -> DataFrame:
-        """A MySQL SELECT text rewritten to Spark SQL and analysed by
-        Spark, with each system table it names (information_schema,
-        mysql, performance_schema) bound to its rows as the catalog
-        and this session's variables stand now (Catalog.system_tables).
-
-        ``datetime_fns=False`` is for callers whose text already went
-        through _fix_dml_scalars: the %-format rewrite is NOT idempotent
-        (a second pass re-reads the emitted java pattern as MySQL
-        %-format — 'yyyy-MM' would re-quote, 'dd%' would raise a
-        spurious dangling-%), so it must run exactly once per text."""
+    def _translate(self, sql: str) -> str:
+        """MySQL text → Spark SQL text, the engine's one dialect pass.
+        Variables become literals; GROUP_CONCAT, the %-format datetime
+        functions, FIELD, database(), LAST_INSERT_ID(), FROM dual,
+        EXPLAIN VERBOSE/ANALYZE and LIMIT offset, count become their
+        Spark forms; each system table named is bound for the statement
+        (Catalog.system_tables). It runs once on each text that enters
+        the engine. Text cut from its output is Spark text and never
+        passes again: the %-format rewrite would re-read a java pattern
+        as a MySQL format."""
         sql = substitute_vars(sql, self.sys_vars, self.user_vars, GLOBAL_VARS)
-        # MySQL GROUP_CONCAT → Spark listagg (quote/paren-aware pass —
-        # the construct spans quoted separators, so it can't run inside
-        # the segment-wise map_unquoted rewrites below)
-        if re.search(r"\bGROUP_CONCAT\s*\(", sql, re.I):
-            try:
-                sql = rewrite_group_concat(sql)
-            except ValueError as e:
-                raise parse_error(str(e)) from e
-        # MySQL %-specifier datetime formats → java patterns (also a
-        # quote-spanning construct: the format lives inside a literal)
-        if datetime_fns and re.search(
-            r"\b(?:DATE_FORMAT|STR_TO_DATE)\s*\(", sql, re.I
-        ):
-            from ebike_spark.engine.parser import rewrite_mysql_datetime_fns
+        try:
+            sql = rewrite_field_fn(rewrite_mysql_datetime_fns(rewrite_group_concat(sql)))
+        except ValueError as e:
+            raise parse_error(str(e)) from e
 
-            try:
-                sql = rewrite_mysql_datetime_fns(sql)
-            except ValueError as e:
-                raise parse_error(str(e)) from e
-        # MySQL FIELD() → array_position emulation (idempotent — the
-        # emitted text contains no FIELD token — so no datetime_fns-
-        # style re-application guard is needed)
-        if re.search(r"\bFIELD\s*\(", sql, re.I):
-            from ebike_spark.engine.parser import rewrite_field_fn
+        def scalar(m: re.Match) -> str:
+            if m.group(1):  # database()
+                return "current_database()"
+            if m.group(2):  # this session's last minted auto id
+                return str(self.last_insert_id)
+            return ""  # Spark needs no FROM for a one-row SELECT
 
-            try:
-                sql = rewrite_field_fn(sql)
-            except ValueError as e:
-                raise parse_error(str(e)) from e
+        # EXPLAIN dialect mapping (reference: explain.rs:41-101 supports
+        # VERBOSE/ANALYZE via DataFusion; Spark spells these differently)
+        sql = re.sub(r"^\s*EXPLAIN\s+VERBOSE\b", "EXPLAIN EXTENDED", sql, flags=re.I)
+        sql = re.sub(r"^\s*EXPLAIN\s+ANALYZE\b", "EXPLAIN COST", sql, flags=re.I)
 
-        # All rewrites run segment-wise OUTSIDE quoted spans so a string
-        # literal containing e.g. "from dual" passes through untouched.
-        def fix(seg: str, first: bool, last: bool) -> str:
-            # MySQL's database() → Spark's current_database()
-            seg = re.sub(r"\bdatabase\s*\(\s*\)", "current_database()", seg, flags=re.I)
-            # MySQL LAST_INSERT_ID() → this session's last minted auto id
-            seg = re.sub(
-                r"\bLAST_INSERT_ID\s*\(\s*\)",
-                str(getattr(self, "last_insert_id", 0)),
-                seg,
-                flags=re.I,
-            )
-            # `FROM dual` → no-FROM (Spark supports SELECT without FROM
-            # natively; the reference injects a 1-row dual MemTable,
-            # core_util.rs:463-479)
-            seg = re.sub(r"\bFROM\s+dual\b", "", seg, flags=re.I)
-            if first:
-                # EXPLAIN dialect mapping (reference: explain.rs:41-101
-                # supports VERBOSE/ANALYZE via DataFusion; Spark spells
-                # these differently)
-                seg = re.sub(r"^\s*EXPLAIN\s+VERBOSE\b", "EXPLAIN EXTENDED", seg, flags=re.I)
-                seg = re.sub(r"^\s*EXPLAIN\s+ANALYZE\b", "EXPLAIN COST", seg, flags=re.I)
-            if last:
-                # MySQL `LIMIT offset, count` → Spark `LIMIT count OFFSET offset`
-                seg = re.sub(
-                    r"\bLIMIT\s+(\d+)\s*,\s*(\d+)(\s*)$",
-                    r"LIMIT \2 OFFSET \1\3",
-                    seg,
-                    flags=re.I,
-                )
-            return seg
+        # Rewrites run segment-wise OUTSIDE quoted spans so a string
+        # literal containing e.g. "from dual" passes through untouched;
+        # MySQL `LIMIT offset, count` is Spark `LIMIT count OFFSET offset`
+        def fix(seg: str) -> str:
+            return _LIMIT_PAIR.sub(r"LIMIT \2 OFFSET \1", _SCALAR_FNS.sub(scalar, seg))
 
-        with self.catalog.system_tables(map_unquoted(sql, fix), self.sys_vars) as text:
-            return self.spark.sql(text)
+        return self._bind_system(map_unquoted(sql, fix))
+
+    def _query(self, text: str) -> DataFrame:
+        """Spark SQL ``text`` (from _translate) analysed by Spark. A
+        query that picked up the hidden rowid without naming it loses
+        that column, so Catalyst prunes it out of the scan."""
+        df = self.spark.sql(text)
+        if "rowid" in df.columns and not self._mentions_rowid(text):
+            df = self._drop_hidden_rowid(df)
+        return df
 
     @staticmethod
     def _mentions_rowid(sql: str) -> bool:
@@ -371,7 +320,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
                     return True  # explicitly projected quoted identifier
                 i = j
                 continue
-            if re.match(r"\browid\b", sql[i:], re.I) and (i == 0 or not re.match(r"[\w$]", sql[i - 1])):
+            if _ROWID.match(sql, i) and (i == 0 or not re.match(r"[\w$]", sql[i - 1])):
                 return True
             i += 1
         return False
@@ -420,25 +369,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
 
     def _select(self, sql: str) -> EngineResult:
         self.spark.catalog.setCurrentDatabase(self.current_db)
-        try:
-            df = self._fix_select(sql)
-            # `SELECT *` (or any projection that picked up the hidden
-            # rowid without naming it) hides row identity; dropping it
-            # here lets Catalyst prune the column out of the scan. A
-            # user-DECLARED rowid column is not hidden — the drop is by
-            # provenance (only attributes originating from a table
-            # carrying the ebike.rowid property).
-            if "rowid" in df.columns and not self._mentions_rowid(sql):
-                df = self._drop_hidden_rowid(df)
-            return EngineResult("rows", df=df)
-        except Exception as ex:  # map missing relations to MySQL 1146
-            # (the reference's table-existence check, core_util.rs:143-221)
-            if "TABLE_OR_VIEW_NOT_FOUND" in str(ex):
-                m = re.search(r"`([\w.]+)`", str(ex))
-                from ebike_spark.engine.errors import table_not_exists
-
-                raise table_not_exists(m.group(1) if m else "?") from ex
-            raise
+        return EngineResult("rows", df=self._query(self._translate(sql)))
 
     # ------------------------------------------------------------ session
 
@@ -502,10 +433,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         if raw.upper() in ("ON", "OFF", "TRUE", "FALSE"):
             return raw.upper()
         # expression (e.g. SET @x = 1 + 2): evaluate via Spark
-        row = self.spark.sql(
-            f"SELECT ({substitute_vars(raw, self.sys_vars, self.user_vars, GLOBAL_VARS)}) AS v"
-        ).first()
-        return row["v"]
+        return self.spark.sql(f"SELECT ({self._translate(raw)}) AS v").first()["v"]
 
     # ------------------------------------------------------------ SHOW
 

@@ -29,6 +29,10 @@ def table_not_exists(name: str) -> EbikeError:
     return EbikeError(1146, f"Table '{name}' doesn't exist")
 
 
+def access_denied(db: str) -> EbikeError:
+    return EbikeError(1044, f"Access denied for user 'root'@'%' to database '{db}'")
+
+
 def unknown_database(name: str) -> EbikeError:
     return EbikeError(1049, f"Unknown database '{name}'")
 

@@ -179,33 +179,20 @@ def sql_literal(v: object) -> str:
 
 
 def map_unquoted(sql: str, fn) -> str:
-    """Apply ``fn(segment, is_first, is_last)`` to each maximal run of
-    text outside string/identifier quotes; quoted spans pass through
-    untouched. This is the safe substrate for regex rewrites (FROM dual,
-    LIMIT off,cnt, database()) that must never fire inside literals."""
-    pieces: list[tuple[bool, str]] = []  # (quoted?, text)
-    i, n = 0, len(sql)
-    buf: list[str] = []
-    while i < n:
+    """Apply ``fn(segment)`` to each run of text outside string and
+    identifier quotes; quoted spans pass through untouched. This is the
+    safe substrate for regex rewrites (FROM dual, LIMIT off,cnt,
+    database()) that must never fire inside literals."""
+    out: list[str] = []
+    i = start = 0
+    while i < len(sql):
         if sql[i] in "'\"`":
-            if buf:
-                pieces.append((False, "".join(buf)))
-                buf = []
             j = _skip_quoted(sql, i)
-            pieces.append((True, sql[i:j]))
-            i = j
+            out += [fn(sql[start:i]), sql[i:j]]
+            i = start = j
         else:
-            buf.append(sql[i])
             i += 1
-    if buf:
-        pieces.append((False, "".join(buf)))
-    unq_idx = [k for k, (q, _) in enumerate(pieces) if not q]
-    out = []
-    for k, (q, text) in enumerate(pieces):
-        if q:
-            out.append(text)
-        else:
-            out.append(fn(text, k == (unq_idx[0] if unq_idx else -1), k == (unq_idx[-1] if unq_idx else -1)))
+    out.append(fn(sql[start:]))
     return "".join(out)
 
 
@@ -241,6 +228,8 @@ def rewrite_group_concat(sql: str) -> str:
     DISTINCT with a WITHIN GROUP key other than the expr itself errors —
     same statements MySQL itself warns on and reorders."""
     pat = re.compile(r"\bGROUP_CONCAT\s*\(", re.I)
+    if not pat.search(sql):
+        return sql
     out, i = [], 0
     while True:
         # scan for the next unquoted GROUP_CONCAT(

@@ -2078,8 +2078,9 @@ def test_datetime_rewrite_once_in_insert_select_and_join_dml(eng):
     eng.execute("CREATE TABLE dt1 (id INT, s CHAR)")
     eng.execute("CREATE TABLE dt2 (id INT, d CHAR)")
     eng.execute("INSERT INTO dt2 VALUES (1, '2024-03-09 17:05:09')")
-    # INSERT...SELECT goes through _fix_dml_scalars AND _fix_select —
-    # the rewrite must not double-apply ('%d%%' would raise dangling-%)
+    # INSERT...SELECT is translated as one statement and its SELECT is
+    # cut from that text — the rewrite must not double-apply ('%d%%'
+    # would raise dangling-%)
     eng.execute(
         "INSERT INTO dt1 SELECT id, DATE_FORMAT(d, '%Y-%m %d%%') FROM dt2"
     )
@@ -2923,3 +2924,223 @@ def test_insert_sources_agree(eng, tmp_path, verb, on_dup, batch, sources, expec
         last_id = eng.execute("SELECT LAST_INSERT_ID() AS v").rows()[0]["v"]
         outcomes[source] = (result, rows, last_id)
     assert outcomes == {s: expected for s in sources}
+
+
+# MySQL constructs the engine translates, each with the value it has in
+# the dialect_eng fixture's session (LAST_INSERT_ID() is 3 there);
+# {db} is the fixture's database
+DIALECT_CONSTRUCTS = [
+    ("last_insert_id", "LAST_INSERT_ID()", "3"),
+    ("database", "database()", None),  # None: the fixture's database
+    ("field", "FIELD('b', 'a', 'b', 'c')", "2"),
+    ("group_concat", "(SELECT GROUP_CONCAT(s ORDER BY s SEPARATOR '-') FROM src)", "p-q"),
+    ("date_format", "DATE_FORMAT(DATE '2024-03-09', '%Y-%m')", "2024-03"),
+    ("user_var", "@uv", "u-v"),
+    ("sys_var", "@@max_allowed_packet", "67108864"),
+    (
+        "system_table",
+        "(SELECT COUNT(*) FROM information_schema.tables "
+        "WHERE table_schema = '{db}' AND table_name = 'src')",
+        "1",
+    ),
+]
+
+
+@pytest.fixture(scope="module")
+def dialect_eng(spark):
+    e = Engine(spark)
+    db = f"t_{uuid.uuid4().hex[:10]}"
+    e.execute(f"CREATE DATABASE {db}")
+    e.execute(f"USE {db}")
+    e.execute("CREATE TABLE src (id INT, s CHAR)")
+    e.execute("INSERT INTO src VALUES (1, 'q'), (2, 'p')")
+    e.execute("CREATE TABLE ai (id INT NOT NULL AUTO_INCREMENT, s CHAR, PRIMARY KEY (id))")
+    e.execute("INSERT INTO ai (s) VALUES ('a'), ('b')")
+    e.execute("INSERT INTO ai (s) VALUES ('c')")
+    e.execute("CREATE TABLE dst (id INT NOT NULL, val CHAR, hit INT, PRIMARY KEY (id))")
+    e.execute("SET @uv = 'u-v'")
+    yield e
+    e.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+def _val(eng, sql):
+    return str(eng.execute(sql).rows()[0][0])
+
+
+def _stored(eng, k):
+    return _val(eng, f"SELECT val FROM dst WHERE id = {k}")
+
+
+def _matched(eng, k, c, want, verb):
+    """The seeded values of the rows a WHERE holding ``c`` matched."""
+    eng.execute(f"INSERT INTO dst (id, val) VALUES ({k}, '{want}'), ({k + 1}, 'other')")
+    where = f"id IN ({k}, {k + 1}) AND val = CAST({c} AS STRING)"
+    if verb == "UPDATE":
+        eng.execute(f"UPDATE dst SET hit = 1 WHERE {where}")
+        rows = eng.execute(f"SELECT val FROM dst WHERE id IN ({k}, {k + 1}) AND hit = 1").rows()
+        return ",".join(sorted(r["val"] for r in rows))
+    eng.execute(f"DELETE FROM dst WHERE {where}")
+    left = {r["val"] for r in eng.execute(f"SELECT val FROM dst WHERE id IN ({k}, {k + 1})").rows()}
+    return ",".join(sorted({want, "other"} - left))
+
+
+def _in_set(eng, k, c, want):
+    eng.execute(f"SET @got = {c}")
+    return _val(eng, "SELECT @got")
+
+
+def _in_values(eng, k, c, want):
+    eng.execute(f"INSERT INTO dst (id, val) VALUES ({k}, {c})")
+    return _stored(eng, k)
+
+
+def _in_update_set(eng, k, c, want):
+    eng.execute(f"INSERT INTO dst (id, val) VALUES ({k}, 'old')")
+    eng.execute(f"UPDATE dst SET val = {c} WHERE id = {k}")
+    return _stored(eng, k)
+
+
+def _in_insert_select(eng, k, c, want):
+    eng.execute(f"INSERT INTO dst (id, val) SELECT {k}, {c}")
+    return _stored(eng, k)
+
+
+def _in_ctas(eng, k, c, want):
+    eng.execute(f"CREATE TABLE ct{k} AS SELECT {c} AS v")
+    return _val(eng, f"SELECT v FROM ct{k}")
+
+
+def _in_multi_update(eng, k, c, want):
+    eng.execute(f"INSERT INTO dst (id, val) VALUES ({k}, 'old')")
+    eng.execute(f"UPDATE dst JOIN src ON dst.id = {k} AND src.id = 1 SET dst.val = {c}")
+    return _stored(eng, k)
+
+
+DIALECT_POSITIONS = {
+    "select": lambda eng, k, c, want: _val(eng, f"SELECT {c} AS v"),
+    "set": _in_set,
+    "insert_values": _in_values,
+    "update_set": _in_update_set,
+    "update_where": lambda eng, k, c, want: _matched(eng, k, c, want, "UPDATE"),
+    "delete_where": lambda eng, k, c, want: _matched(eng, k, c, want, "DELETE"),
+    "insert_select": _in_insert_select,
+    "ctas": _in_ctas,
+    "multi_table_update": _in_multi_update,
+}
+
+
+@pytest.mark.parametrize("position", list(DIALECT_POSITIONS))
+def test_dialect_matrix(dialect_eng, position):
+    """Every translated MySQL construct means the same in every place a
+    statement can hold it: the value stored, returned or matched equals
+    the construct's value in a plain SELECT."""
+    eng = dialect_eng
+    pos = list(DIALECT_POSITIONS).index(position)
+    wrong = {}
+    for j, (name, construct, want) in enumerate(DIALECT_CONSTRUCTS):
+        want = want or eng.current_db
+        construct = construct.format(db=eng.current_db)
+        try:
+            got = DIALECT_POSITIONS[position](eng, 1000 * pos + 10 * j, construct, want)
+        except Exception as e:  # noqa: BLE001 — reported per construct
+            got = f"{type(e).__name__}: {str(e).splitlines()[0][:200]}"
+        if got != want:
+            wrong[name] = got
+    assert wrong == {}
+
+
+@pytest.mark.parametrize(
+    "sql, code, message",
+    [
+        ("UPDATE ec SET a = 1 WHERE 1 = (SELECT COUNT(*) FROM nosuch)", 1146, "Table 'nosuch' doesn't exist"),
+        ("SET @x = (SELECT a FROM nosuch)", 1146, "Table 'nosuch' doesn't exist"),
+        ("SELECT nosuchfn(1)", 1305, "FUNCTION {db}.nosuchfn does not exist"),
+        ("UPDATE ec SET a = nosuchfn(a)", 1305, "FUNCTION {db}.nosuchfn does not exist"),
+    ],
+)
+def test_spark_error_conditions_map_to_mysql_codes(eng, sql, code, message):
+    """A missing table or function is the same MySQL error in every
+    statement, mapped from Spark's error condition."""
+    eng.execute("CREATE TABLE ec (a INT)")
+    eng.execute("INSERT INTO ec VALUES (1)")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(sql)
+    assert (ei.value.code, ei.value.message) == (code, message.format(db=eng.current_db))
+    assert eng.execute("SELECT a FROM ec").rows()[0]["a"] == 1
+
+
+def test_refresh_drops_the_hidden_rowid_like_create(eng):
+    """CREATE MATERIALIZED VIEW and REFRESH read the same query the same
+    way: the hidden rowid of a PRIMARY KEY table stays out of both."""
+    eng.execute("CREATE TABLE rk (id INT NOT NULL, a INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO rk VALUES (1, 10), (2, 20)")
+    eng.execute("CREATE MATERIALIZED VIEW mv AS SELECT * FROM rk")
+    cols = eng.execute("SELECT * FROM mv").df.columns
+    eng.execute("INSERT INTO rk VALUES (3, 30)")
+    assert eng.execute("REFRESH MATERIALIZED VIEW mv").affected == 3
+    assert eng.execute("SELECT * FROM mv").df.columns == cols == ["id", "a"]
+    assert eng.execute("SELECT SUM(a) AS n FROM mv").rows()[0]["n"] == 60
+
+
+def test_insert_select_keeps_a_named_rowid(eng):
+    """INSERT … SELECT keeps the hidden rowid when the SELECT names it,
+    as the same SELECT on its own does."""
+    eng.execute("CREATE TABLE rk (id INT NOT NULL, a INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO rk VALUES (1, 10), (2, 20)")
+    eng.execute("CREATE TABLE rk2 (r CHAR, a INT)")
+    assert eng.execute("INSERT INTO rk2 (r, a) SELECT rowid, a FROM rk").affected == 2
+    want = {(r["rowid"], r["a"]) for r in eng.execute("SELECT rowid, a FROM rk").rows()}
+    assert {(r["r"], r["a"]) for r in eng.execute("SELECT r, a FROM rk2").rows()} == want
+    assert all(r for r, _ in want)
+
+
+def test_create_view_goes_through_the_translation(eng):
+    """A view body is MySQL text like any other; what a view cannot
+    hold past its statement — a variable, a system table — is refused
+    with a MySQL error and no view is made."""
+    eng.execute("CREATE TABLE vt (id INT, s CHAR, d DATE)")
+    eng.execute("INSERT INTO vt VALUES (1, 'b', DATE '2024-03-09'), (2, 'a', DATE '2024-04-01')")
+    eng.execute(
+        "CREATE VIEW vv AS SELECT GROUP_CONCAT(s ORDER BY s SEPARATOR '-') AS g, "
+        "MAX(FIELD(s, 'a', 'b')) AS f, MAX(DATE_FORMAT(d, '%Y-%m')) AS m FROM vt"
+    )
+    row = eng.execute("SELECT * FROM vv").rows()[0]
+    assert (row["g"], row["f"], row["m"]) == ("a-b", 2, "2024-04")
+    eng.execute("CREATE OR REPLACE VIEW vat AS SELECT 'a@b' AS v")
+    assert eng.execute("SELECT v FROM vat").rows()[0]["v"] == "a@b"
+    eng.execute("SET @x = 1")
+    for sql in ("CREATE VIEW v1 AS SELECT @x AS v", "CREATE VIEW v2 AS SELECT @@version AS v"):
+        with pytest.raises(EbikeError) as ei:
+            eng.execute(sql)
+        assert (ei.value.code, ei.value.message) == (
+            1351, "View's SELECT contains a variable or parameter"
+        )
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("CREATE VIEW v3 AS SELECT COUNT(*) AS n FROM information_schema.tables")
+    assert (ei.value.code, ei.value.message) == (1105, "Views over system tables are not supported")
+    names = {r[0] for r in eng.execute("SHOW TABLES").rows()}
+    assert names == {"vt", "vv", "vat"}
+
+
+@pytest.mark.parametrize(
+    "sql, schema",
+    [
+        ("INSERT INTO information_schema.tables (table_name) VALUES ('x')", "information_schema"),
+        ("REPLACE INTO mysql.users VALUES ('%', 'x', 'y', 'N')", "mysql"),
+        ("UPDATE mysql.users SET plugin = 'x'", "mysql"),
+        ("DELETE FROM performance_schema.global_variables", "performance_schema"),
+        (
+            "UPDATE sw JOIN information_schema.tables i ON i.table_name = sw.s "
+            "SET i.engine = 'x'",
+            "information_schema",
+        ),
+    ],
+)
+def test_write_to_a_system_table_is_1044(eng, sql, schema):
+    eng.execute("CREATE TABLE sw (s CHAR)")
+    eng.execute("INSERT INTO sw VALUES ('sw')")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(sql)
+    assert (ei.value.code, ei.value.message) == (
+        1044, f"Access denied for user 'root'@'%' to database '{schema}'"
+    )
