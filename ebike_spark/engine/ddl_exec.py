@@ -38,7 +38,11 @@ class DdlExecMixin:
         m = re.match(r"DROP\s+(?:DATABASE|SCHEMA)\s+(IF\s+EXISTS\s+)?([\w`\"]+)\s*$", sql, re.I)
         if not m:
             raise parse_error("near DROP DATABASE")
-        self.catalog.drop_database(unquote_ident(m.group(2)), bool(m.group(1)))
+        name = unquote_ident(m.group(2))
+        self.catalog.drop_database(name, bool(m.group(1)))
+        if name.lower() == self.current_db.lower():
+            # MySQL leaves no database selected; here that is the default
+            self.current_db = "default"
         return EngineResult("count", affected=0)
 
     def _create_table(self, sql: str) -> EngineResult:
@@ -86,7 +90,6 @@ class DdlExecMixin:
             if if_not_exists:
                 return EngineResult("count", affected=0)
             raise EbikeError(1050, f"Table '{table}' already exists")
-        self.spark.catalog.setCurrentDatabase(self.current_db)
         src = self._query(self._translate(select_sql))
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
@@ -145,7 +148,6 @@ class DdlExecMixin:
         text = self._translate(sql)
         if self.catalog.system_views:
             raise EbikeError(1105, "Views over system tables are not supported")
-        self.spark.catalog.setCurrentDatabase(self.current_db)
         self.spark.sql(text)
         return EngineResult("count", affected=0)
 
@@ -195,7 +197,6 @@ class DdlExecMixin:
 
     def _refresh_matview_locked(self, q: str) -> EngineResult:
         stored = self._matview_sql(q)
-        self.spark.catalog.setCurrentDatabase(self.current_db)
         src = self._query(self._translate(stored))
         cur = self.spark.table(q)
         if [f.dataType for f in src.schema.fields] != [
@@ -609,7 +610,7 @@ class DdlExecMixin:
         precision: int | None = None,
         scale: int | None = None,
     ) -> None:
-        """ALTER TABLE MODIFY/CHANGE COLUMN: retype (strict-mode cast —
+        """ALTER TABLE MODIFY/CHANGE COLUMN: retype (dml.strict_cast_sql —
         a non-NULL value that doesn't convert is 1366, as MySQL strict),
         optionally rename; parquet v1 can't retype in place, so the next
         version holds the converted rows. Key/cluster/auto-increment
@@ -627,30 +628,10 @@ class DdlExecMixin:
             raise EbikeError(1060, f"Duplicate column name '{new}'")
         if st.props.get(PROP_AUTO_INCREMENT) == old and spark_t != "BIGINT":
             raise EbikeError(1063, f"Incorrect column specifier for column '{old}'")
-        src = F.col(old)
-        if spark_t == "BIGINT":
-            # MySQL ROUNDS fractional→int; a bare cast truncates. The
-            # shared helper routes through double only for fractional
-            # values, so big exact integers keep full precision.
-            cast = dml._rounding_bigint_cast_col(src)
-        else:
-            cast = src.cast(spark_t.lower())
-        bad_pred = src.isNotNull() & cast.isNull()
-        if spark_t == "BIGINT":
-            # the non-ANSI double→long cast SATURATES at Long.Max
-            # instead of nulling — out-of-range magnitudes must raise
-            # 1366 here too, never silently store Long.Max (review r9)
-            dbl = src.cast("double")
-            bad_pred = bad_pred | (
-                dbl.isNotNull() & (F.abs(dbl) > F.expr(dml._LONG_MAX_D))
-            )
-        bad = t.where(bad_pred).count()
-        if bad:
-            raise EbikeError(
-                1366, f"Incorrect {sql_type.lower()} value for column '{old}' ({bad} rows)"
-            )
-        if not_null and t.where(src.isNull()).count():
+        if not_null and t.where(F.col(old).isNull()).count():
             raise EbikeError(1138, f"Invalid use of NULL value for column '{old}'")
+        # a value that does not convert raises 1366 from the commit's write
+        cast = F.expr(dml.strict_cast_sql(f"`{old}`", spark_t, old))
         st.df = t.select(*[cast.alias(new) if c == old else F.col(c) for c in t.columns])
         st.rewrite = True
         pk_cols = [c for c in st.props.get(PROP_PK, "").split(",") if c]

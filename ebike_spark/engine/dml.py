@@ -1,17 +1,24 @@
 """DML on managed parquet tables.
 
+Every value a statement writes goes through one strict cast,
+:func:`strict_cast_sql`: MySQL strict mode as SQL text over a column
+bound once (round fractions into BIGINT, refuse BIGINT saturation,
+raise 1366 instead of storing a silent NULL). INSERT … VALUES, INSERT …
+SELECT, LOAD DATA, UPDATE, ON DUPLICATE KEY UPDATE, the multi-table
+UPDATE and ALTER MODIFY/CHANGE all call it.
+
 Every INSERT ends in one landing function, :func:`land`, whatever its
 row source. Each source first resolves its target column list with
 :func:`target_columns` (1054 for an unknown column, 1110 for a
 repeated one) and types its rows to the table's declared columns:
 
-- INSERT … VALUES: :func:`_values_df` evaluates the rows in SQL text,
-  as one inline table when every cell is a plain literal (a mysqldump
-  extended INSERT: Catalyst folds it into a LocalRelation, so
-  collecting it runs no job), else as one SELECT per row, UNION ALL-ed
-  (expressions, earlier-column references, RAND()).
+- INSERT … VALUES: :func:`_values_df` casts each cell, as one inline
+  table when every cell is a plain literal (a mysqldump extended
+  INSERT: Catalyst folds it into a LocalRelation, so collecting it
+  runs no job), else as one SELECT per row, UNION ALL-ed (expressions,
+  earlier-column references, RAND()).
 - INSERT … SELECT and LOAD DATA: :func:`typed_frame` casts the source
-  frame's columns positionally with the strict Column-API cast.
+  frame's columns by position.
 
 :func:`land` then mints AUTO_INCREMENT, runs the REPLACE / IGNORE /
 ON DUPLICATE KEY UPDATE / plain dispatch with its constraint checks,
@@ -22,11 +29,12 @@ only. :func:`duplicate_key_probe` is the one in-frame duplicate check;
 UPDATE, ALTER and CHECK TABLE share it. NULL into a NOT NULL column is
 MySQL error 1048.
 
-UPDATE computes when(cond, new, old) per assigned column in one pass.
-DELETE counts the matching rows per data file in one probe job: files
-in which every row matches are dropped, untouched files carry over as
-hard links, and only partly matching files are rewritten. Both commit
-through engine/commit.py.
+UPDATE and ON DUPLICATE KEY UPDATE bind each assignment once
+(:func:`assign`) and compute when(matched, new, old) per assigned
+column in one pass. DELETE counts the matching rows per data file in
+one probe job: files in which every row matches are dropped, untouched
+files carry over as hard links, and only partly matching files are
+rewritten. Both commit through engine/commit.py.
 """
 
 from __future__ import annotations
@@ -56,8 +64,8 @@ _IGNORE_REPLAY_CAP = 100_000
 _MINTED = "__minted"
 
 
-# Marker embedded in raise_error messages by the strict-cast guards
-# below; Engine.execute translates it to MySQL 1366. A plain-text
+# Marker embedded in the error strict_cast_sql raises;
+# Engine.execute translates it to MySQL 1366. A plain-text
 # channel because the error crosses the JVM boundary as a generic
 # SparkRuntimeException. The column name is SENTINEL-TERMINATED so
 # names with non-word characters (backtick-quoted identifiers) survive
@@ -104,26 +112,15 @@ def rounding_bigint_cast_sql(raw_ref: str) -> str:
     )
 
 
-def _rounding_bigint_cast_col(raw_expr):
-    """Column-API twin of rounding_bigint_cast_sql."""
-    dbl = raw_expr.cast("double")
-    direct = raw_expr.cast("bigint")
-    fractional = (
-        dbl.isNotNull()
-        & (F.abs(dbl) < F.expr(_LONG_MAX_D))
-        & (direct.isNull() | (dbl != direct.cast("double")))
-    )
-    return F.when(fractional, F.round(dbl, 0).cast("bigint")).otherwise(direct)
-
-
-def _mysql_coerce_numeric(raw_col, target: str):
-    """MySQL legacy (non-strict) numeric coercion — the LOAD DATA
-    IGNORE storage rule: exact/roundable values store via the normal
-    strict-path cast; anything that path cannot convert falls back to
-    the LEADING NUMERIC PREFIX of the text ('12abc' → 12, 'junk' and
-    '' → 0), and out-of-range magnitudes CLAMP to the type range (the
+def _mysql_coerce_numeric(ref: str, target: str):
+    """MySQL legacy (non-strict) numeric coercion of the column named
+    ``ref`` — the LOAD DATA IGNORE storage rule: exact/roundable values
+    store via the strict path's cast; anything that cast cannot convert
+    falls back to the LEADING NUMERIC PREFIX of the text ('12abc' → 12,
+    'junk' and '' → 0), and out-of-range magnitudes CLAMP to the type range (the
     non-ANSI double→long cast's saturation is exactly MySQL's clamp).
     NULL input stays NULL (a missing CSV field is not a bad value)."""
+    raw_col = F.col(ref)
     prefix = F.regexp_extract(
         raw_col.cast("string"),
         r"^[ \t]*[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?",
@@ -134,7 +131,7 @@ def _mysql_coerce_numeric(raw_col, target: str):
     ).otherwise(prefix.cast("double"))
     dbl_max = F.lit(1.7976931348623157e308)
     if target == "BIGINT":
-        exact = _rounding_bigint_cast_col(raw_col)
+        exact = F.expr(rounding_bigint_cast_sql(f"`{ref}`"))
         # DECIMAL-exact prefix handling FIRST ('10000000000000001.xyz'
         # must keep all 17 digits, and '12.9abc' must round to 13 —
         # MySQL's insert coercion parses
@@ -184,48 +181,27 @@ def badcast_msg(col: str) -> str:
     return f"{BADCAST_MARK}{col}{BADCAST_END}"
 
 
-def strict_case_sql(raw_ref: str, cast_ref: str, spark_type: str, col: str) -> str:
-    """SQL-text strict cast: a non-NULL value whose CAST to the
-    declared type comes back NULL (unparseable string, DECIMAL
-    overflow) — or whose magnitude saturates a BIGINT instead of
-    nulling — RAISES instead of silently storing a wrong value: MySQL
-    strict mode (1264/1366), not its legacy zero-coercion. The guard
-    costs no extra Spark job: it fires inside whichever action first
-    evaluates the rows. ``raw_ref`` must be a cheap/deterministic
-    reference (a column/alias name — _values_df binds each VALUES
-    expression once in a per-row subquery for exactly this reason) and
-    ``cast_ref`` a reference to its already-computed CAST to
-    ``spark_type``."""
-    bad = f"({raw_ref} IS NOT NULL AND {cast_ref} IS NULL)"
+def strict_cast_sql(ref: str, spark_type: str, col: str) -> str:
+    """The strict cast of ``ref`` to a column's declared type, as SQL
+    text: the one definition every write path uses (INSERT … VALUES,
+    INSERT … SELECT, LOAD DATA, UPDATE, ON DUPLICATE KEY UPDATE, the
+    multi-table UPDATE and ALTER MODIFY/CHANGE). MySQL strict mode: a
+    non-NULL value whose cast comes back NULL (unparseable string,
+    DECIMAL overflow), or whose magnitude saturates a BIGINT, raises
+    1366 (``badcast_msg(col)``) instead of storing a wrong value;
+    BIGINT targets round (rounding_bigint_cast_sql). The guard costs no
+    extra Spark job: it fires inside whichever action first evaluates
+    the rows. ``ref`` is named several times, so it must be a column or
+    alias bound once: a RAND() is then drawn once, checked and stored
+    from the same draw."""
     if spark_type.upper() == "BIGINT":  # column_types reports lowercase
-        bad += (
-            f" OR (CAST({raw_ref} AS DOUBLE) IS NOT NULL"
-            f" AND ABS(CAST({raw_ref} AS DOUBLE)) > {_LONG_MAX_D})"
-        )
-    msg = badcast_msg(col).replace("'", "''")  # keep the literal intact
-    return (
-        f"CASE WHEN {bad} "
-        f"THEN CAST(raise_error('{msg}') AS {spark_type}) "
-        f"ELSE {cast_ref} END"
-    )
-
-
-def guarded_cast_col(raw_expr, spark_type: str, col: str):
-    """Column-API twin of strict_case_sql (UPDATE/upsert assignments).
-    Integer targets take the MySQL rounding cast (2.7 → 3), see
-    rounding_bigint_cast_sql."""
-    if spark_type.upper() == "BIGINT":
-        cast = _rounding_bigint_cast_col(raw_expr)
+        cast = rounding_bigint_cast_sql(ref)
+        bad = f"({ref} IS NOT NULL AND ({cast}) IS NULL) OR ABS(CAST({ref} AS DOUBLE)) > {_LONG_MAX_D}"
     else:
-        cast = raw_expr.cast(spark_type)
-    bad = raw_expr.isNotNull() & cast.isNull()
-    if spark_type.upper() == "BIGINT":
-        dbl = raw_expr.cast("double")
-        bad = bad | (dbl.isNotNull() & (F.abs(dbl) > F.expr(_LONG_MAX_D)))
-    return F.when(
-        bad,
-        F.raise_error(F.lit(badcast_msg(col))).cast(spark_type),
-    ).otherwise(cast)
+        cast = f"CAST({ref} AS {spark_type})"
+        bad = f"{ref} IS NOT NULL AND {cast} IS NULL"
+    msg = badcast_msg(col).replace("'", "''")  # keep the literal intact
+    return f"CASE WHEN {bad} THEN CAST(raise_error('{msg}') AS {spark_type}) ELSE {cast} END"
 
 
 # A VALUES cell the inline-table form takes: exactly one plain literal
@@ -295,17 +271,6 @@ def _inline_ok(rows: list[list[str]], target: list[str], types: dict[str, str]) 
     return True
 
 
-def _cast_sql(raw_ref: str, name: str, typ: str) -> str:
-    """The declared-type cast of one VALUES value, aliased to its
-    column (integer targets take the MySQL rounding cast)."""
-    cast = (
-        rounding_bigint_cast_sql(raw_ref)
-        if typ.upper() == "BIGINT"
-        else f"CAST({raw_ref} AS {typ})"
-    )
-    return f"{cast} AS `{name}`"
-
-
 def target_columns(listed: list[str] | None, col_types: list[tuple[str, str]]) -> list[str]:
     """An INSERT's target column list: ``listed``, or every column in
     declared order. 1054 for a column the table lacks, 1110 for a
@@ -325,9 +290,8 @@ def typed_frame(
     src: DataFrame, target: list[str], col_types: list[tuple[str, str]], coerce: bool = False
 ) -> DataFrame:
     """A data-sized row source (INSERT … SELECT, LOAD DATA) typed to the
-    table's columns: the i-th source column feeds the i-th ``target``
-    column through the strict cast (guarded_cast_col: 1366 on a value
-    that does not convert, MySQL integer rounding), and every other
+    table's columns: the i-th source column, renamed ``_c<i>``, feeds
+    the i-th ``target`` column through strict_cast_sql, and every other
     column is a typed NULL. ``coerce`` is LOAD DATA IGNORE, where MySQL
     stores the closest value instead of failing: the numeric family
     takes _mysql_coerce_numeric, and other types a plain cast, NULL on
@@ -339,12 +303,12 @@ def typed_frame(
     def cast(name: str, typ: str):
         if name not in pos:
             return F.lit(None).cast(typ)
-        raw = F.col(f"_c{pos[name]}")
+        ref = f"_c{pos[name]}"
         if not coerce:
-            return guarded_cast_col(raw, typ, name)
+            return F.expr(strict_cast_sql(f"`{ref}`", typ, name))
         if typ.upper() in ("BIGINT", "DOUBLE"):
-            return _mysql_coerce_numeric(raw, typ.upper())
-        return raw.cast(typ)
+            return _mysql_coerce_numeric(ref, typ.upper())
+        return F.col(ref).cast(typ)
 
     # positional names: a SELECT may repeat a column name
     src = src.toDF(*[f"_c{i}" for i in range(len(target))])
@@ -352,16 +316,15 @@ def typed_frame(
 
 
 def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]]) -> DataFrame:
-    """Evaluate VALUES rows to the table's declared types; every cast
-    is strict (strict_case_sql: 1366 on a value that does not convert).
-    Two forms, one plan shape each:
+    """Evaluate VALUES rows to the table's declared types, each value
+    through strict_cast_sql. Two forms, one plan shape each:
 
     - all cells plain literals (_inline_ok): ONE inline table,
-      ``SELECT <strict> FROM (SELECT <casts> FROM VALUES (…),(…))``.
-      Catalyst resolves it to a LocalRelation and folds both
-      projections into it while optimising, so collecting it runs no
-      Spark job, a bad cast raises right there, and writing it is one
-      partition — one file — at any batch size.
+      ``SELECT <strict casts> FROM VALUES (…),(…)``. Catalyst resolves
+      it to a LocalRelation and folds the projection into it while
+      optimising, so collecting it runs no Spark job, a bad cast raises
+      right there, and writing it is one partition — one file — at any
+      batch size.
     - otherwise one ``SELECT`` per row, ``UNION ALL``-ed: cells may be
       constant expressions, reference earlier columns (``VALUES (1,
       a + 1)``) or draw RAND(). Plan size grows with the row count;
@@ -373,65 +336,38 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
         raise EbikeError(1136, "Column count doesn't match value count")
     if _inline_ok(ins.rows, target, types):
         # positional aliases: the i-th VALUES column is `__r_i`
-        raw = {name: f"`__r_{target.index(name)}`" for name in target}
-        inner = list(raw.values()) + [
-            _cast_sql(raw[name], name, types[name])
-            if name in raw
+        cols = [
+            f"{strict_cast_sql(f'`__r_{target.index(name)}`', types[name], name)} AS `{name}`"
+            if name in target
             else f"CAST(NULL AS {types[name]}) AS `{name}`"
-            for name in names
-        ]
-        outer = [
-            strict_case_sql(raw[name], f"`{name}`", types[name], name) + f" AS `{name}`"
-            if name in raw
-            else f"`{name}`"
             for name in names
         ]
         values = ", ".join(f"({', '.join(row)})" for row in ins.rows)
         aliases = ", ".join(f"`__r_{i}`" for i in range(len(target)))
-        return spark.sql(
-            f"SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)} "
-            f"FROM VALUES {values} AS __v({aliases}))"
-        )
+        return spark.sql(f"SELECT {', '.join(cols)} FROM VALUES {values} AS __v({aliases})")
+    typed = ", ".join(f"`{name}`" for name in names)
     selects = []
     for row in ins.rows:
-        # Non-target columns bind FIRST in the inner list: a VALUES
-        # expression may reference one (MySQL resolves it to the
-        # column default — NULL here) via lateral alias REGARDLESS of
-        # declaration order, because MySQL never assigns non-target
-        # columns during row evaluation. Lateral column aliases
-        # resolve left-to-right, so fronting them makes `INSERT INTO
-        # t (a) VALUES (b)` work even when b is declared after a.
-        inner = [
-            f"CAST(NULL AS {types[name]}) AS `{name}`"
-            for name in names
-            if name not in target
-        ]
-        outer = []
+        # Non-target columns bind FIRST: a VALUES expression may
+        # reference one (MySQL resolves it to the column default — NULL
+        # here) via lateral alias REGARDLESS of declaration order,
+        # because MySQL never assigns non-target columns during row
+        # evaluation. Lateral column aliases resolve left-to-right, so
+        # fronting them makes `INSERT INTO t (a) VALUES (b)` work even
+        # when b is declared after a.
+        cols = [f"CAST(NULL AS {types[name]}) AS `{name}`" for name in names if name not in target]
         for name in names:
             if name in target:
-                # Bind the expression ONCE per row (subquery aliases):
-                # the strict guard references columns, so a
-                # non-deterministic value (RAND()) is checked and
-                # stored from the SAME draw, and bulk mysqldump
-                # INSERTs don't triple their statement text. The CAST
-                # lands in the inner list under the COLUMN name so
-                # MySQL's earlier-column references in a value list
-                # (`VALUES (1, a + 1)`) keep resolving — Spark lateral
-                # column aliases see it, exactly like the pre-subquery
-                # single-SELECT form did.
-                inner.append(f"({row[target.index(name)]}) AS `__r_{name}`")
-                inner.append(_cast_sql(f"`__r_{name}`", name, types[name]))
-                outer.append(
-                    strict_case_sql(
-                        f"`__r_{name}`", f"`{name}`", types[name], name
-                    )
-                    + f" AS `{name}`"
-                )
-            else:
-                outer.append(f"`{name}`")
-        selects.append(
-            f"SELECT {', '.join(outer)} FROM (SELECT {', '.join(inner)})"
-        )
+                # the cell is bound once as `__r_<name>`, and its
+                # strict cast lands under the COLUMN name, so a later
+                # cell's reference (`VALUES (1, a + 1)`) sees the
+                # stored value through a lateral alias
+                cols.append(f"({row[target.index(name)]}) AS `__r_{name}`")
+                cols.append(f"{strict_cast_sql(f'`__r_{name}`', types[name], name)} AS `{name}`")
+        # each row projects its typed columns before the UNION ALL: the
+        # raw `__r_` cells of a column may differ in kind from row to
+        # row (TRUE beside 0), which UNION ALL cannot widen
+        selects.append(f"SELECT {typed} FROM (SELECT {', '.join(cols)})")
     return spark.sql(" UNION ALL ".join(selects))
 
 
@@ -697,6 +633,27 @@ def _any_key(keys: list[tuple[str, list[str]]], prefix: str = "__new_"):
     )
 
 
+def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str, str]):
+    """Bind each assignment of an UPDATE-like statement once per row:
+    the matched flag as ``__m``, the value of each SQL expression in
+    ``assignments`` as ``__r<i>`` and its strict cast as ``__n<i>``, the
+    column's new value. Both are evaluated only where ``matched`` holds
+    (the old value stays elsewhere), so the guard never fires on a row
+    the statement leaves alone, and a bad value raises 1366 even where
+    the old value is NULL. Returns the frame, the new value of each
+    assigned column, and the predicate of a row whose value changed
+    (MySQL counts changed rows, not matched ones)."""
+    cols = [F.coalesce(matched, F.lit(False)).alias("__m")]
+    new_vals = {}
+    for i, (name, expr) in enumerate(assignments.items()):
+        cast = strict_cast_sql(f"`__r{i}`", types[name], name)
+        cols.append(F.expr(f"CASE WHEN `__m` THEN ({expr}) END").alias(f"__r{i}"))
+        cols.append(F.expr(f"CASE WHEN `__m` THEN {cast} ELSE `{name}` END").alias(f"__n{i}"))
+        new_vals[name] = F.col(f"__n{i}")
+    changed = reduce(or_, [~v.eqNullSafe(F.col(name)) for name, v in new_vals.items()])
+    return df.select("*", *cols), new_vals, changed
+
+
 def _upsert(
     spark: SparkSession,
     catalog: Catalog,
@@ -742,32 +699,19 @@ def _upsert(
         )
 
     joined = existing.join(batch, any_key, "left")
-    matched = F.col("__new_mark").isNotNull()
     types = dict(catalog.column_types(qualified, props))
     assigned = dict(assignments)
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
-    out_cols = []
-    change_terms = []  # per-assignment "value actually changed" predicates
-    for name in existing.columns:
-        if name in assigned:
-            # VALUES(col) → the incoming row's value for col
-            expr_sql = re.sub(
-                r"\bVALUES\s*\(\s*`?(\w+)`?\s*\)", r"__new_\1", assigned[name], flags=re.I
-            )
-            upd = guarded_cast_col(F.expr(expr_sql), types[name], name)
-            out_cols.append(F.when(matched, upd).otherwise(F.col(name)).alias(name))
-            # lazily gated on matched: the strict guard must neither
-            # fire on unmatched rows nor be skipped when old is NULL
-            change_terms.append(
-                ~F.when(matched, upd).otherwise(F.col(name)).eqNullSafe(F.col(name))
-            )
-        else:
-            out_cols.append(F.col(name))
-    n_changed = (
-        joined.where(matched & reduce(or_, change_terms)).count() if change_terms else 0
-    )
+    # VALUES(col) → the incoming row's value for col
+    assigned = {
+        name: re.sub(r"\bVALUES\s*\(\s*`?(\w+)`?\s*\)", r"__new_\1", expr, flags=re.I)
+        for name, expr in assigned.items()
+    }
+    joined, new_vals, changed = assign(joined, F.col("__new_mark").isNotNull(), assigned, types)
+    n_changed = joined.where(changed).count()
+    out_cols = [new_vals.get(name, F.col(name)).alias(name) for name in existing.columns]
     updated = joined.select(*out_cols)
     to_insert = batch.join(existing, any_key, "left_anti").select(
         *[F.col(f"__new_{c}").alias(c) for c in new_df.columns]
@@ -1044,34 +988,13 @@ def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) 
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
-    # MySQL reports *changed* rows (WHERE true AND at least one assigned
-    # column takes a new value), not matched rows. The new value goes
-    # through the STRICT guard here too, wrapped in a lazy CASE on the
-    # match condition: a bad value on a matched row must raise 1366
-    # even when the old value is NULL (an unguarded pre-count would
-    # call NULL→NULL "unchanged" and return success), while rows the
-    # WHERE never matches must not evaluate the assignment at all.
-    cond_safe = F.coalesce(cond, F.lit(False))
-    change_terms = [
-        ~F.when(cond_safe, guarded_cast_col(F.expr(expr), types[name], name))
-        .otherwise(F.col(name))
-        .eqNullSafe(F.col(name))
-        for name, expr in assigned.items()
-    ]
-    affected = t.where(cond_safe & reduce(or_, change_terms)).count()
+    t, new_vals, changed = assign(t, cond, assigned, types)
+    affected = t.where(changed).count()
     if affected == 0:
         return 0
-    cols = []
     # project the TABLE's columns only (the LIMIT path joined a helper
     # __upd_rid column onto t that must not reach the post-image)
-    for name in spark.table(qualified).columns:
-        if name in assigned:
-            new_val = guarded_cast_col(
-                F.expr(assigned[name]), types[name], name
-            )
-            cols.append(F.when(cond, new_val).otherwise(F.col(name)).alias(name))
-        else:
-            cols.append(F.col(name))
+    cols = [new_vals.get(name, F.col(name)).alias(name) for name in spark.table(qualified).columns]
     new_df = t.select(*cols)
     recheck_keys_after_update(catalog, qualified, new_df, set(assigned))
     _rewrite(spark, commit.Image(qualified, new_df))

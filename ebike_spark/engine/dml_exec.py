@@ -64,7 +64,6 @@ class DmlExecMixin:
             re.I,
         )
         if m:
-            self.spark.catalog.setCurrentDatabase(self.current_db)
             q = self.catalog.qualify(unquote_ident(m.group(3)), self.current_db)
             if self.catalog.table_exists(q):
                 with commit.writing(self.spark, q):
@@ -74,7 +73,6 @@ class DmlExecMixin:
             # remaining non-VALUES forms (e.g. INSERT INTO ... TABLE
             # src) pass through to Spark untouched, as a write of the
             # target: under its writer lock, bumping its version
-            self.spark.catalog.setCurrentDatabase(self.current_db)
             m = re.match(r"\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`\"]+)", fixed, re.I)
             target = [self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)] if m else []
             with commit.writing(self.spark, *target):
@@ -319,7 +317,6 @@ class DmlExecMixin:
 
         from pyspark.sql import Window
 
-        self.spark.catalog.setCurrentDatabase(self.current_db)
         rid_exprs = ", ".join(
             f"{bq(t['tgt'])}.`{dml.ROWID}` AS __rid{k}"
             for k, t in enumerate(targets)
@@ -392,9 +389,7 @@ class DmlExecMixin:
                 candidates.setdefault(col, []).append(
                     (
                         F.col(f"__rid{k}").isNotNull(),
-                        dml.guarded_cast_col(
-                            F.col(f"__v{i}"), types[col], col
-                        ),
+                        F.expr(dml.strict_cast_sql(f"`__v{i}`", types[col], col)),
                     )
                 )
             new_vals = {}
@@ -474,7 +469,6 @@ class DmlExecMixin:
                 "multi-table DELETE on a table without the hidden rowid"
             )
         with commit.writing(self.spark, qualified):
-            self.spark.catalog.setCurrentDatabase(self.current_db)
             sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
                 f" WHERE {where}" if where else ""
             )

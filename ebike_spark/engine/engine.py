@@ -48,17 +48,27 @@ _SCALAR_FNS = re.compile(
 )
 _LIMIT_PAIR = re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", re.I)
 _ROWID = re.compile(r"rowid\b", re.I)
+_SELECT = re.compile(r"\bSELECT\b", re.I)
+# statements that need no current database
+_NO_DB = {
+    ("SHOW", "DATABASES"), ("SHOW", "SCHEMAS"),
+    ("CREATE", "DATABASE"), ("CREATE", "SCHEMA"),
+    ("DROP", "DATABASE"), ("DROP", "SCHEMA"),
+}
 
 
 def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     """The MySQL error for a failure Spark raised, or None to let it
     through. An analysis error maps by its error condition. A runtime
-    error carrying the strict-cast guards' marker (dml.guarded_cast_*)
-    is 1366, keyed off the exception class: an analysis error's plan
+    error carrying the strict cast's marker (dml.strict_cast_sql) is
+    1366, keyed off the exception class: an analysis error's plan
     dump can contain the guard expressions and so the marker text."""
     cond = e.getCondition() if isinstance(e, PySparkException) else None
     if cond == "TABLE_OR_VIEW_NOT_FOUND":
         return table_not_exists(e.getMessageParameters()["relationName"].replace("`", ""))
+    if cond == "SCHEMA_NOT_FOUND":
+        schema = e.getMessageParameters()["schemaName"].replace("`", "")
+        return unknown_database(schema.rpartition(".")[2])
     if cond == "UNRESOLVED_ROUTINE":
         name = e.getMessageParameters()["routineName"].replace("`", "")
         return EbikeError(1305, f"FUNCTION {name if '.' in name else f'{db}.{name}'} does not exist")
@@ -147,10 +157,20 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         kw = head[0].upper()
         kw2 = head[1].upper() if len(head) > 1 else ""
 
-        if kw in ("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN"):
-            return self._select(sql)
         if kw == "USE":
             return self._use(head[1])
+        # every statement but USE runs in this connection's database,
+        # whichever Engine last used the shared session
+        try:
+            self.spark.catalog.setCurrentDatabase(self.current_db)
+        except AnalysisException as e:
+            # another connection dropped it: as in MySQL, the statements
+            # that read no database still run (1049 for the others)
+            needs_db = (kw, kw2) not in _NO_DB and (kw != "SET" or _SELECT.search(sql))
+            if e.getCondition() != "SCHEMA_NOT_FOUND" or needs_db:
+                raise
+        if kw in ("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN"):
+            return self._select(sql)
         if kw == "SHOW":
             return self._show(sql)
         if kw in ("DESCRIBE", "DESC") and kw2 not in ("SELECT", "TABLE", "QUERY", "EXTENDED"):
@@ -181,7 +201,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         if (kw, kw2) == ("DROP", "VIEW"):
             # views — beyond the reference (its dispatcher 1105s them,
             # execution.rs:894-1279); Spark-native passthrough
-            self.spark.catalog.setCurrentDatabase(self.current_db)
             self.spark.sql(sql)
             return EngineResult("count", affected=0)
         if kw == "DROP" and kw2 == "TABLE":
@@ -232,7 +251,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             # surface): ANALYZE TABLE feeds CBO statistics — the stats
             # the reference's scan never provides (SURVEY §4.1
             # 'Statistics::default()'); CACHE pins hot tables columnar.
-            self.spark.catalog.setCurrentDatabase(self.current_db)
             self.spark.sql(sql)
             return EngineResult("ok")
         # GRANT / ROLLBACK / CREATE INDEX / ... → MySQL 1105, like the
@@ -368,7 +386,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         return df.toDF(*tmp).select(*kept).toDF(*names)
 
     def _select(self, sql: str) -> EngineResult:
-        self.spark.catalog.setCurrentDatabase(self.current_db)
         return EngineResult("rows", df=self._query(self._translate(sql)))
 
     # ------------------------------------------------------------ session
@@ -378,7 +395,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         if not self.catalog.database_exists(name):
             raise unknown_database(name)
         self.current_db = name
-        self.spark.catalog.setCurrentDatabase(name)
         return EngineResult("ok")
 
     def _set(self, sql: str) -> EngineResult:

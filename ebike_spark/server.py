@@ -680,7 +680,6 @@ class _Conn:
                         continue
                     self._reset_wire_session()
                     self.engine.current_db = db
-                    self.engine.spark.catalog.setCurrentDatabase(db)
                     self.send_ok()
                 elif cmd == COM_RESET_CONNECTION:
                     # pooled connectors reset session state between

@@ -79,7 +79,7 @@ def _mem_total_mb(meminfo: str = "/proc/meminfo") -> int | None:
 # pinned -Xms below can never diverge (a mismatch refuses to start the
 # JVM). A bare number is normalized to MiB up front — the raw launcher
 # pass-through means an unitless value would otherwise reach the JVM as
-# BYTES and kill startup. SPARK_GRAFT_PIN_HEAP=0 disables the eager pin.
+# BYTES and kill startup.
 def _normalize_heap(mem: str) -> str:
     """Normalize a Spark-legal memory string to a JVM-legal -Xms/-Xmx
     value. Spark's JavaUtils accepts 1g/1gb/1G/1GB (and k/m/t tiers);
@@ -107,9 +107,6 @@ def _driver_mem() -> str:
     return _normalize_heap(
         os.environ.get("SPARK_GRAFT_DRIVER_MEM") or heap_for_host(_mem_total_mb())
     )
-
-
-_PIN_HEAP = os.environ.get("SPARK_GRAFT_PIN_HEAP", "1") != "0"
 
 
 def _append_java_options(builder_conf_value: str | None, extra: str) -> str:
@@ -147,31 +144,20 @@ def build_conf(builder: SparkSession.Builder, cpus: int | None = None) -> SparkS
         # silently drops them to interpreted mode (~3× slower).
         .config("spark.sql.codegen.maxFields", "400")
         .config("spark.driver.memory", mem)
-        # Pin and pre-touch the heap (Xms = Xmx, AlwaysPreTouch): on
-        # this microVM host (kernel 6.18.5-fc), pages the JVM gives
-        # back to the guest kernel are reported free to the hypervisor,
-        # and RE-TOUCHING them later costs a hypervisor-mediated fault
-        # ~100× a normal minor fault. Allocation-heavy queries then hit
-        # episodic kernel-side storms — measured 10-40 s reps (305-868 s
-        # of SYSTEM time, ~1M minor faults) on work that takes 0.7 s,
-        # ~25% of reps in bad windows, immune to GC/codegen confs, and
-        # the mechanism behind the r11-r13 "host window" bench swings.
-        # With the heap pinned+pre-touched: 25-rep probes went from
-        # max 35-38 s / 7-18 slow reps to max 1.7-3.2 s / 0-2, system
-        # time flat (OPTIMIZATION_r13.md "dedup_ppjoin"). In local mode
-        # the executors live inside this JVM, so the driver pin covers
-        # the workers; deployed with separate executors, mirror it by
-        # sizing -Xms to spark.executor.memory in executor options at
-        # deploy time (AlwaysPreTouch alone is set below). The one-time
-        # local cost is ~10 s of startup before any timing begins;
-        # SPARK_GRAFT_PIN_HEAP=0 opts out (the heap is then committed
-        # lazily, as -Xmx alone does).
+        # Pin and pre-touch the heap (Xms = Xmx, AlwaysPreTouch). A
+        # heap committed up front lets the start-up loads and warm
+        # passes run without growing it: with -Xmx alone, setup of a
+        # 4g-heap benchmark run took 16% longer (pipeline, 5 pairs) and
+        # 7% longer (wire_oltp, 10 pairs) on a 4 vCPU / 15 GiB host. In
+        # local mode the executors live inside this JVM, so the driver
+        # pin covers the workers; deployed with separate executors,
+        # mirror it by sizing -Xms to spark.executor.memory in executor
+        # options (AlwaysPreTouch alone is set below).
         .config(
             "spark.driver.extraJavaOptions",
             _append_java_options(
                 prior.get("spark.driver.extraJavaOptions"),
-                (f"-Xms{mem} " if _PIN_HEAP else "")
-                + "-XX:+AlwaysPreTouch",
+                f"-Xms{mem} -XX:+AlwaysPreTouch",
             ),
         )
         .config(

@@ -156,6 +156,56 @@ def test_use_unknown_database(eng):
     assert ei.value.code == 1049
 
 
+def test_each_engine_runs_in_its_own_database_on_a_shared_session(spark):
+    """Two Engines on one SparkSession: database() in A's statements is
+    A's database, whichever Engine ran the session's last statement."""
+    a, b = Engine(spark), Engine(spark)
+    pa, pb = (f"p{c}_{uuid.uuid4().hex[:8]}" for c in "ab")
+    for e, db in ((a, pa), (b, pb)):
+        e.execute(f"CREATE DATABASE {db}")
+        e.execute(f"USE {db}")
+    try:
+        a.execute("CREATE TABLE t (id INT, s CHAR)")
+        a.execute("INSERT INTO t VALUES (1, 'x')")
+        b.execute("SELECT 1")
+        a.execute("UPDATE t SET s = database()")
+        b.execute("SELECT 1")
+        a.execute("SET @e = database()")
+        assert a.execute("SELECT s FROM t").rows()[0]["s"] == pa
+        assert a.execute("SELECT @e AS e").rows()[0]["e"] == pa
+    finally:
+        for e, db in ((a, pa), (b, pb)):
+            e.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+def test_current_database_dropped_by_another_connection_is_1049(spark):
+    """A statement whose current database another connection dropped
+    fails with 1049, the statements that need no database still run,
+    and USE still switches database. A connection that drops its own
+    current database is left in the default one."""
+    a, b = Engine(spark), Engine(spark)
+    db, other = (f"pd{c}_{uuid.uuid4().hex[:8]}" for c in "ab")
+    a.execute(f"CREATE DATABASE {db}")
+    a.execute(f"USE {db}")
+    b.execute(f"DROP DATABASE {db}")
+    for sql in ("SELECT 1", "SET @y = (SELECT 1)"):
+        with pytest.raises(EbikeError) as ei:
+            a.execute(sql)
+        assert ei.value.code == 1049 and ei.value.message == f"Unknown database '{db}'"
+    a.execute("SET @x = 1")
+    assert a.execute("SHOW DATABASES").rows()
+    a.execute(f"CREATE DATABASE {other}")
+    a.execute(f"DROP DATABASE {other}")
+    a.execute("USE default")
+    assert a.execute("SELECT @x AS x").rows()[0]["x"] == 1
+    assert a.execute("SELECT 1 AS one").rows()[0]["one"] == 1
+    # dropping its own current database leaves the default selected
+    a.execute(f"CREATE DATABASE {db}")
+    a.execute(f"USE {db}")
+    a.execute(f"DROP DATABASE {db}")
+    assert a.execute("SELECT database() AS d").rows()[0]["d"] == "default"
+
+
 def test_table_not_exists(eng):
     with pytest.raises(EbikeError) as ei:
         eng.execute("INSERT INTO ghost VALUES (1)")
@@ -2568,6 +2618,17 @@ def test_values_lateral_column_reference(eng):
     eng.execute("INSERT INTO lat2 (a, c) VALUES (b, 7)")
     r2 = eng.execute("SELECT a, b, c FROM lat2").rows()[0]
     assert (r2["a"], r2["b"], r2["c"]) == (None, None, 7)
+
+
+def test_per_row_values_mix_literal_kinds_in_a_column(eng):
+    """A column whose cells differ in literal kind (TRUE beside 0, a
+    number beside a string) takes the per-row form; each row is typed
+    to the table before the UNION ALL, so kinds with no common type
+    still store."""
+    eng.execute("CREATE TABLE mixk (id INT, n INT, s CHAR)")
+    eng.execute("INSERT INTO mixk (id, n, s) VALUES (1, TRUE, 'a'), (2, 0, 5), (3, FALSE, 'c')")
+    rows = sorted(tuple(r) for r in eng.execute("SELECT id, n, s FROM mixk").rows())
+    assert rows == [(1, 1, "a"), (2, 0, "5"), (3, 0, "c")]
 
 
 def test_mysql_integer_rounding_parity(eng):

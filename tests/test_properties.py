@@ -11,6 +11,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, event, given, settings
 from hypothesis import strategies as st
 
@@ -436,7 +437,7 @@ _cast_strs = st.one_of(
 
 
 def _check_cast_batch(spark, values, spark_type_lit):
-    from ebike_spark.engine.dml import guarded_cast_col
+    from ebike_spark.engine.dml import strict_cast_sql
     from ebike_spark.engine.errors import EbikeError
 
     expected = [_ref_bigint_cast(v) for v in values]
@@ -447,7 +448,7 @@ def _check_cast_batch(spark, values, spark_type_lit):
         got = [
             r["c"]
             for r in df.select(
-                guarded_cast_col(F.col("v"), "BIGINT", "v").alias("c")
+                F.expr(strict_cast_sql("v", "BIGINT", "v")).alias("c")
             ).collect()
         ]
         assert got == [e for _, e in good], (values, got)
@@ -455,7 +456,7 @@ def _check_cast_batch(spark, values, spark_type_lit):
         df = spark.createDataFrame([(v,) for v in bad], f"v {spark_type_lit}")
         try:
             df.select(
-                guarded_cast_col(F.col("v"), "BIGINT", "v").alias("c")
+                F.expr(strict_cast_sql("v", "BIGINT", "v")).alias("c")
             ).collect()
             raised = False
         except Exception as e:  # the 1366 marker crosses as a JVM error
@@ -485,6 +486,72 @@ def test_guarded_bigint_cast_strings_match_reference(spark, vals):
     """Numeric strings round like MySQL ('2.7' -> 3), pure integers
     stay exact at 19 digits, junk and overflow raise 1366."""
     _check_cast_batch(spark, vals, "string")
+
+
+# The same values written into a BIGINT column through every write
+# path: each path stores the reference's number, or raises 1366 and
+# leaves its table's rows as they were.
+_PATH_VALUES = [2.5, -2.5, "2.7", 9007199254740993, _LONG_LIMIT, 1e300,
+                "9223372036854775808", " 42 ", "junk", ""]
+_WRITE_PATHS = ("values_inline", "values_per_row", "insert_select", "update", "upsert", "alter_modify")
+
+
+def _write_bigint(eng, path: str, value) -> object:
+    """Write ``value`` (as its SQL literal) into the BIGINT column ``n``
+    of row 1 of a new table named ``path``, through that write path.
+    Returns the stored number, or the MySQL code of a refused write
+    after checking that the table's rows are unchanged."""
+    from ebike_spark.engine.errors import EbikeError
+
+    lit = repr(value)  # 2.5 is a DECIMAL literal, 1e+300 a DOUBLE
+    if path == "alter_modify":
+        src = {float: "DOUBLE", int: "DECIMAL(30,0)", str: "CHAR"}[type(value)]
+        eng.execute(f"CREATE TABLE {path} (id INT NOT NULL, n {src}, PRIMARY KEY (id))")
+        eng.execute(f"INSERT INTO {path} VALUES (1, {lit})")
+    else:
+        eng.execute(f"CREATE TABLE {path} (id INT NOT NULL, n BIGINT, PRIMARY KEY (id))")
+    if path in ("update", "upsert"):
+        eng.execute(f"INSERT INTO {path} VALUES (1, 0)")
+    stmt = {
+        "values_inline": f"INSERT INTO {path} VALUES (1, {lit})",
+        "values_per_row": f"INSERT INTO {path} VALUES (0 + 1, {lit})",
+        "insert_select": f"INSERT INTO {path} SELECT 1, {lit}",
+        "update": f"UPDATE {path} SET n = {lit} WHERE id = 1",
+        "upsert": f"INSERT INTO {path} VALUES (1, 0) ON DUPLICATE KEY UPDATE n = {lit}",
+        "alter_modify": f"ALTER TABLE {path} MODIFY n BIGINT",
+    }[path]
+
+    def rows():
+        return sorted(tuple(r) for r in eng.execute(f"SELECT id, n FROM {path}").rows())
+
+    before = rows()
+    try:
+        eng.execute(stmt)
+    except EbikeError as e:
+        assert rows() == before, (path, value)
+        return e.code
+    return dict(rows())[1]
+
+
+@pytest.mark.parametrize("value", _PATH_VALUES, ids=repr)
+def test_strict_bigint_cast_agrees_on_every_write_path(spark, value):
+    """INSERT … VALUES in both forms, INSERT … SELECT, UPDATE, ON
+    DUPLICATE KEY UPDATE and ALTER MODIFY store the same number for a
+    value, equal to _ref_bigint_cast's, or all raise 1366."""
+    import uuid as _uuid
+
+    from ebike_spark.engine import Engine
+
+    want = _ref_bigint_cast(value)
+    eng = Engine(spark)
+    db = f"pc_{_uuid.uuid4().hex[:8]}"
+    eng.execute(f"CREATE DATABASE {db}")
+    try:
+        eng.execute(f"USE {db}")
+        got = {path: _write_bigint(eng, path, value) for path in _WRITE_PATHS}
+        assert got == {path: 1366 if want == "ERR" else want for path in _WRITE_PATHS}
+    finally:
+        eng.execute(f"DROP DATABASE IF EXISTS {db}")
 
 
 # ----------------------- LOAD DATA IGNORE closest-value coercion
@@ -564,7 +631,7 @@ def test_load_data_ignore_coercion_matches_reference(spark, vals):
     got = [
         r["c"]
         for r in df.select(
-            _mysql_coerce_numeric(F.col("v"), "BIGINT").alias("c")
+            _mysql_coerce_numeric("v", "BIGINT").alias("c")
         ).collect()
     ]
     assert got == expected, list(zip(vals, got, expected))
@@ -622,7 +689,7 @@ def test_load_data_ignore_double_coercion_matches_reference(spark, vals):
     got = [
         r["c"]
         for r in df.select(
-            _mysql_coerce_numeric(F.col("v"), "DOUBLE").alias("c")
+            _mysql_coerce_numeric("v", "DOUBLE").alias("c")
         ).collect()
     ]
     assert got == expected, list(zip(vals, got, expected))
@@ -797,10 +864,11 @@ _strings = st.one_of(
     st.sampled_from(["'it\\'s'", "'a''b'", "'\\\\'", "''"]),  # escaped quotes, backslash
     st.from_regex(r"[a-z]{1,8}", fullmatch=True).map(lambda x: f"'{x}'"),
 )
-_any = st.one_of(_exact, _doubles, _quoted_numerics, _overflow, _strings)
+_booleans = st.sampled_from(["TRUE", "FALSE"])
+_any = st.one_of(_exact, _doubles, _quoted_numerics, _overflow, _strings, _booleans)
 _VALUES_FAMILIES = [  # per column (id, n, d, f, s)
     [st.sampled_from([str(i) for i in range(1, 41)] + ["2.5", "'5'"] + ["NULL"] * 3)],
-    [_ints, _fractions, _exact, _doubles, _quoted_numerics, _overflow],
+    [_ints, _fractions, _exact, _doubles, _quoted_numerics, _overflow, _booleans, st.one_of(_booleans, _ints)],
     [_decimals, _exact, _ints, _quoted_numerics],
     [_doubles, _exact, _decimals],
     [_strings, _quoted_numerics, _ints],
@@ -871,6 +939,53 @@ def test_inline_and_per_row_values_agree(spark, cells, shape):
             per_row = _insert_outcome(eng, "per_row_t", sql)
         event(f"outcome: {inline[0]} {inline[1] if inline[0] == 'err' else ''}")
         assert inline == per_row, sql
+        assert inline[0] == "ok" or inline[1] in (1366, 1048, 1062, 1136, 1054), (inline, sql)
+    finally:
+        eng.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+def test_all_literal_values_batch_folds_to_a_local_relation(spark):
+    """An all-literal VALUES batch is one inline table: its plan
+    optimizes to a LocalRelation and collecting it starts no Spark job.
+    The same batch with one non-literal cell takes the per-row form and
+    stores the same rows."""
+    import uuid as _uuid
+
+    from ebike_spark.engine import Engine, dml
+    from ebike_spark.engine.parser import parse_insert
+
+    eng = Engine(spark)
+    db = f"pf_{_uuid.uuid4().hex[:8]}"
+    eng.execute(f"CREATE DATABASE {db}")
+    try:
+        eng.execute(f"USE {db}")
+        for t in ("inline_t", "per_row_t"):
+            eng.execute(f"CREATE TABLE {t} {_VALUES_DDL}")
+        col_types = eng.catalog.column_types(f"{db}.inline_t")
+        types = dict(col_types)
+        rows = "(1, 2.5, 1.25, 1e3, 'a'), (2, 7, NULL, -2e0, 'b'), (3, -2.5, 3, NULL, NULL)"
+        ins = parse_insert(f"INSERT INTO inline_t VALUES {rows}")
+        assert dml._inline_ok(ins.rows, list(types), types)
+        df = dml._values_df(spark, ins, col_types)
+        assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+        sc = spark.sparkContext
+        group = f"values_fold_{_uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "inline VALUES collect")
+        try:
+            df.collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+
+        eng.execute(f"INSERT INTO inline_t VALUES {rows}")
+        per_row = rows.replace("(1, ", "(0 + 1, ", 1)
+        assert not dml._inline_ok(parse_insert(f"INSERT INTO t VALUES {per_row}").rows, list(types), types)
+        eng.execute(f"INSERT INTO per_row_t VALUES {per_row}")
+
+        def stored(t):
+            return sorted(tuple(r) for r in eng.execute(f"SELECT * FROM {t}").rows())
+
+        assert stored("inline_t") == stored("per_row_t") and len(stored("inline_t")) == 3
     finally:
         eng.execute(f"DROP DATABASE IF EXISTS {db}")
 
