@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit
 from ebike_spark.engine.errors import EbikeError, access_denied, table_not_exists, unknown_database
-from ebike_spark.engine.parser import CreateTable, sql_literal
+from ebike_spark.engine.parser import CreateTable, code_tokens, splice, sql_literal, unquote_ident
 
 # meta_util.rs:548-562 — the storable types; DDL with anything else errors.
 # Declared MySQL type → Spark storage type. The reference's own
@@ -126,20 +126,8 @@ SYSTEM_TABLES = {
     "performance_schema.global_variables": "variable_name string, variable_value string",
 }
 
-# A string literal (kept as it is), a system-table reference, or a
-# backtick-quoted identifier (kept as it is).
-_SYS_REF = re.compile(
-    r"'(?:[^'\\]|\\.)*'"
-    r'|"(?:[^"\\]|\\.)*"'
-    r"|(?<![\w$.])(`?)(information_schema|mysql|performance_schema)\1\s*\.\s*(`?)(\w+)\3(?![\w$])"
-    r"|`[^`]*`",
-    re.I | re.S,
-)
-# what precedes a table reference that a statement writes
-_WRITE_TARGET = re.compile(r"\b(?:INTO|UPDATE|DELETE(?:\s+FROM)?|OVERWRITE(?:\s+TABLE)?)\s*$", re.I)
-# what follows a table reference: a column qualifier's dot, an alias
-# or a keyword
-_FOLLOW = re.compile(r"\s*(\.|`|\w+)")
+# the words before a table reference that a statement writes
+_WRITE_TARGET = frozenset(("INTO", "UPDATE", "DELETE", "DELETE FROM", "OVERWRITE", "OVERWRITE TABLE"))
 # words that may follow a table reference without being its alias
 _NOT_ALIAS = frozenset(
     "WHERE GROUP ORDER HAVING LIMIT OFFSET WINDOW UNION EXCEPT INTERSECT "
@@ -413,27 +401,39 @@ class Catalog:
         bound = self.system_views = {}
 
         def bind(sql: str) -> str:
-            def ref(m: re.Match) -> str:
-                if not m.group(2):
-                    return m.group(0)  # a string literal or a quoted identifier
-                schema, table = m.group(2).lower(), m.group(4).lower()
-                name = f"{schema}.{table}"
-                if name not in SYSTEM_TABLES:
-                    return m.group(0)
-                if _WRITE_TARGET.search(sql, max(0, m.start() - 20), m.start()):
+            low = sql.lower()
+            if not any(schema in low for schema in ("information_schema", "mysql", "performance_schema")):
+                return sql
+            code = code_tokens(sql)
+
+            def text(k: int) -> str:
+                return sql[code[k][1] : code[k][2]] if 0 <= k < len(code) else ""
+
+            def name(k: int) -> str:
+                return unquote_ident(text(k)) if code[k][0] in ("word", "ident") else ""
+
+            edits = []
+            for k in range(len(code) - 2):
+                if text(k + 1) != "." or text(k - 1) == ".":
+                    continue
+                schema, table = name(k), name(k + 2)
+                qualified = f"{schema}.{table}"
+                if qualified not in SYSTEM_TABLES:
+                    continue
+                if text(k - 1).upper() in _WRITE_TARGET or f"{text(k - 2)} {text(k - 1)}".upper() in _WRITE_TARGET:
                     raise access_denied(schema)
-                follow = _FOLLOW.match(sql, m.end())
-                if follow and follow.group(1) == ".":
-                    return f"`{table}`"
+                span = (code[k][1], code[k + 2][2])
+                if text(k + 3) == ".":  # a column qualified by the table's name
+                    edits.append((*span, f"`{table}`"))
+                    continue
                 view = f"__ebike_sys_{token}_{schema}_{table}"
                 if view not in bound:
-                    self.system_table(name, sys_vars).createOrReplaceTempView(view)
-                    bound[view] = name
-                if follow and (follow.group(1) == "`" or follow.group(1).upper() not in _NOT_ALIAS):
-                    return view
-                return f"{view} AS `{table}`"
-
-            return _SYS_REF.sub(ref, sql)
+                    self.system_table(qualified, sys_vars).createOrReplaceTempView(view)
+                    bound[view] = qualified
+                after = code[k + 3] if k + 3 < len(code) else ("", 0, 0)
+                aliased = after[0] == "ident" or (after[0] == "word" and text(k + 3).upper() not in _NOT_ALIAS)
+                edits.append((*span, view if aliased else f"{view} AS `{table}`"))
+            return splice(sql, edits)
 
         try:
             yield bind

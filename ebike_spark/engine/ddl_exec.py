@@ -22,7 +22,7 @@ from ebike_spark.engine.catalog import (
     resolve_sql_type,
 )
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
-from ebike_spark.engine.parser import map_unquoted, parse_create_table, unquote_ident
+from ebike_spark.engine.parser import lex, parse_create_table, split_top_level, unquote_ident
 from ebike_spark.engine.session_state import EngineResult
 
 
@@ -141,9 +141,7 @@ class DdlExecMixin:
         statement ends, so its SELECT can name neither a variable
         (MySQL 1351) nor a system table, which is bound only for the
         statement."""
-        unquoted: list[str] = []
-        map_unquoted(sql, lambda seg: unquoted.append(seg) or seg)
-        if "@" in "".join(unquoted):
+        if any(sql[a] == "@" for _, a, _ in lex(sql)):
             raise EbikeError(1351, "View's SELECT contains a variable or parameter")
         text = self._translate(sql)
         if self.catalog.system_views:
@@ -254,8 +252,6 @@ class DdlExecMixin:
 
         All three accept a comma list and return one (Table, Op,
         Msg_type, Msg_text) row per table, MySQL-style."""
-        from ebike_spark.engine.parser import split_top_level
-
         m = re.match(rf"{kw}\s+TABLE\s+([\s\S]+?)\s*;?\s*$", sql, re.I)
         if not m:
             raise parse_error(f"near {kw} TABLE")
@@ -297,8 +293,6 @@ class DdlExecMixin:
         Cross-database renames are refused (Spark's v1 session catalog
         renames within a database; MySQL allows the move — 1105 keeps
         the failure explicit rather than silently copying data)."""
-        from ebike_spark.engine.parser import split_top_level
-
         body = re.match(r"RENAME\s+TABLE\s+([\s\S]+)$", sql, re.I).group(1)
         # MySQL applies pairs left-to-right on the evolving namespace
         # (chains `a TO b, b TO c` and swaps `a TO tmp, b TO a` are
@@ -358,8 +352,6 @@ class DdlExecMixin:
         with its new schema and properties (engine/commit.py). A
         RENAME [TO|AS] clause applies last (MySQL processes the rename
         with the rebuild; other clauses name the old table)."""
-        from ebike_spark.engine.parser import split_top_level
-
         m = re.match(r"ALTER\s+TABLE\s+([\w.`\"]+)\s+([\s\S]+?)\s*$", sql, re.I)
         if not m:
             raise parse_error("near ALTER TABLE")
@@ -421,8 +413,6 @@ class DdlExecMixin:
         """Apply one ALTER TABLE clause to the pending state. Display
         widths (INT(11), FLOAT(10,2)) are accepted and ignored, as in
         parse_create_table's column grammar (ADVICE r5)."""
-        from ebike_spark.engine.parser import split_top_level
-
         def cols_of(text: str) -> list[str]:
             return [unquote_ident(c) for c in split_top_level(text)]
 

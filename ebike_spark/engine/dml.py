@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ebike_spark.engine import commit
 from ebike_spark.engine.catalog import ROWID, Catalog
 from ebike_spark.engine.errors import EbikeError, duplicate_entry, unsupported
-from ebike_spark.engine.parser import Delete, Insert, Update, split_top_level, unquote_ident
+from ebike_spark.engine.parser import Delete, Insert, Update, code_tokens, lex, splice, split_top_level, unquote_ident
 
 # INSERT IGNORE into a table with MULTIPLE unique indexes replays
 # MySQL's order-dependent first-wins interleave on the driver (see
@@ -199,37 +199,27 @@ def strict_cast_sql(ref: str, spark_type: str, col: str) -> str:
         bad = f"({ref} IS NOT NULL AND ({cast}) IS NULL) OR ABS(CAST({ref} AS DOUBLE)) > {_LONG_MAX_D}"
     else:
         cast = f"CAST({ref} AS {spark_type})"
+        if spark_type.lower() == "string":  # MySQL stores TRUE/FALSE as '1'/'0'
+            as_digit = f"CASE {cast} WHEN 'true' THEN '1' WHEN 'false' THEN '0' END"
+            cast = f"CASE WHEN typeof({ref}) = 'boolean' THEN {as_digit} ELSE {cast} END"
         bad = f"{ref} IS NOT NULL AND {cast} IS NULL"
     msg = badcast_msg(col).replace("'", "''")  # keep the literal intact
     return f"CASE WHEN {bad} THEN CAST(raise_error('{msg}') AS {spark_type}) ELSE {cast} END"
 
 
-# A VALUES cell the inline-table form takes: exactly one plain literal
-# token — a number, a quoted string (backslash or doubled-quote
-# escapes, as Spark's lexer reads them), NULL, TRUE or FALSE.
-_LITERAL_RE = re.compile(
-    r"NULL|TRUE|FALSE"
-    r"|-?(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
-    r"|'(?:[^'\\]|\\.|'')*'"
-    r'|"(?:[^"\\]|\\.|"")*"',
-    re.I | re.S,
-)
-
-
 def _literal_type(cell: str) -> tuple[str, int, int] | None:
-    """Spark's parse type of a plain literal VALUES cell as (kind,
-    integer digits, scale); kind is null, boolean, string, double
-    (exponent form) or exact (INT/BIGINT/DECIMAL). None for any other
-    cell, and for exact literals beyond DECIMAL(38)."""
-    if not _LITERAL_RE.fullmatch(cell):
-        return None
-    head = cell[0].upper()
-    if head in "'\"":
+    """Spark's parse type of a VALUES cell that is one plain literal
+    token — a number (``-`` allowed before it), a string, NULL, TRUE or
+    FALSE — as (kind, integer digits, scale); kind is null, boolean,
+    string, double (exponent form) or exact (INT/BIGINT/DECIMAL). None
+    for any other cell, and for exact literals beyond DECIMAL(38)."""
+    kinds = [kind for kind, _, _ in lex(cell)]
+    if kinds == ["string"]:
         return ("string", 0, 0)
-    if head == "N":
-        return ("null", 0, 0)
-    if head in "TF":
-        return ("boolean", 0, 0)
+    if kinds == ["word"] and cell.upper() in ("NULL", "TRUE", "FALSE"):
+        return ("null", 0, 0) if cell.upper() == "NULL" else ("boolean", 0, 0)
+    if kinds != ["number"] and not (kinds == ["punct", "number"] and cell[0] == "-"):
+        return None
     if "e" in cell or "E" in cell:
         return ("double", 0, 0)
     if "." not in cell:  # INT, BIGINT, else DECIMAL(n,0) — Spark widens INT/BIGINT as (10,0)/(20,0)
@@ -704,11 +694,7 @@ def _upsert(
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
-    # VALUES(col) → the incoming row's value for col
-    assigned = {
-        name: re.sub(r"\bVALUES\s*\(\s*`?(\w+)`?\s*\)", r"__new_\1", expr, flags=re.I)
-        for name, expr in assigned.items()
-    }
+    assigned = {name: _incoming(expr) for name, expr in assigned.items()}
     joined, new_vals, changed = assign(joined, F.col("__new_mark").isNotNull(), assigned, types)
     n_changed = joined.where(changed).count()
     out_cols = [new_vals.get(name, F.col(name)).alias(name) for name in existing.columns]
@@ -727,6 +713,19 @@ def _upsert(
     recheck_keys_after_update(catalog, qualified, final, set(assigned), props)
     _rewrite(spark, commit.Image(qualified, final))
     return n_new + 2 * n_changed
+
+
+def _incoming(expr: str) -> str:
+    """An ON DUPLICATE KEY UPDATE expression with each ``VALUES(col)``
+    read as the incoming row's ``__new_<col>`` (_upsert's batch)."""
+    code = code_tokens(expr)
+    text = [expr[a:b] for _, a, b in code]
+    return splice(expr, [
+        (code[k][1], code[k + 3][2], f"`__new_{unquote_ident(text[k + 2])}`")
+        for k in range(len(code) - 3)
+        if text[k].upper() == "VALUES" and code[k][0] == "word" and text[k + 1] == "(" and text[k + 3] == ")"
+        and code[k + 2][0] in ("word", "ident")
+    ])
 
 
 def _insert_ignore(

@@ -20,6 +20,7 @@ from ebike_spark.engine import commit, dml
 from ebike_spark.engine.catalog import bq
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import (
+    INSERT_VALUES,
     find_top_level_keywords,
     parse_delete,
     parse_insert,
@@ -35,28 +36,27 @@ class DmlExecMixin:
     def _insert(self, sql: str) -> EngineResult:
         fixed = self._translate(sql)
         # MySQL `INSERT INTO t SET a = 1, b = 'x'` → column-list VALUES
-        m = re.match(
-            r"\s*(INSERT(?:\s+IGNORE)?|REPLACE)\s+INTO\s+([\w.`\"]+)\s+SET\s+([\s\S]+?)"
-            r"(\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+[\s\S]+?)?;?\s*$",
-            fixed,
-            re.I,
-        )
+        m = re.match(r"\s*(INSERT(?:\s+IGNORE)?|REPLACE)\s+INTO\s+([\w.`\"]+)\s+SET\s", fixed, re.I)
         if m:
+            try:
+                body, clauses = split_tail_clauses(fixed[m.end() :], ("ON DUPLICATE KEY UPDATE",))
+            except ValueError as e:
+                raise parse_error(str(e)) from e
             cols, vals = [], []
-            for a in split_top_level(m.group(3)):
+            for a in split_top_level(body):
                 am = re.match(r"\s*([\w`\"]+)\s*=\s*([\s\S]+)$", a)
                 if not am:
                     raise parse_error(f"near INSERT ... SET: {a!r}")
                 cols.append(unquote_ident(am.group(1)))
                 vals.append(am.group(2).strip())
-            fixed = (
-                f"{m.group(1)} INTO {m.group(2)} ({', '.join(cols)}) "
-                f"VALUES ({', '.join(vals)}){m.group(4) or ''}"
+            fixed = f"{m.group(1)} INTO {m.group(2)} ({', '.join(cols)}) VALUES ({', '.join(vals)})" + "".join(
+                f" ON DUPLICATE KEY UPDATE {c}" for c in clauses.values()
             )
         # INSERT [IGNORE] INTO ... SELECT / REPLACE INTO ... SELECT,
         # detected STRUCTURALLY (SELECT right after the table/column
-        # list) — a bare \bVALUES\b probe would misroute `... SELECT ...
-        # ON DUPLICATE KEY UPDATE v = VALUES(v)` into the VALUES parser.
+        # list), as the VALUES form is below: a word inside the SELECT
+        # (`ON DUPLICATE KEY UPDATE v = VALUES(v)`, a literal) never
+        # picks the path
         m = re.match(
             r"\s*(?:INSERT(\s+IGNORE)?|(REPLACE))\s+INTO\s+([\w.`\"]+)\s*"
             r"(?:\(([^)]*)\)\s*)?(SELECT\b[\s\S]*)$",
@@ -69,7 +69,7 @@ class DmlExecMixin:
                 with commit.writing(self.spark, q):
                     mode = "IGNORE" if m.group(1) else "REPLACE" if m.group(2) else ""
                     return self._insert_from_select(q, m.group(4), m.group(5), mode)
-        if not re.search(r"\bVALUES\b", fixed, re.I):
+        if not INSERT_VALUES.match(fixed):
             # remaining non-VALUES forms (e.g. INSERT INTO ... TABLE
             # src) pass through to Spark untouched, as a write of the
             # target: under its writer lock, bumping its version

@@ -22,10 +22,11 @@ from ebike_spark.engine import commit, dml, show
 from ebike_spark.engine.catalog import Catalog
 from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unsupported
 from ebike_spark.engine.parser import (
-    map_unquoted,
-    rewrite_field_fn,
-    rewrite_group_concat,
-    rewrite_mysql_datetime_fns,
+    lex,
+    rewrite_dialect,
+    split_statements,
+    split_top_level,
+    string_value,
     strip_comments,
     substitute_vars,
     unquote_ident,
@@ -41,14 +42,6 @@ from ebike_spark.engine.session_state import (
     _Prepared,
 )
 
-# MySQL's database(), LAST_INSERT_ID() and `FROM dual` (the reference
-# injects a 1-row dual MemTable, core_util.rs:463-479)
-_SCALAR_FNS = re.compile(
-    r"\b(?:(database)|(LAST_INSERT_ID))\s*\(\s*\)|\bFROM\s+dual\b", re.I
-)
-_LIMIT_PAIR = re.compile(r"\bLIMIT\s+(\d+)\s*,\s*(\d+)", re.I)
-_ROWID = re.compile(r"rowid\b", re.I)
-_SELECT = re.compile(r"\bSELECT\b", re.I)
 # statements that need no current database
 _NO_DB = {
     ("SHOW", "DATABASES"), ("SHOW", "SCHEMAS"),
@@ -59,7 +52,8 @@ _NO_DB = {
 
 def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     """The MySQL error for a failure Spark raised, or None to let it
-    through. An analysis error maps by its error condition. A runtime
+    through. An analysis error maps by its error condition, never by
+    its message, whose suggestions may name the hidden rowid. A runtime
     error carrying the strict cast's marker (dml.strict_cast_sql) is
     1366, keyed off the exception class: an analysis error's plan
     dump can contain the guard expressions and so the marker text."""
@@ -72,6 +66,11 @@ def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     if cond == "UNRESOLVED_ROUTINE":
         name = e.getMessageParameters()["routineName"].replace("`", "")
         return EbikeError(1305, f"FUNCTION {name if '.' in name else f'{db}.{name}'} does not exist")
+    if cond is not None and cond.startswith("UNRESOLVED_COLUMN."):
+        name = e.getMessageParameters()["objectName"].replace("`", "")
+        return EbikeError(1054, f"Unknown column '{name}' in 'field list'")
+    if cond == "PARSE_SYNTAX_ERROR":
+        return parse_error(f"near {e.getMessageParameters()['error']}")
     if isinstance(e, AnalysisException):
         return None
     m = re.search(re.escape(dml.BADCAST_MARK) + r"(.*?)" + re.escape(dml.BADCAST_END), str(e), re.S)
@@ -166,7 +165,8 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         except AnalysisException as e:
             # another connection dropped it: as in MySQL, the statements
             # that read no database still run (1049 for the others)
-            needs_db = (kw, kw2) not in _NO_DB and (kw != "SET" or _SELECT.search(sql))
+            subquery = any(kind == "word" and sql[a:b].upper() == "SELECT" for kind, a, b in lex(sql))
+            needs_db = (kw, kw2) not in _NO_DB and (kw != "SET" or subquery)
             if e.getCondition() != "SCHEMA_NOT_FOUND" or needs_db:
                 raise
         if kw in ("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN"):
@@ -262,13 +262,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         the wire protocol delivers one statement per COM_QUERY, but every
         MySQL client tool batches scripts this way). Statements run in
         order; the first error aborts the rest."""
-        from ebike_spark.engine.parser import split_top_level
-
-        results = []
-        for stmt in split_top_level(strip_comments(script), ";"):
-            if stmt.strip():
-                results.append(self.execute(stmt))
-        return results
+        return [self.execute(stmt) for stmt in split_statements(script)]
 
     # ------------------------------------------------------------ dialect
 
@@ -284,29 +278,10 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         as a MySQL format."""
         sql = substitute_vars(sql, self.sys_vars, self.user_vars, GLOBAL_VARS)
         try:
-            sql = rewrite_field_fn(rewrite_mysql_datetime_fns(rewrite_group_concat(sql)))
+            sql = rewrite_dialect(sql, self.last_insert_id)
         except ValueError as e:
             raise parse_error(str(e)) from e
-
-        def scalar(m: re.Match) -> str:
-            if m.group(1):  # database()
-                return "current_database()"
-            if m.group(2):  # this session's last minted auto id
-                return str(self.last_insert_id)
-            return ""  # Spark needs no FROM for a one-row SELECT
-
-        # EXPLAIN dialect mapping (reference: explain.rs:41-101 supports
-        # VERBOSE/ANALYZE via DataFusion; Spark spells these differently)
-        sql = re.sub(r"^\s*EXPLAIN\s+VERBOSE\b", "EXPLAIN EXTENDED", sql, flags=re.I)
-        sql = re.sub(r"^\s*EXPLAIN\s+ANALYZE\b", "EXPLAIN COST", sql, flags=re.I)
-
-        # Rewrites run segment-wise OUTSIDE quoted spans so a string
-        # literal containing e.g. "from dual" passes through untouched;
-        # MySQL `LIMIT offset, count` is Spark `LIMIT count OFFSET offset`
-        def fix(seg: str) -> str:
-            return _LIMIT_PAIR.sub(r"LIMIT \2 OFFSET \1", _SCALAR_FNS.sub(scalar, seg))
-
-        return self._bind_system(map_unquoted(sql, fix))
+        return self._bind_system(sql)
 
     def _query(self, text: str) -> DataFrame:
         """Spark SQL ``text`` (from _translate) analysed by Spark. A
@@ -319,29 +294,11 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
 
     @staticmethod
     def _mentions_rowid(sql: str) -> bool:
-        """Does the query text name ``rowid`` as an identifier — bare OR
-        identifier-quoted (`rowid` / "rowid")? Single-quoted string
-        literals don't count. Governs whether the hidden rowid column is
-        surfaced (reference: projection-time special case,
-        core_util.rs:451-461)."""
-        from ebike_spark.engine.parser import _skip_quoted
-
-        i, n = 0, len(sql)
-        while i < n:
-            ch = sql[i]
-            if ch == "'":
-                i = _skip_quoted(sql, i)  # string literal: not an identifier
-                continue
-            if ch in "`\"":
-                j = _skip_quoted(sql, i)
-                if sql[i + 1 : j - 1].strip().lower() == "rowid":
-                    return True  # explicitly projected quoted identifier
-                i = j
-                continue
-            if _ROWID.match(sql, i) and (i == 0 or not re.match(r"[\w$]", sql[i - 1])):
-                return True
-            i += 1
-        return False
+        """Does the query text name ``rowid`` as an identifier, bare or
+        backtick-quoted? A string literal ('rowid', "rowid") does not.
+        Governs whether the hidden rowid column is surfaced (reference:
+        projection-time special case, core_util.rs:451-461)."""
+        return any(kind in ("word", "ident") and sql[a:b].lower() in ("rowid", "`rowid`") for kind, a, b in lex(sql))
 
     def _drop_hidden_rowid(self, df: DataFrame) -> DataFrame:
         """Drop hidden rowid columns by PROVENANCE, not by name: only
@@ -405,8 +362,6 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             # SET [SESSION] TRANSACTION ISOLATION LEVEL ... — acknowledged
             # no-op (single-writer parquet engine; mysqldump preamble)
             return EngineResult("ok")
-        from ebike_spark.engine.parser import split_top_level
-
         for assign in split_top_level(body, ","):
             m = re.match(
                 r"\s*(?:(@@?)(?:(GLOBAL|SESSION)\.)?|(GLOBAL|SESSION)\s+)?"
@@ -443,9 +398,9 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             return int(raw)
         if re.match(r"^-?\d*\.\d+$", raw):
             return float(raw)
-        m = re.match(r"^'(.*)'$|^\"(.*)\"$", raw, re.S)
-        if m:
-            return (m.group(1) if m.group(1) is not None else m.group(2)).replace("''", "'")
+        text = string_value(raw)
+        if text is not None:
+            return text
         if raw.upper() in ("ON", "OFF", "TRUE", "FALSE"):
             return raw.upper()
         # expression (e.g. SET @x = 1 + 2): evaluate via Spark

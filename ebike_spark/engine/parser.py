@@ -14,125 +14,211 @@ no-FROM selects (Spark supports SELECT without FROM natively), and
 variable substitution (``@@x`` / ``@x`` replaced with literals before
 Spark sees the text — Spark has no MySQL variable syntax;
 reference: /root/reference/src/variable/system.rs:40-67).
+
+Every text pass reads the tokens of one MySQL lexer, :func:`lex`:
+comment stripping, the statement and comma splits, clause keywords,
+variable substitution, the dialect rewrites (:func:`rewrite_dialect`),
+the system-table binding, placeholders and the VALUES parse. None of
+them can fire inside a string literal, a quoted identifier or a
+comment, and none has a string rule of its own.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import lru_cache
+
+# MySQL's tokens, one alternative per kind, tried in this order. A
+# string takes backslash and doubled-quote escapes; "…" is a string,
+# as in MySQL and in Spark with ANSI off. `--` opens a comment only
+# before whitespace or the end (MySQL: `5--3` is a double negation);
+# `#` runs to the end of the line. A quote with no closing quote is
+# punctuation.
+_TOKEN = re.compile(
+    r"(?P<space>\s+)"
+    r"|(?P<comment>--(?=[ \t\r\n]|\Z)[^\n]*|\#[^\n]*|/\*[\s\S]*?(?:\*/|\Z))"
+    r"|(?P<string>'[^'\\]*(?:(?:\\[\s\S]|'')[^'\\]*)*'|\"[^\"\\]*(?:(?:\\[\s\S]|\"\")[^\"\\]*)*\")"
+    r"|(?P<ident>`[^`]*(?:``[^`]*)*`)"
+    r"|(?P<var>@@(?:(?:global|session)\.)?[A-Za-z_][A-Za-z0-9_]*|@[A-Za-z_][A-Za-z0-9_]*)"
+    r"|(?P<number>(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)"
+    r"|(?P<word>[\w$]+)"
+    r"|(?P<param>\?)"
+    r"|(?P<punct>[\s\S])",
+    re.I,
+)
 
 
-def strip_comments(sql: str) -> str:
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"`":
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-        elif sql.startswith("--", i):
-            if i + 2 >= n or sql[i + 2] in " \t\r\n":
-                while i < n and sql[i] != "\n":
-                    i += 1
-            else:
-                # MySQL requires whitespace/EOL after `--`, so `5--3` is
-                # double negation (MySQL manual §9.7). Spark's lexer
-                # comments it unconditionally — emit `- -` to keep the
-                # negation semantics through the Spark parser.
-                out.append("- ")
-                i += 1
-        elif ch == "#":
-            # MySQL `# comment` to end of line
-            while i < n and sql[i] != "\n":
-                i += 1
-        elif sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = n if j < 0 else j + 2
-        else:
-            out.append(ch)
-            i += 1
+@lru_cache(maxsize=8)
+def lex(sql: str) -> tuple[tuple[str, int, int], ...]:
+    """The tokens of ``sql`` as ``(kind, start, end)``: kind is space,
+    comment, string, ident (backtick-quoted), var (``@x``, ``@@x``,
+    ``@@global.x``), number, word, param (``?``) or punct (one
+    character). The spans cover the text end to end. Every text pass
+    of the engine reads these tokens, so none of them can fire inside a
+    literal, an identifier or a comment. The last few texts are
+    remembered: a statement's passes usually hand each other the same
+    text."""
+    return tuple((m.lastgroup, *m.span()) for m in _TOKEN.finditer(sql))
+
+
+def code_tokens(sql: str) -> list[tuple[str, int, int]]:
+    """The tokens of ``sql`` that are neither whitespace nor comments."""
+    return [t for t in lex(sql) if t[0] != "space" and t[0] != "comment"]
+
+
+def _is(sql: str, tok: tuple[str, int, int], chars: str) -> bool:
+    """Is ``tok`` one of the punctuation characters ``chars``?"""
+    return tok[0] == "punct" and sql[tok[1]] in chars
+
+
+def splice(sql: str, edits: list[tuple[int, int, str]]) -> str:
+    """``sql`` with each ``(start, end, text)`` span, in text order,
+    replaced by its text."""
+    if not edits:
+        return sql
+    out, last = [], 0
+    for a, b, text in edits:
+        out += [sql[last:a], text]
+        last = b
+    out.append(sql[last:])
     return "".join(out)
 
 
-def _skip_quoted(s: str, i: int) -> int:
-    q = s[i]
-    j = i + 1
-    while j < len(s):
-        if s[j] == "\\" and q != "`":
-            j += 2
-            continue
-        if s[j] == q:
-            return j + 1
-        j += 1
-    return len(s)
+def strip_comments(sql: str) -> str:
+    """``sql`` with each comment replaced by a space. A ``-`` right
+    before another ``-`` gains a space, so that Spark, which reads
+    ``--`` as a comment anywhere, still sees ``5--3`` as a double
+    negation."""
+    return splice(sql, [
+        (a, b, " ") if kind == "comment" else (b, b, " ")
+        for kind, a, b in lex(sql)
+        if kind == "comment" or (kind == "punct" and sql.startswith("--", a))
+    ])
+
+
+def string_value(text: str) -> str | None:
+    """The value of ``text`` when it is one string literal, else None.
+    A doubled quote is a quote; a backslash escapes the next character,
+    and ``\\n``, ``\\t``, ``\\r``, ``\\b``, ``\\0`` and ``\\Z`` name
+    control characters (``\\%`` and ``\\_`` keep their backslash)."""
+    code = code_tokens(text)
+    if len(code) != 1 or code[0][0] != "string":
+        return None
+    _, a, b = code[0]
+    q = text[a]
+    return re.sub(r"\\([\s\S])|" + q + q, lambda m: _UNESCAPE.get(m.group(1), m.group(1) or q), text[a + 1 : b - 1])
+
+
+_UNESCAPE = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t", "Z": "\x1a", "%": "\\%", "_": "\\_"}
+
+
+def _split(sql: str, toks: list[tuple[str, int, int]], sep: str) -> list[list[tuple[str, int, int]]]:
+    """``toks`` cut at each ``sep`` punctuation outside parentheses."""
+    parts: list[list[tuple[str, int, int]]] = [[]]
+    depth = 0
+    for t in toks:
+        if t[0] == "punct":
+            ch = sql[t[1]]
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth -= 1
+            elif ch == sep and depth == 0:
+                parts.append([])
+                continue
+        parts[-1].append(t)
+    return parts
+
+
+def _text(sql: str, toks: list[tuple[str, int, int]]) -> str:
+    """The text ``toks`` span, stripped."""
+    return sql[toks[0][1] : toks[-1][2]].strip() if toks else ""
+
+
+def _texts(sql: str, parts: list[list[tuple[str, int, int]]]) -> list[str]:
+    """Each part's text; an empty last part is dropped."""
+    texts = [_text(sql, p) for p in parts]
+    return texts[:-1] if texts and not texts[-1] else texts
 
 
 def split_top_level(s: str, sep: str = ",") -> list[str]:
     """Split on sep outside quotes/parens (for VALUES rows, column defs)."""
-    parts: list[str] = []
+    return _texts(s, _split(s, lex(s), sep))
+
+
+def split_statements(sql: str) -> list[str]:
+    """The statements of a ;-separated script, comments stripped and
+    empty statements left out."""
+    return [s for s in split_top_level(strip_comments(sql), ";") if s]
+
+
+def _close(sql: str, toks: list[tuple[str, int, int]], i: int) -> int:
+    """Index of the token that closes the parenthesis ``toks[i]``, or
+    ``len(toks)`` if none does."""
     depth = 0
-    cur: list[str] = []
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if ch in "'\"`":
-            j = _skip_quoted(s, i)
-            cur.append(s[i:j])
-            i = j
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
+    for j in range(i, len(toks)):
+        if _is(sql, toks[j], "()"):
+            depth += 1 if sql[toks[j][1]] == "(" else -1
+            if depth == 0:
+                return j
+    return len(toks)
+
+
+def _keywords(sql: str, toks: list[tuple[str, int, int]], keywords: tuple[str, ...]) -> list[tuple[str, int, int]]:
+    """(keyword, start, end) of each of ``keywords`` among ``toks``
+    outside parentheses, in text order. The words of a multi-word
+    keyword ("ORDER BY") may be apart by any whitespace."""
+    code = [t for t in toks if t[0] != "space"]
+    phrases = [(kw, kw.split()) for kw in keywords]
+    found: list[tuple[str, int, int]] = []
+    depth, k = 0, 0
+    while k < len(code):
+        kind, a, _ = code[k]
+        k += 1
+        if kind == "punct" and sql[a] in "()":
+            depth += 1 if sql[a] == "(" else -1
+        elif kind == "word" and depth == 0:
+            for kw, words in phrases:
+                seg = code[k - 1 : k - 1 + len(words)]
+                if len(seg) == len(words) and all(
+                    t[0] == "word" and sql[t[1] : t[2]].upper() == w for t, w in zip(seg, words)
+                ):
+                    found.append((kw, a, seg[-1][2]))
+                    k += len(words) - 1
+                    break
+    return found
 
 
 def find_top_level_keywords(s: str, keywords: tuple[str, ...]) -> list[tuple[str, int, int]]:
-    """Locate top-level clause keywords — outside string/identifier
-    quotes AND outside parens — returning (keyword, start, end) spans
-    in text order. Multi-word keywords ("ORDER BY") match across any
-    whitespace. This is the quote-aware substrate for clause splitting:
-    a bare regex alternation can anchor a clause keyword INSIDE a
-    string literal (``WHERE msg = 'a order by b'``) and silently split
-    the statement mid-literal."""
-    pats = [(kw, re.compile(r"\b" + r"\s+".join(kw.split()) + r"\b", re.I)) for kw in keywords]
-    found: list[tuple[str, int, int]] = []
-    depth = 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            i = _skip_quoted(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch.isalpha():
-            for kw, pat in pats:
-                m = pat.match(s, i)
-                if m and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")):
-                    found.append((kw, m.start(), m.end()))
-                    i = m.end()
-                    break
-            else:
-                # skip the rest of this word so ORDERBY never matches ORDER
-                while i < n and (s[i].isalnum() or s[i] == "_"):
-                    i += 1
-                continue
-            continue
-        i += 1
-    return found
+    """Locate top-level clause keywords — outside literals, identifiers
+    and parentheses — as (keyword, start, end) spans in text order.
+    ``WHERE msg = 'a order by b'`` never splits inside the literal."""
+    return _keywords(s, lex(s), keywords)
+
+
+def _clauses(sql: str, toks: list[tuple[str, int, int]], keywords: tuple[str, ...]):
+    """``toks`` split into the tokens before the first of ``keywords``
+    and the text of each keyword's clause."""
+    spans = _keywords(sql, toks, keywords)
+    order = {kw: k for k, kw in enumerate(keywords)}
+    last = -1
+    for kw, _, _ in spans:
+        if order[kw] <= last:
+            raise ValueError(f"misplaced {kw} clause")
+        last = order[kw]
+    end = toks[-1][2] if toks else 0
+    clauses: dict[str, str] = {}
+    for k, (kw, _, kw_end) in enumerate(spans):
+        body = sql[kw_end : spans[k + 1][1] if k + 1 < len(spans) else end].strip()
+        if not body:
+            # a dangling keyword ('DELETE FROM t WHERE') must be a parse
+            # error — an empty WHERE body is falsy downstream and would
+            # silently turn a malformed statement into a FULL-TABLE op
+            raise ValueError(f"empty {kw} clause")
+        clauses[kw] = body
+    head_end = spans[0][1] if spans else end
+    return [t for t in toks if t[2] <= head_end], clauses
 
 
 def split_tail_clauses(tail: str, keywords: tuple[str, ...]) -> tuple[str, dict[str, str]]:
@@ -140,25 +226,8 @@ def split_tail_clauses(tail: str, keywords: tuple[str, ...]) -> tuple[str, dict[
     ``keywords`` (quote/paren-aware). Clauses must appear in the given
     order, each at most once; out-of-order or duplicate keywords raise
     (malformed statement — e.g. ``WHERE x LIMIT 1 WHERE y``)."""
-    spans = find_top_level_keywords(tail, keywords)
-    order = {kw: k for k, kw in enumerate(keywords)}
-    last = -1
-    for kw, _, _ in spans:
-        if order[kw] <= last:
-            raise ValueError(f"misplaced {kw} clause")
-        last = order[kw]
-    head_end = spans[0][1] if spans else len(tail)
-    clauses: dict[str, str] = {}
-    for k, (kw, _, kw_end) in enumerate(spans):
-        nxt = spans[k + 1][1] if k + 1 < len(spans) else len(tail)
-        body = tail[kw_end:nxt].strip()
-        if not body:
-            # a dangling keyword ('DELETE FROM t WHERE') must be a parse
-            # error — an empty WHERE body is falsy downstream and would
-            # silently turn a malformed statement into a FULL-TABLE op
-            raise ValueError(f"empty {kw} clause")
-        clauses[kw] = body
-    return tail[:head_end].strip(), clauses
+    head, clauses = _clauses(tail, lex(tail), keywords)
+    return _text(tail, head), clauses
 
 
 def sql_literal(v: object) -> str:
@@ -178,124 +247,6 @@ def sql_literal(v: object) -> str:
     return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def map_unquoted(sql: str, fn) -> str:
-    """Apply ``fn(segment)`` to each run of text outside string and
-    identifier quotes; quoted spans pass through untouched. This is the
-    safe substrate for regex rewrites (FROM dual, LIMIT off,cnt,
-    database()) that must never fire inside literals."""
-    out: list[str] = []
-    i = start = 0
-    while i < len(sql):
-        if sql[i] in "'\"`":
-            j = _skip_quoted(sql, i)
-            out += [fn(sql[start:i]), sql[i:j]]
-            i = start = j
-        else:
-            i += 1
-    out.append(fn(sql[start:]))
-    return "".join(out)
-
-
-def _find_matching_paren(s: str, open_idx: int) -> int:
-    """Index just past the ')' matching s[open_idx] == '(' (quote-aware);
-    raises ValueError on imbalance."""
-    depth = 0
-    i, n = open_idx, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in "'\"`":
-            i = _skip_quoted(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in GROUP_CONCAT")
-
-
-def rewrite_group_concat(sql: str) -> str:
-    """MySQL ``GROUP_CONCAT([DISTINCT] expr[, expr...] [ORDER BY ...]
-    [SEPARATOR 'sep'])`` → Spark ``listagg([DISTINCT] expr, 'sep')
-    [WITHIN GROUP (ORDER BY ...)]`` (beyond-reference: DataFusion 6.0
-    has no GROUP_CONCAT either, but a MySQL-dialect user reaches for it
-    constantly). Quote/paren-aware; multiple occurrences handled;
-    multi-expr form concatenates per-row exactly as MySQL does
-    (``concat`` matches MySQL's any-NULL→NULL row semantics, and both
-    engines then skip NULL rows). Spark's listagg restriction stands:
-    DISTINCT with a WITHIN GROUP key other than the expr itself errors —
-    same statements MySQL itself warns on and reorders."""
-    pat = re.compile(r"\bGROUP_CONCAT\s*\(", re.I)
-    if not pat.search(sql):
-        return sql
-    out, i = [], 0
-    while True:
-        # scan for the next unquoted GROUP_CONCAT(
-        m = None
-        j = i
-        while j < len(sql):
-            if sql[j] in "'\"`":
-                j = _skip_quoted(sql, j)
-                continue
-            m = pat.match(sql, j)
-            if m and (j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] in "_$")):
-                break
-            m = None
-            j += 1
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        open_idx = m.end() - 1
-        close = _find_matching_paren(sql, open_idx)
-        inner = sql[open_idx + 1 : close - 1].strip()
-        out.append(sql[i:j])
-
-        sep = "','"
-        order_by = None
-        # a duplicated clause (…SEPARATOR '-' SEPARATOR '+') would make
-        # the span indices stale after the first mutation and emit
-        # malformed SQL — reject it as the parse error MySQL gives
-        sep_spans = find_top_level_keywords(inner, ("SEPARATOR",))
-        if len(sep_spans) > 1:
-            raise ValueError("duplicate SEPARATOR clause in GROUP_CONCAT")
-        for kw, s0, s1 in sep_spans:
-            sep = inner[s1:].strip()
-            # SEPARATOR takes exactly one string literal; anything
-            # trailing it (a misplaced ORDER BY, stray tokens) must be
-            # a parse error, not silently glued into the separator
-            # accept BOTH escape styles the lexer (_skip_quoted) accepts:
-            # doubled quotes ('it''s') and backslash escapes ('it\'s') —
-            # rejecting backslash style regressed statements MySQL
-            # clients emit by default (review finding)
-            if not re.fullmatch(
-                r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", sep
-            ):
-                raise ValueError(
-                    "SEPARATOR must be followed by a single string literal"
-                )
-            inner = inner[:s0].rstrip()
-        ob_spans = find_top_level_keywords(inner, ("ORDER BY",))
-        if len(ob_spans) > 1:
-            raise ValueError("duplicate ORDER BY clause in GROUP_CONCAT")
-        for kw, s0, s1 in ob_spans:
-            order_by = inner[s1:].strip()
-            inner = inner[:s0].rstrip()
-        distinct = ""
-        dm = re.match(r"DISTINCT\b", inner, re.I)
-        if dm:
-            distinct = "DISTINCT "
-            inner = inner[dm.end() :].strip()
-        exprs = split_top_level(inner)
-        body = exprs[0] if len(exprs) == 1 else f"concat({', '.join(exprs)})"
-        repl = f"listagg({distinct}{body}, {sep})"
-        if order_by:
-            repl += f" WITHIN GROUP (ORDER BY {order_by})"
-        out.append(repl)
-        i = close
-
-
 def substitute_vars(
     sql: str,
     sys_vars: dict[str, object],
@@ -305,37 +256,167 @@ def substitute_vars(
     """Replace @@[scope.]sys and @user variables with literals, outside
     quotes. ``@@GLOBAL.x`` reads the shared global scope when provided;
     ``@@x`` / ``@@SESSION.x`` read the session scope (MySQL semantics)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in "'\"`":
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        m = _SYS_VAR_RE.match(sql, i) if ch == "@" else None
-        if m:
-            scope = (m.group(1) or "session").lower()
-            name = m.group(2).lower()
-            if scope == "global" and global_vars is not None:
-                out.append(sql_literal(global_vars.get(name, sys_vars.get(name))))
+    edits = []
+    for kind, a, b in lex(sql):
+        if kind == "var":
+            name = sql[a:b].lstrip("@").lower()
+            if sql.startswith("@@", a):
+                scope, _, name = name.rpartition(".")
+                scopes = [global_vars, sys_vars] if scope == "global" and global_vars is not None else [sys_vars]
+                v = next((s[name] for s in scopes if name in s), None)
             else:
-                out.append(sql_literal(sys_vars.get(name)))
-            i = m.end()
-            continue
-        m = _USER_VAR_RE.match(sql, i) if ch == "@" else None
-        if m:
-            out.append(sql_literal(user_vars.get(m.group(1).lower())))
-            i = m.end()
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+                v = user_vars.get(name)
+            edits.append((a, b, sql_literal(v)))
+    return splice(sql, edits)
 
 
-_SYS_VAR_RE = re.compile(r"@@(?:(global|session)\.)?([A-Za-z_][A-Za-z0-9_]*)", re.I)
-_USER_VAR_RE = re.compile(r"@([A-Za-z_][A-Za-z0-9_]*)")
+# words that end a SELECT list
+_LIST_END = frozenset("FROM WHERE GROUP HAVING ORDER LIMIT WINDOW UNION EXCEPT INTERSECT MINUS INTO".split())
+
+
+def rewrite_dialect(sql: str, last_insert_id: int) -> str:
+    """MySQL forms Spark lacks, rewritten outside literals, identifiers
+    and comments: GROUP_CONCAT → listagg, DATE_FORMAT / STR_TO_DATE with
+    a %-format → date_format / to_timestamp with a java pattern, FIELD →
+    array_position, ``database()`` → current_database(),
+    ``LAST_INSERT_ID()`` → the number ``last_insert_id``, ``FROM dual`` → nothing,
+    ``LIMIT a, b`` → ``LIMIT b OFFSET a``, and a leading EXPLAIN
+    VERBOSE / ANALYZE → EXPLAIN EXTENDED / COST. A rewritten call's
+    arguments are rewritten too; a ``database()`` or
+    ``LAST_INSERT_ID()`` that is a whole SELECT-list item keeps its
+    MySQL column label. Raises ValueError on a malformed call. Not
+    idempotent: a rewritten format is a java pattern, which a second
+    pass would misread."""
+    code = code_tokens(sql)
+    n = len(code)
+
+    def word(k: int) -> str:
+        return sql[code[k][1] : code[k][2]].upper() if 0 <= k < n and code[k][0] == "word" else ""
+
+    def rw(text: str) -> str:
+        return rewrite_dialect(text, last_insert_id)
+
+    edits = []
+    select = [False]  # per parenthesis depth: inside a SELECT list
+    k = 0
+    while k < n:
+        kind, a, b = code[k]
+        if kind != "word":
+            if _is(sql, code[k], "("):
+                select.append(False)
+            elif _is(sql, code[k], ")") and len(select) > 1:
+                select.pop()
+            k += 1
+            continue
+        w = sql[a:b].upper()
+        select[-1] = w == "SELECT" or (select[-1] and w not in _LIST_END)
+        if (w in _CALLS or w in _NO_ARGS) and k + 1 < n and _is(sql, code[k + 1], "("):
+            close = _close(sql, code, k + 1)
+            if close == n:
+                raise ValueError(f"unbalanced parentheses in {w}")
+            args = sql[code[k + 1][2] : code[close][1]]
+            if w in _CALLS:
+                new = _CALLS[w](w, args, rw)
+            elif args.strip():
+                k += 1
+                continue
+            else:
+                new = "current_database()" if w == "DATABASE" else str(last_insert_id)
+                after = close + 1 == n or _is(sql, code[close + 1], ",;)") or word(close + 1) in _LIST_END
+                if select[-1] and after and (word(k - 1) in ("SELECT", "DISTINCT", "ALL") or _is(sql, code[k - 1], ",")):
+                    new += f" AS `{sql[a : code[close][2]]}`"
+            edits.append((a, code[close][2], new))
+            k = close + 1
+        elif w == "FROM" and word(k + 1) == "DUAL":
+            edits.append((a, code[k + 1][2], ""))
+            k += 2
+        elif w == "LIMIT" and k + 3 < n and _is(sql, code[k + 2], ",") and all(
+            code[j][0] == "number" and sql[code[j][1] : code[j][2]].isdigit() for j in (k + 1, k + 3)
+        ):
+            off, cnt = (sql[code[j][1] : code[j][2]] for j in (k + 1, k + 3))
+            edits.append((a, code[k + 3][2], f"LIMIT {cnt} OFFSET {off}"))
+            k += 4
+        elif k == 0 and w == "EXPLAIN" and word(1) in ("VERBOSE", "ANALYZE"):
+            edits.append((code[1][1], code[1][2], "EXTENDED" if word(1) == "VERBOSE" else "COST"))
+            k += 2
+        else:
+            k += 1
+    return splice(sql, edits)
+
+
+def _group_concat(name: str, args: str, rw) -> str:
+    """MySQL ``GROUP_CONCAT([DISTINCT] expr[, expr...] [ORDER BY ...]
+    [SEPARATOR 'sep'])`` → Spark ``listagg([DISTINCT] expr, 'sep')
+    [WITHIN GROUP (ORDER BY ...)]`` (beyond-reference: DataFusion 6.0
+    has no GROUP_CONCAT either, but a MySQL-dialect user reaches for it
+    constantly). The multi-expr form concatenates per row exactly as
+    MySQL does (``concat`` matches MySQL's any-NULL→NULL row semantics,
+    and both engines then skip NULL rows). Spark's listagg restriction
+    stands: DISTINCT with a WITHIN GROUP key other than the expr itself
+    errors — same statements MySQL itself warns on and reorders."""
+    sep = "','"
+    seps = find_top_level_keywords(args, ("SEPARATOR",))
+    if len(seps) > 1:
+        raise ValueError("duplicate SEPARATOR clause in GROUP_CONCAT")
+    if seps:
+        # SEPARATOR takes exactly one string literal: anything trailing
+        # it (a misplaced ORDER BY, stray tokens) is a parse error
+        sep = args[seps[0][2] :].strip()
+        if string_value(sep) is None:
+            raise ValueError("SEPARATOR must be followed by a single string literal")
+        args = args[: seps[0][1]]
+    orders = find_top_level_keywords(args, ("ORDER BY",))
+    if len(orders) > 1:
+        raise ValueError("duplicate ORDER BY clause in GROUP_CONCAT")
+    order_by = args[orders[0][2] :].strip() if orders else None
+    args = args[: orders[0][1]].strip() if orders else args.strip()
+    distinct = ""
+    dm = re.match(r"DISTINCT\b", args, re.I)
+    if dm:
+        distinct = "DISTINCT "
+        args = args[dm.end() :].strip()
+    exprs = [rw(e) for e in split_top_level(args)]
+    if not exprs or not all(exprs):
+        raise ValueError("GROUP_CONCAT expects an expression")
+    body = exprs[0] if len(exprs) == 1 else f"concat({', '.join(exprs)})"
+    out = f"listagg({distinct}{body}, {sep})"
+    return out + f" WITHIN GROUP (ORDER BY {rw(order_by)})" if order_by else out
+
+
+def _datetime_fn(name: str, args: str, rw) -> str:
+    """MySQL ``DATE_FORMAT(expr, '%…')`` → Spark ``date_format(expr,
+    'java-pattern')`` and ``STR_TO_DATE(str, '%…')`` → ``to_timestamp(
+    str, 'java-pattern')``. The format must be a string literal — a
+    non-literal format (rare and MySQL-dynamic) raises cleanly.
+    STR_TO_DATE maps to a TIMESTAMP (MySQL returns DATE when no time
+    parts appear; CAST the result where date semantics matter)."""
+    parts = split_top_level(args)
+    if len(parts) != 2:
+        raise ValueError(f"{name} expects 2 arguments")
+    fmt = string_value(parts[1])
+    if fmt is None:
+        raise ValueError(f"{name} format must be a string literal")
+    fn = "date_format" if name == "DATE_FORMAT" else "to_timestamp"
+    return f"{fn}({rw(parts[0])}, {sql_literal(translate_mysql_datetime_format(fmt))})"
+
+
+def _field(name: str, args: str, rw) -> str:
+    """MySQL ``FIELD(expr, e1, e2, ...)`` → Spark
+    ``coalesce(array_position(array(e1, ...), expr), 0)`` — Spark has
+    no native field(); array_position is 1-based with 0 for not-found
+    exactly like FIELD, and the coalesce maps Spark's NULL-expr result
+    to MySQL's 0."""
+    parts = [rw(p) for p in split_top_level(args)]
+    if len(parts) < 2:
+        raise ValueError("FIELD expects at least 2 arguments")
+    return f"coalesce(array_position(array({', '.join(parts[1:])}), {parts[0]}), 0)"
+
+
+# the calls rewritten with their arguments, and the ones rewritten only
+# without: MySQL's database() and LAST_INSERT_ID() (this session's
+# last minted auto id)
+_CALLS = {"GROUP_CONCAT": _group_concat, "DATE_FORMAT": _datetime_fn, "STR_TO_DATE": _datetime_fn, "FIELD": _field}
+_NO_ARGS = {"DATABASE", "LAST_INSERT_ID"}
 
 
 def unquote_ident(ident: str) -> str:
@@ -497,13 +578,14 @@ def parse_create_table(sql: str) -> CreateTable:
     return ct
 
 
+# the head of an INSERT … VALUES: the shape parse_insert reads
+INSERT_VALUES = re.compile(
+    r"\s*(INSERT|REPLACE)\s+(IGNORE\s+)?INTO\s+([\w.`\"]+)\s*(?:\(([^)]*)\)\s*)?VALUES\b", re.I
+)
+
+
 def parse_insert(sql: str) -> Insert:
-    m = re.match(
-        r"\s*(INSERT|REPLACE)\s+(IGNORE\s+)?INTO\s+([\w.`\"]+)\s*(\(([^)]*)\))?\s*VALUES\s*(.*?)"
-        r"(?:\s+ON\s+DUPLICATE\s+KEY\s+UPDATE\s+(.*?))?;?\s*$",
-        sql,
-        re.I | re.S,
-    )
+    m = INSERT_VALUES.match(sql)
     if not m:
         raise ValueError("malformed INSERT (only INSERT ... VALUES supported here)")
     replace = m.group(1).upper() == "REPLACE"
@@ -512,15 +594,19 @@ def parse_insert(sql: str) -> Insert:
         # MySQL grammar: REPLACE takes no IGNORE modifier
         raise ValueError("REPLACE does not take IGNORE")
     table = unquote_ident(m.group(3))
-    cols = [unquote_ident(c) for c in split_top_level(m.group(5))] if m.group(5) else []
+    cols = [unquote_ident(c) for c in split_top_level(m.group(4))] if m.group(4) else []
+    toks = [t for t in lex(sql) if t[1] >= m.end() and t[0] != "comment"]
+    while toks and (toks[-1][0] == "space" or _is(sql, toks[-1], ";")):
+        toks.pop()
+    values, clauses = _clauses(sql, toks, ("ON DUPLICATE KEY UPDATE",))
     rows = []
-    for row in split_top_level(m.group(6)):
-        rm = re.match(r"\s*\((.*)\)\s*$", row, re.S)
-        if not rm:
-            raise ValueError(f"malformed VALUES row: {row!r}")
-        rows.append([e.strip() for e in split_top_level(rm.group(1))])
+    for row in _split(sql, values, ","):
+        code = [t for t in row if t[0] != "space"]
+        if not code or not _is(sql, code[0], "(") or _close(sql, code, 0) != len(code) - 1:
+            raise ValueError(f"malformed VALUES row: {_text(sql, row)!r}")
+        rows.append(_texts(sql, _split(sql, code[1:-1], ",")))
     on_dup = None
-    if m.group(7):
+    if clauses:
         if replace:
             # MySQL grammar: REPLACE has no ON DUPLICATE KEY clause
             raise ValueError("REPLACE does not take ON DUPLICATE KEY UPDATE")
@@ -529,7 +615,7 @@ def parse_insert(sql: str) -> Insert:
             # rather than silently prefer one (documented stance)
             raise ValueError("INSERT IGNORE with ON DUPLICATE KEY UPDATE is not supported")
         on_dup = []
-        for a in split_top_level(m.group(7)):
+        for a in split_top_level(clauses["ON DUPLICATE KEY UPDATE"]):
             am = re.match(r"([\w`\"]+)\s*=\s*(.*)$", a, re.S)
             if not am:
                 raise ValueError(f"malformed ON DUPLICATE KEY UPDATE assignment: {a!r}")
@@ -648,99 +734,3 @@ def translate_mysql_datetime_format(fmt: str) -> str:
         i += 1
     flush()
     return "".join(out)
-
-
-def rewrite_mysql_datetime_fns(sql: str) -> str:
-    """MySQL ``DATE_FORMAT(expr, '%…')`` → Spark ``date_format(expr,
-    'java-pattern')`` and ``STR_TO_DATE(str, '%…')`` → ``to_timestamp(
-    str, 'java-pattern')`` (quote/paren-aware, every occurrence). The
-    format argument must be a single-quoted literal — a non-literal
-    format (rare and MySQL-dynamic) raises cleanly. STR_TO_DATE maps to
-    a TIMESTAMP (MySQL returns DATE when no time parts appear; CAST the
-    result where date semantics matter)."""
-    pat = re.compile(r"\b(DATE_FORMAT|STR_TO_DATE)\s*\(", re.I)
-    out, i = [], 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        # skip matches inside quoted spans
-        qdepth_ok = True
-        j = i
-        while j < m.start():
-            if sql[j] in "'\"`":
-                j = _skip_quoted(sql, j)
-                if j > m.start():
-                    qdepth_ok = False
-                    break
-                continue
-            j += 1
-        if not qdepth_ok:
-            out.append(sql[i:j])
-            i = j
-            continue
-        close = _find_matching_paren(sql, m.end() - 1)
-        args = split_top_level(sql[m.end() : close - 1])
-        if len(args) != 2:
-            raise ValueError(f"{m.group(1).upper()} expects 2 arguments")
-        fm = re.match(r"\s*'((?:[^']|'')*)'\s*$", args[1])
-        if not fm:
-            raise ValueError(
-                f"{m.group(1).upper()} format must be a string literal"
-            )
-        translated = translate_mysql_datetime_format(
-            fm.group(1).replace("''", "'")
-        )
-        fn = "date_format" if m.group(1).upper() == "DATE_FORMAT" else "to_timestamp"
-        out.append(sql[i : m.start()])
-        # the java pattern may itself contain single quotes (quoted
-        # literal letters) — escape them for the SQL string literal
-        sql_lit = translated.replace("'", "''")
-        # recurse into the value argument: MySQL datetime fns nest
-        # (DATE_FORMAT(STR_TO_DATE(...), ...)) and the outer jump to
-        # `close` would otherwise skip the inner call untranslated
-        inner = rewrite_mysql_datetime_fns(args[0].strip())
-        out.append(f"{fn}({inner}, '{sql_lit}')")
-        i = close
-
-
-
-def rewrite_field_fn(sql: str) -> str:
-    """MySQL ``FIELD(expr, e1, e2, ...)`` → Spark
-    ``coalesce(array_position(array(e1, ...), expr), 0)`` — Spark has
-    no native field(); array_position is 1-based with 0 for not-found
-    exactly like FIELD, and the coalesce maps Spark's NULL-expr result
-    to MySQL's 0. Quote/paren-aware; nested FIELD calls rewrite
-    recursively via the argument re-scan."""
-    pat = re.compile(r"\bFIELD\s*\(", re.I)
-    out, i = [], 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            return "".join(out)
-        # skip matches inside quoted spans
-        j = i
-        inside_quote = False
-        while j < m.start():
-            if sql[j] in "'\"`":
-                j = _skip_quoted(sql, j)
-                if j > m.start():
-                    inside_quote = True
-                    break
-                continue
-            j += 1
-        if inside_quote:
-            out.append(sql[i:j])
-            i = j
-            continue
-        close = _find_matching_paren(sql, m.end() - 1)
-        args = split_top_level(sql[m.end() : close - 1])
-        if len(args) < 2:
-            raise ValueError("FIELD expects at least 2 arguments")
-        rest = ", ".join(rewrite_field_fn(a.strip()) for a in args[1:])
-        expr = rewrite_field_fn(args[0].strip())
-        out.append(sql[i : m.start()])
-        out.append(f"coalesce(array_position(array({rest}), {expr}), 0)")
-        i = close

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ebike_spark.engine.errors import EbikeError
-from ebike_spark.engine.parser import sql_literal, strip_comments
+from ebike_spark.engine.parser import find_top_level_keywords, lex, splice, sql_literal, strip_comments
 from ebike_spark.engine.session_state import EngineResult, _Prepared
 
 
@@ -16,17 +16,7 @@ class PreparedMixin:
         """COM_STMT_PREPARE analogue (execution.rs:866-880): parse-count
         '?' placeholders outside quotes, cache, return handle."""
         clean = strip_comments(sql)
-        n = 0
-        i = 0
-        while i < len(clean):
-            if clean[i] in "'\"`":
-                from ebike_spark.engine.parser import _skip_quoted
-
-                i = _skip_quoted(clean, i)
-                continue
-            if clean[i] == "?":
-                n += 1
-            i += 1
+        n = sum(kind == "param" for kind, _, _ in lex(clean))
         sid = self._next_stmt_id
         self._next_stmt_id += 1
         self._stmts[sid] = _Prepared(sql=clean, n_params=n)
@@ -49,23 +39,8 @@ class PreparedMixin:
         """Replace each '?' outside quotes with the next param as a SQL
         literal (the reference splices decoded binary params into the
         cached AST, core_util.rs:32-107)."""
-        out: list[str] = []
         it = iter(params)
-        i = 0
-        while i < len(sql):
-            if sql[i] in "'\"`":
-                from ebike_spark.engine.parser import _skip_quoted
-
-                j = _skip_quoted(sql, i)
-                out.append(sql[i:j])
-                i = j
-                continue
-            if sql[i] == "?":
-                out.append(sql_literal(next(it)))
-            else:
-                out.append(sql[i])
-            i += 1
-        return "".join(out)
+        return splice(sql, [(a, b, sql_literal(next(it))) for kind, a, b in lex(sql) if kind == "param"])
 
     def prepared_result_schema(self, stmt_id: int) -> list[tuple[str, str]] | None:
         """Result-set column metadata at PREPARE time. The wire server's
@@ -99,8 +74,6 @@ class PreparedMixin:
             # The forms listed are exactly the CTE-DML heads Spark SQL
             # parses (MySQL-only spellings like INSERT IGNORE never
             # reach spark.sql as CTE-DML — they fail its parser).
-            from ebike_spark.engine.parser import find_top_level_keywords
-
             if find_top_level_keywords(
                 st.sql,
                 (

@@ -538,13 +538,9 @@ class _Conn:
         behavior: the batch is a single malformed statement (1064/1105
         from the engine), never a silent partial execution. The first
         error aborts the remainder, as MySQL does."""
-        from ebike_spark.engine.parser import split_top_level, strip_comments
+        from ebike_spark.engine.parser import split_statements
 
-        stmts = [
-            s
-            for s in split_top_level(strip_comments(sql), ";")
-            if s.strip()
-        ]
+        stmts = split_statements(sql)
         batched = len(stmts) > 1 and bool(
             self.client_caps & CLIENT_MULTI_STATEMENTS
         )

@@ -193,11 +193,12 @@ def test_current_database_dropped_by_another_connection_is_1049(spark):
             a.execute(sql)
         assert ei.value.code == 1049 and ei.value.message == f"Unknown database '{db}'"
     a.execute("SET @x = 1")
+    a.execute("SET @s = 'SELECT'")
     assert a.execute("SHOW DATABASES").rows()
     a.execute(f"CREATE DATABASE {other}")
     a.execute(f"DROP DATABASE {other}")
     a.execute("USE default")
-    assert a.execute("SELECT @x AS x").rows()[0]["x"] == 1
+    assert a.execute("SELECT @x AS x, @s AS s").rows()[0] == (1, "SELECT")
     assert a.execute("SELECT 1 AS one").rows()[0]["one"] == 1
     # dropping its own current database leaves the default selected
     a.execute(f"CREATE DATABASE {db}")
@@ -1453,7 +1454,10 @@ def test_insert_replace_ignore_from_select(eng):
 
 def test_group_concat_rewrite_unit():
     """Pure-text rewrite: MySQL GROUP_CONCAT forms → Spark listagg."""
-    from ebike_spark.engine.parser import rewrite_group_concat as rw
+    from ebike_spark.engine.parser import rewrite_dialect
+
+    def rw(sql):
+        return rewrite_dialect(sql, 0)
 
     assert rw("SELECT GROUP_CONCAT(name) FROM t") == "SELECT listagg(name, ',') FROM t"
     assert (
@@ -3205,3 +3209,101 @@ def test_write_to_a_system_table_is_1044(eng, sql, schema):
     assert (ei.value.code, ei.value.message) == (
         1044, f"Access denied for user 'root'@'%' to database '{schema}'"
     )
+
+
+@pytest.fixture()
+def u(eng):
+    """A PRIMARY KEY table (so it has the hidden rowid) with one row."""
+    eng.execute("CREATE TABLE u (id INT NOT NULL, s CHAR, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO u VALUES (2, 'b')")
+    return eng
+
+
+def test_upsert_clause_text_inside_a_values_literal_is_stored(u):
+    """The ON DUPLICATE KEY UPDATE clause is found by the lexer, so the
+    same words inside a string literal are part of the value."""
+    u.execute("INSERT INTO u VALUES (1, 'a ON DUPLICATE KEY UPDATE s = 1')")
+    assert u.execute("SELECT s FROM u WHERE id = 1").rows()[0]["s"] == "a ON DUPLICATE KEY UPDATE s = 1"
+
+
+def test_values_call_inside_an_upsert_literal_is_stored(u):
+    """VALUES(col) in an upsert assignment reads the incoming row; the
+    same text inside a string literal is a string."""
+    r = u.execute("INSERT INTO u VALUES (2, 'c') ON DUPLICATE KEY UPDATE s = 'VALUES(s)'")
+    assert r.affected == 2
+    assert u.execute("SELECT s FROM u WHERE id = 2").rows()[0]["s"] == "VALUES(s)"
+    u.execute("INSERT INTO u VALUES (2, 'd') ON DUPLICATE KEY UPDATE s = concat(VALUES(s), '-', s)")
+    assert u.execute("SELECT s FROM u WHERE id = 2").rows()[0]["s"] == "d-VALUES(s)"
+
+
+def test_last_insert_id_select_item_keeps_its_label(eng):
+    """A SELECT-list LAST_INSERT_ID() or database() is labelled as MySQL
+    labels it; an alias still wins, and inside an expression the call is
+    just its value."""
+    eng.execute("CREATE TABLE li (id INT NOT NULL AUTO_INCREMENT, s CHAR, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO li (s) VALUES ('a'), ('b')")
+    df = eng.execute("SELECT LAST_INSERT_ID()").df
+    assert df.columns == ["LAST_INSERT_ID()"] and df.first()[0] == 1
+    assert eng.execute("SELECT LAST_INSERT_ID() AS v").df.columns == ["v"]
+    df = eng.execute("SELECT last_insert_id(), database(), LAST_INSERT_ID() + 1 AS n FROM dual").df
+    assert df.columns == ["last_insert_id()", "database()", "n"]
+    assert tuple(df.first()) == (1, eng.current_db, 2)
+
+
+def test_double_quoted_rowid_is_a_string_not_the_hidden_column(u):
+    """"rowid" is a string literal (MySQL, and Spark with ANSI off), so
+    naming it does not surface the hidden rowid; `rowid` does."""
+    df = u.execute('SELECT *, "rowid" FROM u').df
+    assert df.columns == ["id", "s", "rowid"]
+    assert tuple(df.first()) == (2, "b", "rowid")
+    assert "rowid" in u.execute("SELECT *, `rowid` FROM u").df.columns
+
+
+def test_date_format_takes_an_escaped_format_literal(eng):
+    """The format literal is decoded like any string literal: a
+    backslash-escaped or doubled quote, and either quote character."""
+    for fmt in ("'%Y\\'s'", "'%Y''s'", '"%Y\'s"'):
+        row = eng.execute(f"SELECT DATE_FORMAT('2020-01-01', {fmt}) AS d").rows()[0]
+        assert row["d"] == "2020's", fmt
+
+
+def test_boolean_into_a_string_column_is_1_or_0(u):
+    """TRUE/FALSE written into a CHAR column store '1'/'0', as in MySQL,
+    on every write path."""
+    u.execute("INSERT INTO u VALUES (10, TRUE), (11, FALSE)")  # inline form
+    u.execute("INSERT INTO u VALUES (12, TRUE), (13, NOT TRUE)")  # per-row form
+    u.execute("INSERT INTO u (id, s) SELECT 14, TRUE")
+    u.execute("INSERT INTO u VALUES (15, 'x'), (16, 'y')")
+    u.execute("UPDATE u SET s = FALSE WHERE id = 15")
+    u.execute("INSERT INTO u VALUES (16, 'z') ON DUPLICATE KEY UPDATE s = TRUE")
+    u.execute("INSERT INTO u VALUES (17, CAST(NULL AS BOOLEAN))")
+    rows = dict(tuple(r) for r in u.execute("SELECT id, s FROM u WHERE id >= 10").rows())
+    assert rows == {10: "1", 11: "0", 12: "1", 13: "0", 14: "1", 15: "0", 16: "1", 17: None}
+
+
+@pytest.mark.parametrize(
+    "sql, code, message",
+    [
+        ("SELECT nosuch FROM u", 1054, "Unknown column 'nosuch' in 'field list'"),
+        ("UPDATE u SET s = 'x' WHERE u.nosuch = 1", 1054, "Unknown column 'u.nosuch' in 'field list'"),
+        ("SELECT 1 +", 1064, "You have an error in your SQL syntax: near end of input"),
+    ],
+)
+def test_unknown_column_and_syntax_error_map_to_mysql_codes(u, sql, code, message):
+    """An unknown column is 1054 whose message names no suggestion (so
+    never the hidden rowid); a Spark parse error is 1064."""
+    with pytest.raises(EbikeError) as ei:
+        u.execute(sql)
+    assert (ei.value.code, ei.value.message) == (code, message)
+
+
+def test_a_literal_never_picks_the_insert_path(eng):
+    """Only the statement's own head makes it an INSERT … VALUES: a
+    Spark INSERT OVERWRITE whose SELECT holds the string 'VALUES' still
+    passes through to Spark."""
+    eng.execute("CREATE TABLE ow (id INT, s CHAR)")
+    eng.execute("CREATE TABLE src (id INT)")
+    eng.execute("INSERT INTO ow VALUES (1, 'a')")
+    eng.execute("INSERT INTO src VALUES (1)")
+    eng.execute("INSERT OVERWRITE TABLE ow SELECT id + 1, 'VALUES', rowid FROM src")
+    assert [tuple(r) for r in eng.execute("SELECT id, s FROM ow").rows()] == [(2, "VALUES")]

@@ -9,6 +9,7 @@ the suite stays fast.
 from __future__ import annotations
 
 import hashlib
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -64,6 +65,110 @@ def test_strip_comments_never_adds_text(sql):
     assert len(out.replace(" ", "")) <= len(sql.replace(" ", ""))
     # stripping is idempotent
     assert strip_comments(out) == out
+
+
+_SQLISH = "ab1 .,;()'\"`\\-#/*?@\n"
+
+
+@given(st.one_of(st.text(max_size=80), st.text(alphabet=_SQLISH, max_size=80)))
+def test_lex_spans_rebuild_the_text(sql):
+    """The tokens' spans, comments included, tile the text: joined in
+    order they give back the input."""
+    from ebike_spark.engine.parser import lex
+
+    toks = lex(sql)
+    assert all(a < b for _, a, b in toks)
+    assert all(toks[i][2] == toks[i + 1][1] for i in range(len(toks) - 1))
+    assert "".join(sql[a:b] for _, a, b in toks) == sql
+
+
+# text that a pass would rewrite or split on, were it outside a literal
+_TRIGGERS = [
+    "VALUES(x)", "@v", "@@x", "LIMIT 1, 2", "information_schema.tables", "database()",
+    "FROM dual", "GROUP_CONCAT(", "FIELD(", "DATE_FORMAT(", "ON DUPLICATE KEY UPDATE",
+    ";", "?", "rowid", "LAST_INSERT_ID()", ")", "(", ",", "--", "/*",
+]
+_trigger_text = st.lists(
+    st.one_of(st.sampled_from(_TRIGGERS), st.text(alphabet="ab '\"`\\", max_size=4)), max_size=4
+).map("".join)
+
+
+@st.composite
+def _literal(draw):
+    """A string literal (either quote, either escape style) or a
+    backtick identifier whose text is trigger text."""
+    t = draw(_trigger_text)
+    kind = draw(st.sampled_from(["single", "single_bs", "double", "backtick"]))
+    if kind == "backtick":
+        return "`" + t.replace("`", "``") + "`"
+    q = '"' if kind == "double" else "'"
+    if kind == "single_bs":
+        return q + t.replace("\\", "\\\\").replace(q, "\\" + q) + q
+    return q + t.replace("\\", "\\\\").replace(q, q + q) + q
+
+
+@st.composite
+def _comment(draw):
+    """A comment whose text is trigger text; a line comment runs up to
+    the newline after it."""
+    t = draw(_trigger_text).replace("\n", "")
+    kind = draw(st.sampled_from(["block", "dash", "hash"]))
+    if kind == "block":
+        while "*/" in t:
+            t = t.replace("*/", "")
+        return "/*" + t + "*/"
+    return ("-- " if kind == "dash" else "#") + t
+
+
+def _literals(sql):
+    from ebike_spark.engine.parser import lex
+
+    return Counter(sql[a:b] for kind, a, b in lex(sql) if kind in ("string", "ident"))
+
+
+@settings(max_examples=150)
+@given(_literal(), _literal(), st.sampled_from(["'|'", '"|"', "'it''s'"]))
+def test_text_passes_leave_literals_alone(l1, l2, sep):
+    """A literal or identifier holding text the passes act on (a call,
+    a variable, LIMIT a, b, a system table, ON DUPLICATE KEY UPDATE,
+    ;, ?) passes _translate, the clause splitters and the placeholder
+    splice byte for byte."""
+    from types import SimpleNamespace
+
+    from ebike_spark.engine.catalog import Catalog
+    from ebike_spark.engine.engine import Engine
+    from ebike_spark.engine.parser import parse_delete, parse_insert, parse_update, split_statements
+    from ebike_spark.engine.prepared import PreparedMixin
+
+    sql = (
+        f"SELECT {l1}, GROUP_CONCAT(a ORDER BY {l2} SEPARATOR {sep}), FIELD(x, {l1}, {l2}), "
+        f"DATE_FORMAT(d, '%Y'), database(), LAST_INSERT_ID(), @v FROM dual WHERE s = {l2} LIMIT 1, 2"
+    )
+    with Catalog(None).system_tables({}) as bind:
+        fake = SimpleNamespace(sys_vars={}, user_vars={}, last_insert_id=7, _bind_system=bind)
+        out = Engine._translate(fake, sql)
+    assert _literals(out) >= Counter([l1, l1, l2, l2, l2, sep])
+
+    ins = parse_insert(f"INSERT INTO t VALUES (1, {l1}), ({l2}, 2) ON DUPLICATE KEY UPDATE s = {l2}")
+    assert ins.rows == [["1", l1], [l2, "2"]] and ins.on_dup_update == [("s", l2)]
+    upd = parse_update(f"UPDATE t SET s = {l1}, n = 1 WHERE id = {l2} ORDER BY {l1} LIMIT 3")
+    assert (upd.assignments, upd.where, upd.order_by, upd.limit) == ([("s", l1), ("n", "1")], f"id = {l2}", l1, 3)
+    dele = parse_delete(f"DELETE FROM t WHERE s = {l1} ORDER BY {l2}")
+    assert (dele.where, dele.order_by) == (f"s = {l1}", l2)
+    assert split_statements(f"SELECT {l1}; SELECT {l2};") == [f"SELECT {l1}", f"SELECT {l2}"]
+    assert PreparedMixin._splice_placeholders(f"SELECT ?, {l1}, ? = {l2}", [1, "x"]) == f"SELECT 1, {l1}, 'x' = {l2}"
+
+
+@given(_comment(), _comment(), _literal())
+def test_comments_hide_their_text_from_every_pass(c1, c2, lit):
+    """A comment is a space to every pass: its ; does not split, its ?
+    is no placeholder, and the text around it is kept."""
+    from ebike_spark.engine.parser import lex, split_statements
+
+    sql = f"SELECT 1 {c1}\n, {lit} {c2}\n; SELECT 2"
+    assert strip_comments(sql) == f"SELECT 1  \n, {lit}  \n; SELECT 2"
+    assert split_statements(sql) == [f"SELECT 1  \n, {lit}", "SELECT 2"]
+    assert not any(kind == "param" for kind, _, _ in lex(strip_comments(sql)))
 
 
 # ---------------------------------------------------------------- union-find
@@ -324,10 +429,10 @@ def test_group_concat_rewrite_total(sql):
     """The rewriter never crashes on arbitrary (even malformed) input —
     it either rewrites or raises ValueError (unbalanced parens), and
     text without an unquoted GROUP_CONCAT( passes through verbatim."""
-    from ebike_spark.engine.parser import rewrite_group_concat
+    from ebike_spark.engine.parser import rewrite_dialect
 
     try:
-        out = rewrite_group_concat(sql)
+        out = rewrite_dialect(sql, 0)
     except ValueError:
         return  # unbalanced GROUP_CONCAT( — rejected, never mangled
     if "GROUP_CONCAT" not in sql.upper():
@@ -344,7 +449,7 @@ def test_group_concat_rewrite_shape(expr, distinct, order, sep):
     """Well-formed GROUP_CONCAT always becomes listagg with the same
     expr, a WITHIN GROUP iff ORDER BY was present, and the separator
     literal carried through byte-for-byte."""
-    from ebike_spark.engine.parser import rewrite_group_concat
+    from ebike_spark.engine.parser import rewrite_dialect
 
     inner = f"{distinct}{expr}"
     if order:
@@ -354,7 +459,7 @@ def test_group_concat_rewrite_shape(expr, distinct, order, sep):
         inner += f" SEPARATOR {sep_lit}"
     else:
         sep_lit = "','"
-    out = rewrite_group_concat(f"SELECT GROUP_CONCAT({inner}) FROM t")
+    out = rewrite_dialect(f"SELECT GROUP_CONCAT({inner}) FROM t", 0)
     assert out.startswith(f"SELECT listagg({distinct}{expr}, {sep_lit})")
     assert ("WITHIN GROUP" in out) == bool(order)
     assert out.endswith(" FROM t")

@@ -1228,3 +1228,19 @@ def test_concurrent_updates_lose_no_update(server):
     assert setup.query("SELECT id, v FROM t ORDER BY id")[2] == [["1", "20"], ["2", "0"]]
     setup.query(f"DROP DATABASE {db}")
     setup.close()
+
+
+def test_unknown_column_and_syntax_error_codes_over_the_wire(server):
+    """The engine's 1054 and 1064 reach the client as themselves, not
+    as the catch-all 1105."""
+    c = MiniClient(server)
+    db = f"wp_{uuid.uuid4().hex[:8]}"
+    c.query(f"CREATE DATABASE {db}")
+    c.init_db(db)
+    c.query("CREATE TABLE u (id INT NOT NULL, s CHAR, PRIMARY KEY (id))")
+    kind, code, msg = c.query("SELECT nosuch FROM u")
+    assert (kind, code, msg) == ("err", 1054, "Unknown column 'nosuch' in 'field list'")
+    kind, code, msg = c.query("SELECT 1 +")
+    assert (kind, code) == ("err", 1064) and msg.startswith("You have an error in your SQL syntax")
+    c.query(f"DROP DATABASE {db}")
+    c.close()
