@@ -20,6 +20,17 @@ any of them:
 4. ``retire``  — delete each old version, once no statement that
    started before the re-point is still running.
 
+A DML post-image counts its own changed rows: the caller attaches the
+count to the frame it writes with :func:`observe`
+(``DataFrame.observe``), so the count rides inside the write job and no
+job counts the rows beforehand. The commit reads each count after all
+writes. A post-image that changes no row equals its pre-image: the
+commit deletes its new directory and leaves that table alone (no
+re-point, refresh, version bump or retire), so a statement that
+changes nothing creates no version. No caller skips the commit for a
+count of its own; only DELETE's per-file probe, which picks the files,
+builds no image when no file matches.
+
 A failure before step 4 deletes the new directories and puts back
 every re-pointed catalog entry from a snapshot taken before step 2:
 the statement fails and the tables are as they were. A failed retire
@@ -55,7 +66,7 @@ from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 STEPS = ("write", "repoint", "refresh", "retire")
@@ -66,13 +77,24 @@ class Image(NamedTuple):
     """One table's post-image: the rows of ``df`` (None: none) plus
     ``links``, data files of the live version carried over unchanged.
     DDL also gives the new data ``schema`` and the table's new
-    ``ebike.*`` properties, ``props``."""
+    ``ebike.*`` properties, ``props``. ``changed`` observes, on ``df``,
+    the number of rows the image changes (:func:`observe`); an image
+    without it is always committed."""
 
     qualified: str
     df: DataFrame | None
     links: tuple[str, ...] = ()
     schema: StructType | None = None
     props: dict[str, str] | None = None
+    changed: Observation | None = None
+
+
+def observe(df: DataFrame, n: Column) -> tuple[DataFrame, Observation]:
+    """``df`` with the aggregate ``n`` observed as metric ``n`` by the
+    first action that evaluates it, and the Observation that reads it.
+    Unnamed: connections share one JVM, and a name would be shared."""
+    obs = Observation()
+    return df.observe(obs, n.alias("n")), obs
 
 
 _lock = threading.Lock()
@@ -244,10 +266,12 @@ def sync(spark: SparkSession) -> None:
 # ------------------------------------------------------------ commit
 
 
-def commit(spark: SparkSession, images) -> None:
+def commit(spark: SparkSession, images) -> list[int | None]:
     """Replace the data of every image's table (see the module
-    docstring): write all post-images, then re-point every table, so a
-    multi-table statement commits all of its tables or none."""
+    docstring): write all post-images, then re-point every table whose
+    image changes a row, so a multi-table statement commits all of its
+    tables or none. Returns each image's observed changed-row count
+    (None where it observes none)."""
     images = list(images)
     catalog = _catalog(spark)
     with writing(spark, *[img.qualified for img in images]):
@@ -261,11 +285,18 @@ def commit(spark: SparkSession, images) -> None:
                 staged.append((img, snapshot, old, new))
                 _write(img, new)
                 _checkpoint("write")
-            for img, snapshot, _, new in staged:
+            counts = [img.changed.get["n"] if img.changed else None for img in images]
+            changing = []
+            for s, n in zip(staged, counts):
+                if n == 0:  # equals its pre-image
+                    shutil.rmtree(s[3])
+                else:
+                    changing.append(s)
+            for img, snapshot, _, new in changing:
                 repointed.append((img, snapshot))
                 _repoint(spark, img, new)
                 _checkpoint("repoint")
-            for img, *_ in staged:
+            for img, *_ in changing:
                 spark.sql(f"REFRESH TABLE {_quoted(img.qualified)}")
                 _checkpoint("refresh")
         except BaseException:
@@ -274,9 +305,11 @@ def commit(spark: SparkSession, images) -> None:
         finally:
             with _lock:
                 _new_dirs.difference_update(new for *_, new in staged)
-        bump(spark, *[img.qualified for img in images])
-        for _, _, old, _ in staged:
+        if changing:
+            bump(spark, *[img.qualified for img, *_ in changing])
+        for _, _, old, _ in changing:
             _retire(old)
+    return counts
 
 
 def _claim_version(live: str) -> str:

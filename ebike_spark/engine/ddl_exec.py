@@ -90,11 +90,11 @@ class DdlExecMixin:
             if if_not_exists:
                 return EngineResult("count", affected=0)
             raise EbikeError(1050, f"Table '{table}' already exists")
-        src = self._query(self._translate(select_sql))
+        src, written = commit.observe(self._query(self._translate(select_sql)), F.count(F.lit(1)))
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
         commit.bump(self.spark, q)
-        return EngineResult("count", affected=self.spark.table(q).count())
+        return EngineResult("count", affected=written.get["n"])
 
     # A materialized view is a managed parquet table whose defining
     # SELECT is stored (base64, to dodge DDL string escaping) in table
@@ -201,8 +201,11 @@ class DdlExecMixin:
             f.dataType for f in cur.schema.fields
         ]:
             raise unsupported("REFRESH with a changed result schema")
-        commit.commit(self.spark, [commit.Image(q, src.toDF(*cur.columns))])
-        return EngineResult("count", affected=self.spark.table(q).count())
+        # counted by the write, outside the image's zero rule: a result
+        # of no rows still replaces the view's data
+        src, written = commit.observe(src.toDF(*cur.columns), F.count(F.lit(1)))
+        commit.commit(self.spark, [commit.Image(q, src)])
+        return EngineResult("count", affected=written.get["n"])
 
     def _drop_matview(self, sql: str) -> EngineResult:
         m = re.match(

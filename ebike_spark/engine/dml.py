@@ -35,6 +35,17 @@ column in one pass. DELETE counts the matching rows per data file in
 one probe job: files in which every row matches are dropped, untouched
 files carry over as hard links, and only partly matching files are
 rewritten. Both commit through engine/commit.py.
+
+Affected-row counts come from the write itself wherever no check needs
+them first: UPDATE (with or without LIMIT), DELETE … LIMIT, the
+multi-table UPDATE and DELETE and ON DUPLICATE KEY UPDATE observe their
+count on the post-image they commit (``commit.observe``), and a
+data-sized plain INSERT on the frame it appends. The commit leaves a
+table whose post-image changes no row as it was. Three counts stay
+ahead of the write because they decide it: DELETE's per-file probe,
+REPLACE's deleted rows (its any-key join may pair one stored row with
+several batch rows) and INSERT IGNORE's kept rows (none kept appends
+no file).
 """
 
 from __future__ import annotations
@@ -51,7 +62,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ebike_spark.engine import commit
 from ebike_spark.engine.catalog import ROWID, Catalog
 from ebike_spark.engine.errors import EbikeError, duplicate_entry, unsupported
-from ebike_spark.engine.parser import Delete, Insert, Update, code_tokens, lex, splice, split_top_level, unquote_ident
+from ebike_spark.engine.parser import (
+    Delete, Insert, Update, code_tokens, lex, splice, split_top_level, string_value, unquote_ident
+)
 
 # INSERT IGNORE into a table with MULTIPLE unique indexes replays
 # MySQL's order-dependent first-wins interleave on the driver (see
@@ -62,6 +75,8 @@ from ebike_spark.engine.parser import Delete, Insert, Update, code_tokens, lex, 
 _IGNORE_REPLAY_CAP = 100_000
 # marks the rows whose AUTO_INCREMENT id land minted, for INSERT IGNORE
 _MINTED = "__minted"
+# the rowid column that flags a row a statement touches (NULL elsewhere)
+HIT = "__hit"
 
 
 # Marker embedded in the error strict_cast_sql raises;
@@ -413,17 +428,18 @@ def null_columns(
     df: DataFrame,
     props: dict[str, str] | None = None,
     rows: list | None = None,
-):
-    """Yield each NOT NULL column that holds a NULL — over the collected
-    ``rows`` when given, else one Spark job per column. Shared by the
-    INSERT checks and CHECK TABLE."""
-    for col in catalog.not_null_cols(qualified, props):
-        if (
-            any(r[col] is None for r in rows)
-            if rows is not None
-            else df.where(F.col(col).isNull()).limit(1).count() > 0
-        ):
-            yield col
+) -> list[str]:
+    """Each NOT NULL column that holds a NULL, in the table's NOT NULL
+    order — over the collected ``rows`` when given, else one Spark job
+    for every column (one aggregate of per-column NULL flags). Shared
+    by the INSERT checks and CHECK TABLE."""
+    cols = catalog.not_null_cols(qualified, props)
+    if rows is not None:
+        return [c for c in cols if any(r[c] is None for r in rows)]
+    if not cols:
+        return []
+    flags = df.agg(*[F.bool_or(F.col(c).isNull()) for c in cols]).first()
+    return [c for c, null in zip(cols, flags) if null]
 
 
 def _check_not_null(
@@ -594,8 +610,9 @@ def land(
         n = len(rows)
     else:
         _check_constraints(spark, catalog, qualified, df, props)
-        n = df.count()
+        df, written = commit.observe(df, F.count(F.lit(1)))
         _append(spark, qualified, df, has_rowid)
+        n = written.get["n"]
     return n, first_id
 
 
@@ -661,8 +678,10 @@ def _upsert(
     Conflict pairing follows MySQL: a row conflicts if it matches an
     existing row on the PRIMARY KEY *or any UNIQUE index*. Assignments
     may reference the existing row's columns and ``VALUES(col)`` for
-    the incoming value. Affected-rows follows MySQL: 1 per inserted,
-    2 per updated-and-changed, 0 per matched-but-unchanged. Batches
+    the incoming value. Affected-rows follows MySQL: each written row
+    carries its share — 1 per inserted, 2 per updated-and-changed, 0
+    per stored row left as it was — and the write observes their sum,
+    so a batch that changes nothing commits nothing. Batches
     where one new row matches several existing rows (or vice versa)
     through *different* keys are order-dependent in MySQL; this
     set-oriented implementation rejects them as 1105 rather than pick
@@ -696,23 +715,21 @@ def _upsert(
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
     assigned = {name: _incoming(expr) for name, expr in assigned.items()}
     joined, new_vals, changed = assign(joined, F.col("__new_mark").isNotNull(), assigned, types)
-    n_changed = joined.where(changed).count()
     out_cols = [new_vals.get(name, F.col(name)).alias(name) for name in existing.columns]
-    updated = joined.select(*out_cols)
+    updated = joined.select(*out_cols, F.when(changed, 2).otherwise(0).alias("__affected"))
     to_insert = batch.join(existing, any_key, "left_anti").select(
-        *[F.col(f"__new_{c}").alias(c) for c in new_df.columns]
+        *[F.col(f"__new_{c}").alias(c) for c in new_df.columns], F.lit(1).alias("__affected")
     )
     if catalog.has_rowid(qualified, props):
         # updated rows KEEP their rowid (out_cols passes it through
         # unassigned); only genuinely new rows mint one
         to_insert = to_insert.withColumn(ROWID, F.expr("uuid()"))
-    n_new = to_insert.count()
     final = updated.unionByName(to_insert)
     # an assignment that writes a key column can collide rows that did
     # not collide before: validate the post-image before the commit
     recheck_keys_after_update(catalog, qualified, final, set(assigned), props)
-    _rewrite(spark, commit.Image(qualified, final))
-    return n_new + 2 * n_changed
+    final, affected = commit.observe(final, F.coalesce(F.sum("__affected"), F.lit(0)))
+    return _rewrite(spark, commit.Image(qualified, final.drop("__affected"), changed=affected))
 
 
 def _incoming(expr: str) -> str:
@@ -946,13 +963,14 @@ def _replace(
     return n_batch + n_deleted + intra_deleted
 
 
-def _rewrite(spark: SparkSession, *images: commit.Image) -> None:
+def _rewrite(spark: SparkSession, *images: commit.Image) -> int:
     """Commit DML post-images through the one commit primitive
     (engine/commit.py): each is written once into its table's next
-    version directory, then every table is re-pointed at its own. A
-    failure before the re-point completes leaves every table and its
-    catalog entry as they were."""
-    commit.commit(spark, images)
+    version directory, then every table whose image changes a row is
+    re-pointed at its own. A failure before the re-point completes
+    leaves every table and its catalog entry as they were. Returns the
+    rows the images observe changing."""
+    return sum(n or 0 for n in commit.commit(spark, images))
 
 
 def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) -> int:
@@ -966,38 +984,22 @@ def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) 
     t = spark.table(qualified)
     cond = F.expr(upd.where) if upd.where else F.lit(True)
     if upd.limit is not None:
-        # UPDATE ... [ORDER BY ...] LIMIT n: bound the MATCHED set by a
-        # distributed top-k of rowids (same shape as _delete_limited),
-        # then proceed with membership as the effective condition.
-        if not catalog.has_rowid(qualified):
-            raise unsupported("UPDATE ... LIMIT on a table without the hidden rowid")
-        order = _order_cols(upd.order_by) if upd.order_by else [F.col(ROWID)]
-        doomed = (
-            t.where(F.coalesce(cond, F.lit(False)))
-            .orderBy(*order)
-            .limit(upd.limit)
-            .select(F.col(ROWID).alias("__upd_rid"))
-        )
-        t = t.join(
-            F.broadcast(doomed), t[ROWID] == F.col("__upd_rid"), "left"
-        )
-        cond = F.col("__upd_rid").isNotNull()
+        # UPDATE ... [ORDER BY ...] LIMIT n: the first n matching rows
+        # (_limited) are the effective condition
+        t = _limited(catalog, qualified, t, F.coalesce(cond, F.lit(False)), upd, "UPDATE")
+        cond = F.col(HIT).isNotNull()
     types = dict(catalog.column_types(qualified))
     assigned = dict(upd.assignments)
     for name in assigned:  # hidden rowid is not assignable either
         if name not in types:
             raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
     t, new_vals, changed = assign(t, cond, assigned, types)
-    affected = t.where(changed).count()
-    if affected == 0:
-        return 0
     # project the TABLE's columns only (the LIMIT path joined a helper
-    # __upd_rid column onto t that must not reach the post-image)
+    # column onto t that must not reach the post-image)
     cols = [new_vals.get(name, F.col(name)).alias(name) for name in spark.table(qualified).columns]
-    new_df = t.select(*cols)
-    recheck_keys_after_update(catalog, qualified, new_df, set(assigned))
-    _rewrite(spark, commit.Image(qualified, new_df))
-    return affected
+    recheck_keys_after_update(catalog, qualified, t.select(*cols), set(assigned))
+    t, affected = commit.observe(t, F.count(F.when(changed, 1)))
+    return _rewrite(spark, commit.Image(qualified, t.select(*cols), changed=affected))
 
 
 def declared_keys(
@@ -1061,7 +1063,8 @@ def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str)
         # `~cond` would silently delete NULL rows (NOT NULL → NULL → drop).
         cond_true = F.coalesce(cond, F.lit(False))
         if dele.limit is not None:
-            return _delete_limited(spark, catalog, qualified, t, cond_true, dele)
+            # DELETE ... [ORDER BY ...] LIMIT n (MySQL bounded delete)
+            return drop_hits(spark, qualified, t, _limited(catalog, qualified, t, cond_true, dele, "DELETE"))
         return _delete_files(spark, qualified, t, cond_true)
 
 
@@ -1088,30 +1091,41 @@ def _delete_files(spark: SparkSession, qualified: str, t: DataFrame, cond_true) 
     return sum(hits.values())
 
 
-def _delete_limited(
-    spark: SparkSession, catalog: Catalog, qualified: str, t, cond_true, dele: Delete
-) -> int:
-    """DELETE ... [ORDER BY ...] LIMIT n (MySQL bounded delete): pick
-    the doomed rows' hidden rowids with a distributed top-k
-    (orderBy + limit → TakeOrderedAndProject, never a single-task full
-    sort), then remove them by anti-join. Without ORDER BY, MySQL
-    deletes an arbitrary n rows; here the rowid orders them so repeat
-    runs are deterministic."""
+def _limited(catalog: Catalog, qualified: str, t: DataFrame, cond_true, stmt, verb: str) -> DataFrame:
+    """``t`` flagged at the rows a ``verb`` … [ORDER BY …] LIMIT n
+    statement touches: the first n rows where ``cond_true`` holds, in
+    ``stmt.order_by`` order, else rowid order (MySQL takes an arbitrary
+    n; the rowid makes repeat runs deterministic). Their hidden rowids
+    come from a distributed top-k (orderBy + limit →
+    TakeOrderedAndProject, never a single-task full sort) and are
+    broadcast-joined back as column ``HIT``. Rowids are unique, so the
+    join duplicates no row."""
     if not catalog.has_rowid(qualified):
         # a user-declared `rowid` column displaced the hidden one; no
-        # stable row identity to bound the delete with
-        raise unsupported("DELETE ... LIMIT on a table without the hidden rowid")
-    cand = t.where(cond_true)
-    order = _order_cols(dele.order_by) if dele.order_by else [F.col(ROWID)]
-    doomed = cand.orderBy(*order).limit(dele.limit).select(ROWID)
-    affected = doomed.count()
-    if affected == 0:
-        return 0
-    # the using-join hoists rowid to the front; restore the table's
-    # column order
-    survivors = t.join(doomed, ROWID, "left_anti").select(*t.columns)
-    _rewrite(spark, commit.Image(qualified, survivors))
-    return affected
+        # stable row identity to bound the statement with
+        raise unsupported(f"{verb} ... LIMIT on a table without the hidden rowid")
+    order = _order_cols(stmt.order_by) if stmt.order_by else [F.col(ROWID)]
+    top = t.where(cond_true).orderBy(*order).limit(stmt.limit).select(F.col(ROWID).alias(HIT))
+    return t.join(F.broadcast(top), t[ROWID] == F.col(HIT), "left")
+
+
+def drop_hits(spark: SparkSession, qualified: str, t: DataFrame, flagged: DataFrame) -> int:
+    """Commit table frame ``t`` without the rows ``flagged`` (``t``
+    left-joined to unique rowids as column ``HIT``) marks, and return
+    how many it dropped: the write counts the flags, then filters them
+    out. DELETE … LIMIT and the multi-table DELETE."""
+    flagged, dropped = commit.observe(flagged, F.count(HIT))
+    survivors = flagged.where(F.col(HIT).isNull()).select(*t.columns)
+    return _rewrite(spark, commit.Image(qualified, survivors, changed=dropped))
+
+
+def _leading_string(text: str) -> tuple[str | None, str]:
+    """The value of the string literal ``text`` starts with (None if it
+    starts with anything else) and the text after it."""
+    code = code_tokens(text)
+    if not code or code[0][0] != "string":
+        return None, text
+    return string_value(text[: code[0][2]]), text[code[0][2] :]
 
 
 def _order_cols(order_by: str) -> list:
@@ -1161,15 +1175,12 @@ def load_data(
     loop; in unrestricted mode a DIRECTORY of files parallelizes for
     free (under a secure_file_priv fence only regular files load —
     per-entry symlinks inside a directory could escape the fence)."""
-    m = re.match(
-        r"LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s+'([^']+)'\s*"
-        r"(REPLACE|IGNORE)?\s*INTO\s+TABLE\s+([\w.`\"]+)([\s\S]*)$",
-        sql,
-        re.I,
-    )
-    if not m:
+    head = re.match(r"LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s", sql, re.I)
+    path, tail = _leading_string(sql[head.end() :]) if head else (None, "")
+    m = re.match(r"\s*(REPLACE|IGNORE)?\s*INTO\s+TABLE\s+([\w.`\"]+)([\s\S]*)$", tail, re.I)
+    if not path or not m:
         raise EbikeError(1064, "malformed LOAD DATA INFILE")
-    path, mode, tbl_tok, rest = m.group(1), (m.group(2) or "").upper(), m.group(3), m.group(4)
+    mode, tbl_tok, rest = (m.group(1) or "").upper(), m.group(2), m.group(3)
     qualified = catalog.qualify(unquote_ident(tbl_tok), current_db)
     catalog.require_table(qualified)
     if secure_file_priv:
@@ -1194,10 +1205,10 @@ def load_data(
     if not os.path.exists(path):
         raise EbikeError(29, f"File '{path}' not found")
 
-    sep = "\t"  # MySQL default field terminator
-    fm = re.search(r"FIELDS\s+TERMINATED\s+BY\s+'((?:[^'\\]|\\.)*)'", rest, re.I)
-    if fm:
-        sep = fm.group(1).encode().decode("unicode_escape")
+    fm = re.search(r"FIELDS\s+TERMINATED\s+BY\s", rest, re.I)
+    sep = _leading_string(rest[fm.end() :])[0] if fm else "\t"  # MySQL's default
+    if sep is None:
+        raise EbikeError(1064, "malformed FIELDS TERMINATED BY")
     skip_header = False
     im = re.search(r"IGNORE\s+(\d+)\s+LINES", rest, re.I)
     if im:

@@ -341,7 +341,6 @@ class DmlExecMixin:
             # matched rows x assigned columns, spread across executor
             # storage.
             src = src.localCheckpoint(eager=True)
-        total = 0
         # Aliases of the SAME physical table merge into ONE
         # post-image: MySQL permits `UPDATE t a JOIN t b ... SET
         # a.x=..., b.y=...` but its row-level outcome is processing-
@@ -360,7 +359,7 @@ class DmlExecMixin:
                 gindex[t["qualified"]] = len(groups)
                 groups.append((t["qualified"], []))
             groups[gindex[t["qualified"]]][1].append((k, t))
-        staged = []  # (qualified, new_df) per PHYSICAL table
+        images = []  # one per PHYSICAL table
         for qualified, members in groups:
             tb = self.spark.table(qualified)
             types = members[0][1]["types"]
@@ -406,25 +405,20 @@ class DmlExecMixin:
                 _or,
                 [~new_vals[c].eqNullSafe(F.col(c)) for c in new_vals],
             )
-            affected = joined.where(changed).count()
-            if affected == 0:
-                continue
-            total += affected
             out_cols = [
                 new_vals[name].alias(name)
                 if name in new_vals
                 else tb[name].alias(name)
                 for name in tb.columns
             ]
-            new_df = joined.select(*out_cols)
-            dml.recheck_keys_after_update(self.catalog, qualified, new_df, set(new_vals))
-            staged.append((qualified, new_df))
+            dml.recheck_keys_after_update(self.catalog, qualified, joined.select(*out_cols), set(new_vals))
+            joined, affected = commit.observe(joined, F.count(F.when(changed, 1)))
+            images.append(commit.Image(qualified, joined.select(*out_cols), changed=affected))
         # All key re-checks passed against pre-images. One commit lands
         # every post-image: all are written before any table is
-        # re-pointed, and a failed commit leaves every target as it was.
-        if staged:
-            dml._rewrite(self.spark, *[commit.Image(q, df) for q, df in staged])
-        return EngineResult("count", affected=total)
+        # re-pointed, a target whose image changes no row is left as
+        # it was, and a failed commit leaves every target as it was.
+        return EngineResult("count", affected=dml._rewrite(self.spark, *images))
 
     def _delete(self, sql: str) -> EngineResult:
         fixed = self._translate(sql)
@@ -456,10 +450,12 @@ class DmlExecMixin:
         purge-by-reference statement.
 
         Set-oriented plan: one join projects the DISTINCT doomed hidden
-        rowids, then one anti-join rewrites the target — two shuffles
-        at any size, no row loop. Affected-rows = distinct target rows
-        matched, exactly MySQL's accounting (a row matched by several
-        join partners still deletes once)."""
+        rowids, then one left join flags them on the target, whose write
+        counts the flagged rows and drops them — no row loop at any
+        size. Affected-rows = distinct target rows matched, exactly
+        MySQL's accounting (a row matched by several join partners
+        still deletes once); rowids are unique, so the join duplicates
+        no row."""
         tgt = unquote_ident(tgt_tok)
         base = self._resolve_alias_table(tgt, frm)
         qualified = self.catalog.qualify(base, self.current_db)
@@ -469,17 +465,13 @@ class DmlExecMixin:
                 "multi-table DELETE on a table without the hidden rowid"
             )
         with commit.writing(self.spark, qualified):
-            sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS __del_rid FROM {frm}" + (
+            sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS {dml.HIT} FROM {frm}" + (
                 f" WHERE {where}" if where else ""
             )
             doomed = self._query(sel).distinct()
-            affected = doomed.count()
-            if affected == 0:
-                return EngineResult("count", affected=0)
             t = self.spark.table(qualified)
-            survivors = t.join(doomed, t[dml.ROWID] == doomed["__del_rid"], "left_anti")
-            dml._rewrite(self.spark, commit.Image(qualified, survivors))
-        return EngineResult("count", affected=affected)
+            flagged = t.join(doomed, t[dml.ROWID] == doomed[dml.HIT], "left")
+            return EngineResult("count", affected=dml.drop_hits(self.spark, qualified, t, flagged))
 
     # ------------------------------------------------------------ UDFs
 

@@ -450,12 +450,15 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         if m:
             q = self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)
             return rows(show.show_index(spark, self.catalog, q))
-        m = re.match(r"(?:(GLOBAL)\s+|SESSION\s+)?VARIABLES(?:\s+LIKE\s+'([^']*)')?\s*$", body, re.I)
+        m = re.match(r"(?:(GLOBAL)\s+|SESSION\s+)?VARIABLES(?:\s+LIKE\s+([\s\S]+))?$", body, re.I)
         if m:
+            like = string_value(m.group(2)) if m.group(2) else None
+            if m.group(2) and like is None:
+                raise parse_error("near SHOW VARIABLES LIKE")
             # GLOBAL scope = defaults overlaid with SET GLOBAL values;
             # SESSION (default) = this session's variables
             scope = {**DEFAULT_SYS_VARS, **GLOBAL_VARS} if m.group(1) else self.sys_vars
-            return rows(show.show_variables(spark, scope, m.group(2)))
+            return rows(show.show_variables(spark, scope, like))
         m = re.match(r"COUNT\(\*\)\s+(WARNINGS|ERRORS)", up)
         if m:
             # single-row single-int-column shape (clients read row[0][0])

@@ -18,7 +18,14 @@ from ebike_spark.engine.catalog import SQL_TYPE_NAME, Catalog
 
 
 def _like_to_regex(pat: str) -> str:
-    return "^" + re.escape(pat).replace("%", ".*").replace("_", ".") + "$"
+    """A LIKE pattern as an anchored regex: ``%`` any run, ``_`` any one
+    character, and a backslash takes the next character literally
+    (MySQL's ``\\%`` and ``\\_``)."""
+    wild = {"%": ".*", "_": "."}
+    return "^" + "".join(
+        re.escape(m.group(1)) if m.group(1) else wild.get(m.group(0)) or re.escape(m.group(0))
+        for m in re.finditer(r"\\([\s\S])|[\s\S]", pat)
+    ) + "$"
 
 
 def show_databases(spark: SparkSession, catalog: Catalog) -> DataFrame:
@@ -56,10 +63,7 @@ def show_variables(spark: SparkSession, sys_vars: dict[str, object], like: str |
     if like:
         rx = re.compile(_like_to_regex(like), re.I)
         items = [(k, v) for k, v in items if rx.match(k)]
-    return spark.createDataFrame(
-        [(k, str(v)) for k, v in items] or [("", "")],
-        "Variable_name string, Value string",
-    )
+    return spark.createDataFrame([(k, str(v)) for k, v in items], "Variable_name string, Value string")
 
 
 def show_engines(spark: SparkSession) -> DataFrame:

@@ -47,9 +47,13 @@ def _leftovers(spark, qualified: str) -> list[str]:
 # statement, tables it changes
 CASES = {
     "update": ("UPDATE t SET v = v + 100 WHERE id = 1", ["t"]),
+    "update_limit": ("UPDATE t SET v = v + 100 ORDER BY id DESC LIMIT 2", ["t"]),
     "delete_whole_file": ("DELETE FROM t WHERE id >= 5", ["t"]),
     "delete_partial_file": ("DELETE FROM t WHERE id = 1", ["t"]),
+    "delete_limit": ("DELETE FROM t ORDER BY id LIMIT 2", ["t"]),
     "multi_table_update": ("UPDATE t JOIN u ON t.id = u.id SET t.v = u.w, u.w = t.v", ["t", "u"]),
+    "multi_table_delete": ("DELETE t FROM t JOIN u ON t.id = u.id", ["t"]),
+    "upsert": ("INSERT INTO t VALUES (1, 0, 'z'), (9, 90, 'i') ON DUPLICATE KEY UPDATE v = VALUES(v)", ["t"]),
     "drop_column": ("ALTER TABLE t DROP COLUMN w", ["t"]),
 }
 
@@ -253,3 +257,76 @@ def test_passthrough_insert_is_seen_by_another_connection(eng, spark):
     assert [r["id"] for r in other.execute("SELECT id FROM t").rows()] == [1]
     eng.execute("INSERT INTO t TABLE s")
     assert sorted(r["id"] for r in other.execute("SELECT id FROM t").rows()) == [1, 2]
+
+
+# statements that change no row of a table _setup fills: a miss, or a
+# match whose assignments leave every value as it was
+UNCHANGED = [
+    "UPDATE t SET v = 10 WHERE id = 1",
+    "UPDATE t SET v = 0 WHERE id = 99",
+    "UPDATE t SET v = v WHERE FALSE",
+    "UPDATE t SET v = 10 WHERE id <= 2 ORDER BY id LIMIT 1",
+    "UPDATE t SET v = 0 WHERE id = 99 LIMIT 2",
+    "DELETE FROM t WHERE id = 99 LIMIT 2",
+    "UPDATE t JOIN u ON t.id = u.id SET t.v = t.v, u.w = u.w",
+    "UPDATE t JOIN u ON t.id = u.id + 100 SET t.v = 0, u.w = 0",
+    "DELETE t FROM t JOIN u ON t.id = u.id + 100",
+    "INSERT INTO t VALUES (1, 10, 'a'), (2, 20, 'b') ON DUPLICATE KEY UPDATE v = VALUES(v)",
+]
+
+
+@pytest.mark.parametrize("sql", UNCHANGED)
+def test_a_statement_that_changes_nothing_creates_no_version(eng, spark, sql):
+    """The commit drops a post-image whose observed count is 0: the
+    statement reports 0 affected rows, and t and u keep their live
+    location, rows and files, with no new version left behind."""
+    _setup(eng)
+    names = [f"{eng.current_db}.{t}" for t in ("t", "u")]
+    before = {q: (_state(spark, q), commit.location(spark, q)) for q in names}
+    assert eng.execute(sql).affected == 0
+    for q in names:
+        assert (_state(spark, q), commit.location(spark, q)) == before[q]
+        assert _leftovers(spark, q) == []
+
+
+@pytest.mark.parametrize("emptied", [False, True], ids=["never_written", "emptied"])
+def test_statements_on_an_empty_table_create_no_version(eng, spark, emptied):
+    """UPDATE and DELETE forms on a table without rows — one never
+    written, and one whose rows a DELETE dropped with their file —
+    report 0 and leave the table where it is."""
+    eng.execute("CREATE TABLE e (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    eng.execute("CREATE TABLE u (id INT NOT NULL, w INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO u VALUES (1, 7)")
+    if emptied:
+        eng.execute("INSERT INTO e VALUES (1, 10)")
+        assert eng.execute("DELETE FROM e").affected == 1
+    q = f"{eng.current_db}.e"
+    before = (_state(spark, q), commit.location(spark, q))
+    for sql in (
+        "UPDATE e SET v = 1",
+        "UPDATE e SET v = 1 ORDER BY id LIMIT 1",
+        "DELETE FROM e LIMIT 1",
+        "DELETE FROM e",
+        "UPDATE e JOIN u ON e.id = u.id SET e.v = u.w",
+        "DELETE e FROM e JOIN u ON e.id = u.id",
+    ):
+        assert eng.execute(sql).affected == 0, sql
+        assert (_state(spark, q), commit.location(spark, q)) == before, sql
+        assert _leftovers(spark, q) == [], sql
+
+
+def test_update_of_a_one_file_table_runs_one_job(eng, spark):
+    """A single-table UPDATE of a non-key column counts its changed
+    rows inside its write: the statement runs exactly one Spark job,
+    counted by job group."""
+    eng.execute("CREATE TABLE j (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO j VALUES (1, 10), (2, 20), (3, 30)")
+    sc = spark.sparkContext
+    group = f"update_jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "single-table UPDATE")
+    try:
+        assert eng.execute("UPDATE j SET v = v + 1 WHERE id = 2").affected == 1
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert sorted(tuple(r) for r in eng.execute("SELECT id, v FROM j").rows()) == [(1, 10), (2, 21), (3, 30)]

@@ -96,11 +96,28 @@ def test_duplicate_primary_key(eng):
         eng.execute("INSERT INTO user VALUES (7, 'x', 1.0), (7, 'x', 2.0)")
 
 
-def test_not_null_enforced(eng):
+def test_not_null_enforced(eng, tmp_path):
     eng.execute(USER_DDL)
     with pytest.raises(EbikeError) as ei:
         eng.execute("INSERT INTO user VALUES (NULL, 'a', 1.0)")
     assert ei.value.code == 1048
+    # data-sized sources check every NOT NULL column in one job: the
+    # NULL in the second NOT NULL column is found, and the first column
+    # in declared order is named when both hold one
+    eng.execute("CREATE TABLE nn2 (a INT NOT NULL, b CHAR NOT NULL, c INT)")
+    eng.execute("CREATE TABLE src (a INT, b CHAR, c INT)")
+    eng.execute("INSERT INTO src VALUES (1, 'x', 1), (2, NULL, 2)")
+    f = tmp_path / "nn.csv"
+    f.write_text("1,x,1\n2,,2\n")
+    for sql in ("INSERT INTO nn2 SELECT * FROM src", f"LOAD DATA INFILE '{f}' INTO TABLE nn2 FIELDS TERMINATED BY ','"):
+        with pytest.raises(EbikeError) as ei:
+            eng.execute(sql)
+        assert (ei.value.code, ei.value.message) == (1048, "Column 'b' cannot be null"), sql
+    eng.execute("INSERT INTO src VALUES (NULL, NULL, 3)")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("INSERT INTO nn2 SELECT * FROM src")
+    assert (ei.value.code, ei.value.message) == (1048, "Column 'a' cannot be null")
+    assert eng.execute("SELECT COUNT(*) AS n FROM nn2").rows()[0]["n"] == 0
 
 
 def test_insert_constant_expressions(eng):
@@ -211,6 +228,26 @@ def test_table_not_exists(eng):
     with pytest.raises(EbikeError) as ei:
         eng.execute("INSERT INTO ghost VALUES (1)")
     assert ei.value.code == 1146
+
+
+def test_show_variables_like(eng):
+    """SHOW VARIABLES LIKE: no match is an empty result, a backslash
+    escapes % and _, and the pattern is a MySQL string literal."""
+
+    def names(like):
+        return [r["Variable_name"] for r in eng.execute(f"SHOW VARIABLES LIKE {like}").rows()]
+
+    assert names("'no_such%'") == []
+    assert names("'version''s'") == []
+    assert names("'max\\_allowed%'") == ["max_allowed_packet"]
+    assert names("'max\\_allowed\\%'") == []
+    assert names("'version\\_comment'") == ["version_comment"]
+    assert names("'version_comment'") == ["version_comment"]
+    assert names("\"wait%\"") == ["wait_timeout"]
+    assert eng.execute("SHOW GLOBAL VARIABLES LIKE 'nothing'").rows() == []
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("SHOW VARIABLES LIKE version")
+    assert ei.value.code == 1064
 
 
 def test_variables(eng):
@@ -975,6 +1012,23 @@ def test_create_table_as_select(eng):
     with pytest.raises(EbikeError) as ei:
         eng.execute("CREATE TABLE tall AS SELECT * FROM user")
     assert ei.value.code == 1050
+
+
+def test_ctas_and_refresh_count_the_rows_they_write(eng):
+    """CTAS and REFRESH MATERIALIZED VIEW report the rows their write
+    wrote. A REFRESH whose SELECT now returns no rows reports 0 and
+    leaves the view empty; a CTAS of no rows reports 0."""
+    eng.execute("CREATE TABLE base (id INT, v INT)")
+    eng.execute("INSERT INTO base VALUES (1, 10), (2, 20), (3, 30)")
+    assert eng.execute("CREATE TABLE none AS SELECT * FROM base WHERE v > 100").affected == 0
+    assert eng.execute("SELECT COUNT(*) AS n FROM none").rows()[0]["n"] == 0
+    assert eng.execute("CREATE MATERIALIZED VIEW big AS SELECT id FROM base WHERE v >= 20").affected == 2
+    eng.execute("UPDATE base SET v = 0")
+    assert eng.execute("REFRESH MATERIALIZED VIEW big").affected == 0
+    assert eng.execute("SELECT COUNT(*) AS n FROM big").rows()[0]["n"] == 0
+    eng.execute("UPDATE base SET v = 50 WHERE id = 3")
+    assert eng.execute("REFRESH MATERIALIZED VIEW big").affected == 1
+    assert [r["id"] for r in eng.execute("SELECT id FROM big").rows()] == [3]
 
 
 def test_alter_table_rename(eng):
@@ -1793,6 +1847,26 @@ def test_load_data_infile_basic(eng, tmp_path):
     assert eng.execute("SELECT COUNT(*) AS n FROM ld").rows()[0]["n"] == 3
 
 
+def test_load_data_reads_its_path_and_terminator_as_string_literals(eng, tmp_path):
+    """LOAD DATA's INFILE path and FIELDS TERMINATED BY are MySQL string
+    literals: a doubled or escaped quote in the path, and escapes such
+    as \\t in the terminator."""
+    eng.execute("CREATE TABLE lq (id INT, name CHAR)")
+    f = tmp_path / "it's.csv"
+    f.write_text("1|a\n2|b\n")
+    path = str(f).replace("'", "''")
+    assert eng.execute(f"LOAD DATA INFILE '{path}' INTO TABLE lq FIELDS TERMINATED BY '|'").affected == 2
+    g = tmp_path / "tab.csv"
+    g.write_text("3\tc\n")
+    assert eng.execute(f"LOAD DATA INFILE \"{g}\" INTO TABLE lq FIELDS TERMINATED BY '\\t'").affected == 1
+    assert eng.execute(f"LOAD DATA INFILE '{g}' INTO TABLE lq").affected == 1  # tab by default
+    rows = sorted(tuple(r) for r in eng.execute("SELECT id, name FROM lq").rows())
+    assert rows == [(1, "a"), (2, "b"), (3, "c"), (3, "c")]
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(f"LOAD DATA INFILE '{g}' INTO TABLE lq FIELDS TERMINATED BY tab")
+    assert ei.value.code == 1064
+
+
 def test_load_data_infile_header_columns_and_modes(eng, tmp_path):
     eng.execute("CREATE TABLE ld2 (id INT NOT NULL, name CHAR, PRIMARY KEY (id))")
     f = tmp_path / "h.csv"
@@ -1964,6 +2038,15 @@ def test_multi_table_delete_join(eng):
     )
     assert r.affected == 1
     assert sorted(x["id"] for x in eng.execute("SELECT id FROM mdel").rows()) == [4]
+    # the target on the NULL side of a LEFT JOIN: an unmatched row
+    # names no target row, so it neither deletes nor counts
+    r = eng.execute("DELETE mref FROM mdel LEFT JOIN mref ON mdel.grp = mref.grp")
+    assert r.affected == 0
+    assert eng.execute("SELECT COUNT(*) AS n FROM mref").rows()[0]["n"] == 3
+    eng.execute("INSERT INTO mdel VALUES (6, 'b')")
+    r = eng.execute("DELETE mref FROM mdel LEFT JOIN mref ON mdel.grp = mref.grp")
+    assert r.affected == 1
+    assert sorted(x["grp"] for x in eng.execute("SELECT grp FROM mref").rows()) == ["a", "a"]
 
 
 def test_multi_table_update_join(eng):
