@@ -316,6 +316,13 @@ class Catalog:
                 out.append((k[len(PROP_UNIQUE_PREFIX):], [c for c in v.split(",") if c]))
         return sorted(out)
 
+    def keys(self, qualified: str, props: dict[str, str] | None = None) -> list[tuple[str, list[str]]]:
+        """The table's PRIMARY + UNIQUE key list in check order — the one
+        definition every duplicate probe shares."""
+        props = self._props(qualified, props)
+        pk = self.primary_key(qualified, props)
+        return ([("PRIMARY", pk)] if pk else []) + self.unique_keys(qualified, props)
+
     def cluster_indexes(self, qualified: str) -> list[tuple[str, list[str]]]:
         out = []
         for k, v in self.properties(qualified).items():

@@ -279,7 +279,7 @@ class DdlExecMixin:
             t = self.spark.table(q)
             msgs = [f"column '{col}' contains NULL" for col in dml.null_columns(self.catalog, q, t)]
             for key_name, _ in dml.duplicate_key_probe(
-                t, dml.declared_keys(self.catalog, q)
+                t, self.catalog.keys(q)
             ):
                 msgs.append(f"duplicate entries in key '{key_name}'")
             if msgs:
@@ -621,10 +621,10 @@ class DdlExecMixin:
             raise EbikeError(1060, f"Duplicate column name '{new}'")
         if st.props.get(PROP_AUTO_INCREMENT) == old and spark_t != "BIGINT":
             raise EbikeError(1063, f"Incorrect column specifier for column '{old}'")
-        if not_null and t.where(F.col(old).isNull()).count():
-            raise EbikeError(1138, f"Invalid use of NULL value for column '{old}'")
-        # a value that does not convert raises 1366 from the commit's write
-        cast = F.expr(dml.strict_cast_sql(f"`{old}`", spark_t, old))
+        # a value that does not convert raises 1366, and a NULL into NOT
+        # NULL 1138, from the commit's write
+        null = EbikeError(1138, f"Invalid use of NULL value for column '{old}'") if not_null else None
+        cast = F.expr(dml.strict_cast_sql(f"`{old}`", spark_t, old, null))
         st.df = t.select(*[cast.alias(new) if c == old else F.col(c) for c in t.columns])
         st.rewrite = True
         pk_cols = [c for c in st.props.get(PROP_PK, "").split(",") if c]

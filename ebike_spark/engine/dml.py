@@ -27,14 +27,22 @@ is statement-sized: a plain insert collects it once, checks it on the
 driver and writes one file. Any other source is checked by Spark jobs
 only. :func:`duplicate_key_probe` is the one in-frame duplicate check;
 UPDATE, ALTER and CHECK TABLE share it. NULL into a NOT NULL column is
-MySQL error 1048.
+MySQL error 1048, for an inserted row and for an assigned value alike.
+
+REPLACE and ON DUPLICATE KEY UPDATE pair the batch with the stored
+rows through one any-key join (:func:`_paired`), read every fact
+they check before the write from one aggregate action over the batch
+and that join (:func:`_facts`), and write a projection of the same
+join.
 
 UPDATE and ON DUPLICATE KEY UPDATE bind each assignment once
 (:func:`assign`) and compute when(matched, new, old) per assigned
-column in one pass. DELETE counts the matching rows per data file in
-one probe job: files in which every row matches are dropped, untouched
-files carry over as hard links, and only partly matching files are
-rewritten. Both commit through engine/commit.py.
+column in one pass; the strict cast of a value assigned to a NOT NULL
+column raises 1048 for a NULL, inside the write. DELETE counts the
+matching rows per data file in one probe job: files in which every row
+matches are dropped, untouched files carry over as hard links, and only
+partly matching files are rewritten. Both commit through
+engine/commit.py.
 
 Affected-row counts come from the write itself wherever no check needs
 them first: UPDATE (with or without LIMIT), DELETE … LIMIT, the
@@ -42,10 +50,11 @@ multi-table UPDATE and DELETE and ON DUPLICATE KEY UPDATE observe their
 count on the post-image they commit (``commit.observe``), and a
 data-sized plain INSERT on the frame it appends. The commit leaves a
 table whose post-image changes no row as it was. Three counts stay
-ahead of the write because they decide it: DELETE's per-file probe,
-REPLACE's deleted rows (its any-key join may pair one stored row with
-several batch rows) and INSERT IGNORE's kept rows (none kept appends
-no file).
+ahead of the write because they decide it: DELETE's per-file probe
+picks the files, INSERT IGNORE's kept rows (none kept appends no file),
+and REPLACE's batch, survivor and deleted-row counts, which ride in its
+one fact aggregate (its any-key join may pair one stored row with
+several batch rows, so its write cannot count them).
 """
 
 from __future__ import annotations
@@ -61,9 +70,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ebike_spark.engine import commit
 from ebike_spark.engine.catalog import ROWID, Catalog
-from ebike_spark.engine.errors import EbikeError, duplicate_entry, unsupported
+from ebike_spark.engine.errors import EbikeError, bad_value, duplicate_entry, marked, null_value, unsupported
 from ebike_spark.engine.parser import (
-    Delete, Insert, Update, code_tokens, lex, splice, split_top_level, string_value, unquote_ident
+    Delete, Insert, Update, code_tokens, leading_string, splice, split_top_level, sql_literal, unquote_ident
 )
 
 # INSERT IGNORE into a table with MULTIPLE unique indexes replays
@@ -77,16 +86,8 @@ _IGNORE_REPLAY_CAP = 100_000
 _MINTED = "__minted"
 # the rowid column that flags a row a statement touches (NULL elsewhere)
 HIT = "__hit"
-
-
-# Marker embedded in the error strict_cast_sql raises;
-# Engine.execute translates it to MySQL 1366. A plain-text
-# channel because the error crosses the JVM boundary as a generic
-# SparkRuntimeException. The column name is SENTINEL-TERMINATED so
-# names with non-word characters (backtick-quoted identifiers) survive
-# the round trip and the translator never over- or under-captures.
-BADCAST_MARK = "EBIKE_BADCAST:"
-BADCAST_END = ":KCABDAST"
+# a batch row's statement position and a stored row's tag (_paired)
+POS, SID = "__pos", "__sid"
 
 
 # Spark's non-ANSI double→long cast SATURATES at Long.Max instead of
@@ -190,25 +191,21 @@ def _mysql_coerce_numeric(ref: str, target: str):
     )
 
 
-def badcast_msg(col: str) -> str:
-    """The one source of truth for the marker-message format the 1366
-    translator (Engine.execute) parses back out."""
-    return f"{BADCAST_MARK}{col}{BADCAST_END}"
-
-
-def strict_cast_sql(ref: str, spark_type: str, col: str) -> str:
+def strict_cast_sql(ref: str, spark_type: str, col: str, if_null: EbikeError | None = None) -> str:
     """The strict cast of ``ref`` to a column's declared type, as SQL
     text: the one definition every write path uses (INSERT … VALUES,
     INSERT … SELECT, LOAD DATA, UPDATE, ON DUPLICATE KEY UPDATE, the
     multi-table UPDATE and ALTER MODIFY/CHANGE). MySQL strict mode: a
     non-NULL value whose cast comes back NULL (unparseable string,
     DECIMAL overflow), or whose magnitude saturates a BIGINT, raises
-    1366 (``badcast_msg(col)``) instead of storing a wrong value;
-    BIGINT targets round (rounding_bigint_cast_sql). The guard costs no
-    extra Spark job: it fires inside whichever action first evaluates
-    the rows. ``ref`` is named several times, so it must be a column or
-    alias bound once: a RAND() is then drawn once, checked and stored
-    from the same draw."""
+    1366 instead of storing a wrong value; BIGINT targets round
+    (rounding_bigint_cast_sql). ``if_null`` is the error a NULL value
+    raises, for a NOT NULL column: 1048 for an assigned value, 1138 for
+    ALTER MODIFY. The guards cost no extra Spark job: they fire inside
+    whichever action first evaluates the rows (errors.marked carries
+    the error out). ``ref`` is named several times, so it must be a
+    column or alias bound once: a RAND() is then drawn once, checked
+    and stored from the same draw."""
     if spark_type.upper() == "BIGINT":  # column_types reports lowercase
         cast = rounding_bigint_cast_sql(ref)
         bad = f"({ref} IS NOT NULL AND ({cast}) IS NULL) OR ABS(CAST({ref} AS DOUBLE)) > {_LONG_MAX_D}"
@@ -218,22 +215,26 @@ def strict_cast_sql(ref: str, spark_type: str, col: str) -> str:
             as_digit = f"CASE {cast} WHEN 'true' THEN '1' WHEN 'false' THEN '0' END"
             cast = f"CASE WHEN typeof({ref}) = 'boolean' THEN {as_digit} ELSE {cast} END"
         bad = f"{ref} IS NOT NULL AND {cast} IS NULL"
-    msg = badcast_msg(col).replace("'", "''")  # keep the literal intact
-    return f"CASE WHEN {bad} THEN CAST(raise_error('{msg}') AS {spark_type}) ELSE {cast} END"
+
+    def fail(err: EbikeError) -> str:
+        return f"CAST(raise_error({sql_literal(marked(err))}) AS {spark_type})"
+
+    null = f" WHEN {ref} IS NULL THEN {fail(if_null)}" if if_null else ""
+    return f"CASE WHEN {bad} THEN {fail(bad_value(col))}{null} ELSE {cast} END"
 
 
-def _literal_type(cell: str) -> tuple[str, int, int] | None:
+def _literal_type(cell: str, kinds: tuple[str, ...]) -> tuple[str, int, int] | None:
     """Spark's parse type of a VALUES cell that is one plain literal
     token — a number (``-`` allowed before it), a string, NULL, TRUE or
     FALSE — as (kind, integer digits, scale); kind is null, boolean,
-    string, double (exponent form) or exact (INT/BIGINT/DECIMAL). None
-    for any other cell, and for exact literals beyond DECIMAL(38)."""
-    kinds = [kind for kind, _, _ in lex(cell)]
-    if kinds == ["string"]:
+    string, double (exponent form) or exact (INT/BIGINT/DECIMAL).
+    ``kinds`` are the cell's token kinds (parse_insert). None for any
+    other cell, and for exact literals beyond DECIMAL(38)."""
+    if kinds == ("string",):
         return ("string", 0, 0)
-    if kinds == ["word"] and cell.upper() in ("NULL", "TRUE", "FALSE"):
+    if kinds == ("word",) and cell.upper() in ("NULL", "TRUE", "FALSE"):
         return ("null", 0, 0) if cell.upper() == "NULL" else ("boolean", 0, 0)
-    if kinds != ["number"] and not (kinds == ["punct", "number"] and cell[0] == "-"):
+    if kinds != ("number",) and not (kinds == ("punct", "number") and cell[0] == "-"):
         return None
     if "e" in cell or "E" in cell:
         return ("double", 0, 0)
@@ -247,8 +248,8 @@ def _literal_type(cell: str) -> tuple[str, int, int] | None:
     return ("exact", int_digits, scale) if int_digits + scale <= 38 else None
 
 
-def _inline_ok(rows: list[list[str]], target: list[str], types: dict[str, str]) -> bool:
-    """True when every cell is a plain literal AND Spark's per-column
+def _inline_ok(ins: Insert, target: list[str], types: dict[str, str]) -> bool:
+    """True when every cell of ``ins`` is a plain literal AND Spark's per-column
     type widening over the inline table cannot change a stored value.
     A column keeps one literal type (NULLs aside), or mixes only exact
     numerics whose widened DECIMAL holds every value exactly and lands
@@ -258,8 +259,8 @@ def _inline_ok(rows: list[list[str]], target: list[str], types: dict[str, str]) 
     takes the per-row form, where each cell keeps its own type."""
     for i, name in enumerate(target):
         seen = set()
-        for row in rows:
-            t = _literal_type(row[i])
+        for row, kinds in zip(ins.rows, ins.kinds):
+            t = _literal_type(row[i], kinds[i])
             if t is None:
                 return False
             if t[0] != "null":
@@ -339,7 +340,7 @@ def _values_df(spark: SparkSession, ins: Insert, col_types: list[tuple[str, str]
     target = target_columns(ins.columns, col_types)
     if any(len(row) != len(target) for row in ins.rows):
         raise EbikeError(1136, "Column count doesn't match value count")
-    if _inline_ok(ins.rows, target, types):
+    if _inline_ok(ins, target, types):
         # positional aliases: the i-th VALUES column is `__r_i`
         cols = [
             f"{strict_cast_sql(f'`__r_{target.index(name)}`', types[name], name)} AS `{name}`"
@@ -422,6 +423,12 @@ def _stored_clash(existing: DataFrame, new_rows: DataFrame, cols: list[str], tup
     return found[0] if found else None
 
 
+def null_flags(cols: list[str]) -> list:
+    """Per NOT NULL column of ``cols``, the aggregate "some row holds a
+    NULL there"."""
+    return [F.bool_or(F.col(c).isNull()) for c in cols]
+
+
 def null_columns(
     catalog: Catalog,
     qualified: str,
@@ -431,14 +438,15 @@ def null_columns(
 ) -> list[str]:
     """Each NOT NULL column that holds a NULL, in the table's NOT NULL
     order — over the collected ``rows`` when given, else one Spark job
-    for every column (one aggregate of per-column NULL flags). Shared
-    by the INSERT checks and CHECK TABLE."""
+    for every column (one aggregate of null_flags). Shared by the
+    INSERT checks and CHECK TABLE; REPLACE and the upsert aggregate the
+    same flags beside their other facts (_facts)."""
     cols = catalog.not_null_cols(qualified, props)
     if rows is not None:
         return [c for c in cols if any(r[c] is None for r in rows)]
     if not cols:
         return []
-    flags = df.agg(*[F.bool_or(F.col(c).isNull()) for c in cols]).first()
+    flags = df.agg(*null_flags(cols)).first()
     return [c for c, null in zip(cols, flags) if null]
 
 
@@ -451,7 +459,7 @@ def _check_not_null(
 ) -> None:
     """1048 on the first NOT NULL column holding a NULL."""
     for col in null_columns(catalog, qualified, new_rows, props, rows):
-        raise EbikeError(1048, f"Column '{col}' cannot be null")
+        raise null_value(col)
 
 
 def _check_constraints(
@@ -472,7 +480,7 @@ def _check_constraints(
     job (_stored_clash). Without it (LOAD DATA, INSERT … SELECT:
     data-sized input) every check is a Spark job over ``new_rows``."""
     _check_not_null(catalog, qualified, new_rows, props, rows)
-    keys = declared_keys(catalog, qualified, props)
+    keys = catalog.keys(qualified, props)
     if not keys:
         return
     existing = spark.table(qualified)
@@ -584,7 +592,7 @@ def land(
     in MySQL. Returns (affected rows, first minted AUTO_INCREMENT id of
     a row that landed, or None)."""
     ai = catalog.auto_increment_col(qualified, props)
-    keys = declared_keys(catalog, qualified, props)
+    keys = catalog.keys(qualified, props)
     ignore = bool(keys) and mode == "IGNORE"
     first_id = None
     if ai is not None:
@@ -593,7 +601,7 @@ def land(
         df, first_id = _mint_auto_increment(spark, qualified, df, ai)
     has_rowid = catalog.has_rowid(qualified, props)
     if keys and mode == "REPLACE":
-        n = _replace(spark, catalog, qualified, df, n_rows, props)
+        n = _replace(spark, catalog, qualified, df, props)
     elif keys and on_dup is not None:
         n = _upsert(spark, catalog, qualified, df, on_dup, props)
     elif ignore:
@@ -640,25 +648,64 @@ def _any_key(keys: list[tuple[str, list[str]]], prefix: str = "__new_"):
     )
 
 
-def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str, str]):
+def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str, str], not_null: list[str]):
     """Bind each assignment of an UPDATE-like statement once per row:
     the matched flag as ``__m``, the value of each SQL expression in
     ``assignments`` as ``__r<i>`` and its strict cast as ``__n<i>``, the
-    column's new value. Both are evaluated only where ``matched`` holds
+    column's new value; a NULL into a column of ``not_null`` raises 1048
+    from the same cast. Both are evaluated only where ``matched`` holds
     (the old value stays elsewhere), so the guard never fires on a row
     the statement leaves alone, and a bad value raises 1366 even where
-    the old value is NULL. Returns the frame, the new value of each
-    assigned column, and the predicate of a row whose value changed
-    (MySQL counts changed rows, not matched ones)."""
+    the old value is NULL. 1054 for a column ``types`` lacks (the hidden
+    rowid is not assignable either). Returns the frame, the new value
+    of each assigned column, and the predicate of a row whose value
+    changed (MySQL counts changed rows, not matched ones)."""
     cols = [F.coalesce(matched, F.lit(False)).alias("__m")]
     new_vals = {}
     for i, (name, expr) in enumerate(assignments.items()):
-        cast = strict_cast_sql(f"`__r{i}`", types[name], name)
+        if name not in types:
+            raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
+        cast = strict_cast_sql(f"`__r{i}`", types[name], name, null_value(name) if name in not_null else None)
         cols.append(F.expr(f"CASE WHEN `__m` THEN ({expr}) END").alias(f"__r{i}"))
         cols.append(F.expr(f"CASE WHEN `__m` THEN {cast} ELSE `{name}` END").alias(f"__n{i}"))
         new_vals[name] = F.col(f"__n{i}")
     changed = reduce(or_, [~v.eqNullSafe(F.col(name)) for name, v in new_vals.items()])
     return df.select("*", *cols), new_vals, changed
+
+
+def _paired(spark: SparkSession, qualified: str, new_df: DataFrame, keys, how: str) -> tuple[DataFrame, DataFrame]:
+    """REPLACE's and the upsert's one pairing of a batch with the stored
+    rows: the batch with each row's statement position as ``__pos``, and
+    the stored table, each row tagged ``__sid``, ``how``-joined on any
+    key to the batch, whose columns it holds as ``__new_<c>`` — a LEFT
+    join for REPLACE, a FULL join for the upsert, which also needs the
+    batch rows that pair with nothing (``__sid`` NULL). A stored row
+    appears once per batch row it pairs with, or once with a NULL
+    ``__pos``. monotonically_increasing_id is (partition << 33) +
+    offset, and the VALUES, csv and table scans keep statement or file
+    order across partitions, so it IS the position; no write depends on
+    it being drawn alike by two evaluations. No broadcast hint on the
+    batch; but on a table with more than one key the OR condition has
+    no equi-join keys, so Spark plans a broadcast nested-loop join,
+    which broadcasts the batch of a LEFT join whatever its size and the
+    smaller side of a FULL one (CHANGES.md, the `_paired` FOUND line)."""
+    tagged = new_df.withColumn(POS, F.monotonically_increasing_id())
+    batch = tagged.select(POS, *[F.col(c).alias(f"__new_{c}") for c in new_df.columns])
+    stored = spark.table(qualified).withColumn(SID, F.monotonically_increasing_id())
+    return tagged, stored.join(batch, _any_key(keys), how)
+
+
+def _facts(not_null: list[str], batch: DataFrame, paired: DataFrame, of_batch: list, of_pairs: list) -> list:
+    """Every fact REPLACE or the upsert reads before its write, from one
+    Spark action: null_flags and the aggregates ``of_batch`` over the
+    batch, beside the aggregates ``of_pairs`` over its pairing
+    (_paired). 1048 on the first column of ``not_null`` holding a NULL;
+    else the values of the other aggregates, in order."""
+    row = batch.agg(*null_flags(not_null), *of_batch).crossJoin(paired.agg(*of_pairs)).first()
+    for col, null in zip(not_null, row):
+        if null:
+            raise null_value(col)
+    return list(row)[len(not_null) :]
 
 
 def _upsert(
@@ -669,62 +716,67 @@ def _upsert(
     assignments: list[tuple[str, str]],
     props: dict[str, str],
 ) -> int:
-    """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert) as the
-    anti-join + union + rewrite emulation of MERGE, the idiomatic
-    parquet upsert without a Delta dependency. The table has at least
-    one PRIMARY/UNIQUE key (land routes a keyless table to a plain
-    insert: the clause never fires).
+    """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert) as a
+    set-oriented emulation of MERGE over one pairing (_paired), the
+    idiomatic parquet upsert without a Delta dependency. The table has
+    at least one PRIMARY/UNIQUE key (land routes a keyless table to a
+    plain insert: the clause never fires).
 
     Conflict pairing follows MySQL: a row conflicts if it matches an
     existing row on the PRIMARY KEY *or any UNIQUE index*. Assignments
     may reference the existing row's columns and ``VALUES(col)`` for
-    the incoming value. Affected-rows follows MySQL: each written row
-    carries its share — 1 per inserted, 2 per updated-and-changed, 0
-    per stored row left as it was — and the write observes their sum,
-    so a batch that changes nothing commits nothing. Batches
-    where one new row matches several existing rows (or vice versa)
-    through *different* keys are order-dependent in MySQL; this
-    set-oriented implementation rejects them as 1105 rather than pick
-    an arbitrary order.
-    """
-    keys = declared_keys(catalog, qualified, props)
-    # intra-batch duplicates on any key are ambiguous upserts → 1062,
-    # like plain inserts
-    raise_on_duplicate(new_df, keys)
+    the incoming value. One action (_facts) checks, in order: NOT NULL
+    over the batch (1048), a key the batch holds twice (1062, as for a
+    plain insert: the upsert would be order-dependent), and the pairing
+    — a batch row that pairs with several stored rows, or a stored row
+    with several batch rows, through *different* keys is
+    order-dependent in MySQL, and this set-oriented implementation
+    rejects it as 1105 rather than pick an arbitrary order.
 
-    existing = spark.table(qualified)
-    batch = new_df.select(
-        F.lit(1).alias("__new_mark"), *[F.col(c).alias(f"__new_{c}") for c in new_df.columns]
+    The post-image is a projection of the same pairing: each paired
+    stored row takes its assignments (a NULL into a NOT NULL column is
+    1048), unpaired stored rows stay, and the batch rows the FULL join
+    pairs with nothing (``__sid`` NULL) are inserted; no second join
+    of the stored table or of the batch. Affected-rows follows MySQL: each
+    written row carries its share — 1 per inserted, 2 per
+    updated-and-changed, 0 per stored row left as it was — and the
+    write observes their sum, so a batch that changes nothing commits
+    nothing.
+    """
+    keys = catalog.keys(qualified, props)
+    not_null = catalog.not_null_cols(qualified, props)
+    tagged, paired = _paired(spark, qualified, new_df, keys, "full")
+    fresh = F.col(SID).isNull()
+    matched = F.col(POS).isNotNull() & ~fresh
+    assigned = {name: _incoming(expr) for name, expr in assignments}
+    types = dict(catalog.column_types(qualified, props))
+    image, new_vals, changed = assign(paired, matched, assigned, types, not_null)
+    *dups, pairs, batch_rows, stored_rows = _facts(
+        not_null,
+        tagged,
+        paired,
+        [duplicate_flag(name, cols) for name, cols in keys],
+        [F.count(F.when(matched, 1)), *[F.count_distinct(F.when(matched, F.col(c))) for c in (POS, SID)]],
     )
-    any_key = _any_key(keys)
-    pairs = existing.join(batch, any_key, "inner").count()
-    matched_new = batch.join(existing, any_key, "left_semi").count()
-    matched_old = existing.join(batch, any_key, "left_semi").count()
-    if pairs != matched_new or pairs != matched_old:
+    raise_on_duplicate(new_df, [key for key, dup in zip(keys, dups) if dup])
+    if pairs != batch_rows or pairs != stored_rows:
         raise EbikeError(
             1105,
             "ambiguous ON DUPLICATE KEY UPDATE: a row matches multiple rows "
             "through different unique keys (order-dependent in MySQL)",
         )
 
-    joined = existing.join(batch, any_key, "left")
-    types = dict(catalog.column_types(qualified, props))
-    assigned = dict(assignments)
-    for name in assigned:  # hidden rowid is not assignable either
-        if name not in types:
-            raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
-    assigned = {name: _incoming(expr) for name, expr in assigned.items()}
-    joined, new_vals, changed = assign(joined, F.col("__new_mark").isNotNull(), assigned, types)
-    out_cols = [new_vals.get(name, F.col(name)).alias(name) for name in existing.columns]
-    updated = joined.select(*out_cols, F.when(changed, 2).otherwise(0).alias("__affected"))
-    to_insert = batch.join(existing, any_key, "left_anti").select(
-        *[F.col(f"__new_{c}").alias(c) for c in new_df.columns], F.lit(1).alias("__affected")
+    def value(name: str):
+        # a batch row that paired with nothing is inserted, and only it
+        # mints a hidden rowid (the one table column the batch lacks);
+        # a stored row keeps its rowid and takes its assignments
+        new = F.col(f"__new_{name}") if name in new_df.columns else F.expr("uuid()")
+        return F.when(fresh, new).otherwise(new_vals.get(name, F.col(name))).alias(name)
+
+    final = image.select(
+        *[value(name) for name in spark.table(qualified).columns],
+        F.when(fresh, 1).when(changed, 2).otherwise(0).alias("__affected"),
     )
-    if catalog.has_rowid(qualified, props):
-        # updated rows KEEP their rowid (out_cols passes it through
-        # unassigned); only genuinely new rows mint one
-        to_insert = to_insert.withColumn(ROWID, F.expr("uuid()"))
-    final = updated.unionByName(to_insert)
     # an assignment that writes a key column can collide rows that did
     # not collide before: validate the post-image before the commit
     recheck_keys_after_update(catalog, qualified, final, set(assigned), props)
@@ -797,7 +849,7 @@ def _insert_ignore(
     rows marked ``_MINTED`` — the first id minted for a kept row — or
     None without ``ai``)."""
     _check_not_null(catalog, qualified, new_df, props)
-    keys = declared_keys(catalog, qualified, props)
+    keys = catalog.keys(qualified, props)
     existing = spark.table(qualified)
     if len(keys) == 1:
         # Single unique index: stored-conflict status depends only on
@@ -881,13 +933,11 @@ def _replace(
     catalog: Catalog,
     qualified: str,
     new_df,
-    n_rows: int | None,
     props: dict[str, str],
 ) -> int:
     """REPLACE INTO (MySQL delete-then-insert upsert; the same
-    set-oriented MERGE emulation as :func:`_upsert`) into a table with
-    at least one PRIMARY/UNIQUE key. ``n_rows`` is the batch's row
-    count, or None to count it here.
+    set-oriented MERGE emulation over one pairing as :func:`_upsert`)
+    into a table with at least one PRIMARY/UNIQUE key.
 
     Semantics: every existing row that conflicts with an incoming row
     on the PRIMARY KEY *or any UNIQUE index* is deleted, then the whole
@@ -898,69 +948,63 @@ def _replace(
     replaces a stored one.
 
     The intra-batch resolution is fully DISTRIBUTED (one row_number
-    window per unique index — no driver-side key collection), which is
-    what lets LOAD DATA route bulk files through this path without a
-    driver-memory ceiling. It is provably equivalent to MySQL's
-    row-by-row replay: a batch row survives iff NO later batch row
+    window per unique index — no driver-side key collection), so the
+    windows put no driver-memory ceiling on LOAD DATA's bulk files; the
+    pairing does on a table with more than one key, where Spark
+    broadcasts the batch (see :func:`_paired`). It is provably
+    equivalent to MySQL's row-by-row replay: a batch row survives iff NO later batch row
     collides with it DIRECTLY on some key. (Replay ⇒ rule: if a later
     row Y collides with X, then at Y's turn X is either already
     evicted or Y evicts it — dead either way. Rule ⇒ replay: eviction
     only ever comes from a direct later collider, and an evicted row
     never re-enters `live`, so with no later collider X survives.)
     Each non-survivor is evicted exactly once, so the intra-batch
-    delete count is n_batch − n_survivors."""
-    keys = declared_keys(catalog, qualified, props)
-    # NOT NULL still applies to the incoming batch (key conflicts with
-    # stored rows are the point of REPLACE, so no clash check)
-    _check_not_null(catalog, qualified, new_df, props)
+    delete count is n_batch − n_survivors.
 
-    # Intra-batch collisions, resolved distributively: survivor = the
-    # LAST batch row per non-null key tuple, simultaneously for every
-    # unique index (see the docstring proof). Rows with a NULL key
+    One action (_facts) reads NOT NULL over the batch (1048; key
+    conflicts are the point of REPLACE, so no clash check) and the
+    batch, survivor and deleted-row counts. The post-image is a
+    projection of the same pairing: the stored rows that pair with no
+    batch row, plus the survivors."""
+    keys = catalog.keys(qualified, props)
+    tagged, paired = _paired(spark, qualified, new_df, keys, "full")
+    # survivor = the LAST batch row per non-null key tuple, for every
+    # unique index at once (see the proof above). Rows with a NULL key
     # component never conflict on that index (unique-index semantics),
-    # so they partition alone via the __vidx disambiguator.
-    # monotonically_increasing_id is (partition << 33) + offset and the
-    # csv/VALUES partition order follows statement/file order, so it
-    # IS the statement position.
-    tagged = new_df.withColumn("__vidx", F.monotonically_increasing_id())
+    # so they partition alone by their position.
     ranked = tagged
     for i, (_, cols) in enumerate(keys):
         key_null = reduce(or_, [F.col(c).isNull() for c in cols])
         w = Window.partitionBy(
             *[F.col(c) for c in cols],
-            F.when(key_null, F.col("__vidx")).otherwise(F.lit(0)),
-        ).orderBy(F.col("__vidx").desc())
+            F.when(key_null, F.col(POS)).otherwise(F.lit(0)),
+        ).orderBy(F.col(POS).desc())
         ranked = ranked.withColumn(f"__rn{i}", F.row_number().over(w))
     keep = reduce(and_, [F.col(f"__rn{i}") == 1 for i in range(len(keys))])
-    rn_cols = [f"__rn{i}" for i in range(len(keys))]
-    # Stored-conflict deletion uses the FULL batch: an evicted batch
-    # row still deleted its stored conflicts while it was live (MySQL
-    # processes it before the later row replaces it) — a stored row
-    # never "comes back". Only the survivors are inserted.
-    n_batch = new_df.count() if n_rows is None else n_rows
-    full_batch = tagged.drop("__vidx")
-    new_df = ranked.where(keep).drop("__vidx", *rn_cols)
-    intra_deleted = n_batch - new_df.count()
-
-    existing = spark.table(qualified)
-    batch = full_batch.select(*[F.col(c).alias(f"__new_{c}") for c in full_batch.columns])
-    any_key = _any_key(keys)
-    n_deleted = existing.join(batch, any_key, "left_semi").count()
-    survivors = existing.join(batch, any_key, "left_anti")
-    to_insert = new_df
+    # Stored-conflict deletion pairs with the FULL batch: an evicted
+    # batch row still deleted its stored conflicts while it was live
+    # (MySQL processes it before the later row replaces it) — a stored
+    # row never "comes back". Only the survivors are inserted.
+    n_batch, n_survivors, n_deleted = _facts(
+        catalog.not_null_cols(qualified, props),
+        ranked,
+        paired,
+        [F.count(F.lit(1)), F.count(F.when(keep, 1))],
+        [F.count_distinct(F.when(F.col(POS).isNotNull(), F.col(SID)))],
+    )
+    to_insert = ranked.where(keep).select(*new_df.columns)
     if catalog.has_rowid(qualified, props):
         # REPLACE is delete + insert: the replacement row is a NEW row
         # and mints a fresh rowid (unlike ON DUPLICATE, which updates
         # in place and keeps it) — MySQL-faithful, same as its handler
         # delete/write_row pair
-        to_insert = to_insert.withColumn(ROWID, F.expr("uuid()")).select(
-            *existing.columns
-        )
+        to_insert = to_insert.withColumn(ROWID, F.expr("uuid()"))
+    survivors = paired.where(F.col(POS).isNull()).select(*spark.table(qualified).columns)
     _rewrite(spark, commit.Image(qualified, survivors.unionByName(to_insert)))
     # MySQL affected-rows: 1 per batch row inserted (including ones a
     # later batch row then replaced) + 1 per deleted row (stored or
     # earlier-batch)
-    return n_batch + n_deleted + intra_deleted
+    return n_batch + n_deleted + (n_batch - n_survivors)
 
 
 def _rewrite(spark: SparkSession, *images: commit.Image) -> int:
@@ -982,51 +1026,48 @@ def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) 
 
 def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) -> int:
     t = spark.table(qualified)
+    props = catalog.properties(qualified)
     cond = F.expr(upd.where) if upd.where else F.lit(True)
     if upd.limit is not None:
         # UPDATE ... [ORDER BY ...] LIMIT n: the first n matching rows
         # (_limited) are the effective condition
-        t = _limited(catalog, qualified, t, F.coalesce(cond, F.lit(False)), upd, "UPDATE")
+        t = _limited(catalog, qualified, t, F.coalesce(cond, F.lit(False)), upd, "UPDATE", props)
         cond = F.col(HIT).isNotNull()
-    types = dict(catalog.column_types(qualified))
+    types = dict(catalog.column_types(qualified, props))
     assigned = dict(upd.assignments)
-    for name in assigned:  # hidden rowid is not assignable either
-        if name not in types:
-            raise EbikeError(1054, f"Unknown column '{name}' in 'field list'")
-    t, new_vals, changed = assign(t, cond, assigned, types)
+    t, new_vals, changed = assign(t, cond, assigned, types, catalog.not_null_cols(qualified, props))
     # project the TABLE's columns only (the LIMIT path joined a helper
     # column onto t that must not reach the post-image)
     cols = [new_vals.get(name, F.col(name)).alias(name) for name in spark.table(qualified).columns]
-    recheck_keys_after_update(catalog, qualified, t.select(*cols), set(assigned))
+    recheck_keys_after_update(catalog, qualified, t.select(*cols), set(assigned), props)
     t, affected = commit.observe(t, F.count(F.when(changed, 1)))
     return _rewrite(spark, commit.Image(qualified, t.select(*cols), changed=affected))
 
 
-def declared_keys(
-    catalog: Catalog, qualified: str, props: dict[str, str] | None = None
-) -> list[tuple[str, list[str]]]:
-    """The table's PRIMARY + UNIQUE key list in check order — the one
-    definition every duplicate probe shares."""
-    keys: list[tuple[str, list[str]]] = []
-    pk = catalog.primary_key(qualified, props)
-    if pk:
-        keys.append(("PRIMARY", pk))
-    keys.extend(catalog.unique_keys(qualified, props))
-    return keys
+def _indexed(key_name: str, kcols: list[str]):
+    """The rows a key indexes: all for the PRIMARY KEY, else those
+    without a NULL key component (MySQL's NULL exemption: any number of
+    NULLs in a unique index)."""
+    return F.lit(True) if key_name == "PRIMARY" else reduce(and_, [F.col(c).isNotNull() for c in kcols])
+
+
+def duplicate_flag(key_name: str, kcols: list[str]):
+    """The aggregate "some key tuple is held twice": duplicate_key_probe's
+    rule, for the upsert's one fact aggregate (_facts)."""
+    indexed = _indexed(key_name, kcols)
+    return F.count(F.when(indexed, 1)) > F.count_distinct(F.when(indexed, F.struct(*kcols)))
 
 
 def duplicate_key_probe(df, keys):
     """Yield (key_name, duplicated value as MySQL prints it) for each
     key with at least one duplicated tuple in ``df``, one LIMIT 1
-    aggregate job per key. Non-PRIMARY keys get MySQL's NULL exemption
-    (any number of NULLs in a unique index). The one definition of an
-    in-frame duplicate: data-sized INSERT checks, ON DUPLICATE KEY
-    UPDATE, the UPDATE post-image re-check, ALTER ADD PRIMARY KEY /
-    ADD UNIQUE and CHECK TABLE all use it."""
+    aggregate job per key, over the rows the key indexes (_indexed).
+    The one definition of an in-frame duplicate: data-sized INSERT
+    checks, ON DUPLICATE KEY UPDATE (to print the value its
+    duplicate_flag found), the UPDATE post-image re-check, ALTER ADD
+    PRIMARY KEY / ADD UNIQUE and CHECK TABLE all use it."""
     for key_name, kcols in keys:
-        cand = df
-        if key_name != "PRIMARY":
-            cand = cand.where(reduce(and_, [F.col(c).isNotNull() for c in kcols]))
+        cand = df.where(_indexed(key_name, kcols))
         dup = cand.groupBy(*kcols).count().where(F.col("count") > 1).limit(1).collect()
         if dup:
             yield key_name, "-".join(str(dup[0][c]) for c in kcols)
@@ -1048,7 +1089,7 @@ def recheck_keys_after_update(
     """Re-check the keys an assignment touches on the post-image before
     it is committed: UPDATE, the multi-table UPDATE and ON DUPLICATE
     KEY UPDATE can collide rows that did not collide before."""
-    keys = declared_keys(catalog, qualified, props)
+    keys = catalog.keys(qualified, props)
     raise_on_duplicate(new_df, [(name, kcols) for name, kcols in keys if set(kcols) & assigned])
 
 
@@ -1064,7 +1105,8 @@ def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str)
         cond_true = F.coalesce(cond, F.lit(False))
         if dele.limit is not None:
             # DELETE ... [ORDER BY ...] LIMIT n (MySQL bounded delete)
-            return drop_hits(spark, qualified, t, _limited(catalog, qualified, t, cond_true, dele, "DELETE"))
+            flagged = _limited(catalog, qualified, t, cond_true, dele, "DELETE", catalog.properties(qualified))
+            return drop_hits(spark, qualified, t, flagged)
         return _delete_files(spark, qualified, t, cond_true)
 
 
@@ -1091,7 +1133,9 @@ def _delete_files(spark: SparkSession, qualified: str, t: DataFrame, cond_true) 
     return sum(hits.values())
 
 
-def _limited(catalog: Catalog, qualified: str, t: DataFrame, cond_true, stmt, verb: str) -> DataFrame:
+def _limited(
+    catalog: Catalog, qualified: str, t: DataFrame, cond_true, stmt, verb: str, props: dict[str, str]
+) -> DataFrame:
     """``t`` flagged at the rows a ``verb`` … [ORDER BY …] LIMIT n
     statement touches: the first n rows where ``cond_true`` holds, in
     ``stmt.order_by`` order, else rowid order (MySQL takes an arbitrary
@@ -1100,7 +1144,7 @@ def _limited(catalog: Catalog, qualified: str, t: DataFrame, cond_true, stmt, ve
     TakeOrderedAndProject, never a single-task full sort) and are
     broadcast-joined back as column ``HIT``. Rowids are unique, so the
     join duplicates no row."""
-    if not catalog.has_rowid(qualified):
+    if not catalog.has_rowid(qualified, props):
         # a user-declared `rowid` column displaced the hidden one; no
         # stable row identity to bound the statement with
         raise unsupported(f"{verb} ... LIMIT on a table without the hidden rowid")
@@ -1117,15 +1161,6 @@ def drop_hits(spark: SparkSession, qualified: str, t: DataFrame, flagged: DataFr
     flagged, dropped = commit.observe(flagged, F.count(HIT))
     survivors = flagged.where(F.col(HIT).isNull()).select(*t.columns)
     return _rewrite(spark, commit.Image(qualified, survivors, changed=dropped))
-
-
-def _leading_string(text: str) -> tuple[str | None, str]:
-    """The value of the string literal ``text`` starts with (None if it
-    starts with anything else) and the text after it."""
-    code = code_tokens(text)
-    if not code or code[0][0] != "string":
-        return None, text
-    return string_value(text[: code[0][2]]), text[code[0][2] :]
 
 
 def _order_cols(order_by: str) -> list:
@@ -1176,7 +1211,7 @@ def load_data(
     free (under a secure_file_priv fence only regular files load —
     per-entry symlinks inside a directory could escape the fence)."""
     head = re.match(r"LOAD\s+DATA\s+(?:LOCAL\s+)?INFILE\s", sql, re.I)
-    path, tail = _leading_string(sql[head.end() :]) if head else (None, "")
+    path, tail = leading_string(sql[head.end() :]) if head else (None, "")
     m = re.match(r"\s*(REPLACE|IGNORE)?\s*INTO\s+TABLE\s+([\w.`\"]+)([\s\S]*)$", tail, re.I)
     if not path or not m:
         raise EbikeError(1064, "malformed LOAD DATA INFILE")
@@ -1206,7 +1241,7 @@ def load_data(
         raise EbikeError(29, f"File '{path}' not found")
 
     fm = re.search(r"FIELDS\s+TERMINATED\s+BY\s", rest, re.I)
-    sep = _leading_string(rest[fm.end() :])[0] if fm else "\t"  # MySQL's default
+    sep = leading_string(rest[fm.end() :])[0] if fm else "\t"  # MySQL's default
     if sep is None:
         raise EbikeError(1064, "malformed FIELDS TERMINATED BY")
     skip_header = False

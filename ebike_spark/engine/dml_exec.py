@@ -18,10 +18,12 @@ import pyspark.sql.functions as F
 
 from ebike_spark.engine import commit, dml
 from ebike_spark.engine.catalog import bq
-from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
+from ebike_spark.engine.errors import EbikeError, null_value, parse_error, unsupported
 from ebike_spark.engine.parser import (
     INSERT_VALUES,
+    column_assignments,
     find_top_level_keywords,
+    parse_assignments,
     parse_delete,
     parse_insert,
     parse_update,
@@ -40,16 +42,11 @@ class DmlExecMixin:
         if m:
             try:
                 body, clauses = split_tail_clauses(fixed[m.end() :], ("ON DUPLICATE KEY UPDATE",))
+                pairs = column_assignments(body)
             except ValueError as e:
                 raise parse_error(str(e)) from e
-            cols, vals = [], []
-            for a in split_top_level(body):
-                am = re.match(r"\s*([\w`\"]+)\s*=\s*([\s\S]+)$", a)
-                if not am:
-                    raise parse_error(f"near INSERT ... SET: {a!r}")
-                cols.append(unquote_ident(am.group(1)))
-                vals.append(am.group(2).strip())
-            fixed = f"{m.group(1)} INTO {m.group(2)} ({', '.join(cols)}) VALUES ({', '.join(vals)})" + "".join(
+            cols = ", ".join(f"`{c}`" for c, _ in pairs)
+            fixed = f"{m.group(1)} INTO {m.group(2)} ({cols}) VALUES ({', '.join(v for _, v in pairs)})" + "".join(
                 f" ON DUPLICATE KEY UPDATE {c}" for c in clauses.values()
             )
         # INSERT [IGNORE] INTO ... SELECT / REPLACE INTO ... SELECT,
@@ -111,20 +108,12 @@ class DmlExecMixin:
             select_sql, tail_clauses = split_tail_clauses(
                 select_sql, ("ON DUPLICATE KEY UPDATE",)
             )
+            on_dup = tail_clauses.get("ON DUPLICATE KEY UPDATE")
+            on_dup = None if on_dup is None else column_assignments(on_dup)
         except ValueError as e:
             raise parse_error(str(e)) from e
-        on_dup: list[tuple[str, str]] | None = None
-        if "ON DUPLICATE KEY UPDATE" in tail_clauses:
-            if mode:
-                raise parse_error(
-                    "ON DUPLICATE KEY UPDATE cannot combine with IGNORE/REPLACE"
-                )
-            on_dup = []
-            for a in split_top_level(tail_clauses["ON DUPLICATE KEY UPDATE"]):
-                am = re.match(r"\s*([\w`\"]+)\s*=\s*([\s\S]+)$", a)
-                if not am:
-                    raise parse_error(f"near ON DUPLICATE KEY UPDATE: {a!r}")
-                on_dup.append((unquote_ident(am.group(1)), am.group(2).strip()))
+        if on_dup is not None and mode:
+            raise parse_error("ON DUPLICATE KEY UPDATE cannot combine with IGNORE/REPLACE")
 
         src = self._query(select_sql)
         props = self.catalog.properties(qualified)
@@ -237,20 +226,10 @@ class DmlExecMixin:
         post-image takes the same changed-row accounting and key
         re-check as the single-table path, and all of them land in one
         commit. No driver-side row loop at any join size."""
-        assigns: list[tuple[str | None, str, str]] = []  # (alias, col, rhs)
-        for a in split_top_level(set_clause):
-            am = re.match(
-                r"\s*(?:([\w`\"]+)\s*\.\s*)?([\w`\"]+)\s*=\s*([\s\S]+)$", a
-            )
-            if not am:
-                raise parse_error(f"near UPDATE ... SET: {a!r}")
-            assigns.append(
-                (
-                    unquote_ident(am.group(1)) if am.group(1) else None,
-                    unquote_ident(am.group(2)),
-                    am.group(3).strip(),
-                )
-            )
+        try:
+            assigns = parse_assignments(set_clause)  # (alias, col, rhs)
+        except ValueError as e:
+            raise parse_error(str(e)) from e
         # Unqualified assignments resolve the MySQL way: the column is
         # looked up in EVERY joined table — exactly one owner targets
         # that table (even one never otherwise assigned); several
@@ -292,18 +271,19 @@ class DmlExecMixin:
             base = self._resolve_alias_table(tgt, frm)
             qualified = self.catalog.qualify(base, self.current_db)
             self.catalog.require_table(qualified)
-            if not self.catalog.has_rowid(qualified):
+            props = self.catalog.properties(qualified)
+            if not self.catalog.has_rowid(qualified, props):
                 raise unsupported(
                     "multi-table UPDATE on a table without the hidden rowid"
                 )
-            types = dict(self.catalog.column_types(qualified))
+            types = dict(self.catalog.column_types(qualified, props))
             for _, col, _ in items:
                 if col not in types:
                     raise EbikeError(
                         1054, f"Unknown column '{col}' in 'field list'"
                     )
             targets.append(
-                {"tgt": tgt, "qualified": qualified, "types": types, "items": items}
+                {"tgt": tgt, "qualified": qualified, "props": props, "types": types, "items": items}
             )
         with commit.writing(self.spark, *[t["qualified"] for t in targets]):
             return self._update_targets(frm, where, targets)
@@ -362,7 +342,8 @@ class DmlExecMixin:
         images = []  # one per PHYSICAL table
         for qualified, members in groups:
             tb = self.spark.table(qualified)
-            types = members[0][1]["types"]
+            types, props = members[0][1]["types"], members[0][1]["props"]
+            not_null = self.catalog.not_null_cols(qualified, props)
             joined = tb
             for k, t in members:
                 idxs = [i for i, _, _ in t["items"]]
@@ -378,40 +359,17 @@ class DmlExecMixin:
                 joined = joined.join(
                     vals, tb[dml.ROWID] == vals[f"__rid{k}"], "left"
                 )
-            # per-column candidates in statement order; the guard
-            # (1366) fires only where that alias matched — __v is NULL
-            # on unmatched rows, exactly like the single-table path
-            candidates: dict[str, list[tuple] ] = {}
-            for i, col, k in sorted(
-                (i, col, k) for k, t in members for i, col, _ in t["items"]
-            ):
-                candidates.setdefault(col, []).append(
-                    (
-                        F.col(f"__rid{k}").isNotNull(),
-                        F.expr(dml.strict_cast_sql(f"`__v{i}`", types[col], col)),
-                    )
-                )
+            # each assignment in statement order wraps the ones before
+            # it, so the last one whose alias matched wins; the guards
+            # (1366, and 1048 for a NULL into a NOT NULL column) fire
+            # only where that alias matched, like the single-table path
             new_vals = {}
-            for col, cands in candidates.items():
-                expr = None
-                for cond, val in reversed(cands):  # last in statement wins
-                    expr = (
-                        F.when(cond, val)
-                        if expr is None
-                        else expr.when(cond, val)
-                    )
-                new_vals[col] = expr.otherwise(F.col(col))
-            changed = reduce(
-                _or,
-                [~new_vals[c].eqNullSafe(F.col(c)) for c in new_vals],
-            )
-            out_cols = [
-                new_vals[name].alias(name)
-                if name in new_vals
-                else tb[name].alias(name)
-                for name in tb.columns
-            ]
-            dml.recheck_keys_after_update(self.catalog, qualified, joined.select(*out_cols), set(new_vals))
+            for i, col, k in sorted((i, col, k) for k, t in members for i, col, _ in t["items"]):
+                cast = dml.strict_cast_sql(f"`__v{i}`", types[col], col, null_value(col) if col in not_null else None)
+                new_vals[col] = F.when(F.col(f"__rid{k}").isNotNull(), F.expr(cast)).otherwise(new_vals.get(col, F.col(col)))
+            changed = reduce(_or, [~new_vals[c].eqNullSafe(F.col(c)) for c in new_vals])
+            out_cols = [new_vals.get(name, tb[name]).alias(name) for name in tb.columns]
+            dml.recheck_keys_after_update(self.catalog, qualified, joined.select(*out_cols), set(new_vals), props)
             joined, affected = commit.observe(joined, F.count(F.when(changed, 1)))
             images.append(commit.Image(qualified, joined.select(*out_cols), changed=affected))
         # All key re-checks passed against pre-images. One commit lands

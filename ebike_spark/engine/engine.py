@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit, dml, show
 from ebike_spark.engine.catalog import Catalog
-from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unsupported
+from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unmarked, unsupported
 from ebike_spark.engine.parser import (
     lex,
     rewrite_dialect,
@@ -54,9 +54,9 @@ def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     """The MySQL error for a failure Spark raised, or None to let it
     through. An analysis error maps by its error condition, never by
     its message, whose suggestions may name the hidden rowid. A runtime
-    error carrying the strict cast's marker (dml.strict_cast_sql) is
-    1366, keyed off the exception class: an analysis error's plan
-    dump can contain the guard expressions and so the marker text."""
+    error carrying a plan-raised error's marker (errors.marked) is that
+    error, keyed off the exception class: an analysis error's plan dump
+    can contain the guard expressions and so the marker text."""
     cond = e.getCondition() if isinstance(e, PySparkException) else None
     if cond == "TABLE_OR_VIEW_NOT_FOUND":
         return table_not_exists(e.getMessageParameters()["relationName"].replace("`", ""))
@@ -73,14 +73,7 @@ def _mysql_error(e: Exception, db: str) -> EbikeError | None:
         return parse_error(f"near {e.getMessageParameters()['error']}")
     if isinstance(e, AnalysisException):
         return None
-    m = re.search(re.escape(dml.BADCAST_MARK) + r"(.*?)" + re.escape(dml.BADCAST_END), str(e), re.S)
-    if m is None:
-        return None
-    return EbikeError(
-        1366,
-        f"Incorrect value for column '{m.group(1)}' "
-        "(out of range or not convertible to the declared type)",
-    )
+    return unmarked(str(e))
 
 
 class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):

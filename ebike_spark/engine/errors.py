@@ -13,6 +13,8 @@ actually raises (and we mirror) are:
 
 from __future__ import annotations
 
+import re
+
 
 class EbikeError(Exception):
     def __init__(self, code: int, message: str):
@@ -43,3 +45,29 @@ def unsupported(what: str) -> EbikeError:
 
 def parse_error(detail: str) -> EbikeError:
     return EbikeError(1064, f"You have an error in your SQL syntax: {detail}")
+
+
+def bad_value(col: str) -> EbikeError:
+    return EbikeError(1366, f"Incorrect value for column '{col}' (out of range or not convertible to the declared type)")
+
+
+def null_value(col: str) -> EbikeError:
+    return EbikeError(1048, f"Column '{col}' cannot be null")
+
+
+# A MySQL error raised inside a Spark plan (``raise_error``: the strict
+# cast's 1366, NOT NULL's 1048, ALTER MODIFY's 1138) crosses the JVM
+# boundary as a generic runtime exception. Its text carries the code and
+# message between these sentinels, so any message survives the trip.
+_MARK, _END = "EBIKE_ERROR:", ":RORRE_EKIBE"
+
+
+def marked(err: EbikeError) -> str:
+    """The text a plan raises to mean ``err``."""
+    return f"{_MARK}{err.code}:{err.message}{_END}"
+
+
+def unmarked(text: str) -> EbikeError | None:
+    """The error ``marked`` put in ``text``, or None."""
+    m = re.search(re.escape(_MARK) + r"(\d+):(.*?)" + re.escape(_END), text, re.S)
+    return EbikeError(int(m.group(1)), m.group(2)) if m else None

@@ -113,6 +113,15 @@ def string_value(text: str) -> str | None:
 _UNESCAPE = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t", "Z": "\x1a", "%": "\\%", "_": "\\_"}
 
 
+def leading_string(text: str) -> tuple[str | None, str]:
+    """The value of the string literal ``text`` starts with (None if it
+    starts with anything else) and the text after it."""
+    code = code_tokens(text)
+    if not code or code[0][0] != "string":
+        return None, text
+    return string_value(text[: code[0][2]]), text[code[0][2] :]
+
+
 def _split(sql: str, toks: list[tuple[str, int, int]], sep: str) -> list[list[tuple[str, int, int]]]:
     """``toks`` cut at each ``sep`` punctuation outside parentheses."""
     parts: list[list[tuple[str, int, int]]] = [[]]
@@ -134,6 +143,12 @@ def _split(sql: str, toks: list[tuple[str, int, int]], sep: str) -> list[list[tu
 def _text(sql: str, toks: list[tuple[str, int, int]]) -> str:
     """The text ``toks`` span, stripped."""
     return sql[toks[0][1] : toks[-1][2]].strip() if toks else ""
+
+
+def _code_ends(toks: list[tuple[str, int, int]]) -> list[tuple[str, int, int]]:
+    """``toks`` without the spaces at either end."""
+    code = [i for i, t in enumerate(toks) if t[0] != "space"]
+    return toks[code[0] : code[-1] + 1] if code else []
 
 
 def _texts(sql: str, parts: list[list[tuple[str, int, int]]]) -> list[str]:
@@ -456,6 +471,7 @@ class Insert:
     table: str
     columns: list[str]  # empty = all
     rows: list[list[str]]  # raw expression strings
+    kinds: list[list[tuple[str, ...]]]  # each cell's token kinds (lex), inner spaces kept
     # MySQL upsert clause: [(col, raw expr)] — exprs may reference the
     # existing row's columns and VALUES(col) for the incoming value
     on_dup_update: list[tuple[str, str]] | None = None
@@ -488,21 +504,32 @@ _TYPE_RE = (
 )  # longest-first where one name prefixes another (INT/INTEGER, DATE/DATETIME)
 
 
+# a table option CREATE TABLE accepts after its column list; COMMENT's
+# string literal follows the match
+_TABLE_OPTION = re.compile(r"\s+(?:(?:ENGINE|DEFAULT\s+CHARSET|COLLATE)\s*=\s*\w+|(COMMENT)\s*=\s*)", re.I)
+
+
+def _table_options_only(sql: str, pos: int) -> bool:
+    """Is ``sql`` from ``pos`` on only table options (and a ``;``)?"""
+    while m := _TABLE_OPTION.match(sql, pos):
+        comment, rest = leading_string(sql[m.end() :]) if m.group(1) else ("", sql[m.end() :])
+        if comment is None:
+            return False
+        pos = len(sql) - len(rest)
+    return re.fullmatch(r"\s*;?\s*", sql[pos:]) is not None
+
+
 def parse_create_table(sql: str) -> CreateTable:
     # trailing MySQL table options (ENGINE=..., DEFAULT CHARSET=...) are
     # accepted and ignored — the reference resolves only engine=sled
     # (/root/reference/src/store/engine/engine_util.rs:48-60); here the
     # engine is always parquet.
-    m = re.match(
-        r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`\"]+)\s*\((.*)\)"
-        r"(?:\s+(?:ENGINE\s*=\s*\w+|DEFAULT\s+CHARSET\s*=\s*\w+|COLLATE\s*=\s*\w+|COMMENT\s*=\s*'[^']*'))*"
-        r"\s*;?\s*$",
-        sql,
-        re.I | re.S,
-    )
-    if not m:
+    m = re.match(r"\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`\"]+)\s*(?=\()", sql, re.I)
+    code = [t for t in code_tokens(sql) if m and t[1] >= m.end()]
+    close = _close(sql, code, 0)
+    if not m or close == len(code) or not _table_options_only(sql, code[close][2]):
         raise ValueError("malformed CREATE TABLE")
-    ine, name, body = bool(m.group(1)), unquote_ident(m.group(2)), m.group(3)
+    ine, name, body = bool(m.group(1)), unquote_ident(m.group(2)), sql[code[0][2] : code[close][1]]
     ct = CreateTable(table=name, if_not_exists=ine, columns=[])
     for item in split_top_level(body):
         pk = re.match(r"PRIMARY\s+KEY\s*\((.*)\)\s*$", item, re.I | re.S)
@@ -599,12 +626,16 @@ def parse_insert(sql: str) -> Insert:
     while toks and (toks[-1][0] == "space" or _is(sql, toks[-1], ";")):
         toks.pop()
     values, clauses = _clauses(sql, toks, ("ON DUPLICATE KEY UPDATE",))
-    rows = []
+    rows, kinds = [], []
     for row in _split(sql, values, ","):
         code = [t for t in row if t[0] != "space"]
         if not code or not _is(sql, code[0], "(") or _close(sql, code, 0) != len(code) - 1:
             raise ValueError(f"malformed VALUES row: {_text(sql, row)!r}")
-        rows.append(_texts(sql, _split(sql, code[1:-1], ",")))
+        # split the tokens between the parentheses with their spaces, so a
+        # cell's kinds keep an inner space: ``- 5`` is no one literal
+        cells = _split(sql, [t for t in row if code[0][1] < t[1] < code[-1][1]], ",")
+        rows.append(_texts(sql, cells))
+        kinds.append([tuple(t[0] for t in _code_ends(c)) for c in cells[: len(rows[-1])]])
     on_dup = None
     if clauses:
         if replace:
@@ -614,15 +645,37 @@ def parse_insert(sql: str) -> Insert:
             # both clauses at once make the upsert ambiguous; reject
             # rather than silently prefer one (documented stance)
             raise ValueError("INSERT IGNORE with ON DUPLICATE KEY UPDATE is not supported")
-        on_dup = []
-        for a in split_top_level(clauses["ON DUPLICATE KEY UPDATE"]):
-            am = re.match(r"([\w`\"]+)\s*=\s*(.*)$", a, re.S)
-            if not am:
-                raise ValueError(f"malformed ON DUPLICATE KEY UPDATE assignment: {a!r}")
-            on_dup.append((unquote_ident(am.group(1)), am.group(2).strip()))
+        on_dup = column_assignments(clauses["ON DUPLICATE KEY UPDATE"])
     return Insert(
-        table=table, columns=cols, rows=rows, on_dup_update=on_dup, replace=replace, ignore=ignore
+        table=table, columns=cols, rows=rows, kinds=kinds, on_dup_update=on_dup, replace=replace, ignore=ignore
     )
+
+
+def parse_assignments(sql: str) -> list[tuple[str | None, str, str]]:
+    """The ``[qualifier.]column = expr, …`` list of a SET or ON DUPLICATE
+    KEY UPDATE clause as (qualifier or None, column, expression text),
+    read from its tokens: a backtick name may hold any character.
+    ValueError on a malformed assignment."""
+    out = []
+    for part in _split(sql, code_tokens(sql), ","):
+        name = [t[0] in ("word", "ident") for t in part]
+        if len(part) > 2 and name[0] and _is(sql, part[1], "="):
+            qualifier, col, k = None, part[0], 2
+        elif len(part) > 4 and name[0] and name[2] and _is(sql, part[1], ".") and _is(sql, part[3], "="):
+            qualifier, col, k = unquote_ident(_text(sql, part[:1])), part[2], 4
+        else:
+            raise ValueError(f"malformed assignment: {_text(sql, part)!r}")
+        out.append((qualifier, unquote_ident(sql[col[1] : col[2]]), _text(sql, part[k:])))
+    return out
+
+
+def column_assignments(sql: str) -> list[tuple[str, str]]:
+    """A single-table assignment list (parse_assignments) as (column,
+    expression text): a qualified column is malformed."""
+    out = parse_assignments(sql)
+    if any(q is not None for q, _, _ in out):
+        raise ValueError(f"malformed assignment: {sql!r}")
+    return [(c, e) for _, c, e in out]
 
 
 def _parse_limit_count(clauses: dict[str, str]) -> int | None:
@@ -642,17 +695,9 @@ def parse_update(sql: str) -> Update:
     if not m:
         raise ValueError("malformed UPDATE")
     set_part, clauses = split_tail_clauses(m.group(2), ("WHERE", "ORDER BY", "LIMIT"))
-    assignments = []
-    for a in split_top_level(set_part):
-        am = re.match(r"([\w`\"]+)\s*=\s*(.*)$", a, re.S)
-        if not am:
-            raise ValueError(f"malformed assignment: {a!r}")
-        assignments.append((unquote_ident(am.group(1)), am.group(2).strip()))
-    if not assignments:
-        raise ValueError("malformed UPDATE")
     return Update(
         table=unquote_ident(m.group(1)),
-        assignments=assignments,
+        assignments=column_assignments(set_part),
         where=clauses.get("WHERE"),
         order_by=clauses.get("ORDER BY"),
         limit=_parse_limit_count(clauses),

@@ -54,6 +54,8 @@ CASES = {
     "multi_table_update": ("UPDATE t JOIN u ON t.id = u.id SET t.v = u.w, u.w = t.v", ["t", "u"]),
     "multi_table_delete": ("DELETE t FROM t JOIN u ON t.id = u.id", ["t"]),
     "upsert": ("INSERT INTO t VALUES (1, 0, 'z'), (9, 90, 'i') ON DUPLICATE KEY UPDATE v = VALUES(v)", ["t"]),
+    # evicts the stored row 1 and the earlier batch row (9, 90, 'i')
+    "replace": ("REPLACE INTO t VALUES (1, 11, 'x'), (9, 90, 'i'), (9, 91, 'j')", ["t"]),
     "drop_column": ("ALTER TABLE t DROP COLUMN w", ["t"]),
 }
 
@@ -315,18 +317,83 @@ def test_statements_on_an_empty_table_create_no_version(eng, spark, emptied):
         assert _leftovers(spark, q) == [], sql
 
 
+def _jobs(spark, eng, sql: str) -> tuple[int, int]:
+    """(affected rows, Spark jobs) of one statement, the jobs counted by
+    job group."""
+    sc = spark.sparkContext
+    group = f"jobs_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, sql)
+    try:
+        affected = eng.execute(sql).affected
+    finally:
+        sc._jsc.clearJobGroup()
+    return affected, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_update_of_a_one_file_table_runs_one_job(eng, spark):
     """A single-table UPDATE of a non-key column counts its changed
     rows inside its write: the statement runs exactly one Spark job,
     counted by job group."""
     eng.execute("CREATE TABLE j (id INT NOT NULL, v INT, PRIMARY KEY (id))")
     eng.execute("INSERT INTO j VALUES (1, 10), (2, 20), (3, 30)")
-    sc = spark.sparkContext
-    group = f"update_jobs_{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "single-table UPDATE")
-    try:
-        assert eng.execute("UPDATE j SET v = v + 1 WHERE id = 2").affected == 1
-    finally:
-        sc._jsc.clearJobGroup()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert _jobs(spark, eng, "UPDATE j SET v = v + 1 WHERE id = 2") == (1, 1)
     assert sorted(tuple(r) for r in eng.execute("SELECT id, v FROM j").rows()) == [(1, 10), (2, 21), (3, 30)]
+
+
+# write form: statement, its affected rows and its Spark jobs against
+# the tables test_write_forms_run_their_pinned_job_counts fills
+JOB_COUNTS = {
+    "upsert": ("INSERT INTO j VALUES (1, 101, 0), (40, 140, 4) ON DUPLICATE KEY UPDATE v = VALUES(v)", 3, 9),
+    "replace": ("REPLACE INTO j VALUES (2, 555, 9)", 2, 12),
+    "insert_ignore": ("INSERT IGNORE INTO j VALUES (1, 1, 1), (41, 141, 1)", 1, 7),
+    "insert_values": ("INSERT INTO j VALUES (42, 142, 1)", 1, 3),
+    "insert_select": ("INSERT INTO j SELECT * FROM s", 2, 11),
+    "update": ("UPDATE j SET v = v + 1 WHERE id = 2", 1, 1),
+    "update_unique": ("UPDATE j SET code = code + 1000 WHERE id = 2", 1, 3),
+    "multi_table_update_unique": ("UPDATE j JOIN u ON j.id = u.id SET j.code = u.w + 1000", 2, 9),
+    "delete": ("DELETE FROM j WHERE id = 3", 1, 3),
+}
+
+
+@pytest.mark.parametrize("form", sorted(JOB_COUNTS))
+def test_write_forms_run_their_pinned_job_counts(eng, spark, form):
+    """Each write form's Spark jobs, counted by job group, into a
+    one-file 20-row table with a PRIMARY KEY and a UNIQUE key. REPLACE
+    and the upsert read every fact they check before the write from
+    one action."""
+    eng.execute("CREATE TABLE j (id INT NOT NULL, code INT, v INT, PRIMARY KEY (id), UNIQUE KEY uc (code))")
+    eng.execute("INSERT INTO j VALUES " + ", ".join(f"({i}, {100 + i}, {i})" for i in range(1, 21)))
+    eng.execute("CREATE TABLE u (id INT NOT NULL, w INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO u VALUES (1, 7), (2, 8)")
+    eng.execute("CREATE TABLE s (id INT NOT NULL, code INT, v INT)")
+    eng.execute("INSERT INTO s VALUES (31, 131, 1), (32, 132, 2)")
+    sql, affected, jobs = JOB_COUNTS[form]
+    assert _jobs(spark, eng, sql) == (affected, jobs)
+
+
+# an assignment of NULL to the NOT NULL column a, or an upsert batch row
+# that leaves it NULL
+NULL_ASSIGNMENTS = [
+    "UPDATE nn SET a = NULL",
+    "UPDATE nn, s2 SET nn.a = s2.c + NULL WHERE nn.id = s2.id",
+    "INSERT INTO nn VALUES (1, 9, 9) ON DUPLICATE KEY UPDATE a = NULL",
+    "INSERT INTO nn (id, b) VALUES (3, 3) ON DUPLICATE KEY UPDATE b = 9",
+]
+
+
+@pytest.mark.parametrize("sql", NULL_ASSIGNMENTS)
+def test_null_assigned_to_a_not_null_column_is_1048(eng, spark, sql):
+    """UPDATE, the multi-table UPDATE and ON DUPLICATE KEY UPDATE refuse
+    a NULL for a NOT NULL column with 1048, as INSERT does, and leave
+    the table's rows and live location as they were."""
+    eng.execute("CREATE TABLE nn (id INT NOT NULL, a INT NOT NULL, b INT, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO nn VALUES (1, 1, 1), (2, 2, 2), (3, 3, 3)")
+    eng.execute("CREATE TABLE s2 (id INT, c INT)")
+    eng.execute("INSERT INTO s2 VALUES (1, 5)")
+    q = f"{eng.current_db}.nn"
+    before = (_state(spark, q), commit.location(spark, q))
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(sql)
+    assert (ei.value.code, ei.value.message) == (1048, "Column 'a' cannot be null")
+    assert (_state(spark, q), commit.location(spark, q)) == before
+    assert _leftovers(spark, q) == []

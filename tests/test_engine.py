@@ -2759,10 +2759,10 @@ def test_badcast_translation_keyed_off_exception_class(eng, monkeypatch):
     CONTAINS guard text never mistranslates."""
     from pyspark.errors import AnalysisException
 
-    from ebike_spark.engine import dml
+    from ebike_spark.engine.errors import bad_value, marked
 
     def runtime_boom(sql):
-        raise RuntimeError("jvm said: " + dml.badcast_msg("n") + " (tail)")
+        raise RuntimeError("jvm said: " + marked(bad_value("n")) + " (tail)")
 
     monkeypatch.setattr(eng, "_execute", runtime_boom)
     with pytest.raises(EbikeError) as ei:
@@ -2771,7 +2771,7 @@ def test_badcast_translation_keyed_off_exception_class(eng, monkeypatch):
 
     def analysis_boom(sql):
         raise AnalysisException(
-            "unresolved column; plan: ... " + dml.badcast_msg("wrongcol")
+            "unresolved column; plan: ... " + marked(bad_value("wrongcol"))
         )
 
     monkeypatch.setattr(eng, "_execute", analysis_boom)
@@ -2991,20 +2991,49 @@ def test_insert_reads_table_properties_once(eng, monkeypatch, sql):
     assert len(calls) == 1
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "UPDATE pc SET `a b` = 1",
+        "INSERT INTO pc VALUES (1, 'z') ON DUPLICATE KEY UPDATE `a b` = 1",
+        "INSERT INTO pc SET id = 3, `a b` = 1",
+        "INSERT INTO pc SELECT 1, 'z' ON DUPLICATE KEY UPDATE `a b` = 1",
+        "UPDATE pc JOIN pc AS o ON pc.id = o.id SET pc.`a b` = 1",
+    ],
+)
+def test_every_assignment_list_reads_a_backtick_name(eng, sql):
+    """The five assignment lists (UPDATE SET, INSERT SET, the upsert
+    after VALUES and after SELECT, the multi-table SET) share one
+    parser: a backtick name holding a space is read as a column name,
+    which this table lacks (1054), not as a syntax error."""
+    eng.execute("CREATE TABLE pc (id INT NOT NULL, v CHAR, PRIMARY KEY (id))")
+    eng.execute("INSERT INTO pc VALUES (1, 'a')")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(sql)
+    assert (ei.value.code, ei.value.message) == (1054, "Unknown column 'a b' in 'field list'")
+
+
 def _insert_via(eng, tmp_path, source, table, cols, rows, verb="INSERT", on_dup=""):
     """One INSERT of ``rows`` into ``table (cols)`` through a row source:
     ``values`` (INSERT … VALUES), ``select`` (INSERT … SELECT from a
-    stored table, in row order) or ``load`` (LOAD DATA from a CSV file).
+    stored table, in row order), ``grouped`` (the same SELECT through a
+    GROUP BY, so the batch comes out of a shuffle) or ``load`` (LOAD
+    DATA from a CSV file).
     ``verb`` is INSERT, INSERT IGNORE or REPLACE; ``on_dup`` an optional
     ON DUPLICATE KEY UPDATE clause."""
     target = f"{table} ({', '.join(cols)})"
     if source == "values":
         lits = ", ".join("(" + ", ".join(map(repr, r)) + ")" for r in rows)
         return eng.execute(f"{verb} INTO {target} VALUES {lits} {on_dup}")
-    if source == "select":
+    if source in ("select", "grouped"):
         names = ", ".join(f"c{i}" for i in range(len(cols)))
         lits = ", ".join("(" + ", ".join(map(repr, (i, *r))) + ")" for i, r in enumerate(rows))
         eng.execute(f"CREATE TABLE {table}_src AS SELECT * FROM VALUES {lits} AS v(seq, {names})")
+        if source == "grouped":
+            picks = ", ".join(f"MAX(c{i}) AS c{i}" for i in range(len(cols)))
+            return eng.execute(
+                f"{verb} INTO {target} SELECT {picks} FROM {table}_src GROUP BY seq ORDER BY seq {on_dup}"
+            )
         return eng.execute(f"{verb} INTO {target} SELECT {names} FROM {table}_src ORDER BY seq {on_dup}")
     assert not on_dup
     f = tmp_path / f"{table}.csv"
@@ -3028,7 +3057,7 @@ def test_column_listed_twice_is_1110_for_every_source(eng, tmp_path, source):
 
 # an in-batch duplicate (code 20) and a clash with the stored row (code 10)
 _AGREE_BATCH = [(20, "a"), (10, "b"), (20, "c")]
-_ALL_SOURCES = ("values", "select", "load")
+_ALL_SOURCES = ("values", "select", "grouped", "load")
 _UPSERT = "ON DUPLICATE KEY UPDATE tag = VALUES(tag)"
 
 
@@ -3044,18 +3073,19 @@ _UPSERT = "ON DUPLICATE KEY UPDATE tag = VALUES(tag)"
         # 3 inserted + the stored row and the earlier (20, 'a') replaced
         ("REPLACE", "", _AGREE_BATCH, _ALL_SOURCES, (5, [(3, 10, "b"), (4, 20, "c")], 2)),
         # an in-batch duplicate makes the upsert order-dependent: 1062
-        ("INSERT", _UPSERT, _AGREE_BATCH, _ALL_SOURCES[:2], (1062, [(1, 10, "old")], 1)),
+        ("INSERT", _UPSERT, _AGREE_BATCH, _ALL_SOURCES[:3], (1062, [(1, 10, "old")], 1)),
         # (20, 'a') inserted, the stored row updated: 1 + 2
-        ("INSERT", _UPSERT, _AGREE_BATCH[:2], _ALL_SOURCES[:2], (3, [(1, 10, "b"), (2, 20, "a")], 2)),
+        ("INSERT", _UPSERT, _AGREE_BATCH[:2], _ALL_SOURCES[:3], (3, [(1, 10, "b"), (2, 20, "a")], 2)),
     ],
     ids=["plain", "ignore", "ignore_skips_first_minted", "ignore_skips_all", "replace", "upsert_in_batch_duplicate", "upsert"],
 )
 def test_insert_sources_agree(eng, tmp_path, verb, on_dup, batch, sources, expected):
-    """One batch loaded through VALUES, INSERT … SELECT and LOAD DATA into
-    a table with a PRIMARY KEY, a UNIQUE key and an AUTO_INCREMENT
-    column gives the same affected count (or error code), the same rows
-    and the same LAST_INSERT_ID() for every source. A failed statement
-    leaves both the table and LAST_INSERT_ID() as they were."""
+    """One batch loaded through VALUES, INSERT … SELECT (plain and
+    through a GROUP BY) and LOAD DATA into a table with a PRIMARY KEY, a
+    UNIQUE key and an AUTO_INCREMENT column gives the same affected
+    count (or error code), the same rows and the same LAST_INSERT_ID()
+    for every source. A failed statement leaves both the table and
+    LAST_INSERT_ID() as they were."""
     outcomes = {}
     for source in sources:
         t = f"ag_{source}"

@@ -171,6 +171,38 @@ def test_comments_hide_their_text_from_every_pass(c1, c2, lit):
     assert not any(kind == "param" for kind, _, _ in lex(strip_comments(sql)))
 
 
+def test_assignment_lists_read_their_tokens():
+    """Every SET and ON DUPLICATE KEY UPDATE list is read by one parser
+    over lex tokens: a backtick name holding a space or a comma is one
+    column, a literal holding ``,`` or ``=`` is one value, and only the
+    multi-table UPDATE takes a qualifier."""
+    from ebike_spark.engine.parser import column_assignments, parse_assignments, parse_insert, parse_update
+
+    upd = parse_update("UPDATE t SET `a b` = 1, c = 'x, y = z' WHERE id = 2")
+    assert upd.assignments == [("a b", "1"), ("c", "'x, y = z'")]
+    ins = parse_insert("INSERT INTO t VALUES (1) ON DUPLICATE KEY UPDATE `a,b` = VALUES(`a,b`) + 1")
+    assert ins.on_dup_update == [("a,b", "VALUES(`a,b`) + 1")]
+    assert parse_assignments("t.`a b` = u.`c d` + 1, e = (1, 2)") == [("t", "a b", "u.`c d` + 1"), (None, "e", "(1, 2)")]
+    for bad in ("a", "a =", "= 1", "a b = 1", "t.a = 1", "a = 1,", "t.u.a = 1"):
+        with pytest.raises(ValueError, match="malformed assignment"):
+            column_assignments(bad)
+
+
+def test_create_table_comment_is_read_as_a_string_literal():
+    """A table COMMENT is one string literal, escapes and all; a quote
+    that never closes is malformed."""
+    from ebike_spark.engine.parser import parse_create_table
+
+    for ddl in (
+        "CREATE TABLE t (a INT) COMMENT = 'it''s'",
+        "CREATE TABLE t (a INT) ENGINE=x COMMENT='a) b, \\'c\\'' DEFAULT CHARSET=utf8mb4;",
+    ):
+        assert [c.name for c in parse_create_table(ddl).columns] == ["a"], ddl
+    for ddl in ("CREATE TABLE t (a INT) COMMENT = 'x", "CREATE TABLE t (a INT) COMMENT = x", "CREATE TABLE t (a INT"):
+        with pytest.raises(ValueError, match="malformed CREATE TABLE"):
+            parse_create_table(ddl)
+
+
 # ---------------------------------------------------------------- union-find
 
 
@@ -543,7 +575,7 @@ _cast_strs = st.one_of(
 
 def _check_cast_batch(spark, values, spark_type_lit):
     from ebike_spark.engine.dml import strict_cast_sql
-    from ebike_spark.engine.errors import EbikeError
+    from ebike_spark.engine.errors import EbikeError, bad_value, marked
 
     expected = [_ref_bigint_cast(v) for v in values]
     good = [(v, e) for v, e in zip(values, expected) if e != "ERR"]
@@ -565,7 +597,7 @@ def _check_cast_batch(spark, values, spark_type_lit):
             ).collect()
             raised = False
         except Exception as e:  # the 1366 marker crosses as a JVM error
-            raised = "EBIKE_BADCAST" in str(e)
+            raised = marked(bad_value("v")) in str(e)
         assert raised, f"expected 1366 for {bad}"
 
 
@@ -1020,6 +1052,7 @@ def test_inline_and_per_row_values_agree(spark, cells, shape):
     from unittest import mock
 
     from ebike_spark.engine import Engine, dml
+    from ebike_spark.engine.parser import parse_insert
 
     cols = "id, n, d, f, s"
     if shape == "short_row":
@@ -1038,7 +1071,8 @@ def test_inline_and_per_row_values_agree(spark, cells, shape):
             eng.execute(f"INSERT INTO {t} VALUES (1, 1, 1.5, 1e0, 'stored')")
         if shape == "ok":
             types = dict(eng.catalog.column_types(f"{db}.inline_t"))
-            event(f"inline form: {dml._inline_ok(cells, list(types), types)}")
+            ins = parse_insert(sql.replace("{t}", "inline_t", 1))
+            event(f"inline form: {dml._inline_ok(ins, list(types), types)}")
         inline = _insert_outcome(eng, "inline_t", sql)
         with mock.patch.object(dml, "_inline_ok", return_value=False):
             per_row = _insert_outcome(eng, "per_row_t", sql)
@@ -1070,7 +1104,7 @@ def test_all_literal_values_batch_folds_to_a_local_relation(spark):
         types = dict(col_types)
         rows = "(1, 2.5, 1.25, 1e3, 'a'), (2, 7, NULL, -2e0, 'b'), (3, -2.5, 3, NULL, NULL)"
         ins = parse_insert(f"INSERT INTO inline_t VALUES {rows}")
-        assert dml._inline_ok(ins.rows, list(types), types)
+        assert dml._inline_ok(ins, list(types), types)
         df = dml._values_df(spark, ins, col_types)
         assert df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
         sc = spark.sparkContext
@@ -1084,7 +1118,7 @@ def test_all_literal_values_batch_folds_to_a_local_relation(spark):
 
         eng.execute(f"INSERT INTO inline_t VALUES {rows}")
         per_row = rows.replace("(1, ", "(0 + 1, ", 1)
-        assert not dml._inline_ok(parse_insert(f"INSERT INTO t VALUES {per_row}").rows, list(types), types)
+        assert not dml._inline_ok(parse_insert(f"INSERT INTO t VALUES {per_row}"), list(types), types)
         eng.execute(f"INSERT INTO per_row_t VALUES {per_row}")
 
         def stored(t):
@@ -1104,17 +1138,27 @@ def test_values_widening_that_would_change_a_value_takes_per_row_form(spark):
     import uuid as _uuid
 
     from ebike_spark.engine import Engine, dml
+    from ebike_spark.engine.parser import parse_insert
 
     types = {"n": "bigint", "s": "string", "d": "decimal(38,1)"}
-    assert not dml._inline_ok([["9007199254740993"], ["1e3"]], ["n"], types)
-    assert not dml._inline_ok([["12345678901234567890123456789012345678"], ["0.5"]], ["d"], types)
-    assert not dml._inline_ok([["5"], ["2.5"]], ["s"], types)
-    assert not dml._inline_ok([["5"], ["'x'"]], ["n"], types)
-    assert not dml._inline_ok([["1 + 1"]], ["n"], types)
+
+    def inline_ok(col: str, *cells: str) -> bool:
+        ins = parse_insert(f"INSERT INTO t ({col}) VALUES " + ", ".join(f"({c})" for c in cells))
+        return dml._inline_ok(ins, [col], types)
+
+    assert not inline_ok("n", "9007199254740993", "1e3")
+    assert not inline_ok("d", "12345678901234567890123456789012345678", "0.5")
+    assert not inline_ok("s", "5", "2.5")
+    assert not inline_ok("n", "5", "'x'")
+    assert not inline_ok("n", "1 + 1")
+    # a space (or a comment, which reaches the parser as one) after the
+    # sign: an expression, not one literal
+    assert not inline_ok("n", "- 5")
+    assert not inline_ok("d", "- 2.5")
     # one literal type per column, or exact numerics widened exactly
     # into a numeric column: the inline form
-    assert dml._inline_ok([["9007199254740993"], ["2.5"], ["NULL"]], ["n"], types)
-    assert dml._inline_ok([["'it\\'s'"], ["'a''b'"], ["NULL"]], ["s"], types)
+    assert inline_ok("n", "9007199254740993", "2.5", "NULL")
+    assert inline_ok("s", "'it\\'s'", "'a''b'", "NULL")
 
     eng = Engine(spark)
     db = f"pw_{_uuid.uuid4().hex[:8]}"
@@ -1123,7 +1167,8 @@ def test_values_widening_that_would_change_a_value_takes_per_row_form(spark):
         eng.execute(f"USE {db}")
         eng.execute("CREATE TABLE w (n INT, s CHAR)")
         eng.execute("INSERT INTO w VALUES (9007199254740993, 5), (1e3, 2.5), (-2.5, NULL)")
+        eng.execute("INSERT INTO w VALUES (- 5, NULL), (- 2.5, NULL), (-/* c */7, NULL)")
         got = sorted((r["n"], r["s"]) for r in eng.execute("SELECT n, s FROM w").rows())
-        assert got == [(-3, None), (1000, "2.5"), (9007199254740993, "5")]
+        assert got == [(-7, None), (-5, None), (-3, None), (-3, None), (1000, "2.5"), (9007199254740993, "5")]
     finally:
         eng.execute(f"DROP DATABASE IF EXISTS {db}")
