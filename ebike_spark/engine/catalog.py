@@ -4,10 +4,23 @@ surface and constraint metadata.
 Reference model (SURVEY §1): three-level ``def.schema.table`` namespace
 with table metadata persisted as rows of information_schema tables and
 re-read into a cache. Spark already owns a catalog (databases, tables,
-schemas), so the only custom state is what Spark can't represent:
-PRIMARY KEY / UNIQUE constraints and declared nullability — stored as
-table properties (TBLPROPERTIES), the catalog-native key-value channel,
-instead of a side metadata store.
+schemas), so the only custom state is what Spark can't represent, kept
+in each table's catalog entry as TBLPROPERTIES (the catalog-native
+key-value channel) instead of a side metadata store:
+
+- ``ebike.primary_key``: the PRIMARY KEY columns, comma-joined;
+- ``ebike.unique.<name>``: one per UNIQUE key, its columns;
+- ``ebike.cluster.<name>``: one per KEY (a range-clustering index);
+- ``ebike.not_null``: the NOT NULL columns;
+- ``ebike.auto_increment``: the AUTO_INCREMENT column;
+- ``ebike.rowid``: ``1`` when the table carries the hidden rowid;
+- ``ebike.matview.sql``: a materialized view's SELECT, base64.
+
+A list with no column is no property at all. :class:`Table` is the one
+owner of this format: ``Table.decode`` reads a Spark ``CatalogTable``
+(``Catalog.table`` fetches it with one external-catalog call, no SQL
+command) and ``Table.properties`` writes it back. Every statement reads
+the one Table it needs; nothing is cached, so nothing goes stale.
 
 Type whitelist mirrors /root/reference/src/meta/meta_util.rs:548-562:
 INT → bigint, FLOAT → double, CHAR → string; everything else rejected.
@@ -15,22 +28,26 @@ INT → bigint, FLOAT → double, CHAR → string; everything else rejected.
 Hidden rowid: the reference prepends a UUID ``rowid`` to every table
 (/root/reference/src/meta/meta_def.rs:385-398) and surfaces it only
 when explicitly projected (/root/reference/src/core/core_util.rs:451-461).
-Here it is a real LAST column (STRING, uuid() materialized at INSERT,
-marked by the ``ebike.rowid`` table property) that every metadata
-surface (SHOW/DESCRIBE/information_schema/column_types) hides and every query
-(Engine._query) drops from results unless the query text names it —
-column pruning then means the hidden column is never even read. Last
-rather than first so VALUES inserts stay positional.
+Here it is a real column (STRING, uuid() materialized at INSERT,
+marked by ``ebike.rowid``) that every metadata surface
+(SHOW/DESCRIBE/information_schema, ``Table.columns``) hides and every
+query (Engine._query) drops from results unless the query text names it
+— column pruning then means the hidden column is never even read. It is
+created LAST so VALUES inserts stay positional.
 """
 
 from __future__ import annotations
 
+import base64
+import json
 import re
 import uuid
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ebike_spark.engine import commit
 from ebike_spark.engine.errors import EbikeError, access_denied, table_not_exists, unknown_database
@@ -93,7 +110,107 @@ PROP_NOT_NULL = "ebike.not_null"
 PROP_CLUSTER_PREFIX = "ebike.cluster."
 PROP_ROWID = "ebike.rowid"
 PROP_AUTO_INCREMENT = "ebike.auto_increment"
+PROP_MATVIEW = "ebike.matview.sql"
 ROWID = "rowid"
+
+Cols = tuple[str, ...]
+
+
+def _cols(value: str) -> Cols:
+    return tuple(c for c in value.split(",") if c)
+
+
+class Table(NamedTuple):
+    """One table's declared metadata, as its catalog entry holds it.
+    ``schema`` is every stored column (name, Spark type) in physical
+    order, the hidden rowid included; ``uniques`` and ``indexes`` (the
+    KEY clustering indexes) are (name, columns) pairs, decoded in name
+    order; ``matview`` is a materialized view's SELECT. Immutable: DDL
+    derives the next Table with ``_replace`` and lands
+    ``properties()``."""
+
+    name: str
+    schema: tuple[tuple[str, str], ...]
+    primary_key: Cols = ()
+    uniques: tuple[tuple[str, Cols], ...] = ()
+    indexes: tuple[tuple[str, Cols], ...] = ()
+    not_null: Cols = ()
+    auto_increment: str | None = None
+    has_rowid: bool = False
+    matview: str | None = None
+
+    @classmethod
+    def decode(cls, entry) -> "Table":
+        """The Table a Spark ``CatalogTable`` (a py4j object) describes."""
+        props = commit.entry_properties(entry)
+
+        def named(prefix: str) -> tuple[tuple[str, Cols], ...]:
+            return tuple(sorted((k[len(prefix):], _cols(v)) for k, v in props.items() if k.startswith(prefix)))
+
+        matview = props.get(PROP_MATVIEW)
+        return cls(
+            name=f"{entry.database()}.{entry.identifier().table()}",
+            schema=tuple(
+                (f.name, f.dataType.simpleString())
+                for f in StructType.fromJson(json.loads(entry.schema().json())).fields
+            ),
+            primary_key=_cols(props.get(PROP_PK, "")),
+            uniques=named(PROP_UNIQUE_PREFIX),
+            indexes=named(PROP_CLUSTER_PREFIX),
+            not_null=_cols(props.get(PROP_NOT_NULL, "")),
+            auto_increment=props.get(PROP_AUTO_INCREMENT) or None,
+            has_rowid=props.get(PROP_ROWID) == "1",
+            matview=None if matview is None else base64.b64decode(matview).decode(),
+        )
+
+    def properties(self) -> dict[str, str]:
+        """The ``ebike.*`` properties that encode this Table; a list
+        with no column is no property."""
+        props = {
+            PROP_PK: ",".join(self.primary_key),
+            PROP_NOT_NULL: ",".join(self.not_null),
+            PROP_AUTO_INCREMENT: self.auto_increment or "",
+            PROP_ROWID: "1" if self.has_rowid else "",
+            PROP_MATVIEW: base64.b64encode(self.matview.encode()).decode() if self.matview else "",
+        }
+        props.update((PROP_UNIQUE_PREFIX + n, ",".join(c)) for n, c in self.uniques)
+        props.update((PROP_CLUSTER_PREFIX + n, ",".join(c)) for n, c in self.indexes)
+        return {k: v for k, v in props.items() if v}
+
+    @property
+    def columns(self) -> list[tuple[str, str]]:
+        """[(name, Spark type)] of the USER-VISIBLE columns, in table
+        order: the hidden rowid never appears in metadata surfaces or
+        positional DML."""
+        return [(n, t) for n, t in self.schema if not (self.has_rowid and n == ROWID)]
+
+    @property
+    def keys(self) -> list[tuple[str, list[str]]]:
+        """The PRIMARY + UNIQUE keys in check order: the one list every
+        duplicate probe shares."""
+        pk = [("PRIMARY", list(self.primary_key))] if self.primary_key else []
+        return pk + [(n, list(c)) for n, c in self.uniques]
+
+    def column_key(self, col: str) -> str:
+        """MySQL's COLUMN_KEY of ``col``: PRI, UNI for a column of a
+        UNIQUE key, MUL for the first column of a KEY, else ''."""
+        if col in self.primary_key:
+            return "PRI"
+        if any(col in c for _, c in self.uniques):
+            return "UNI"
+        return "MUL" if any(c[0] == col for _, c in self.indexes) else ""
+
+    def index_rows(self) -> list[tuple[str, int, int, str, str]]:
+        """(key name, non_unique, seq_in_index, column, index type) for
+        each column of each key and index, in SHOW INDEX order: the
+        PRIMARY and UNIQUE keys, then the KEY clustering indexes."""
+        return [
+            (name, non_unique, seq, c, kind)
+            for keys, non_unique, kind in ((self.keys, 0, "BTREE"), (self.indexes, 1, "CLUSTERED"))
+            for name, cols in keys
+            for seq, c in enumerate(cols, start=1)
+        ]
+
 
 # The system tables a query can read, with their columns; each is
 # built per statement from the catalog (Catalog.system_table).
@@ -167,11 +284,24 @@ class Catalog:
         """1146 unless ``qualified`` names a table; a system table bound
         in this statement (system_tables) is one, but only for reading:
         1044."""
+        self._deny_system(qualified)
+        if not self.table_exists(qualified):
+            raise table_not_exists(qualified)
+
+    def _deny_system(self, qualified: str) -> None:
         name = self.system_views.get(qualified.rpartition(".")[2])
         if name:
             raise access_denied(name.partition(".")[0])
-        if not self.table_exists(qualified):
-            raise table_not_exists(qualified)
+
+    def table(self, qualified: str) -> Table:
+        """The Table ``qualified`` names, decoded from its catalog entry:
+        one external-catalog read, no SQL command. 1146 unless it names
+        a table or view, 1044 for a system table (require_table)."""
+        self._deny_system(qualified)
+        try:
+            return Table.decode(commit.entry(self.spark, qualified))
+        except AnalysisException:
+            raise table_not_exists(qualified) from None
 
     def _ensure_fresh_location(self, qualified: str) -> None:
         """Remove a stale managed-table directory left by a previous
@@ -201,18 +331,8 @@ class Catalog:
 
     def create_table(self, ct: CreateTable, current_db: str) -> None:
         qualified = self.qualify(ct.table, current_db)
-        cols = []
-        not_null = []
-        for c in ct.columns:
-            cols.append(
-                f"`{c.name}` {resolve_sql_type(c.sql_type, c.precision, c.scale)}"
-            )
-            if not c.nullable:
-                not_null.append(c.name)
-        for col in ct.primary_key:
-            if col not in not_null:
-                not_null.append(col)
-        props = [f"'{PROP_NOT_NULL}' = '{','.join(not_null)}'"]
+        not_null = [c.name for c in ct.columns if not c.nullable]
+        not_null += [c for c in ct.primary_key if c not in not_null]
         ai_cols = [c.name for c in ct.columns if c.auto_increment]
         if len(ai_cols) > 1 or (
             ai_cols
@@ -225,16 +345,6 @@ class Catalog:
                 "Incorrect table definition; there can be only one auto "
                 "column and it must be defined as a key",
             )
-        if ai_cols:
-            props.append(f"'{PROP_AUTO_INCREMENT}' = '{ai_cols[0]}'")
-        # hidden rowid, unless the user claimed the name for themselves
-        if all(c.name != ROWID for c in ct.columns):
-            cols.append(f"`{ROWID}` STRING")
-            props.append(f"'{PROP_ROWID}' = '1'")
-        if ct.primary_key:
-            props.append(f"'{PROP_PK}' = '{','.join(ct.primary_key)}'")
-        for uname, ucols in ct.uniques:
-            props.append(f"'{PROP_UNIQUE_PREFIX}{uname}' = '{','.join(ucols)}'")
         # inline KEY items: recorded as clustering indexes (the table is
         # empty, so there is nothing to physically re-cluster yet; the
         # DML paths maintain advertised clusterings on write)
@@ -247,14 +357,34 @@ class Catalog:
             if iname in seen_keys:
                 raise EbikeError(1061, f"Duplicate key name '{iname}'")
             seen_keys.add(iname)
-            props.append(f"'{PROP_CLUSTER_PREFIX}{iname}' = '{','.join(icols)}'")
-        ine = "IF NOT EXISTS " if ct.if_not_exists else ""
-        self._ensure_fresh_location(qualified)
-        self.spark.sql(
-            f"CREATE TABLE {ine}{bq(qualified)} ({', '.join(cols)}) USING parquet"
-            f" TBLPROPERTIES ({', '.join(props)})"
+        schema = [(c.name, resolve_sql_type(c.sql_type, c.precision, c.scale)) for c in ct.columns]
+        # hidden rowid, unless the user claimed the name for themselves
+        has_rowid = ROWID not in known
+        if has_rowid:
+            schema.append((ROWID, "STRING"))
+        table = Table(
+            qualified,
+            tuple(schema),
+            primary_key=tuple(ct.primary_key),
+            uniques=tuple((u, tuple(cols)) for u, cols in ct.uniques),
+            indexes=tuple((i, tuple(cols)) for i, cols in ct.indexes),
+            not_null=tuple(not_null),
+            auto_increment=ai_cols[0] if ai_cols else None,
+            has_rowid=has_rowid,
         )
-        commit.bump(self.spark, qualified)
+        self._create(table, ct.if_not_exists)
+
+    def _create(self, table: Table, if_not_exists: bool = False) -> None:
+        """CREATE TABLE ``table``: its columns, with its properties."""
+        cols = ", ".join(f"`{n}` {t}" for n, t in table.schema)
+        props = ", ".join(f"{sql_literal(k)} = {sql_literal(v)}" for k, v in table.properties().items())
+        ine = "IF NOT EXISTS " if if_not_exists else ""
+        self._ensure_fresh_location(table.name)
+        self.spark.sql(
+            f"CREATE TABLE {ine}{bq(table.name)} ({cols}) USING parquet"
+            + (f" TBLPROPERTIES ({props})" if props else "")
+        )
+        commit.bump(self.spark, table.name)
 
     def drop_table(self, qualified: str, if_exists: bool) -> None:
         """DROP TABLE: Spark deletes the live version; its version root
@@ -269,113 +399,16 @@ class Catalog:
 
     def create_table_like(self, src_qualified: str, dst_qualified: str) -> None:
         """CREATE TABLE dst LIKE src — structure only, as MySQL: columns
-        (including the hidden rowid slot) and the key-shaped ebike.*
-        properties (PK/UNIQUE/NOT NULL/AUTO_INCREMENT/cluster markers)
-        copy; data does not. The AUTO_INCREMENT counter starts fresh
-        (MySQL resets it too). A materialized view is not a base table
-        (MySQL 1347 for LIKE on a view) — and copying its marker would
-        make the clone REFRESH-able into the source's query result."""
-        self.require_table(src_qualified)
-        if "ebike.matview.sql" in self.properties(src_qualified):
+        (including the hidden rowid slot) and the keys, NOT NULL and
+        AUTO_INCREMENT copy; data does not. The AUTO_INCREMENT counter
+        starts fresh (MySQL resets it too). A materialized view is not
+        a base table (MySQL 1347 for LIKE on a view) — and copying its
+        SELECT would make the clone REFRESH-able into the source's
+        query result."""
+        src = self.table(src_qualified)
+        if src.matview is not None:
             raise EbikeError(1347, f"'{src_qualified}' is not BASE TABLE")
-        fields = self.spark.table(src_qualified).schema.fields
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in fields)
-        props = {
-            k: v for k, v in self.properties(src_qualified).items() if k.startswith("ebike.")
-        }
-        props_ddl = ", ".join(f"'{k}' = '{v}'" for k, v in props.items()) or f"'{PROP_NOT_NULL}' = ''"
-        self._ensure_fresh_location(dst_qualified)
-        self.spark.sql(
-            f"CREATE TABLE {bq(dst_qualified)} ({cols}) USING parquet"
-            f" TBLPROPERTIES ({props_ddl})"
-        )
-        commit.bump(self.spark, dst_qualified)
-
-    # ------------------------------------------------------------ metadata
-
-    def properties(self, qualified: str) -> dict[str, str]:
-        rows = self.spark.sql(f"SHOW TBLPROPERTIES {bq(qualified)}").collect()
-        return {r["key"]: r["value"] for r in rows}
-
-    # The getters below take an optional ``props`` — the table's
-    # properties() already read by the caller — so one statement reads
-    # SHOW TBLPROPERTIES once, however many of them it needs.
-    def _props(self, qualified: str, props: dict[str, str] | None) -> dict[str, str]:
-        return self.properties(qualified) if props is None else props
-
-    def primary_key(self, qualified: str, props: dict[str, str] | None = None) -> list[str]:
-        pk = self._props(qualified, props).get(PROP_PK, "")
-        return [c for c in pk.split(",") if c]
-
-    def unique_keys(
-        self, qualified: str, props: dict[str, str] | None = None
-    ) -> list[tuple[str, list[str]]]:
-        out = []
-        for k, v in self._props(qualified, props).items():
-            if k.startswith(PROP_UNIQUE_PREFIX):
-                out.append((k[len(PROP_UNIQUE_PREFIX):], [c for c in v.split(",") if c]))
-        return sorted(out)
-
-    def keys(self, qualified: str, props: dict[str, str] | None = None) -> list[tuple[str, list[str]]]:
-        """The table's PRIMARY + UNIQUE key list in check order — the one
-        definition every duplicate probe shares."""
-        props = self._props(qualified, props)
-        pk = self.primary_key(qualified, props)
-        return ([("PRIMARY", pk)] if pk else []) + self.unique_keys(qualified, props)
-
-    def cluster_indexes(self, qualified: str) -> list[tuple[str, list[str]]]:
-        out = []
-        for k, v in self.properties(qualified).items():
-            if k.startswith(PROP_CLUSTER_PREFIX):
-                out.append((k[len(PROP_CLUSTER_PREFIX):], [c for c in v.split(",") if c]))
-        return sorted(out)
-
-    def not_null_cols(self, qualified: str, props: dict[str, str] | None = None) -> list[str]:
-        nn = self._props(qualified, props).get(PROP_NOT_NULL, "")
-        return [c for c in nn.split(",") if c]
-
-    def has_rowid(self, qualified: str, props: dict[str, str] | None = None) -> bool:
-        return self._props(qualified, props).get(PROP_ROWID) == "1"
-
-    def auto_increment_col(
-        self, qualified: str, props: dict[str, str] | None = None
-    ) -> str | None:
-        return self._props(qualified, props).get(PROP_AUTO_INCREMENT) or None
-
-    def column_types(
-        self, qualified: str, props: dict[str, str] | None = None
-    ) -> list[tuple[str, str]]:
-        """[(name, spark_type_simple)] in table order — the USER-VISIBLE
-        columns: the hidden rowid never appears in metadata surfaces or
-        positional DML."""
-        fields = [(f.name, f.dataType.simpleString()) for f in self.spark.table(qualified).schema.fields]
-        if self.has_rowid(qualified, props):
-            fields = [f for f in fields if f[0] != ROWID]
-        return fields
-
-    # ------------------------------------------------------------ info schema
-
-    def show_create_table(self, qualified: str) -> str:
-        self.require_table(qualified)
-        _, _, tname = qualified.rpartition(".")
-        lines = []
-        nn = set(self.not_null_cols(qualified))
-        ai = self.auto_increment_col(qualified)
-        for name, typ in self.column_types(qualified):
-            sql_t = SQL_TYPE_NAME.get(typ, typ)
-            null = " NOT NULL" if name in nn else ""
-            extra = " AUTO_INCREMENT" if name == ai else ""
-            lines.append(f"  `{name}` {sql_t}{null}{extra}")
-        pk = self.primary_key(qualified)
-        if pk:
-            lines.append("  PRIMARY KEY (" + ", ".join(f"`{c}`" for c in pk) + ")")
-        for uname, ucols in self.unique_keys(qualified):
-            lines.append(f"  UNIQUE KEY `{uname}` (" + ", ".join(f"`{c}`" for c in ucols) + ")")
-        for iname, icols in self.cluster_indexes(qualified):
-            lines.append(f"  KEY `{iname}` (" + ", ".join(f"`{c}`" for c in icols) + ")")
-        body = ",\n".join(lines)
-        return f"CREATE TABLE `{tname}` (\n{body}\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4"
-
+        self._create(src._replace(name=dst_qualified))
 
     # ------------------------------------------------------------ listing
 
@@ -487,7 +520,7 @@ class Catalog:
             if t not in views:
                 try:
                     rows += self._key_rows(table, db, t)
-                except AnalysisException:
+                except EbikeError:
                     continue
         return rows
 
@@ -500,31 +533,25 @@ class Catalog:
         return [("def", db, view, m.group(1).strip() if m else "", "NONE", "YES", "root@%")]
 
     def _key_rows(self, table: str, db: str, t: str) -> list[tuple]:
-        """Rows of ``columns`` or of the declared PRIMARY/UNIQUE keys'
+        """Rows of ``columns`` or of the declared keys'
         ``table_constraints``, ``key_column_usage`` and ``statistics``
-        (information_schema.rs:36-158) for base table ``db.t``."""
-        q = f"{db}.{t}"
-        props = self.properties(q)
-        pk = self.primary_key(q, props)
+        (information_schema.rs:36-158) for base table ``db.t``, from its
+        one Table: ``statistics`` lists the KEY clustering indexes too,
+        as SHOW INDEX does."""
+        tbl = self.table(f"{db}.{t}")
         if table == "columns":
-            nn = set(self.not_null_cols(q, props))
             return [
-                ("def", db, t, c, pos, "NO" if c in nn else "YES",
-                 SQL_TYPE_NAME.get(typ, typ), "PRI" if c in pk else "")
-                for pos, (c, typ) in enumerate(self.column_types(q, props), start=1)
+                ("def", db, t, c, pos, "NO" if c in tbl.not_null else "YES",
+                 SQL_TYPE_NAME.get(typ, typ), tbl.column_key(c))
+                for pos, (c, typ) in enumerate(tbl.columns, start=1)
             ]
-        keys = ([("PRIMARY", pk, "PRIMARY KEY")] if pk else []) + [
-            (u, cols, "UNIQUE") for u, cols in self.unique_keys(q, props)
-        ]
+        if table == "statistics":
+            return [("def", db, t, non_unique, db, k, seq, c) for k, non_unique, seq, c, _ in tbl.index_rows()]
+        keys = [(k, cols, "PRIMARY KEY" if k == "PRIMARY" else "UNIQUE") for k, cols in tbl.keys]
         if table == "table_constraints":
             return [("def", db, k, db, t, kind) for k, _, kind in keys]
-        if table == "key_column_usage":
-            return [
-                ("def", db, k, "def", db, t, c, seq)
-                for k, cols, _ in keys for seq, c in enumerate(cols, start=1)
-            ]
         return [
-            ("def", db, t, 0, db, k, seq, c)
+            ("def", db, k, "def", db, t, c, seq)
             for k, cols, _ in keys for seq, c in enumerate(cols, start=1)
         ]
 

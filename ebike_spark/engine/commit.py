@@ -69,6 +69,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructField, StructType
 
+from ebike_spark.engine.parser import sql_literal
+
 STEPS = ("write", "repoint", "refresh", "retire")
 _VERSION = re.compile(r"_v(\d+)")
 
@@ -154,10 +156,23 @@ def local_path(uri: str) -> str:
     return unquote(urlparse(uri).path)
 
 
+def entry(spark: SparkSession, qualified: str):
+    """The table's catalog entry, a Spark ``CatalogTable`` (py4j)."""
+    return _catalog(spark).getTable(*_split(qualified))
+
+
+def entry_properties(entry) -> dict[str, str]:
+    """A catalog entry's properties: its keys and its values each come
+    back as one string, in the same order."""
+    props, sep = entry.properties(), "\x00"
+    keys = props.keys().mkString(sep)
+    return dict(zip(keys.split(sep), props.values().mkString(sep).split(sep))) if keys else {}
+
+
 def location(spark: SparkSession, qualified: str) -> str | None:
     """The table's live location; None for a view or a missing table."""
     try:
-        return local_path(_catalog(spark).getTable(*_split(qualified)).location().toString())
+        return local_path(entry(spark, qualified).location().toString())
     except (AnalysisException, Py4JJavaError):
         return None
 
@@ -279,7 +294,7 @@ def commit(spark: SparkSession, images) -> list[int | None]:
         repointed = []
         try:
             for img in images:
-                snapshot = catalog.getTable(*_split(img.qualified))
+                snapshot = entry(spark, img.qualified)
                 old = local_path(snapshot.location().toString())
                 new = _claim_version(old)
                 staged.append((img, snapshot, old, new))
@@ -355,18 +370,14 @@ def set_properties(spark: SparkSession, qualified: str, props: dict[str, str]) -
     """Make ``props`` the table's ``ebike.*`` properties: set the
     changed ones, unset the ones no longer there."""
     name = _quoted(qualified)
-    current = {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
-        if r["key"].startswith("ebike.")
-    }
+    current = {k: v for k, v in entry_properties(entry(spark, qualified)).items() if k.startswith("ebike.")}
     changed = {k: v for k, v in props.items() if current.get(k) != v}
     gone = [k for k in current if k not in props]
     if changed:
-        pairs = ", ".join(f"'{k}' = '{v}'" for k, v in changed.items())
+        pairs = ", ".join(f"{sql_literal(k)} = {sql_literal(v)}" for k, v in changed.items())
         spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ({pairs})")
     if gone:
-        keys = ", ".join(f"'{k}'" for k in gone)
+        keys = ", ".join(sql_literal(k) for k in gone)
         spark.sql(f"ALTER TABLE {name} UNSET TBLPROPERTIES ({keys})")
 
 

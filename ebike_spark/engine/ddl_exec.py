@@ -11,16 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ebike_spark.engine import commit, dml
-from ebike_spark.engine.catalog import (
-    PROP_AUTO_INCREMENT,
-    PROP_NOT_NULL,
-    PROP_PK,
-    PROP_ROWID,
-    PROP_UNIQUE_PREFIX,
-    ROWID,
-    bq,
-    resolve_sql_type,
-)
+from ebike_spark.engine.catalog import ROWID, Table, bq, resolve_sql_type
 from ebike_spark.engine.errors import EbikeError, parse_error, unsupported
 from ebike_spark.engine.parser import lex, parse_create_table, split_top_level, unquote_ident
 from ebike_spark.engine.session_state import EngineResult
@@ -97,13 +88,11 @@ class DdlExecMixin:
         return EngineResult("count", affected=written.get["n"])
 
     # A materialized view is a managed parquet table whose defining
-    # SELECT is stored (base64, to dodge DDL string escaping) in table
-    # properties; REFRESH re-runs it and commits the result the way DML
-    # does (engine/commit.py). The OLAP-engine face of the hierarchical-rollup pattern
+    # SELECT is stored in its Table (``matview``); REFRESH re-runs it
+    # and commits the result the way DML does (engine/commit.py). The
+    # OLAP-engine face of the hierarchical-rollup pattern
     # (plans/timeseries.py): materialize once, re-serve cheaply,
     # recompute on demand. Beyond the reference (1105s there).
-    _PROP_MATVIEW = "ebike.matview.sql"
-
     def _create_matview(self, sql: str) -> EngineResult:
         m = re.match(
             r"CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.`\"]+)\s+AS\s+(\(?\s*SELECT\b[\s\S]*)$",
@@ -112,19 +101,15 @@ class DdlExecMixin:
         )
         if not m:
             raise parse_error("near CREATE MATERIALIZED VIEW")
-        import base64
-
         q = self.catalog.qualify(unquote_ident(m.group(2)), self.current_db)
         if self.catalog.table_exists(q):
             # IF NOT EXISTS: no-op, and do NOT claim the existing
             # object as a matview; otherwise 1050 via the CTAS path
             return self._ctas(bool(m.group(1)), unquote_ident(m.group(2)), m.group(3))
         res = self._ctas(bool(m.group(1)), unquote_ident(m.group(2)), m.group(3))
-        enc = base64.b64encode(m.group(3).strip().encode()).decode()
         try:
-            self.spark.sql(
-                f"ALTER TABLE {bq(q)} SET TBLPROPERTIES ('{self._PROP_MATVIEW}' = '{enc}')"
-            )
+            view = self.catalog.table(q)._replace(matview=m.group(3).strip())
+            commit.set_properties(self.spark, q, view.properties())
         except Exception:
             # CTAS + marker must be atomic: without the property the
             # object is a plain table that REFRESH/DROP MATERIALIZED
@@ -148,8 +133,6 @@ class DdlExecMixin:
             raise EbikeError(1105, "Views over system tables are not supported")
         self.spark.sql(text)
         return EngineResult("count", affected=0)
-
-    _PROP_CLUSTER = "ebike.cluster."
 
     def _create_index(self, sql: str) -> EngineResult:
         """CREATE [UNIQUE] INDEX name ON t (cols) — the ALTER TABLE …
@@ -177,12 +160,10 @@ class DdlExecMixin:
         return self._alter_table(f"ALTER TABLE {m.group(2)} DROP INDEX {m.group(1)}")
 
     def _matview_sql(self, q: str) -> str:
-        import base64
-
-        enc = self.catalog.properties(q).get(self._PROP_MATVIEW)
-        if enc is None:
+        sql = self.catalog.table(q).matview
+        if sql is None:
             raise EbikeError(1347, f"'{q}' is not a MATERIALIZED VIEW")
-        return base64.b64decode(enc).decode()
+        return sql
 
     def _refresh_matview(self, sql: str) -> EngineResult:
         m = re.match(r"REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.`\"]+)\s*$", sql, re.I)
@@ -277,10 +258,9 @@ class DdlExecMixin:
             # through the same NOT NULL and duplicate probes the DML
             # checks use
             t = self.spark.table(q)
-            msgs = [f"column '{col}' contains NULL" for col in dml.null_columns(self.catalog, q, t)]
-            for key_name, _ in dml.duplicate_key_probe(
-                t, self.catalog.keys(q)
-            ):
+            table = self.catalog.table(q)
+            msgs = [f"column '{col}' contains NULL" for col in dml.null_columns(table, t)]
+            for key_name, _ in dml.duplicate_key_probe(t, table.keys):
                 msgs.append(f"duplicate entries in key '{key_name}'")
             if msgs:
                 rows.append((disp, "check", "error", "; ".join(msgs)))
@@ -348,11 +328,12 @@ class DdlExecMixin:
         """ALTER TABLE with one clause or a comma-separated list, atomic
         like MySQL 8.0 (the reference's dispatcher handles only
         single-clause ALTERs, execution.rs:894-1279). The clauses fold
-        over the table's pending rows and ``ebike.*`` properties
+        over the table's pending rows and its ``catalog.Table``
         (_Altered) and nothing lands until all of them passed, then
         once: as catalog DDL when no clause changes the rows (ADD
         COLUMN, keys), else as one commit of the table's next version
-        with its new schema and properties (engine/commit.py). A
+        with its new schema and the Table's properties
+        (engine/commit.py). A
         RENAME [TO|AS] clause applies last (MySQL processes the rename
         with the rebuild; other clauses name the old table)."""
         m = re.match(r"ALTER\s+TABLE\s+([\w.`\"]+)\s+([\s\S]+?)\s*$", sql, re.I)
@@ -387,12 +368,7 @@ class DdlExecMixin:
                 if self.catalog.table_exists(dst):
                     raise EbikeError(1050, f"Table '{dst}' already exists")
             with commit.writing(self.spark, q):
-                props = {
-                    k: v
-                    for k, v in self.catalog.properties(q).items()
-                    if k.startswith("ebike.")
-                }
-                st = _Altered(self.spark.table(q), props)
+                st = _Altered(self.spark.table(q), self.catalog.table(q))
                 for cl in body:
                     self._alter_clause(st, cl)
                 self._land(q, st)
@@ -401,16 +377,15 @@ class DdlExecMixin:
         return EngineResult("count", affected=0)
 
     def _land(self, q: str, st: "_Altered") -> None:
+        props = st.table.properties()
         if st.rewrite:
-            commit.commit(
-                self.spark, [commit.Image(q, st.df, schema=st.df.schema, props=st.props)]
-            )
+            commit.commit(self.spark, [commit.Image(q, st.df, schema=st.df.schema, props=props)])
             return
         if st.added:
             cols = ", ".join(f"`{c}` {t}" for c, t in st.added)
             self.spark.sql(f"ALTER TABLE {bq(q)} ADD COLUMNS ({cols})")
             commit.bump(self.spark, q)
-        commit.set_properties(self.spark, q, st.props)
+        commit.set_properties(self.spark, q, props)
 
     def _alter_clause(self, st: "_Altered", cl: str) -> None:
         """Apply one ALTER TABLE clause to the pending state. Display
@@ -445,8 +420,7 @@ class DdlExecMixin:
             if name is None:
                 # MySQL auto-names an anonymous key after its first
                 # column, deduping with _2, _3, ... on collision
-                taken = {n for n, _ in st.keys(PROP_UNIQUE_PREFIX)}
-                taken.update(n for n, _ in st.keys(self._PROP_CLUSTER))
+                taken = _index_names(st.table)
                 name, k = cols[0], 2
                 while name in taken:
                     name, k = f"{cols[0]}_{k}", k + 1
@@ -456,22 +430,25 @@ class DdlExecMixin:
             return self._add_index(st, unquote_ident(m.group(1)), cols_of(m.group(2)))
         m = re.match(r"DROP\s+PRIMARY\s+KEY\s*$", cl, re.I)
         if m:
-            if PROP_PK not in st.props:
+            if not st.table.primary_key:
                 raise EbikeError(1091, "Can't DROP 'PRIMARY'; check that column/key exists")
             # MySQL keeps the NOT NULL attribute on former PK columns
-            del st.props[PROP_PK]
+            st.table = st.table._replace(primary_key=())
             return None
         m = re.match(r"DROP\s+(?:INDEX|KEY)\s+([\w`\"]+)\s*$", cl, re.I)
         if m:
             name = unquote_ident(m.group(1))
+            if name not in _index_names(st.table):
+                raise EbikeError(1091, f"Can't DROP '{name}'; check that column/key exists")
             # a clustering index is metadata-only to drop: the physical
             # order stays (harmless — it is just a row order) but stops
             # being advertised or maintained; a UNIQUE index stops its
             # constraint enforcement
-            for prefix in (self._PROP_CLUSTER, PROP_UNIQUE_PREFIX):
-                if st.props.pop(prefix + name, None) is not None:
-                    return None
-            raise EbikeError(1091, f"Can't DROP '{name}'; check that column/key exists")
+            st.table = st.table._replace(
+                uniques=tuple(u for u in st.table.uniques if u[0] != name),
+                indexes=tuple(i for i in st.table.indexes if i[0] != name),
+            )
+            return None
         m = re.match(
             rf"MODIFY\s+(?:COLUMN\s+)?([\w`\"]+)\s+(\w+){width}(\s+NOT\s+NULL)?\s*$", cl, re.I
         )
@@ -514,25 +491,29 @@ class DdlExecMixin:
         version holds the rows without it (the ALTER path the reference
         implements as meta-table surgery,
         /root/reference/src/execute_impl/drop_column.rs:37-131)."""
-        if col not in st.df.columns or (col == ROWID and st.props.get(PROP_ROWID) == "1"):
+        if col not in self._user_columns(st):
             # the hidden rowid is not a user column — not droppable
             raise EbikeError(1091, f"Can't DROP '{col}'; check that column/key exists")
         st.df = st.df.drop(col)
         st.rewrite = True
-        props = {k: ",".join(c for c in v.split(",") if c != col) for k, v in st.props.items()}
-        # a UNIQUE/cluster key whose LAST column was dropped disappears
-        # with it (MySQL drops the index; an empty key list would crash
-        # the next keyed INSERT's conjunction builder)
-        st.props = {
-            k: v
-            for k, v in props.items()
-            if v or not k.startswith((PROP_UNIQUE_PREFIX, self._PROP_CLUSTER))
-        }
+
+        def without(cols: tuple[str, ...]) -> tuple[str, ...]:
+            return tuple(c for c in cols if c != col)
+
+        t = st.table
+        # a key or index whose LAST column was dropped disappears with
+        # it (MySQL drops the index; an empty key list would crash the
+        # next keyed INSERT's conjunction builder)
+        st.table = t._replace(
+            primary_key=without(t.primary_key),
+            uniques=tuple((n, without(c)) for n, c in t.uniques if without(c)),
+            indexes=tuple((n, without(c)) for n, c in t.indexes if without(c)),
+            not_null=without(t.not_null),
+            auto_increment=None if t.auto_increment == col else t.auto_increment,
+        )
 
     def _user_columns(self, st: "_Altered") -> set[str]:
-        return {
-            c for c in st.df.columns if c != ROWID or st.props.get(PROP_ROWID) != "1"
-        }
+        return {c for c in st.df.columns if c != ROWID or not st.table.has_rowid}
 
     def _add_primary_key(self, st: "_Altered", cols: list[str]) -> None:
         """Retroactive PRIMARY KEY: existing NULLs are 1138, existing
@@ -540,17 +521,15 @@ class DdlExecMixin:
         import functools as _ft
         import operator as _op
 
-        if st.props.get(PROP_PK):
+        if st.table.primary_key:
             raise EbikeError(1068, "Multiple primary key defined")
         self._require_key_columns(st, cols)
         any_null = _ft.reduce(_op.or_, [F.col(c).isNull() for c in cols])
         if st.df.where(any_null).limit(1).collect():
             raise EbikeError(1138, "Invalid use of NULL value in key column")
         dml.raise_on_duplicate(st.df, [("PRIMARY", cols)])
-        nn = [c for c in st.props.get(PROP_NOT_NULL, "").split(",") if c]
-        nn.extend(c for c in cols if c not in nn)
-        st.props[PROP_PK] = ",".join(cols)
-        st.props[PROP_NOT_NULL] = ",".join(nn)
+        nn = st.table.not_null
+        st.table = st.table._replace(primary_key=tuple(cols), not_null=nn + tuple(c for c in cols if c not in nn))
 
     def _add_unique(self, st: "_Altered", name: str, cols: list[str]) -> None:
         """Retroactive UNIQUE key: reject if the existing data already
@@ -560,12 +539,10 @@ class DdlExecMixin:
         if not re.fullmatch(r"\w+", name):
             raise parse_error(f"bad index name '{name}'")
         self._require_key_columns(st, cols)
-        taken = {n for n, _ in st.keys(PROP_UNIQUE_PREFIX)}
-        taken.update(n for n, _ in st.keys(self._PROP_CLUSTER))
-        if name in taken:
+        if name in _index_names(st.table):
             raise EbikeError(1061, f"Duplicate key name '{name}'")
         dml.raise_on_duplicate(st.df, [(name, cols)])
-        st.props[f"{PROP_UNIQUE_PREFIX}{name}"] = ",".join(cols)
+        st.table = st.table._replace(uniques=st.table.uniques + ((name, tuple(cols)),))
 
     def _add_index(self, st: "_Altered", name: str, cols: list[str]) -> None:
         """A secondary index as PHYSICAL RANGE CLUSTERING: the rows are
@@ -581,11 +558,11 @@ class DdlExecMixin:
         if not re.fullmatch(r"\w+", name):
             raise parse_error(f"bad index name '{name}'")
         self._require_key_columns(st, cols)
-        if any(n == name for n, _ in st.keys(self._PROP_CLUSTER)):
+        if name in _index_names(st.table):
             raise EbikeError(1061, f"Duplicate key name '{name}'")
         st.df = st.df.repartitionByRange(*cols).sortWithinPartitions(*cols)
         st.rewrite = True
-        st.props[f"{self._PROP_CLUSTER}{name}"] = ",".join(cols)
+        st.table = st.table._replace(indexes=st.table.indexes + ((name, tuple(cols)),))
 
     def _require_key_columns(self, st: "_Altered", cols: list[str]) -> None:
         known = self._user_columns(st)
@@ -614,50 +591,50 @@ class DdlExecMixin:
         (absent NOT NULL → nullable, except PK columns, which stay NOT
         NULL as in MySQL)."""
         spark_t = resolve_sql_type(sql_type, precision, scale)
-        t = st.df
+        t = st.table
         if old not in self._user_columns(st):
             raise EbikeError(1054, f"Unknown column '{old}' in 'field list'")
-        if new != old and new in t.columns:
+        if new != old and new in st.df.columns:
             raise EbikeError(1060, f"Duplicate column name '{new}'")
-        if st.props.get(PROP_AUTO_INCREMENT) == old and spark_t != "BIGINT":
+        if t.auto_increment == old and spark_t != "BIGINT":
             raise EbikeError(1063, f"Incorrect column specifier for column '{old}'")
         # a value that does not convert raises 1366, and a NULL into NOT
         # NULL 1138, from the commit's write
         null = EbikeError(1138, f"Invalid use of NULL value for column '{old}'") if not_null else None
         cast = F.expr(dml.strict_cast_sql(f"`{old}`", spark_t, old, null))
-        st.df = t.select(*[cast.alias(new) if c == old else F.col(c) for c in t.columns])
+        st.df = st.df.select(*[cast.alias(new) if c == old else F.col(c) for c in st.df.columns])
         st.rewrite = True
-        pk_cols = [c for c in st.props.get(PROP_PK, "").split(",") if c]
 
-        def ren(v: str) -> str:
-            return ",".join(new if c == old else c for c in v.split(","))
+        def ren(cols: tuple[str, ...]) -> tuple[str, ...]:
+            return tuple(new if c == old else c for c in cols)
 
-        st.props = {k: ren(v) for k, v in st.props.items()}
-        nn = [c for c in st.props.get(PROP_NOT_NULL, "").split(",") if c]
-        if not_null:
-            if new not in nn:
-                nn.append(new)
-        elif old not in pk_cols:
-            nn = [c for c in nn if c != new]
-        st.props[PROP_NOT_NULL] = ",".join(nn)
+        nn = ren(t.not_null)
+        if not_null and new not in nn:
+            nn += (new,)
+        elif not not_null and old not in t.primary_key:
+            nn = tuple(c for c in nn if c != new)
+        st.table = t._replace(
+            primary_key=ren(t.primary_key),
+            uniques=tuple((n, ren(c)) for n, c in t.uniques),
+            indexes=tuple((n, ren(c)) for n, c in t.indexes),
+            not_null=nn,
+            auto_increment=new if t.auto_increment == old else t.auto_increment,
+        )
+
+
+def _index_names(table: Table) -> set[str]:
+    """The names of ``table``'s UNIQUE keys and KEY indexes."""
+    return {n for n, _ in table.uniques + table.indexes}
 
 
 class _Altered:
-    """An ALTER TABLE's pending result: the table's rows and ``ebike.*``
-    properties after the clauses applied so far; ``rewrite`` is set
-    once a clause changes the rows, ``added`` lists ADD COLUMNs for a
-    metadata-only landing."""
+    """An ALTER TABLE's pending result: the table's rows and Table after
+    the clauses applied so far; ``rewrite`` is set once a clause changes
+    the rows, ``added`` lists ADD COLUMNs for a metadata-only landing."""
 
-    def __init__(self, df: DataFrame, props: dict[str, str]):
+    def __init__(self, df: DataFrame, table: Table):
         self.df = df
-        self.props = props
+        self.table = table
         self.rewrite = False
         self.added: list[tuple[str, str]] = []
-
-    def keys(self, prefix: str) -> list[tuple[str, list[str]]]:
-        return [
-            (k[len(prefix):], [c for c in v.split(",") if c])
-            for k, v in self.props.items()
-            if k.startswith(prefix)
-        ]
 

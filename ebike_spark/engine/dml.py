@@ -69,7 +69,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ebike_spark.engine import commit
-from ebike_spark.engine.catalog import ROWID, Catalog
+from ebike_spark.engine.catalog import ROWID, Catalog, Table
 from ebike_spark.engine.errors import EbikeError, bad_value, duplicate_entry, marked, null_value, unsupported
 from ebike_spark.engine.parser import (
     Delete, Insert, Update, code_tokens, leading_string, splice, split_top_level, sql_literal, unquote_ident
@@ -206,7 +206,7 @@ def strict_cast_sql(ref: str, spark_type: str, col: str, if_null: EbikeError | N
     the error out). ``ref`` is named several times, so it must be a
     column or alias bound once: a RAND() is then drawn once, checked
     and stored from the same draw."""
-    if spark_type.upper() == "BIGINT":  # column_types reports lowercase
+    if spark_type.upper() == "BIGINT":  # Table.columns reports lowercase
         cast = rounding_bigint_cast_sql(ref)
         bad = f"({ref} IS NOT NULL AND ({cast}) IS NULL) OR ABS(CAST({ref} AS DOUBLE)) > {_LONG_MAX_D}"
     else:
@@ -429,19 +429,13 @@ def null_flags(cols: list[str]) -> list:
     return [F.bool_or(F.col(c).isNull()) for c in cols]
 
 
-def null_columns(
-    catalog: Catalog,
-    qualified: str,
-    df: DataFrame,
-    props: dict[str, str] | None = None,
-    rows: list | None = None,
-) -> list[str]:
-    """Each NOT NULL column that holds a NULL, in the table's NOT NULL
-    order — over the collected ``rows`` when given, else one Spark job
-    for every column (one aggregate of null_flags). Shared by the
-    INSERT checks and CHECK TABLE; REPLACE and the upsert aggregate the
-    same flags beside their other facts (_facts)."""
-    cols = catalog.not_null_cols(qualified, props)
+def null_columns(table: Table, df: DataFrame, rows: list | None = None) -> list[str]:
+    """Each NOT NULL column of ``table`` that holds a NULL in ``df``, in
+    the table's NOT NULL order — over the collected ``rows`` when given,
+    else one Spark job for every column (one aggregate of null_flags).
+    Shared by the INSERT checks and CHECK TABLE; REPLACE and the upsert
+    aggregate the same flags beside their other facts (_facts)."""
+    cols = table.not_null
     if rows is not None:
         return [c for c in cols if any(r[c] is None for r in rows)]
     if not cols:
@@ -450,26 +444,13 @@ def null_columns(
     return [c for c, null in zip(cols, flags) if null]
 
 
-def _check_not_null(
-    catalog: Catalog,
-    qualified: str,
-    new_rows: DataFrame,
-    props: dict[str, str],
-    rows: list | None = None,
-) -> None:
+def _check_not_null(table: Table, new_rows: DataFrame, rows: list | None = None) -> None:
     """1048 on the first NOT NULL column holding a NULL."""
-    for col in null_columns(catalog, qualified, new_rows, props, rows):
+    for col in null_columns(table, new_rows, rows):
         raise null_value(col)
 
 
-def _check_constraints(
-    spark: SparkSession,
-    catalog: Catalog,
-    qualified: str,
-    new_rows: DataFrame,
-    props: dict[str, str],
-    rows: list | None = None,
-) -> None:
+def _check_constraints(spark: SparkSession, table: Table, new_rows: DataFrame, rows: list | None = None) -> None:
     """NOT NULL (1048), then per PRIMARY/UNIQUE key: duplicates inside
     the batch, then clashes with stored rows (1062). UNIQUE keys take
     MySQL's NULL exemption (any number of NULLs in a unique index).
@@ -479,11 +460,11 @@ def _check_constraints(
     checked in Python, and each key probes the stored rows with one
     job (_stored_clash). Without it (LOAD DATA, INSERT … SELECT:
     data-sized input) every check is a Spark job over ``new_rows``."""
-    _check_not_null(catalog, qualified, new_rows, props, rows)
-    keys = catalog.keys(qualified, props)
+    _check_not_null(table, new_rows, rows)
+    keys = table.keys
     if not keys:
         return
-    existing = spark.table(qualified)
+    existing = spark.table(table.name)
     for key_name, cols in keys:
         if rows is not None:
             tuples = [tuple(r[c] for c in cols) for r in rows]
@@ -511,18 +492,16 @@ def _check_constraints(
             raise duplicate_entry("-".join(str(clash[c]) for c in cols), key_name)
 
 
-def _append(
-    spark: SparkSession, qualified: str, df: DataFrame, has_rowid: bool
-) -> None:
+def _append(spark: SparkSession, table: Table, df: DataFrame) -> None:
     """Append ``df`` (the table's user columns) to the table. Row
     identity materializes here (one uuid per row, stable for the row's
     lifetime); the frame is aligned to the PHYSICAL column order,
     because insertInto is positional and ALTER ADD COLUMN places later
     columns after rowid."""
-    if has_rowid:
-        df = df.withColumn(ROWID, F.expr("uuid()")).select(*spark.table(qualified).columns)
-    df.write.insertInto(qualified, overwrite=False)
-    commit.bump(spark, qualified)
+    if table.has_rowid:
+        df = df.withColumn(ROWID, F.expr("uuid()")).select(*[n for n, _ in table.schema])
+    df.write.insertInto(table.name, overwrite=False)
+    commit.bump(spark, table.name)
 
 
 def _mint_auto_increment(
@@ -572,10 +551,8 @@ def _mint_auto_increment(
 
 def land(
     spark: SparkSession,
-    catalog: Catalog,
-    qualified: str,
+    table: Table,
     df: DataFrame,
-    props: dict[str, str],
     mode: str = "",
     on_dup: list[tuple[str, str]] | None = None,
     n_rows: int | None = None,
@@ -591,35 +568,32 @@ def land(
     lazily. With no PRIMARY/UNIQUE key every mode is a plain insert, as
     in MySQL. Returns (affected rows, first minted AUTO_INCREMENT id of
     a row that landed, or None)."""
-    ai = catalog.auto_increment_col(qualified, props)
-    keys = catalog.keys(qualified, props)
+    ai = table.auto_increment
+    keys = table.keys
     ignore = bool(keys) and mode == "IGNORE"
     first_id = None
     if ai is not None:
         if ignore:
             df = df.withColumn(_MINTED, F.col(ai).isNull())
-        df, first_id = _mint_auto_increment(spark, qualified, df, ai)
-    has_rowid = catalog.has_rowid(qualified, props)
+        df, first_id = _mint_auto_increment(spark, table.name, df, ai)
     if keys and mode == "REPLACE":
-        n = _replace(spark, catalog, qualified, df, props)
+        n = _replace(spark, table, df)
     elif keys and on_dup is not None:
-        n = _upsert(spark, catalog, qualified, df, on_dup, props)
+        n = _upsert(spark, table, df, on_dup)
     elif ignore:
         # LAST_INSERT_ID() is the first id of a row IGNORE kept
-        n, first_id = _insert_ignore(
-            spark, catalog, qualified, df, props, ai if first_id is not None else None
-        )
+        n, first_id = _insert_ignore(spark, table, df, ai if first_id is not None else None)
     elif n_rows is not None:
         # the strict guard raises 1366 in this collect; an inline-table
         # batch runs no job for it
         rows = df.collect()
-        _check_constraints(spark, catalog, qualified, df, props, rows=rows)
-        _append(spark, qualified, df.coalesce(1), has_rowid)
+        _check_constraints(spark, table, df, rows=rows)
+        _append(spark, table, df.coalesce(1))
         n = len(rows)
     else:
-        _check_constraints(spark, catalog, qualified, df, props)
+        _check_constraints(spark, table, df)
         df, written = commit.observe(df, F.count(F.lit(1)))
-        _append(spark, qualified, df, has_rowid)
+        _append(spark, table, df)
         n = written.get["n"]
     return n, first_id
 
@@ -629,12 +603,11 @@ def insert(
 ) -> tuple[int, int | None]:
     """INSERT … VALUES: the rows evaluated by _values_df, then landed."""
     qualified = catalog.qualify(ins.table, current_db)
-    catalog.require_table(qualified)
     with commit.writing(spark, qualified):
-        props = catalog.properties(qualified)
-        df = _values_df(spark, ins, catalog.column_types(qualified, props))
+        table = catalog.table(qualified)
+        df = _values_df(spark, ins, table.columns)
         mode = "REPLACE" if ins.replace else "IGNORE" if ins.ignore else ""
-        return land(spark, catalog, qualified, df, props, mode, ins.on_dup_update, len(ins.rows))
+        return land(spark, table, df, mode, ins.on_dup_update, len(ins.rows))
 
 
 def _any_key(keys: list[tuple[str, list[str]]], prefix: str = "__new_"):
@@ -648,7 +621,7 @@ def _any_key(keys: list[tuple[str, list[str]]], prefix: str = "__new_"):
     )
 
 
-def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str, str], not_null: list[str]):
+def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str, str], not_null: tuple[str, ...]):
     """Bind each assignment of an UPDATE-like statement once per row:
     the matched flag as ``__m``, the value of each SQL expression in
     ``assignments`` as ``__r<i>`` and its strict cast as ``__n<i>``, the
@@ -673,7 +646,7 @@ def assign(df: DataFrame, matched, assignments: dict[str, str], types: dict[str,
     return df.select("*", *cols), new_vals, changed
 
 
-def _paired(spark: SparkSession, qualified: str, new_df: DataFrame, keys, how: str) -> tuple[DataFrame, DataFrame]:
+def _paired(spark: SparkSession, table: Table, new_df: DataFrame, how: str) -> tuple[DataFrame, DataFrame]:
     """REPLACE's and the upsert's one pairing of a batch with the stored
     rows: the batch with each row's statement position as ``__pos``, and
     the stored table, each row tagged ``__sid``, ``how``-joined on any
@@ -691,11 +664,11 @@ def _paired(spark: SparkSession, qualified: str, new_df: DataFrame, keys, how: s
     smaller side of a FULL one (CHANGES.md, the `_paired` FOUND line)."""
     tagged = new_df.withColumn(POS, F.monotonically_increasing_id())
     batch = tagged.select(POS, *[F.col(c).alias(f"__new_{c}") for c in new_df.columns])
-    stored = spark.table(qualified).withColumn(SID, F.monotonically_increasing_id())
-    return tagged, stored.join(batch, _any_key(keys), how)
+    stored = spark.table(table.name).withColumn(SID, F.monotonically_increasing_id())
+    return tagged, stored.join(batch, _any_key(table.keys), how)
 
 
-def _facts(not_null: list[str], batch: DataFrame, paired: DataFrame, of_batch: list, of_pairs: list) -> list:
+def _facts(not_null: tuple[str, ...], batch: DataFrame, paired: DataFrame, of_batch: list, of_pairs: list) -> list:
     """Every fact REPLACE or the upsert reads before its write, from one
     Spark action: null_flags and the aggregates ``of_batch`` over the
     batch, beside the aggregates ``of_pairs`` over its pairing
@@ -708,14 +681,7 @@ def _facts(not_null: list[str], batch: DataFrame, paired: DataFrame, of_batch: l
     return list(row)[len(not_null) :]
 
 
-def _upsert(
-    spark: SparkSession,
-    catalog: Catalog,
-    qualified: str,
-    new_df,
-    assignments: list[tuple[str, str]],
-    props: dict[str, str],
-) -> int:
+def _upsert(spark: SparkSession, table: Table, new_df, assignments: list[tuple[str, str]]) -> int:
     """INSERT ... ON DUPLICATE KEY UPDATE (MySQL upsert) as a
     set-oriented emulation of MERGE over one pairing (_paired), the
     idiomatic parquet upsert without a Delta dependency. The table has
@@ -743,14 +709,12 @@ def _upsert(
     write observes their sum, so a batch that changes nothing commits
     nothing.
     """
-    keys = catalog.keys(qualified, props)
-    not_null = catalog.not_null_cols(qualified, props)
-    tagged, paired = _paired(spark, qualified, new_df, keys, "full")
+    keys, not_null = table.keys, table.not_null
+    tagged, paired = _paired(spark, table, new_df, "full")
     fresh = F.col(SID).isNull()
     matched = F.col(POS).isNotNull() & ~fresh
     assigned = {name: _incoming(expr) for name, expr in assignments}
-    types = dict(catalog.column_types(qualified, props))
-    image, new_vals, changed = assign(paired, matched, assigned, types, not_null)
+    image, new_vals, changed = assign(paired, matched, assigned, dict(table.columns), not_null)
     *dups, pairs, batch_rows, stored_rows = _facts(
         not_null,
         tagged,
@@ -774,14 +738,14 @@ def _upsert(
         return F.when(fresh, new).otherwise(new_vals.get(name, F.col(name))).alias(name)
 
     final = image.select(
-        *[value(name) for name in spark.table(qualified).columns],
+        *[value(name) for name, _ in table.schema],
         F.when(fresh, 1).when(changed, 2).otherwise(0).alias("__affected"),
     )
     # an assignment that writes a key column can collide rows that did
     # not collide before: validate the post-image before the commit
-    recheck_keys_after_update(catalog, qualified, final, set(assigned), props)
+    recheck_keys_after_update(table, final, set(assigned))
     final, affected = commit.observe(final, F.coalesce(F.sum("__affected"), F.lit(0)))
-    return _rewrite(spark, commit.Image(qualified, final.drop("__affected"), changed=affected))
+    return _rewrite(spark, commit.Image(table.name, final.drop("__affected"), changed=affected))
 
 
 def _incoming(expr: str) -> str:
@@ -797,14 +761,7 @@ def _incoming(expr: str) -> str:
     ])
 
 
-def _insert_ignore(
-    spark: SparkSession,
-    catalog: Catalog,
-    qualified: str,
-    new_df,
-    props: dict[str, str],
-    ai: str | None = None,
-) -> tuple[int, int | None]:
+def _insert_ignore(spark: SparkSession, table: Table, new_df, ai: str | None = None) -> tuple[int, int | None]:
     """INSERT IGNORE (MySQL duplicate-skip) into a table with at least
     one PRIMARY/UNIQUE key: rows whose PRIMARY/UNIQUE
     key collides with a stored row OR an earlier row of the same batch
@@ -848,9 +805,9 @@ def _insert_ignore(
     Returns (rows inserted, smallest ``ai`` value among the inserted
     rows marked ``_MINTED`` — the first id minted for a kept row — or
     None without ``ai``)."""
-    _check_not_null(catalog, qualified, new_df, props)
-    keys = catalog.keys(qualified, props)
-    existing = spark.table(qualified)
+    _check_not_null(table, new_df)
+    keys = table.keys
+    existing = spark.table(table.name)
     if len(keys) == 1:
         # Single unique index: stored-conflict status depends only on
         # the key VALUE, so every occurrence of a tuple shares it and
@@ -924,17 +881,11 @@ def _insert_ignore(
         # stored rows
         first_id = surviving.where(F.col(_MINTED)).agg(F.min(ai)).first()[0]
     if n:
-        _append(spark, qualified, surviving.drop(_MINTED), catalog.has_rowid(qualified, props))
+        _append(spark, table, surviving.drop(_MINTED))
     return n, first_id
 
 
-def _replace(
-    spark: SparkSession,
-    catalog: Catalog,
-    qualified: str,
-    new_df,
-    props: dict[str, str],
-) -> int:
+def _replace(spark: SparkSession, table: Table, new_df) -> int:
     """REPLACE INTO (MySQL delete-then-insert upsert; the same
     set-oriented MERGE emulation over one pairing as :func:`_upsert`)
     into a table with at least one PRIMARY/UNIQUE key.
@@ -966,8 +917,8 @@ def _replace(
     batch, survivor and deleted-row counts. The post-image is a
     projection of the same pairing: the stored rows that pair with no
     batch row, plus the survivors."""
-    keys = catalog.keys(qualified, props)
-    tagged, paired = _paired(spark, qualified, new_df, keys, "full")
+    keys = table.keys
+    tagged, paired = _paired(spark, table, new_df, "full")
     # survivor = the LAST batch row per non-null key tuple, for every
     # unique index at once (see the proof above). Rows with a NULL key
     # component never conflict on that index (unique-index semantics),
@@ -986,21 +937,21 @@ def _replace(
     # (MySQL processes it before the later row replaces it) — a stored
     # row never "comes back". Only the survivors are inserted.
     n_batch, n_survivors, n_deleted = _facts(
-        catalog.not_null_cols(qualified, props),
+        table.not_null,
         ranked,
         paired,
         [F.count(F.lit(1)), F.count(F.when(keep, 1))],
         [F.count_distinct(F.when(F.col(POS).isNotNull(), F.col(SID)))],
     )
     to_insert = ranked.where(keep).select(*new_df.columns)
-    if catalog.has_rowid(qualified, props):
+    if table.has_rowid:
         # REPLACE is delete + insert: the replacement row is a NEW row
         # and mints a fresh rowid (unlike ON DUPLICATE, which updates
         # in place and keeps it) — MySQL-faithful, same as its handler
         # delete/write_row pair
         to_insert = to_insert.withColumn(ROWID, F.expr("uuid()"))
-    survivors = paired.where(F.col(POS).isNull()).select(*spark.table(qualified).columns)
-    _rewrite(spark, commit.Image(qualified, survivors.unionByName(to_insert)))
+    survivors = paired.where(F.col(POS).isNull()).select(*[n for n, _ in table.schema])
+    _rewrite(spark, commit.Image(table.name, survivors.unionByName(to_insert)))
     # MySQL affected-rows: 1 per batch row inserted (including ones a
     # later batch row then replaced) + 1 per deleted row (stored or
     # earlier-batch)
@@ -1019,29 +970,26 @@ def _rewrite(spark: SparkSession, *images: commit.Image) -> int:
 
 def update(spark: SparkSession, catalog: Catalog, upd: Update, current_db: str) -> int:
     qualified = catalog.qualify(upd.table, current_db)
-    catalog.require_table(qualified)
     with commit.writing(spark, qualified):
-        return _update(spark, catalog, upd, qualified)
+        return _update(spark, catalog.table(qualified), upd)
 
 
-def _update(spark: SparkSession, catalog: Catalog, upd: Update, qualified: str) -> int:
-    t = spark.table(qualified)
-    props = catalog.properties(qualified)
+def _update(spark: SparkSession, table: Table, upd: Update) -> int:
+    t = spark.table(table.name)
     cond = F.expr(upd.where) if upd.where else F.lit(True)
     if upd.limit is not None:
         # UPDATE ... [ORDER BY ...] LIMIT n: the first n matching rows
         # (_limited) are the effective condition
-        t = _limited(catalog, qualified, t, F.coalesce(cond, F.lit(False)), upd, "UPDATE", props)
+        t = _limited(table, t, F.coalesce(cond, F.lit(False)), upd, "UPDATE")
         cond = F.col(HIT).isNotNull()
-    types = dict(catalog.column_types(qualified, props))
     assigned = dict(upd.assignments)
-    t, new_vals, changed = assign(t, cond, assigned, types, catalog.not_null_cols(qualified, props))
+    t, new_vals, changed = assign(t, cond, assigned, dict(table.columns), table.not_null)
     # project the TABLE's columns only (the LIMIT path joined a helper
     # column onto t that must not reach the post-image)
-    cols = [new_vals.get(name, F.col(name)).alias(name) for name in spark.table(qualified).columns]
-    recheck_keys_after_update(catalog, qualified, t.select(*cols), set(assigned), props)
+    cols = [new_vals.get(name, F.col(name)).alias(name) for name, _ in table.schema]
+    recheck_keys_after_update(table, t.select(*cols), set(assigned))
     t, affected = commit.observe(t, F.count(F.when(changed, 1)))
-    return _rewrite(spark, commit.Image(qualified, t.select(*cols), changed=affected))
+    return _rewrite(spark, commit.Image(table.name, t.select(*cols), changed=affected))
 
 
 def _indexed(key_name: str, kcols: list[str]):
@@ -1079,18 +1027,11 @@ def raise_on_duplicate(df, keys) -> None:
         raise duplicate_entry(value, key_name)
 
 
-def recheck_keys_after_update(
-    catalog: Catalog,
-    qualified: str,
-    new_df,
-    assigned: set[str],
-    props: dict[str, str] | None = None,
-) -> None:
+def recheck_keys_after_update(table: Table, new_df, assigned: set[str]) -> None:
     """Re-check the keys an assignment touches on the post-image before
     it is committed: UPDATE, the multi-table UPDATE and ON DUPLICATE
     KEY UPDATE can collide rows that did not collide before."""
-    keys = catalog.keys(qualified, props)
-    raise_on_duplicate(new_df, [(name, kcols) for name, kcols in keys if set(kcols) & assigned])
+    raise_on_duplicate(new_df, [(name, kcols) for name, kcols in table.keys if set(kcols) & assigned])
 
 
 def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str) -> int:
@@ -1105,7 +1046,7 @@ def delete(spark: SparkSession, catalog: Catalog, dele: Delete, current_db: str)
         cond_true = F.coalesce(cond, F.lit(False))
         if dele.limit is not None:
             # DELETE ... [ORDER BY ...] LIMIT n (MySQL bounded delete)
-            flagged = _limited(catalog, qualified, t, cond_true, dele, "DELETE", catalog.properties(qualified))
+            flagged = _limited(catalog.table(qualified), t, cond_true, dele, "DELETE")
             return drop_hits(spark, qualified, t, flagged)
         return _delete_files(spark, qualified, t, cond_true)
 
@@ -1133,9 +1074,7 @@ def _delete_files(spark: SparkSession, qualified: str, t: DataFrame, cond_true) 
     return sum(hits.values())
 
 
-def _limited(
-    catalog: Catalog, qualified: str, t: DataFrame, cond_true, stmt, verb: str, props: dict[str, str]
-) -> DataFrame:
+def _limited(table: Table, t: DataFrame, cond_true, stmt, verb: str) -> DataFrame:
     """``t`` flagged at the rows a ``verb`` … [ORDER BY …] LIMIT n
     statement touches: the first n rows where ``cond_true`` holds, in
     ``stmt.order_by`` order, else rowid order (MySQL takes an arbitrary
@@ -1144,7 +1083,7 @@ def _limited(
     TakeOrderedAndProject, never a single-task full sort) and are
     broadcast-joined back as column ``HIT``. Rowids are unique, so the
     join duplicates no row."""
-    if not catalog.has_rowid(qualified, props):
+    if not table.has_rowid:
         # a user-declared `rowid` column displaced the hidden one; no
         # stable row identity to bound the statement with
         raise unsupported(f"{verb} ... LIMIT on a table without the hidden rowid")
@@ -1252,8 +1191,8 @@ def load_data(
         skip_header = True
     with commit.writing(spark, qualified):
         cl = re.search(r"\(([^()]*)\)\s*$", rest.strip())
-        props = catalog.properties(qualified)
-        col_types = catalog.column_types(qualified, props)
+        table = catalog.table(qualified)
+        col_types = table.columns
         target = target_columns(
             [unquote_ident(c.strip()) for c in cl.group(1).split(",")] if cl else None, col_types
         )
@@ -1264,4 +1203,4 @@ def load_data(
             .csv(path)
         )
         df = typed_frame(raw, target, col_types, coerce=mode == "IGNORE")
-        return land(spark, catalog, qualified, df, props, mode)
+        return land(spark, table, df, mode)

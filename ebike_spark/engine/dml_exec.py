@@ -17,7 +17,7 @@ import re
 import pyspark.sql.functions as F
 
 from ebike_spark.engine import commit, dml
-from ebike_spark.engine.catalog import bq
+from ebike_spark.engine.catalog import Table, bq
 from ebike_spark.engine.errors import EbikeError, null_value, parse_error, unsupported
 from ebike_spark.engine.parser import (
     INSERT_VALUES,
@@ -116,11 +116,10 @@ class DmlExecMixin:
             raise parse_error("ON DUPLICATE KEY UPDATE cannot combine with IGNORE/REPLACE")
 
         src = self._query(select_sql)
-        props = self.catalog.properties(qualified)
-        col_types = self.catalog.column_types(qualified, props)
+        table = self.catalog.table(qualified)
         listed = [unquote_ident(c) for c in split_top_level(col_list)] if col_list else None
-        df = dml.typed_frame(src, dml.target_columns(listed, col_types), col_types)
-        return self._landed(*dml.land(self.spark, self.catalog, qualified, df, props, mode, on_dup))
+        df = dml.typed_frame(src, dml.target_columns(listed, table.columns), table.columns)
+        return self._landed(*dml.land(self.spark, table, df, mode, on_dup))
 
     # FROM-clause keywords that can precede an alias token without
     # being the aliased table (multi-table DML alias resolution)
@@ -236,20 +235,16 @@ class DmlExecMixin:
         # owners is 1052 ambiguous; none is 1054. No guessing from
         # which aliases happen to be assigned.
         from_tables = self._from_aliases(frm)
-        col_owner_cache: dict[str, list[tuple[str, str]]] = {}
+        # each joined table's metadata, read once for the statement
+        tables: dict[str, Table] = {}
+
+        def table(q: str) -> Table:
+            if q not in tables:
+                tables[q] = self.catalog.table(q)
+            return tables[q]
 
         def owners_of(col: str) -> list[tuple[str, str]]:
-            if col not in col_owner_cache:
-                found = []
-                for alias, qtbl in from_tables:
-                    try:
-                        cols_of = dict(self.catalog.column_types(qtbl))
-                    except EbikeError:
-                        continue
-                    if col in cols_of:
-                        found.append((alias, qtbl))
-                col_owner_cache[col] = found
-            return col_owner_cache[col]
+            return [(alias, q) for alias, q in from_tables if col in dict(table(q).columns)]
 
         # group assignments by target alias, preserving statement order
         by_tgt: dict[str, list[tuple[int, str, str]]] = {}
@@ -270,21 +265,18 @@ class DmlExecMixin:
         for tgt, items in by_tgt.items():
             base = self._resolve_alias_table(tgt, frm)
             qualified = self.catalog.qualify(base, self.current_db)
-            self.catalog.require_table(qualified)
-            props = self.catalog.properties(qualified)
-            if not self.catalog.has_rowid(qualified, props):
+            target = table(qualified)
+            if not target.has_rowid:
                 raise unsupported(
                     "multi-table UPDATE on a table without the hidden rowid"
                 )
-            types = dict(self.catalog.column_types(qualified, props))
+            types = dict(target.columns)
             for _, col, _ in items:
                 if col not in types:
                     raise EbikeError(
                         1054, f"Unknown column '{col}' in 'field list'"
                     )
-            targets.append(
-                {"tgt": tgt, "qualified": qualified, "props": props, "types": types, "items": items}
-            )
+            targets.append({"tgt": tgt, "qualified": qualified, "table": target, "items": items})
         with commit.writing(self.spark, *[t["qualified"] for t in targets]):
             return self._update_targets(frm, where, targets)
 
@@ -342,8 +334,8 @@ class DmlExecMixin:
         images = []  # one per PHYSICAL table
         for qualified, members in groups:
             tb = self.spark.table(qualified)
-            types, props = members[0][1]["types"], members[0][1]["props"]
-            not_null = self.catalog.not_null_cols(qualified, props)
+            target = members[0][1]["table"]
+            types = dict(target.columns)
             joined = tb
             for k, t in members:
                 idxs = [i for i, _, _ in t["items"]]
@@ -365,11 +357,11 @@ class DmlExecMixin:
             # only where that alias matched, like the single-table path
             new_vals = {}
             for i, col, k in sorted((i, col, k) for k, t in members for i, col, _ in t["items"]):
-                cast = dml.strict_cast_sql(f"`__v{i}`", types[col], col, null_value(col) if col in not_null else None)
+                cast = dml.strict_cast_sql(f"`__v{i}`", types[col], col, null_value(col) if col in target.not_null else None)
                 new_vals[col] = F.when(F.col(f"__rid{k}").isNotNull(), F.expr(cast)).otherwise(new_vals.get(col, F.col(col)))
             changed = reduce(_or, [~new_vals[c].eqNullSafe(F.col(c)) for c in new_vals])
             out_cols = [new_vals.get(name, tb[name]).alias(name) for name in tb.columns]
-            dml.recheck_keys_after_update(self.catalog, qualified, joined.select(*out_cols), set(new_vals), props)
+            dml.recheck_keys_after_update(target, joined.select(*out_cols), set(new_vals))
             joined, affected = commit.observe(joined, F.count(F.when(changed, 1)))
             images.append(commit.Image(qualified, joined.select(*out_cols), changed=affected))
         # All key re-checks passed against pre-images. One commit lands
@@ -417,8 +409,7 @@ class DmlExecMixin:
         tgt = unquote_ident(tgt_tok)
         base = self._resolve_alias_table(tgt, frm)
         qualified = self.catalog.qualify(base, self.current_db)
-        self.catalog.require_table(qualified)
-        if not self.catalog.has_rowid(qualified):
+        if not self.catalog.table(qualified).has_rowid:
             raise unsupported(
                 "multi-table DELETE on a table without the hidden rowid"
             )

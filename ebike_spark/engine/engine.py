@@ -19,7 +19,7 @@ from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit, dml, show
-from ebike_spark.engine.catalog import Catalog
+from ebike_spark.engine.catalog import Catalog, Table
 from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unmarked, unsupported
 from ebike_spark.engine.parser import (
     lex,
@@ -293,27 +293,27 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         projection-time special case, core_util.rs:451-461)."""
         return any(kind in ("word", "ident") and sql[a:b].lower() in ("rowid", "`rowid`") for kind, a, b in lex(sql))
 
-    def _drop_hidden_rowid(self, df: DataFrame) -> DataFrame:
+    @staticmethod
+    def _drop_hidden_rowid(df: DataFrame) -> DataFrame:
         """Drop hidden rowid columns by PROVENANCE, not by name: only
         output attributes whose exprId traces back to the rowid attribute
-        of a hidden-rowid table scan (ebike.rowid property) are removed.
-        A user-declared column that happens to be named rowid — e.g. from
-        the other side of a join — keeps flowing through (round-2 advice;
-        the reference surfaces rowid whenever projected,
-        core_util.rs:451-461). Positional rename → select keeps Catalyst
-        free to prune the hidden column out of the scan."""
+        of a hidden-rowid table scan are removed; each scan's Table is
+        decoded from the catalog entry the analyzed relation carries, so
+        no catalog read is made. A user-declared column that happens to
+        be named rowid — e.g. from the other side of a join — keeps
+        flowing through (round-2 advice; the reference surfaces rowid
+        whenever projected, core_util.rs:451-461). Positional rename →
+        select keeps Catalyst free to prune the hidden column out of the
+        scan."""
         analyzed = df._jdf.queryExecution().analyzed()
         hidden_ids: set[int] = set()
         leaves = analyzed.collectLeaves()
         for li in range(leaves.size()):
             leaf = leaves.apply(li)
-            m = re.match(r"Relation (?:spark_catalog\.)?([\w.]+)\[", leaf.toString())
-            if not m:
+            if leaf.getClass().getSimpleName() != "LogicalRelation":
                 continue
-            try:
-                if not self.catalog.has_rowid(m.group(1)):
-                    continue
-            except Exception:  # temp views etc. have no TBLPROPERTIES
+            entry = leaf.catalogTable()
+            if not entry.isDefined() or not Table.decode(entry.get()).has_rowid:
                 continue
             out = leaf.output()
             for oi in range(out.size()):

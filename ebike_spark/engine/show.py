@@ -37,24 +37,36 @@ def show_tables(spark: SparkSession, catalog: Catalog, db: str) -> DataFrame:
 
 
 def show_columns(spark: SparkSession, catalog: Catalog, qualified: str) -> DataFrame:
-    catalog.require_table(qualified)
-    nn = set(catalog.not_null_cols(qualified))
-    pk = set(catalog.primary_key(qualified))
-    uniq = {c for _, cols in catalog.unique_keys(qualified) for c in cols}
-    ai = catalog.auto_increment_col(qualified)
-    rows = []
-    for name, typ in catalog.column_types(qualified):
-        key = "PRI" if name in pk else ("UNI" if name in uniq else "")
-        extra = "auto_increment" if name == ai else ""
-        rows.append((name, SQL_TYPE_NAME.get(typ, typ), "NO" if name in nn else "YES", key, None, extra))
+    t = catalog.table(qualified)
+    rows = [
+        (name, SQL_TYPE_NAME.get(typ, typ), "NO" if name in t.not_null else "YES", t.column_key(name), None,
+         "auto_increment" if name == t.auto_increment else "")
+        for name, typ in t.columns
+    ]
     return spark.createDataFrame(
         rows, "Field string, Type string, Null string, Key string, Default string, Extra string"
     )
 
 
 def show_create_table(spark: SparkSession, catalog: Catalog, qualified: str) -> DataFrame:
-    ddl = catalog.show_create_table(qualified)
+    t = catalog.table(qualified)
+    lines = [
+        f"  `{name}` {SQL_TYPE_NAME.get(typ, typ)}"
+        + (" NOT NULL" if name in t.not_null else "")
+        + (" AUTO_INCREMENT" if name == t.auto_increment else "")
+        for name, typ in t.columns
+    ]
+
+    def cols(c) -> str:
+        return "(" + ", ".join(f"`{x}`" for x in c) + ")"
+
+    if t.primary_key:
+        lines.append(f"  PRIMARY KEY {cols(t.primary_key)}")
+    lines += [f"  UNIQUE KEY `{n}` {cols(c)}" for n, c in t.uniques]
+    lines += [f"  KEY `{n}` {cols(c)}" for n, c in t.indexes]
     _, _, name = qualified.rpartition(".")
+    body = ",\n".join(lines)
+    ddl = f"CREATE TABLE `{name}` (\n{body}\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4"
     return spark.createDataFrame([(name, ddl)], "Table string, `Create Table` string")
 
 
@@ -100,25 +112,13 @@ def show_table_status(spark: SparkSession, catalog: Catalog, db: str) -> DataFra
 
 
 def show_index(spark: SparkSession, catalog: Catalog, qualified: str) -> DataFrame:
-    """SHOW INDEX FROM t — MySQL-shaped rows over the declared
-    PRIMARY/UNIQUE keys (the reference serves these from its persisted
-    information_schema.statistics)."""
-    catalog.require_table(qualified)
+    """SHOW INDEX FROM t — MySQL-shaped rows over the declared keys (the
+    reference serves these from its persisted
+    information_schema.statistics). A KEY is physical range clustering
+    (zone-map pruning), advertised with its real mechanism, not a fake
+    BTREE."""
     _, _, tname = qualified.rpartition(".")
-    rows = []
-    keys = []
-    pk = catalog.primary_key(qualified)
-    if pk:
-        keys.append(("PRIMARY", pk))
-    keys.extend(catalog.unique_keys(qualified))
-    for kname, cols in keys:
-        for seq, c in enumerate(cols, start=1):
-            rows.append((tname, 0, kname, seq, c, "BTREE"))
-    # secondary indexes = physical range clustering (zone-map pruning);
-    # advertised with their real mechanism, not a fake BTREE
-    for kname, cols in catalog.cluster_indexes(qualified):
-        for seq, c in enumerate(cols, start=1):
-            rows.append((tname, 1, kname, seq, c, "CLUSTERED"))
+    rows = [(tname, non_unique, k, seq, c, kind) for k, non_unique, seq, c, kind in catalog.table(qualified).index_rows()]
     return spark.createDataFrame(
         rows or [("", 0, "", 0, "", "")],
         "Table string, Non_unique long, Key_name string, Seq_in_index long, "

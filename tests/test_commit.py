@@ -132,7 +132,158 @@ def test_delete_of_whole_files_writes_no_rows(eng, spark, monkeypatch):
 
 
 def _props(eng, q: str) -> dict:
-    return {k: v for k, v in eng.catalog.properties(q).items() if k.startswith("ebike.")}
+    """The table's raw ebike.* properties, read from its catalog entry
+    without the engine's decoder."""
+    db, _, t = q.lower().rpartition(".")
+    entry = eng.spark._jsparkSession.sharedState().externalCatalog().getTable(db, t)
+    props = dict(eng.spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(entry.properties()))
+    return {k: v for k, v in props.items() if k.startswith("ebike.")}
+
+
+# DDL step, the table it changes, and that table's raw ebike.* properties
+# and SHOW CREATE TABLE after it, as recorded before catalog.Table owned
+# the encoding. A marker left with no column was then written as '';
+# it is now absent.
+ENCODING = [
+    (
+        'CREATE TABLE e1 (id INT NOT NULL AUTO_INCREMENT, a INT, b CHAR, c INT NOT NULL, d INT, PRIMARY KEY (id), UNIQUE KEY uab (a, b), KEY kd (d))',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a,b'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a`, `b`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'CREATE TABLE er (rowid INT, v INT)',
+        'er',
+        {'ebike.not_null': ''},
+        'CREATE TABLE `er` (\n  `rowid` int,\n  `v` int\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 ADD UNIQUE uc (c)',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a,b', 'ebike.unique.uc': 'c'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a`, `b`),\n  UNIQUE KEY `uc` (`c`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP INDEX uc',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a,b'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a`, `b`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 ADD INDEX kc (c, d)',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a,b'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a`, `b`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 MODIFY d BIGINT NOT NULL',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c,d', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a,b'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int NOT NULL,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a`, `b`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 CHANGE a a2 INT',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c,d', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2,b'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int,\n  `b` char,\n  `c` int NOT NULL,\n  `d` int NOT NULL,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a2`, `b`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP COLUMN b',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c,d', 'ebike.primary_key': 'id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int,\n  `c` int NOT NULL,\n  `d` int NOT NULL,\n  PRIMARY KEY (`id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP PRIMARY KEY',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c,d', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int,\n  `c` int NOT NULL,\n  `d` int NOT NULL,\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 ADD PRIMARY KEY (a2, id)',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,c,d,a2', 'ebike.primary_key': 'a2,id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int NOT NULL,\n  `c` int NOT NULL,\n  `d` int NOT NULL,\n  PRIMARY KEY (`a2`, `id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 MODIFY c INT',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c,d', 'ebike.cluster.kd': 'd', 'ebike.not_null': 'id,d,a2', 'ebike.primary_key': 'a2,id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int NOT NULL,\n  `c` int,\n  `d` int NOT NULL,\n  PRIMARY KEY (`a2`, `id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`, `d`),\n  KEY `kd` (`d`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP COLUMN d',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c', 'ebike.not_null': 'id,a2', 'ebike.primary_key': 'a2,id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int NOT NULL,\n  `c` int,\n  PRIMARY KEY (`a2`, `id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'CREATE TABLE e2 LIKE e1',
+        'e2',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c', 'ebike.not_null': 'id,a2', 'ebike.primary_key': 'a2,id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e2` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int NOT NULL,\n  `c` int,\n  PRIMARY KEY (`a2`, `id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'CREATE MATERIALIZED VIEW mv AS SELECT id, c FROM e1',
+        'mv',
+        {'ebike.matview.sql': 'U0VMRUNUIGlkLCBjIEZST00gZTE='},
+        'CREATE TABLE `mv` (\n  `id` int,\n  `c` int\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'RENAME TABLE e2 TO e3',
+        'e3',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c', 'ebike.not_null': 'id,a2', 'ebike.primary_key': 'a2,id', 'ebike.rowid': '1', 'ebike.unique.uab': 'a2'},
+        'CREATE TABLE `e3` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `a2` int NOT NULL,\n  `c` int,\n  PRIMARY KEY (`a2`, `id`),\n  UNIQUE KEY `uab` (`a2`),\n  KEY `kc` (`c`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE er ADD UNIQUE (v), ADD COLUMN w INT',
+        'er',
+        {'ebike.not_null': '', 'ebike.unique.v': 'v'},
+        'CREATE TABLE `er` (\n  `rowid` int,\n  `v` int,\n  `w` int,\n  UNIQUE KEY `v` (`v`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'CREATE TABLE e4 LIKE er',
+        'e4',
+        {'ebike.not_null': '', 'ebike.unique.v': 'v'},
+        'CREATE TABLE `e4` (\n  `rowid` int,\n  `v` int,\n  `w` int,\n  UNIQUE KEY `v` (`v`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP COLUMN a2',
+        'e1',
+        {'ebike.auto_increment': 'id', 'ebike.cluster.kc': 'c', 'ebike.not_null': 'id', 'ebike.primary_key': 'id', 'ebike.rowid': '1'},
+        'CREATE TABLE `e1` (\n  `id` int NOT NULL AUTO_INCREMENT,\n  `c` int,\n  PRIMARY KEY (`id`),\n  KEY `kc` (`c`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+    (
+        'ALTER TABLE e1 DROP COLUMN id',
+        'e1',
+        {'ebike.auto_increment': '', 'ebike.cluster.kc': 'c', 'ebike.not_null': '', 'ebike.primary_key': '', 'ebike.rowid': '1'},
+        'CREATE TABLE `e1` (\n  `c` int,\n  KEY `kc` (`c`)\n) ENGINE=parquet DEFAULT CHARSET=utf8mb4',
+    ),
+]
+
+
+def test_ddl_writes_the_pinned_property_encoding(eng):
+    """CREATE TABLE (keys, NOT NULL, AUTO_INCREMENT, a user rowid), the
+    ALTER clauses, CREATE TABLE … LIKE, CREATE MATERIALIZED VIEW and
+    RENAME write the recorded properties and SHOW CREATE TABLE text."""
+    for sql, table, props, create in ENCODING:
+        eng.execute(sql)
+        assert _props(eng, f"{eng.current_db}.{table}") == {k: v for k, v in props.items() if v}, sql
+        assert eng.execute(f"SHOW CREATE TABLE {table}").rows()[0]["Create Table"] == create, sql
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("CREATE TABLE e5 LIKE mv")
+    assert ei.value.code == 1347
+
+
+def test_drop_primary_key_after_its_columns_went_is_1091(eng):
+    """Dropping the last PRIMARY KEY column drops the key: no property
+    is left, and DROP PRIMARY KEY then finds none (MySQL 1091)."""
+    eng.execute("CREATE TABLE p1 (id INT NOT NULL, v INT, PRIMARY KEY (id))")
+    eng.execute("ALTER TABLE p1 DROP COLUMN id")
+    assert _props(eng, f"{eng.current_db}.p1") == {"ebike.rowid": "1"}
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("ALTER TABLE p1 DROP PRIMARY KEY")
+    assert ei.value.code == 1091
 
 
 def test_ddl_after_a_versioned_commit(eng, spark):

@@ -375,6 +375,37 @@ def test_information_schema_constraints(eng):
     assert [(r[0], r[2]) for r in st] == [("PRIMARY", "id"), ("PRIMARY", "name")]
 
 
+K3_DDL = "CREATE TABLE k3 (id INT NOT NULL, u INT, m INT, PRIMARY KEY (id), UNIQUE KEY uu (u), KEY mk (m))"
+
+
+def test_show_columns_and_information_schema_agree_on_column_key(eng):
+    """SHOW COLUMNS' Key and information_schema.columns' column_key come
+    from one rule: PRI, UNI for a UNIQUE column, MUL for the first
+    column of a KEY."""
+    eng.execute(K3_DDL)
+    show = [(r["Field"], r["Key"]) for r in eng.execute("SHOW COLUMNS FROM k3").rows()]
+    schema = eng.execute(
+        "SELECT column_name, column_key FROM information_schema.columns "
+        f"WHERE table_schema = '{eng.current_db}' AND table_name = 'k3' ORDER BY ordinal_position"
+    ).rows()
+    assert show == [tuple(r) for r in schema] == [("id", "PRI"), ("u", "UNI"), ("m", "MUL")]
+
+
+def test_show_index_and_information_schema_statistics_agree(eng):
+    """information_schema.statistics lists the KEY indexes (non_unique
+    1) beside the PRIMARY and UNIQUE keys, in SHOW INDEX's order."""
+    eng.execute(K3_DDL)
+    show = [
+        (r["Key_name"], r["Non_unique"], r["Seq_in_index"], r["Column_name"])
+        for r in eng.execute("SHOW INDEX FROM k3").rows()
+    ]
+    stats = eng.execute(
+        "SELECT index_name, non_unique, seq_in_index, column_name FROM information_schema.statistics "
+        f"WHERE table_schema = '{eng.current_db}' AND table_name = 'k3'"
+    ).rows()
+    assert show == [tuple(r) for r in stats] == [("PRIMARY", 0, 1, "id"), ("uu", 0, 1, "u"), ("mk", 1, 1, "m")]
+
+
 def test_describe_and_show_index(eng):
     eng.execute(USER_DDL)
     desc = eng.execute("DESCRIBE user").rows()
@@ -1476,6 +1507,19 @@ def test_alter_add_drop_keys(eng):
     with pytest.raises(EbikeError) as ei:
         eng.execute("ALTER TABLE ak2 ADD PRIMARY KEY (id)")
     assert ei.value.code == 1138
+
+
+def test_add_index_named_like_a_unique_key_is_1061(eng):
+    """A KEY and a UNIQUE key share one namespace, as in MySQL: adding
+    either under the other's name is 1061 and changes nothing."""
+    eng.execute("CREATE TABLE an (id INT, u INT, UNIQUE KEY uu (u), KEY kk (id))")
+    for sql in ("ALTER TABLE an ADD INDEX uu (id)", "ALTER TABLE an ADD UNIQUE kk (u)"):
+        with pytest.raises(EbikeError) as ei:
+            eng.execute(sql)
+        assert ei.value.code == 1061, sql
+    assert [(r["Key_name"], r["Column_name"]) for r in eng.execute("SHOW INDEX FROM an").rows()] == [
+        ("uu", "u"), ("kk", "id")
+    ]
 
 
 def test_insert_replace_ignore_from_select(eng):
@@ -2978,17 +3022,52 @@ def test_failed_values_batch_leaves_table_unchanged(eng, spark, form, last_row, 
     ],
 )
 def test_insert_reads_table_properties_once(eng, monkeypatch, sql):
-    """One INSERT statement reads SHOW TBLPROPERTIES once, however
-    many constraint getters its checks consult."""
+    """One INSERT statement reads its table's metadata once (one
+    Catalog.table), however many constraint checks consult it."""
     eng.execute("CREATE TABLE pc (id INT NOT NULL, v CHAR, PRIMARY KEY (id), UNIQUE KEY uv (v))")
     eng.execute("INSERT INTO pc VALUES (1, 'a'), (2, 'b')")
     calls = []
-    orig = type(eng.catalog).properties
+    orig = type(eng.catalog).table
     monkeypatch.setattr(
-        type(eng.catalog), "properties", lambda self, q: calls.append(q) or orig(self, q)
+        type(eng.catalog), "table", lambda self, q: calls.append(q) or orig(self, q)
     )
     eng.execute(sql)
     assert len(calls) == 1
+
+
+# statement: the Catalog.table reads it makes, against the table
+# test_statements_read_their_pinned_table_metadata fills
+TABLE_READS = {
+    "point_select": ("SELECT v FROM mr WHERE id = 1", 0),
+    "insert_values": ("INSERT INTO mr VALUES (3, 30)", 1),
+    "update": ("UPDATE mr SET v = v + 1 WHERE id = 1", 1),
+    "delete_limit": ("DELETE FROM mr WHERE id = 2 LIMIT 1", 1),
+    "show_columns": ("SHOW COLUMNS FROM mr", 1),
+    "show_create_table": ("SHOW CREATE TABLE mr", 1),
+    "show_index": ("SHOW INDEX FROM mr", 1),
+}
+
+
+@pytest.mark.parametrize("form", sorted(TABLE_READS))
+def test_statements_read_their_pinned_table_metadata(eng, monkeypatch, form):
+    """Each statement form's reads of table metadata, counted as
+    Catalog.table calls: a point read makes none (the hidden rowid is
+    known from the analyzed plan's own catalog entry), DML and SHOW one.
+    No statement, the table's DDL included, sends SHOW TBLPROPERTIES."""
+    from pyspark.sql import SparkSession
+
+    from ebike_spark.engine.catalog import Catalog
+
+    texts, reads = [], []
+    sql_of, table_of = SparkSession.sql, Catalog.table
+    monkeypatch.setattr(SparkSession, "sql", lambda self, text, *a, **kw: texts.append(text) or sql_of(self, text, *a, **kw))
+    eng.execute("CREATE TABLE mr (id INT NOT NULL, v INT, PRIMARY KEY (id), UNIQUE KEY uv (v), KEY kv (v))")
+    eng.execute("INSERT INTO mr VALUES (1, 10), (2, 20)")
+    monkeypatch.setattr(Catalog, "table", lambda self, q: reads.append(q) or table_of(self, q))
+    sql, n = TABLE_READS[form]
+    eng.execute(sql).rows()
+    assert len(reads) == n
+    assert not [t for t in texts if "SHOW TBLPROPERTIES" in t.upper()]
 
 
 @pytest.mark.parametrize(

@@ -1070,7 +1070,7 @@ def test_inline_and_per_row_values_agree(spark, cells, shape):
             eng.execute(f"CREATE TABLE {t} {_VALUES_DDL}")
             eng.execute(f"INSERT INTO {t} VALUES (1, 1, 1.5, 1e0, 'stored')")
         if shape == "ok":
-            types = dict(eng.catalog.column_types(f"{db}.inline_t"))
+            types = dict(eng.catalog.table(f"{db}.inline_t").columns)
             ins = parse_insert(sql.replace("{t}", "inline_t", 1))
             event(f"inline form: {dml._inline_ok(ins, list(types), types)}")
         inline = _insert_outcome(eng, "inline_t", sql)
@@ -1100,7 +1100,7 @@ def test_all_literal_values_batch_folds_to_a_local_relation(spark):
         eng.execute(f"USE {db}")
         for t in ("inline_t", "per_row_t"):
             eng.execute(f"CREATE TABLE {t} {_VALUES_DDL}")
-        col_types = eng.catalog.column_types(f"{db}.inline_t")
+        col_types = eng.catalog.table(f"{db}.inline_t").columns
         types = dict(col_types)
         rows = "(1, 2.5, 1.25, 1e3, 'a'), (2, 7, NULL, -2e0, 'b'), (3, -2.5, 3, NULL, NULL)"
         ins = parse_insert(f"INSERT INTO inline_t VALUES {rows}")

@@ -1,15 +1,18 @@
 """Count code lines in Python files: lines holding at least one token
 that is not a comment, with blank lines and docstrings left out.
 
-    python tools/code_lines.py ebike_spark/engine/*.py
+    python tools/code_lines.py ebike_spark/engine
 
-prints one count per file and the total on the last line.
+prints one count per file and the total on the last line. A directory
+argument stands for its ``*.py`` files, sorted.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
 import io
+import os
 import sys
 import tokenize
 
@@ -32,7 +35,11 @@ def code_lines(source: str) -> int:
 
 if __name__ == "__main__":
     total = 0
-    for path in sys.argv[1:]:
+    paths = [
+        p for arg in sys.argv[1:]
+        for p in (sorted(glob.glob(os.path.join(arg, "*.py"))) if os.path.isdir(arg) else [arg])
+    ]
+    for path in paths:
         with open(path, encoding="utf-8") as f:
             n = code_lines(f.read())
         total += n
