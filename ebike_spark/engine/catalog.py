@@ -30,10 +30,13 @@ Hidden rowid: the reference prepends a UUID ``rowid`` to every table
 when explicitly projected (/root/reference/src/core/core_util.rs:451-461).
 Here it is a real column (STRING, uuid() materialized at INSERT,
 marked by ``ebike.rowid``) that every metadata surface
-(SHOW/DESCRIBE/information_schema, ``Table.columns``) hides and every
-query (Engine._query) drops from results unless the query text names it
-— column pruning then means the hidden column is never even read. It is
-created LAST so VALUES inserts stay positional.
+(SHOW/DESCRIBE/information_schema, ``Table.columns``) hides. A query
+text that does not name it reads each such table through
+``Catalog.bind_tables`` as ``(SELECT * EXCEPT (rowid) FROM db.t) AS
+t``, before Spark analyses it, so no star of the statement (joins, set
+operations, ordinals, a view's stored text) sees the column, and
+column pruning means it is never even read. It is created LAST so
+VALUES inserts stay positional.
 """
 
 from __future__ import annotations
@@ -243,14 +246,18 @@ SYSTEM_TABLES = {
     "performance_schema.global_variables": "variable_name string, variable_value string",
 }
 
-# the words before a table reference that a statement writes
-_WRITE_TARGET = frozenset(("INTO", "UPDATE", "DELETE", "DELETE FROM", "OVERWRITE", "OVERWRITE TABLE"))
-# words that may follow a table reference without being its alias
-_NOT_ALIAS = frozenset(
-    "WHERE GROUP ORDER HAVING LIMIT OFFSET WINDOW UNION EXCEPT INTERSECT "
-    "MINUS JOIN INNER LEFT RIGHT FULL CROSS NATURAL LATERAL ANTI SEMI ON "
-    "USING SORT CLUSTER DISTRIBUTE TABLESAMPLE PIVOT UNPIVOT".split()
-)
+# a text that has none of these words binds nothing
+_BINDS = re.compile(r"\b(?:FROM|TABLE|information_schema|mysql|performance_schema)\b", re.I)
+# words after which each item of a list is a table reference
+_LIST_START = frozenset(("FROM", "JOIN", "USING", ","))
+# clause words that end a table list at their parenthesis level (VIEW:
+# a LATERAL VIEW follows the FROM clause's last table)
+_LIST_END = frozenset("WHERE GROUP HAVING ORDER LIMIT OFFSET WINDOW UNION EXCEPT INTERSECT MINUS SORT CLUSTER "
+                      "DISTRIBUTE SET UPDATE VIEW".split())
+# words that may follow a table reference without being its alias: the
+# clause words and the words that join or extend a relation
+_NOT_ALIAS = _LIST_END | frozenset("JOIN INNER LEFT RIGHT FULL CROSS NATURAL LATERAL ANTI SEMI ON USING "
+                                   "TABLESAMPLE PIVOT UNPIVOT".split())
 
 
 def bq(qualified: str) -> str:
@@ -282,7 +289,7 @@ class Catalog:
 
     def require_table(self, qualified: str) -> None:
         """1146 unless ``qualified`` names a table; a system table bound
-        in this statement (system_tables) is one, but only for reading:
+        in this statement (bind_tables) is one, but only for reading:
         1044."""
         self._deny_system(qualified)
         if not self.table_exists(qualified):
@@ -345,15 +352,15 @@ class Catalog:
                 "Incorrect table definition; there can be only one auto "
                 "column and it must be defined as a key",
             )
+        known = {c.name for c in ct.columns}
+        for c in [*ct.primary_key, *(c for _, cols in (*ct.uniques, *ct.indexes) for c in cols)]:
+            if c not in known:
+                raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
         # inline KEY items: recorded as clustering indexes (the table is
         # empty, so there is nothing to physically re-cluster yet; the
         # DML paths maintain advertised clusterings on write)
-        known = {c.name for c in ct.columns}
         seen_keys = {u for u, _ in ct.uniques}
-        for iname, icols in ct.indexes:
-            for c in icols:
-                if c not in known:
-                    raise EbikeError(1072, f"Key column '{c}' doesn't exist in table")
+        for iname, _ in ct.indexes:
             if iname in seen_keys:
                 raise EbikeError(1061, f"Duplicate key name '{iname}'")
             seen_keys.add(iname)
@@ -426,59 +433,131 @@ class Catalog:
     # ------------------------------------------------------------ system tables
 
     @contextmanager
-    def system_tables(self, sys_vars: dict[str, object]):
-        """One statement's scope of system tables. Yields ``bind(sql)``,
-        which returns ``sql`` with every system table it names replaced
-        by a temp view of that table's rows as the catalog stands when
-        it is first named (system_table; ``sys_vars`` are the reader's
-        variables). A reference the text gives no alias is aliased by
-        the table's own name, and a column qualified by the full table
-        name is qualified by that alias. String literals are left
-        alone. A system table in a write target's place is 1044. The
+    def bind_tables(self, sys_vars: dict[str, object], current_db: str):
+        """One statement's binding of the tables its texts read. Yields
+        ``bind(sql)``, which returns ``sql`` with each table read there
+        (a FROM, JOIN or comma-list item at any depth, or ``TABLE t``)
+        replaced by the relation a query sees:
+
+        - a system table by a temp view of its rows as the catalog
+          stands when it is first named (system_table; ``sys_vars`` are
+          the reader's variables);
+        - a table with the hidden rowid by ``(SELECT * EXCEPT (rowid)
+          FROM db.t)``, unless the text names ``rowid`` (the reference's
+          projection-time rule, core_util.rs:451-461), so no star of the
+          statement sees the column.
+
+        A bound reference the text gives no alias is aliased by its own
+        name, or by its name as written when the text reads another
+        name with the same last part, and a column qualified by the full
+        table name is requalified by that alias. String literals are
+        left alone. Left as written: write targets (a system table there
+        is 1044), the table list of a multi-table UPDATE or DELETE,
+        whose rowids identify the rows it writes (its system tables are
+        bound), CTE names, temp views, file sources, table functions,
+        derived tables, and any name that is no catalog table, for Spark
+        to resolve. Each table is read once per text (``table``). The
         views are dropped on exit; their random names cannot meet a
         user's table."""
         token = uuid.uuid4().hex
-        bound = self.system_views = {}
+        views = self.system_views = {}
 
         def bind(sql: str) -> str:
-            low = sql.lower()
-            if not any(schema in low for schema in ("information_schema", "mysql", "performance_schema")):
+            if not _BINDS.search(sql):
                 return sql
             code = code_tokens(sql)
-
-            def text(k: int) -> str:
-                return sql[code[k][1] : code[k][2]] if 0 <= k < len(code) else ""
-
-            def name(k: int) -> str:
-                return unquote_ident(text(k)) if code[k][0] in ("word", "ident") else ""
-
-            edits = []
-            for k in range(len(code) - 2):
-                if text(k + 1) != "." or text(k - 1) == ".":
+            # each token's text, upper-cased text and name (a word or
+            # quoted identifier); the padding answers a look past
+            # either end, index -1 included
+            texts = [sql[a:b] for _, a, b in code] + [""] * 4
+            ups = [t.upper() for t in texts]
+            names = [unquote_ident(t) if k in ("word", "ident") else "" for (k, _, _), t in zip(code, texts)] + [""] * 4
+            # the role of each reference, by its first token's index; per
+            # parenthesis level: [has a SELECT, its list items' role, its
+            # "(", in a WITH clause's list]
+            opener, ctes = {}, set()
+            levels = [[False, "list" if ups[0] in ("UPDATE", "DELETE") else None, -1, False]]
+            roles = {1 + (ups[1] == "FROM"): "target"} if levels[0][1] else {}
+            for k in range(len(code)):
+                w, level = ups[k], levels[-1]
+                if w == "(":
+                    levels.append([False, None, k, False])
+                elif w == ")" and len(levels) > 1:
+                    opener[k] = levels.pop()[2]
+                elif w == "SELECT":
+                    level[:] = [True, None, level[2], False]
+                elif w == "WITH":
+                    level[3] = True
+                elif w == "FROM" and ups[k - 1] != "DISTINCT" and (level[0] or level[1]):
+                    level[1] = level[1] or "read"
+                    roles.setdefault(k + 1, level[1])
+                elif w in _LIST_START and level[1]:
+                    roles.setdefault(k + 1, level[1])
+                elif w in _LIST_END and k:
+                    level[1] = None
+                elif w in ("INTO", "OVERWRITE"):
+                    roles[k + 1 + (ups[k + 1] == "TABLE")] = "target"
+                elif w == "TABLE":
+                    roles.setdefault(k + 1, "table")
+                elif w == "AS" and ups[k + 1] == "(" and level[3]:  # name [(columns)] AS ( names a CTE
+                    j = opener.get(k - 1, k) - 1
+                    if ups[j - 1] in ("WITH", "RECURSIVE", ","):
+                        ctes.add(names[j])
+            # each reference as (first token, last token, role, name
+            # parts), and the names the text reads under each last name
+            # part: a bound reference is aliased by its last part only
+            # when the text reads one name ending in it
+            refs, tables_read = [], {}
+            for j, role in sorted(roles.items()):
+                end = j
+                while texts[end + 1] == "." and names[end + 2]:
+                    end += 2
+                parts = names[j : end + 1 : 2]
+                if parts[0] and len(parts) <= 2 and (role == "target" or texts[end + 1] != "("):
+                    refs.append((j, end, role, parts))
+                    if role in ("read", "table"):
+                        tables_read.setdefault(parts[-1].lower(), set()).add(".".join(parts).lower())
+            hide = ROWID not in names
+            hides, edits, requalify = {}, [], {}
+            for j, end, role, parts in refs:
+                dotted = ".".join(parts)
+                if dotted in SYSTEM_TABLES:
+                    if role == "target":
+                        raise access_denied(parts[0])
+                    relation = f"__ebike_sys_{token}_{parts[0]}_{parts[1]}"
+                    if relation not in views:
+                        self.system_table(dotted, sys_vars).createOrReplaceTempView(relation)
+                        views[relation] = dotted
+                elif role in ("read", "table") and hide and (len(parts) == 2 or dotted not in ctes):
+                    q = self.qualify(dotted, current_db).lower()
+                    if q not in hides:
+                        temp = len(parts) == 1 and self.spark._jsparkSession.sessionState().catalog().getTempView(dotted).isDefined()
+                        try:
+                            hides[q] = not temp and self.table(q).has_rowid
+                        except EbikeError:
+                            hides[q] = False
+                    if not hides[q]:
+                        continue
+                    relation = f"(SELECT * EXCEPT (`{ROWID}`) FROM {bq(q)})"
+                else:
                     continue
-                schema, table = name(k), name(k + 2)
-                qualified = f"{schema}.{table}"
-                if qualified not in SYSTEM_TABLES:
-                    continue
-                if text(k - 1).upper() in _WRITE_TARGET or f"{text(k - 2)} {text(k - 1)}".upper() in _WRITE_TARGET:
-                    raise access_denied(schema)
-                span = (code[k][1], code[k + 2][2])
-                if text(k + 3) == ".":  # a column qualified by the table's name
-                    edits.append((*span, f"`{table}`"))
-                    continue
-                view = f"__ebike_sys_{token}_{schema}_{table}"
-                if view not in bound:
-                    self.system_table(qualified, sys_vars).createOrReplaceTempView(view)
-                    bound[view] = qualified
-                after = code[k + 3] if k + 3 < len(code) else ("", 0, 0)
-                aliased = after[0] == "ident" or (after[0] == "word" and text(k + 3).upper() not in _NOT_ALIAS)
-                edits.append((*span, view if aliased else f"{view} AS `{table}`"))
-            return splice(sql, edits)
+                if names[end + 1] == "" or ups[end + 1] in _NOT_ALIAS:
+                    alias = parts[-1] if len(tables_read.get(parts[-1].lower(), ())) <= 1 else dotted
+                    relation += f" AS `{alias}`"
+                    if len(parts) == 2:
+                        requalify[dotted.lower()] = f"`{alias}`"
+                table = role == "table"  # TABLE t becomes SELECT * FROM <relation>
+                edits.append((code[j - table][1], code[end][2], ("SELECT * FROM " if table else "") + relation))
+            for k in range(len(code)):  # a column qualified by a bound table's full name: by its alias
+                dotted = f"{names[k]}.{names[k + 2]}".lower()
+                if texts[k + 1] == texts[k + 3] == "." != texts[k - 1] and dotted in requalify:
+                    edits.append((code[k][1], code[k + 2][2], requalify[dotted]))
+            return splice(sql, sorted(edits))
 
         try:
             yield bind
         finally:
-            for view in bound:
+            for view in views:
                 self.spark.catalog.dropTempView(view)
             self.system_views = {}
 

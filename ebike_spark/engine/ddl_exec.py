@@ -1,6 +1,6 @@
 """DDL statement execution — the Engine's CREATE/DROP/ALTER/index/
 matview/TRUNCATE/RENAME/maintenance surface. Mixin: every method runs
-as part of Engine (self.catalog, self.spark, self._select, ...).
+as part of Engine (self.catalog, self.spark, self._translate, ...).
 Reference parity notes live on each method."""
 
 from __future__ import annotations
@@ -81,7 +81,7 @@ class DdlExecMixin:
             if if_not_exists:
                 return EngineResult("count", affected=0)
             raise EbikeError(1050, f"Table '{table}' already exists")
-        src, written = commit.observe(self._query(self._translate(select_sql)), F.count(F.lit(1)))
+        src, written = commit.observe(self.spark.sql(self._translate(select_sql)), F.count(F.lit(1)))
         self.catalog._ensure_fresh_location(q)
         src.write.format("parquet").saveAsTable(q)
         commit.bump(self.spark, q)
@@ -176,7 +176,7 @@ class DdlExecMixin:
 
     def _refresh_matview_locked(self, q: str) -> EngineResult:
         stored = self._matview_sql(q)
-        src = self._query(self._translate(stored))
+        src = self.spark.sql(self._translate(stored))
         cur = self.spark.table(q)
         if [f.dataType for f in src.schema.fields] != [
             f.dataType for f in cur.schema.fields

@@ -2,13 +2,13 @@
 Engine): each is parsed here and run by engine/dml.py.
 
 Every INSERT row source ends in ``dml.land``: VALUES (and its ``SET a =
-1`` spelling) through ``dml.insert``, INSERT … SELECT through
-``dml.typed_frame``, and LOAD DATA (dispatched by Engine) through
-``dml.load_data``; ``_landed`` turns land's result into the statement's
-affected rows and LAST_INSERT_ID(). Other non-VALUES INSERT forms
-(``INSERT INTO t TABLE s``) pass through to Spark as a write of the
-target. The multi-table UPDATE and DELETE resolve their aliases here
-and commit through ``dml._rewrite``."""
+1`` spelling) through ``dml.insert``, INSERT … SELECT (and its ``TABLE
+s``, ``WITH …`` and parenthesised forms) through ``dml.typed_frame``,
+and LOAD DATA (dispatched by Engine) through ``dml.load_data``;
+``_landed`` turns land's result into the statement's affected rows and
+LAST_INSERT_ID(). INSERT OVERWRITE passes through to Spark as a write
+of the target. The multi-table UPDATE and DELETE resolve their aliases
+here and commit through ``dml._rewrite``."""
 
 from __future__ import annotations
 
@@ -49,14 +49,14 @@ class DmlExecMixin:
             fixed = f"{m.group(1)} INTO {m.group(2)} ({cols}) VALUES ({', '.join(v for _, v in pairs)})" + "".join(
                 f" ON DUPLICATE KEY UPDATE {c}" for c in clauses.values()
             )
-        # INSERT [IGNORE] INTO ... SELECT / REPLACE INTO ... SELECT,
-        # detected STRUCTURALLY (SELECT right after the table/column
-        # list), as the VALUES form is below: a word inside the SELECT
-        # (`ON DUPLICATE KEY UPDATE v = VALUES(v)`, a literal) never
-        # picks the path
+        # INSERT [IGNORE] INTO ... <query> / REPLACE INTO ... <query>,
+        # detected STRUCTURALLY (a SELECT, WITH or TABLE query, bare or
+        # parenthesised, right after the table/column list), as the
+        # VALUES form is below: a word inside the query (`ON DUPLICATE
+        # KEY UPDATE v = VALUES(v)`, a literal) never picks the path
         m = re.match(
-            r"\s*(?:INSERT(\s+IGNORE)?|(REPLACE))\s+INTO\s+([\w.`\"]+)\s*"
-            r"(?:\(([^)]*)\)\s*)?(SELECT\b[\s\S]*)$",
+            r"\s*(?:INSERT(\s+IGNORE)?|(REPLACE))\s+INTO\s+(?:TABLE\s+)?([\w.`\"]+)\s*"
+            r"(?:\((?!\s*(?:\(|(?:SELECT|WITH|TABLE)\b))([^)]*)\)\s*)?((?:\(\s*)*(?:SELECT|WITH|TABLE)\b[\s\S]*)$",
             fixed,
             re.I,
         )
@@ -67,9 +67,9 @@ class DmlExecMixin:
                     mode = "IGNORE" if m.group(1) else "REPLACE" if m.group(2) else ""
                     return self._insert_from_select(q, m.group(4), m.group(5), mode)
         if not INSERT_VALUES.match(fixed):
-            # remaining non-VALUES forms (e.g. INSERT INTO ... TABLE
-            # src) pass through to Spark untouched, as a write of the
-            # target: under its writer lock, bumping its version
+            # remaining non-VALUES forms (INSERT OVERWRITE) pass
+            # through to Spark untouched, as a write of the target:
+            # under its writer lock, bumping its version
             m = re.match(r"\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`\"]+)", fixed, re.I)
             target = [self.catalog.qualify(unquote_ident(m.group(1)), self.current_db)] if m else []
             with commit.writing(self.spark, *target):
@@ -96,7 +96,7 @@ class DmlExecMixin:
         select_sql: str,
         mode: str,
     ) -> EngineResult:
-        """INSERT [IGNORE] / REPLACE ... SELECT [... ON DUPLICATE KEY
+        """INSERT [IGNORE] / REPLACE ... <query> [... ON DUPLICATE KEY
         UPDATE]: the source frame typed by dml.typed_frame and landed by
         dml.land, so keys, NOT NULL, AUTO_INCREMENT and the duplicate
         modes behave as for VALUES. Every check is a Spark job, so a
@@ -115,7 +115,7 @@ class DmlExecMixin:
         if on_dup is not None and mode:
             raise parse_error("ON DUPLICATE KEY UPDATE cannot combine with IGNORE/REPLACE")
 
-        src = self._query(select_sql)
+        src = self.spark.sql(select_sql)
         table = self.catalog.table(qualified)
         listed = [unquote_ident(c) for c in split_top_level(col_list)] if col_list else None
         df = dml.typed_frame(src, dml.target_columns(listed, table.columns), table.columns)
@@ -157,16 +157,6 @@ class DmlExecMixin:
                 alias = None
             out.append((alias or tbl, self.catalog.qualify(tbl, self.current_db)))
         return out
-
-    def _resolve_alias_table(self, tgt: str, frm: str) -> str:
-        """Resolve a multi-table-DML target token (alias or table name)
-        to its underlying table within a FROM clause."""
-        m = re.search(
-            rf"([\w.`\"]+)\s+(?:AS\s+)?{re.escape(tgt)}\b", frm, re.I
-        )
-        if m and unquote_ident(m.group(1)).upper() not in self._JOIN_KEYWORDS:
-            return unquote_ident(m.group(1))
-        return tgt
 
     def _update(self, sql: str) -> EngineResult:
         fixed = self._translate(sql)
@@ -263,8 +253,7 @@ class DmlExecMixin:
             by_tgt.setdefault(alias, []).append((i, col, rhs))
         targets: list[dict] = []
         for tgt, items in by_tgt.items():
-            base = self._resolve_alias_table(tgt, frm)
-            qualified = self.catalog.qualify(base, self.current_db)
+            qualified = dict(from_tables).get(tgt) or self.catalog.qualify(tgt, self.current_db)
             target = table(qualified)
             if not target.has_rowid:
                 raise unsupported(
@@ -302,7 +291,7 @@ class DmlExecMixin:
             f"SELECT {rid_exprs}, {val_exprs} FROM {frm}"
             + (f" WHERE {where}" if where else "")
         )
-        src = self._query(sel)
+        src = self.spark.sql(sel)
         if len(targets) > 1:
             # snapshot the pre-image join once: every target's
             # post-image write would otherwise recompute it, and a
@@ -407,8 +396,7 @@ class DmlExecMixin:
         still deletes once); rowids are unique, so the join duplicates
         no row."""
         tgt = unquote_ident(tgt_tok)
-        base = self._resolve_alias_table(tgt, frm)
-        qualified = self.catalog.qualify(base, self.current_db)
+        qualified = dict(self._from_aliases(frm)).get(tgt) or self.catalog.qualify(tgt, self.current_db)
         if not self.catalog.table(qualified).has_rowid:
             raise unsupported(
                 "multi-table DELETE on a table without the hidden rowid"
@@ -417,7 +405,7 @@ class DmlExecMixin:
             sel = f"SELECT {bq(tgt)}.`{dml.ROWID}` AS {dml.HIT} FROM {frm}" + (
                 f" WHERE {where}" if where else ""
             )
-            doomed = self._query(sel).distinct()
+            doomed = self.spark.sql(sel).distinct()
             t = self.spark.table(qualified)
             flagged = t.join(doomed, t[dml.ROWID] == doomed[dml.HIT], "left")
             return EngineResult("count", affected=dml.drop_hits(self.spark, qualified, t, flagged))

@@ -19,7 +19,7 @@ from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 from ebike_spark.engine import commit, dml, show
-from ebike_spark.engine.catalog import Catalog, Table
+from ebike_spark.engine.catalog import Catalog
 from ebike_spark.engine.errors import EbikeError, parse_error, table_not_exists, unknown_database, unmarked, unsupported
 from ebike_spark.engine.parser import (
     lex,
@@ -53,10 +53,10 @@ _NO_DB = {
 def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     """The MySQL error for a failure Spark raised, or None to let it
     through. An analysis error maps by its error condition, never by
-    its message, whose suggestions may name the hidden rowid. A runtime
-    error carrying a plan-raised error's marker (errors.marked) is that
-    error, keyed off the exception class: an analysis error's plan dump
-    can contain the guard expressions and so the marker text."""
+    its message. A runtime error carrying a plan-raised error's marker
+    (errors.marked) is that error, keyed off the exception class: an
+    analysis error's plan dump can contain the guard expressions and so
+    the marker text."""
     cond = e.getCondition() if isinstance(e, PySparkException) else None
     if cond == "TABLE_OR_VIEW_NOT_FOUND":
         return table_not_exists(e.getMessageParameters()["relationName"].replace("`", ""))
@@ -69,6 +69,8 @@ def _mysql_error(e: Exception, db: str) -> EbikeError | None:
     if cond is not None and cond.startswith("UNRESOLVED_COLUMN."):
         name = e.getMessageParameters()["objectName"].replace("`", "")
         return EbikeError(1054, f"Unknown column '{name}' in 'field list'")
+    if cond == "ORDER_BY_POS_OUT_OF_RANGE":
+        return EbikeError(1054, f"Unknown column '{e.getMessageParameters()['index']}' in 'order clause'")
     if cond == "PARSE_SYNTAX_ERROR":
         return parse_error(f"near {e.getMessageParameters()['error']}")
     if isinstance(e, AnalysisException):
@@ -128,8 +130,8 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         # version it may read outlives it) on a session that has
         # dropped its cached file listing of every table another
         # connection changed since this one's last statement; the
-        # system tables its text names are bound until it ends
-        with commit.statement(), self.catalog.system_tables(self.sys_vars) as self._bind_system:
+        # tables its texts read are bound until it ends
+        with commit.statement(), self.catalog.bind_tables(self.sys_vars, self.current_db) as self._bind:
             commit.sync(self.spark)
             try:
                 return self._execute(sql)
@@ -163,7 +165,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             if e.getCondition() != "SCHEMA_NOT_FOUND" or needs_db:
                 raise
         if kw in ("SELECT", "WITH", "VALUES", "TABLE", "EXPLAIN"):
-            return self._select(sql)
+            return EngineResult("rows", df=self.spark.sql(self._translate(sql)))
         if kw == "SHOW":
             return self._show(sql)
         if kw in ("DESCRIBE", "DESC") and kw2 not in ("SELECT", "TABLE", "QUERY", "EXTENDED"):
@@ -200,9 +202,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             return self._drop_table(sql)
         if kw == "ALTER" and kw2 == "TABLE":
             return self._alter_table(sql)
-        if kw == "INSERT":
-            return self._insert(sql)
-        if kw == "REPLACE":
+        if kw in ("INSERT", "REPLACE"):
             # REPLACE INTO: MySQL delete-then-insert upsert (the
             # reference 1105s it; handled by the insert path's flag)
             return self._insert(sql)
@@ -264,8 +264,8 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
         Variables become literals; GROUP_CONCAT, the %-format datetime
         functions, FIELD, database(), LAST_INSERT_ID(), FROM dual,
         EXPLAIN VERBOSE/ANALYZE and LIMIT offset, count become their
-        Spark forms; each system table named is bound for the statement
-        (Catalog.system_tables). It runs once on each text that enters
+        Spark forms; each table read is bound to the columns a query
+        sees (Catalog.bind_tables). It runs once on each text that enters
         the engine. Text cut from its output is Spark text and never
         passes again: the %-format rewrite would re-read a java pattern
         as a MySQL format."""
@@ -274,69 +274,7 @@ class Engine(DdlExecMixin, DmlExecMixin, PreparedMixin):
             sql = rewrite_dialect(sql, self.last_insert_id)
         except ValueError as e:
             raise parse_error(str(e)) from e
-        return self._bind_system(sql)
-
-    def _query(self, text: str) -> DataFrame:
-        """Spark SQL ``text`` (from _translate) analysed by Spark. A
-        query that picked up the hidden rowid without naming it loses
-        that column, so Catalyst prunes it out of the scan."""
-        df = self.spark.sql(text)
-        if "rowid" in df.columns and not self._mentions_rowid(text):
-            df = self._drop_hidden_rowid(df)
-        return df
-
-    @staticmethod
-    def _mentions_rowid(sql: str) -> bool:
-        """Does the query text name ``rowid`` as an identifier, bare or
-        backtick-quoted? A string literal ('rowid', "rowid") does not.
-        Governs whether the hidden rowid column is surfaced (reference:
-        projection-time special case, core_util.rs:451-461)."""
-        return any(kind in ("word", "ident") and sql[a:b].lower() in ("rowid", "`rowid`") for kind, a, b in lex(sql))
-
-    @staticmethod
-    def _drop_hidden_rowid(df: DataFrame) -> DataFrame:
-        """Drop hidden rowid columns by PROVENANCE, not by name: only
-        output attributes whose exprId traces back to the rowid attribute
-        of a hidden-rowid table scan are removed; each scan's Table is
-        decoded from the catalog entry the analyzed relation carries, so
-        no catalog read is made. A user-declared column that happens to
-        be named rowid — e.g. from the other side of a join — keeps
-        flowing through (round-2 advice; the reference surfaces rowid
-        whenever projected, core_util.rs:451-461). Positional rename →
-        select keeps Catalyst free to prune the hidden column out of the
-        scan."""
-        analyzed = df._jdf.queryExecution().analyzed()
-        hidden_ids: set[int] = set()
-        leaves = analyzed.collectLeaves()
-        for li in range(leaves.size()):
-            leaf = leaves.apply(li)
-            if leaf.getClass().getSimpleName() != "LogicalRelation":
-                continue
-            entry = leaf.catalogTable()
-            if not entry.isDefined() or not Table.decode(entry.get()).has_rowid:
-                continue
-            out = leaf.output()
-            for oi in range(out.size()):
-                attr = out.apply(oi)
-                if attr.name().lower() == "rowid":
-                    hidden_ids.add(attr.exprId().id())
-        if not hidden_ids:
-            return df
-        out = analyzed.output()
-        drop_pos = {
-            i
-            for i in range(out.size())
-            if out.apply(i).name().lower() == "rowid" and out.apply(i).exprId().id() in hidden_ids
-        }
-        if not drop_pos:
-            return df
-        tmp = [f"__ebike_c{i}" for i in range(len(df.columns))]
-        kept = [t for i, t in enumerate(tmp) if i not in drop_pos]
-        names = [c for i, c in enumerate(df.columns) if i not in drop_pos]
-        return df.toDF(*tmp).select(*kept).toDF(*names)
-
-    def _select(self, sql: str) -> EngineResult:
-        return EngineResult("rows", df=self._query(self._translate(sql)))
+        return self._bind(sql)
 
     # ------------------------------------------------------------ session
 

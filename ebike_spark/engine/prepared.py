@@ -4,8 +4,6 @@ time result metadata)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 from ebike_spark.engine.errors import EbikeError
 from ebike_spark.engine.parser import find_top_level_keywords, lex, splice, sql_literal, strip_comments
 from ebike_spark.engine.session_state import EngineResult, _Prepared

@@ -1006,54 +1006,6 @@ def dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------- minhash
 
 
-def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """96 minhash values per doc: h_i(s) = (A_i·x + B_i) mod P over the
-    doc's shingle set. One explode + one groupBy — the agg is 96 mins,
-    all JVM-side, partial-merged map-side so the shuffle carries one
-    96-wide row per doc.
-
-    x uses xxhash64 (fast JVM hash), NOT the oracle-parity md5: the
-    signature only steers candidate *recall*; the output is produced by
-    exact verification, so the hash function is a free implementation
-    choice — take the ~3× cheaper one."""
-    x = (F.abs(F.xxhash64(F.col("s"))) % (2**31)).alias("x")
-    hashed = sh.select("doc_id", x)
-    aggs = [
-        F.min((F.lit(MINHASH_A[i]) * F.col("x") + F.lit(MINHASH_B[i])) % MINHASH_P).alias(f"h{i}")
-        for i in range(NUM_HASHES)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
-def lsh_candidates(sig: DataFrame) -> DataFrame:
-    """Band signatures and self-join bucket-equal docs: (band_id,
-    concat(rows)) is an equi-join key, so LSH candidate generation is a
-    plain shuffle join — no cross product anywhere."""
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(",", *[f"h{b * LSH_ROWS + r}" for r in range(LSH_ROWS)]).alias("key"),
-                )
-                for b in range(LSH_BANDS)
-            ]
-        )
-    ).alias("bk")
-    banded = sig.select("doc_id", bands).select("doc_id", "bk.band", "bk.key")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-
-
 def make_fused_minhash_bander():
     """Closure factory: per-doc shingle-hash list → 96 minhash values →
     32 band keys, all in one vectorized numpy stage.

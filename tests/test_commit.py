@@ -399,9 +399,9 @@ def test_old_version_outlives_a_reader_that_started_before_the_commit(eng, spark
 
 
 def test_passthrough_insert_is_seen_by_another_connection(eng, spark):
-    """``INSERT INTO t TABLE s`` runs through Spark untouched, yet it
-    bumps t's version like every engine write: another connection's
-    next read lists the new file."""
+    """``INSERT INTO t TABLE s`` lands through the INSERT … SELECT
+    path and bumps t's version like every engine write: another
+    connection's next read lists the new file."""
     eng.execute("CREATE TABLE t (id INT, v INT)")
     eng.execute("CREATE TABLE s (id INT, v INT)")
     eng.execute("INSERT INTO t VALUES (1, 10)")

@@ -903,6 +903,212 @@ def test_rowid_join_keeps_user_declared_column(eng):
     assert row[4] == "mine"  # the user-declared ext.rowid survives
 
 
+# Every star of a statement, not only its final output, sees a table's
+# user columns: u (id, s) and v (id, t) hold ids 1 and 2, u2 is a copy
+# of u. Each case is its statements and the last one's outcome: rows
+# (in order), an affected-row count, or a MySQL error code.
+STAR_SETUP = [
+    "CREATE TABLE u (id INT, s CHAR)",
+    "INSERT INTO u VALUES (1, 'a'), (2, 'b')",
+    "CREATE TABLE v (id INT, t CHAR)",
+    "INSERT INTO v VALUES (1, 'x'), (2, 'y')",
+    "CREATE TABLE u2 (id INT, s CHAR)",
+    "INSERT INTO u2 SELECT * FROM u",
+]
+STAR_CASES = {
+    "natural_join": (["SELECT * FROM u NATURAL JOIN v ORDER BY id"], [(1, "a", "x"), (2, "b", "y")]),
+    "except": (["SELECT * FROM u EXCEPT SELECT * FROM u2"], []),
+    "union": (["SELECT * FROM u UNION SELECT * FROM u2 ORDER BY id"], [(1, "a"), (2, "b")]),
+    "intersect": (["SELECT * FROM u INTERSECT SELECT * FROM u2 ORDER BY id"], [(1, "a"), (2, "b")]),
+    "count_distinct_star": (["SELECT count(DISTINCT *) FROM (SELECT * FROM u UNION ALL SELECT * FROM u2) x"], [(2,)]),
+    "ordinal": (["SELECT * FROM u ORDER BY 3"], 1054),
+    "derived_ordinal": (["SELECT * FROM (SELECT * FROM u) x ORDER BY 3"], 1054),
+    "struct_star": (["SELECT to_json(struct(*)) FROM u ORDER BY id"], [('{"id":1,"s":"a"}',), ('{"id":2,"s":"b"}',)]),
+    "hash_star": (["SELECT hash(*) = hash(id, s) FROM u"], [(True,), (True,)]),
+    "view": (["CREATE VIEW vw AS SELECT * FROM u", "SELECT * FROM vw ORDER BY id"], [(1, "a"), (2, "b")]),
+    "view_columns": (["CREATE VIEW vw AS SELECT * FROM u", "SHOW COLUMNS FROM vw"], ["id", "s"]),
+    "insert_from_view": (["CREATE VIEW vw AS SELECT * FROM u", "INSERT INTO u2 SELECT * FROM vw"], 2),
+    "intersect_listed": (["SELECT id, s FROM u INTERSECT SELECT * FROM u ORDER BY id"], [(1, "a"), (2, "b")]),
+    "in_subquery": (["SELECT * FROM u WHERE (id, s) IN (SELECT * FROM u2) ORDER BY id"], [(1, "a"), (2, "b")]),
+    "delete_in_subquery": (["DELETE FROM u WHERE (id, s) IN (SELECT * FROM u2)"], 2),
+}
+
+
+@pytest.mark.parametrize("case", sorted(STAR_CASES))
+def test_every_star_sees_the_user_columns(eng, case):
+    for sql in STAR_SETUP:
+        eng.execute(sql)
+    *setup, sql = STAR_CASES[case][0]
+    expected = STAR_CASES[case][1]
+    for s in setup:
+        eng.execute(s)
+    if isinstance(expected, int) and expected > 1000:
+        with pytest.raises(EbikeError) as ei:
+            eng.execute(sql).rows()
+        assert ei.value.code == expected
+        return
+    res = eng.execute(sql)
+    if isinstance(expected, int):
+        assert res.affected == expected
+    elif sql.startswith("SHOW"):
+        assert [r["Field"] for r in res.rows()] == expected
+    else:
+        assert [tuple(r) for r in res.rows()] == expected
+
+
+# statement: the tables the bind wraps to their user columns. Only what
+# a query reads is bound; write targets, a multi-table statement's
+# table list, CTE names, temp views, file sources, table functions,
+# derived tables, system tables and unknown names are left as written.
+BIND_CASES = {
+    "read": ("SELECT * FROM u", ["u"]),
+    "join_and_comma": ("SELECT * FROM u JOIN v ON u.id = v.id, u2", ["u", "u2", "v"]),
+    "subquery": ("SELECT * FROM v WHERE id IN (SELECT id FROM u)", ["u", "v"]),
+    "table_statement": ("TABLE u", ["u"]),
+    "insert_target": ("INSERT INTO u2 SELECT * FROM u", ["u"]),
+    "update_target": ("UPDATE u SET s = 'x' WHERE id IN (SELECT id FROM v)", ["v"]),
+    "multi_table_update": ("UPDATE u JOIN v ON u.id = v.id SET u.s = v.t", []),
+    "multi_table_delete": ("DELETE u FROM u JOIN v ON u.id = v.id", []),
+    "cte": ("WITH u AS (SELECT 1 AS id) SELECT * FROM u", []),
+    "cte_columns": ("WITH u (id) AS (SELECT 1) SELECT * FROM u", []),
+    "temp_view": ("SELECT * FROM tv", []),
+    "file_source": ("SELECT * FROM parquet.`/nonexistent/x.parquet`", []),
+    "table_function": ("SELECT * FROM range(3)", []),
+    "derived_table": ("SELECT * FROM (SELECT 1 AS id) x", []),
+    "system_table": ("SELECT * FROM information_schema.tables", []),
+    "names_rowid": ("SELECT id, rowid FROM u", []),
+    "unknown_name": ("SELECT * FROM nosuch", []),
+    "extract_from": ("SELECT EXTRACT(YEAR FROM DATE '2020-01-01') FROM u", ["u"]),
+    "distribute_by": ("SELECT * FROM u DISTRIBUTE BY id, v", ["u"]),
+    "sort_by": ("SELECT * FROM u SORT BY id, v", ["u"]),
+    "cluster_by": ("SELECT * FROM u CLUSTER BY id, v", ["u"]),
+    "lateral_view": ("SELECT * FROM u LATERAL VIEW posexplode(array(1)) e AS p, v", ["u"]),
+    "window_names": ("SELECT *, rank() OVER v FROM v WINDOW w AS (ORDER BY id), v AS (ORDER BY id)", ["v"]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BIND_CASES))
+def test_the_bind_wraps_only_the_tables_a_query_reads(eng, case):
+    import re
+
+    for sql in STAR_SETUP[::2]:
+        eng.execute(sql)
+    eng.spark.range(1).createOrReplaceTempView("tv")
+    sql, expected = BIND_CASES[case]
+    try:
+        with eng.catalog.bind_tables(eng.sys_vars, eng.current_db) as bind:
+            out = bind(sql)
+    finally:
+        eng.spark.catalog.dropTempView("tv")
+    wrapped = re.findall(r"EXCEPT \(`rowid`\) FROM `[^`]+`\.`([^`]+)`", out)
+    assert sorted(wrapped) == expected
+    if not expected and case != "system_table":
+        assert out == sql
+
+
+def test_a_qualified_column_and_an_unknown_table_after_the_bind(eng):
+    """A column qualified by db.table reads the bound table through its
+    alias; two tables of one name in two databases keep apart, each
+    under an alias of its own; a name that is no table is left for
+    Spark, which gives 1146."""
+    eng.execute("CREATE TABLE u (id INT, s CHAR)")
+    eng.execute("INSERT INTO u VALUES (1, 'a')")
+    db = eng.current_db
+    rows = eng.execute(f"SELECT {db}.u.id, * FROM {db}.u").rows()
+    assert [tuple(r) for r in rows] == [(1, 1, "a")]
+    other = f"{db}_b"
+    eng.execute(f"CREATE DATABASE {other}")
+    try:
+        eng.execute(f"CREATE TABLE {other}.u (id INT, t CHAR)")
+        eng.execute(f"INSERT INTO {other}.u VALUES (1, 'x'), (2, 'y')")
+        for sql in (
+            f"SELECT * FROM {db}.u JOIN {other}.u ON {db}.u.id = {other}.u.id",
+            f"SELECT * FROM u JOIN {other}.u ON u.id = {other}.u.id",
+        ):
+            assert [tuple(r) for r in eng.execute(sql).rows()] == [(1, "a", 1, "x")]
+    finally:
+        eng.execute(f"DROP DATABASE IF EXISTS {other}")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute("SELECT * FROM nosuch")
+    assert ei.value.code == 1146
+
+
+@pytest.mark.parametrize(
+    "insert",
+    [
+        "INSERT INTO {} TABLE u",
+        "INSERT INTO {} (SELECT * FROM u)",
+        "INSERT INTO {} WITH w AS (SELECT * FROM u) SELECT * FROM w",
+        "INSERT INTO TABLE {} SELECT * FROM u",
+    ],
+    ids=["table", "parenthesised", "with", "into_table"],
+)
+def test_insert_from_a_query_source_lands_its_rows(eng, insert):
+    """INSERT INTO [TABLE] t <query> takes the INSERT … SELECT path
+    whatever the query's form: it mints a fresh rowid per row, counts
+    its rows, and checks keys and NOT NULL. Two copies of u thus hold
+    four distinct rowids, and a LIMIT 1 write touches one row."""
+    eng.execute("CREATE TABLE u (id INT, s CHAR)")
+    eng.execute("INSERT INTO u VALUES (1, 'a'), (2, 'b')")
+    eng.execute("CREATE TABLE dst (id INT, s CHAR)")
+    assert [eng.execute(insert.format("dst")).affected for _ in range(2)] == [2, 2]
+    assert len({r["rowid"] for r in eng.execute("SELECT rowid FROM dst").rows()}) == 4
+    assert eng.execute("DELETE FROM dst WHERE id = 1 LIMIT 1").affected == 1
+    assert eng.execute("UPDATE dst SET s = 'z' WHERE id = 2 LIMIT 1").affected == 1
+    eng.execute("CREATE TABLE pk (id INT NOT NULL, s CHAR NOT NULL, PRIMARY KEY (id))")
+    assert eng.execute(insert.format("pk")).affected == 2
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(insert.format("pk"))
+    assert ei.value.code == 1062
+    eng.execute("CREATE TABLE nn (id INT, s CHAR NOT NULL)")
+    eng.execute("INSERT INTO u VALUES (3, NULL)")
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(insert.format("nn"))
+    assert ei.value.code == 1048
+
+
+@pytest.mark.parametrize("overwrite", ["INSERT OVERWRITE ow", "INSERT OVERWRITE TABLE ow"])
+def test_insert_overwrite_of_a_star_source_fails_on_the_rowid(eng, overwrite):
+    """INSERT OVERWRITE still passes through to Spark, whose target
+    counts the hidden rowid among its columns, while a star source now
+    gives only the user columns: the write fails on the column count
+    and leaves the target as it was. A source that names rowid still
+    lands (test_a_literal_never_picks_the_insert_path)."""
+    eng.execute("CREATE TABLE u (id INT, s CHAR)")
+    eng.execute("INSERT INTO u VALUES (1, 'a'), (2, 'b')")
+    eng.execute("CREATE TABLE ow (id INT, s CHAR)")
+    eng.execute("INSERT INTO ow VALUES (9, 'z')")
+    with pytest.raises(Exception, match="INSERT_COLUMN_ARITY_MISMATCH"):
+        eng.execute(f"{overwrite} SELECT * FROM u")
+    assert [tuple(r) for r in eng.execute("SELECT * FROM ow").rows()] == [(9, "z")]
+
+
+def test_a_bound_point_select_plans_as_the_user_columns(eng):
+    """A point SELECT * over a table with the hidden rowid optimises to
+    the plan of the same query naming the user columns: one Project of
+    a Filter of the relation, with no node for the bind."""
+    import re
+
+    eng.execute("CREATE TABLE pt (k INT NOT NULL, v INT, PRIMARY KEY (k))")
+    eng.execute("INSERT INTO pt VALUES (77, 1), (78, 2)")
+
+    def optimized(df) -> str:
+        return re.sub(r"#\d+L?", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+    bound = optimized(eng.execute("SELECT * FROM pt WHERE k = 77").df)
+    direct = optimized(eng.spark.sql(f"SELECT k, v FROM {eng.current_db}.pt WHERE k = 77"))
+    assert bound == direct
+    assert [line.lstrip(" +-:").split()[0] for line in bound.splitlines()] == ["Project", "Filter", "Relation"]
+
+
+@pytest.mark.parametrize("key", ["PRIMARY KEY (zz)", "UNIQUE KEY uu (zz)"])
+def test_create_table_key_on_a_missing_column_is_1072(eng, key):
+    with pytest.raises(EbikeError) as ei:
+        eng.execute(f"CREATE TABLE b1 (a INT, {key})")
+    assert ei.value.code == 1072
+    assert "b1" not in [r[0] for r in eng.execute("SHOW TABLES").rows()]
+
+
 def test_update_to_null_unique_key_allowed(eng):
     # round-3 (ADVICE): MySQL allows any number of NULLs in a UNIQUE
     # index — UPDATE SET u = NULL across 2+ rows is not a 1062
@@ -3038,7 +3244,10 @@ def test_insert_reads_table_properties_once(eng, monkeypatch, sql):
 # statement: the Catalog.table reads it makes, against the table
 # test_statements_read_their_pinned_table_metadata fills
 TABLE_READS = {
-    "point_select": ("SELECT v FROM mr WHERE id = 1", 0),
+    "point_select": ("SELECT v FROM mr WHERE id = 1", 1),
+    "join": ("SELECT * FROM mr JOIN ms ON mr.id = ms.id", 2),
+    "rowid_select": ("SELECT id, rowid FROM mr", 0),
+    "no_table": ("SELECT 1", 0),
     "insert_values": ("INSERT INTO mr VALUES (3, 30)", 1),
     "update": ("UPDATE mr SET v = v + 1 WHERE id = 1", 1),
     "delete_limit": ("DELETE FROM mr WHERE id = 2 LIMIT 1", 1),
@@ -3051,9 +3260,9 @@ TABLE_READS = {
 @pytest.mark.parametrize("form", sorted(TABLE_READS))
 def test_statements_read_their_pinned_table_metadata(eng, monkeypatch, form):
     """Each statement form's reads of table metadata, counted as
-    Catalog.table calls: a point read makes none (the hidden rowid is
-    known from the analyzed plan's own catalog entry), DML and SHOW one.
-    No statement, the table's DDL included, sends SHOW TBLPROPERTIES."""
+    Catalog.table calls: a query reads each table it binds once (a text
+    naming rowid binds none), DML and SHOW one. No statement, the
+    table's DDL included, sends SHOW TBLPROPERTIES."""
     from pyspark.sql import SparkSession
 
     from ebike_spark.engine.catalog import Catalog
@@ -3063,6 +3272,7 @@ def test_statements_read_their_pinned_table_metadata(eng, monkeypatch, form):
     monkeypatch.setattr(SparkSession, "sql", lambda self, text, *a, **kw: texts.append(text) or sql_of(self, text, *a, **kw))
     eng.execute("CREATE TABLE mr (id INT NOT NULL, v INT, PRIMARY KEY (id), UNIQUE KEY uv (v), KEY kv (v))")
     eng.execute("INSERT INTO mr VALUES (1, 10), (2, 20)")
+    eng.execute("CREATE TABLE ms (id INT, w INT)")
     monkeypatch.setattr(Catalog, "table", lambda self, q: reads.append(q) or table_of(self, q))
     sql, n = TABLE_READS[form]
     eng.execute(sql).rows()

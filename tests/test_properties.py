@@ -144,8 +144,8 @@ def test_text_passes_leave_literals_alone(l1, l2, sep):
         f"SELECT {l1}, GROUP_CONCAT(a ORDER BY {l2} SEPARATOR {sep}), FIELD(x, {l1}, {l2}), "
         f"DATE_FORMAT(d, '%Y'), database(), LAST_INSERT_ID(), @v FROM dual WHERE s = {l2} LIMIT 1, 2"
     )
-    with Catalog(None).system_tables({}) as bind:
-        fake = SimpleNamespace(sys_vars={}, user_vars={}, last_insert_id=7, _bind_system=bind)
+    with Catalog(None).bind_tables({}, "default") as bind:
+        fake = SimpleNamespace(sys_vars={}, user_vars={}, last_insert_id=7, _bind=bind)
         out = Engine._translate(fake, sql)
     assert _literals(out) >= Counter([l1, l1, l2, l2, l2, sep])
 
@@ -451,6 +451,73 @@ def test_engine_show_create_roundtrip(spark, cols, key_kind):
         assert ddl2.replace(f"`{t2}`", f"`{t1}`", 1) == ddl1
     finally:
         eng.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+# ------------------------------------------------- star forms vs DuckDB
+
+# template: (engine statements, DuckDB query, is the order checked) over
+# two tables a (k, s) and b (k, s) that carry the hidden rowid
+_STAR_TEMPLATES = {
+    "natural_join": (["SELECT * FROM a NATURAL JOIN b"], "SELECT * FROM a NATURAL JOIN b", False),
+    "using_join": (["SELECT * FROM a JOIN b USING (k)"], "SELECT * FROM a JOIN b USING (k)", False),
+    "union": (["SELECT * FROM a UNION SELECT * FROM b"], "SELECT * FROM a UNION SELECT * FROM b", False),
+    "except": (["SELECT * FROM a EXCEPT SELECT * FROM b"], "SELECT * FROM a EXCEPT SELECT * FROM b", False),
+    "intersect": (["SELECT * FROM a INTERSECT SELECT * FROM b"], "SELECT * FROM a INTERSECT SELECT * FROM b", False),
+    "count_distinct_star": (["SELECT count(DISTINCT *) FROM a"], "SELECT count(*) FROM (SELECT DISTINCT * FROM a)", False),
+    "ordinal_order": (["SELECT * FROM a ORDER BY 2, 1"], "SELECT * FROM a ORDER BY 2, 1", True),
+    "view": (
+        ["CREATE OR REPLACE VIEW w AS SELECT * FROM a", "SELECT * FROM w NATURAL JOIN b"],
+        "SELECT * FROM a NATURAL JOIN b",
+        False,
+    ),
+    "derived_table": (
+        ["SELECT * FROM (SELECT * FROM a) x EXCEPT SELECT * FROM b"],
+        "SELECT * FROM (SELECT * FROM a) x EXCEPT SELECT * FROM b",
+        False,
+    ),
+}
+_star_rows = st.lists(st.tuples(st.integers(0, 3), st.sampled_from("xyz")), max_size=5)
+
+
+@pytest.fixture(scope="module")
+def star_eng(spark):
+    import uuid as _uuid
+
+    from ebike_spark.engine import Engine
+
+    eng = Engine(spark)
+    db = f"ps_{_uuid.uuid4().hex[:8]}"
+    eng.execute(f"CREATE DATABASE {db}")
+    eng.execute(f"USE {db}")
+    for t in "ab":
+        eng.execute(f"CREATE TABLE {t} (k INT, s CHAR)")
+    yield eng
+    eng.execute(f"DROP DATABASE IF EXISTS {db}")
+
+
+@settings(SLOW, max_examples=30, derandomize=True)
+@given(st.sampled_from(sorted(_STAR_TEMPLATES)), _star_rows, _star_rows)
+def test_star_forms_match_duckdb(star_eng, template, a_rows, b_rows):
+    """Every star of a statement over tables with the hidden rowid
+    expands to their user columns: joins, set operations, a distinct
+    count, an ordinal, a view and a derived table return DuckDB's rows
+    on the same data."""
+    import duckdb
+
+    statements, oracle, ordered = _STAR_TEMPLATES[template]
+    con = duckdb.connect()
+    for t, rows in (("a", a_rows), ("b", b_rows)):
+        star_eng.execute(f"TRUNCATE TABLE {t}")
+        con.execute(f"CREATE TABLE {t} (k BIGINT, s VARCHAR)")
+        if rows:
+            values = ", ".join(f"({k}, '{s}')" for k, s in rows)
+            star_eng.execute(f"INSERT INTO {t} VALUES {values}")
+            con.execute(f"INSERT INTO {t} VALUES {values}")
+    for sql in statements[:-1]:
+        star_eng.execute(sql)
+    got = [tuple(r) for r in star_eng.execute(statements[-1]).rows()]
+    want = con.execute(oracle).fetchall()
+    assert got == want if ordered else sorted(got) == sorted(want)
 
 
 # ------------------------------------------------- GROUP_CONCAT rewrite

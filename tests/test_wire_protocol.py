@@ -1244,3 +1244,32 @@ def test_unknown_column_and_syntax_error_codes_over_the_wire(server):
     assert (kind, code) == ("err", 1064) and msg.startswith("You have an error in your SQL syntax")
     c.query(f"DROP DATABASE {db}")
     c.close()
+
+
+@pytest.mark.parametrize(
+    "sql, expect",
+    [
+        ("SELECT * FROM u NATURAL JOIN v ORDER BY id", [["1", "a", "x"], ["2", "b", "y"]]),
+        ("SELECT * FROM u EXCEPT SELECT * FROM u2", []),
+    ],
+    ids=["natural_join", "except"],
+)
+def test_star_forms_see_the_user_columns_over_the_wire(server, sql, expect):
+    """A NATURAL JOIN and an EXCEPT of two tables with the hidden rowid
+    match on their user columns only: the client gets MySQL's rows."""
+    c = MiniClient(server)
+    db = f"wp_{uuid.uuid4().hex[:8]}"
+    c.query(f"CREATE DATABASE {db}")
+    c.init_db(db)
+    for stmt in (
+        "CREATE TABLE u (id INT, s CHAR)",
+        "INSERT INTO u VALUES (1, 'a'), (2, 'b')",
+        "CREATE TABLE v (id INT, t CHAR)",
+        "INSERT INTO v VALUES (1, 'x'), (2, 'y')",
+        "CREATE TABLE u2 (id INT, s CHAR)",
+        "INSERT INTO u2 SELECT * FROM u",
+    ):
+        assert c.query(stmt)[0] == "ok"
+    assert c.query(sql)[2] == expect
+    c.query(f"DROP DATABASE {db}")
+    c.close()
